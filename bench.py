@@ -81,60 +81,40 @@ def main() -> None:
     setup_sec: dict[str, float] = {}
     for name in ("source_csv_roundtrip", "source_json_roundtrip",
                  "join_bucketed_colocated", "source_partition_pruning",
-                 "join_dynamic_partition_pruning",
-                 "dedup_lsh_index_build", "dedup_lsh_index_merge",
-                 "dedup_incremental_indexed", "dedup_lsh_index_stats",
-                 # r10 pen (inert until STAGED_R10_ENABLED flips — the
-                 # `if name in qs` guard skips them): tombstone /
-                 # compaction generations and the persisted IVF index
-                 "dedup_lsh_index_delete", "dedup_lsh_index_compact",
+                 "join_dynamic_partition_pruning", "dedup_lsh_index_build",
+                 "dedup_lsh_index_merge", "dedup_incremental_indexed",
+                 "dedup_lsh_index_stats", "dedup_lsh_index_delete",
+                 "dedup_lsh_index_compact",
                  "dedup_lsh_index_tombstone_stats",
                  "similarity_ivf_index_build", "similarity_ivf_index_probe",
-                 "similarity_ivf_index_stats", "similarity_ivf_index_delete",
-                 "similarity_ivf_index_merge", "similarity_ivf_index_compact",
+                 "similarity_ivf_index_stats",
+                 "similarity_ivf_index_delete",
+                 "similarity_ivf_index_merge",
+                 "similarity_ivf_index_compact",
                  "dedup_lsh_index_merge_compact",
                  "similarity_pq_index_build", "similarity_pq_index_probe",
                  "similarity_ivf_trained_invariants",
                  "stream_late_data_drop", "maintenance_ivm_rollup",
                  "maintenance_ivm_merge", "maintenance_ivm_two_grain",
-                 # r11 pen (inert until STAGED_R11_ENABLED flips):
-                 # late-feed replay, persisted PQ index, customer CSV
                  "stream_ttl_flush_ledger", "similarity_pq_refine",
                  "source_python_datasource", "stream_state_inspection",
                  "stream_window_state_inspection",
-                 # r12 pen (inert until STAGED_R12_ENABLED flips):
-                 # the join checkpoint, the corrupt-JSON fixture, and
-                 # the arrow reader's customer CSV
                  "stream_join_state_inspection",
-                 "stream_state_metadata_audit",
-                 "source_python_arrow_batch",
+                 "stream_state_metadata_audit", "source_python_arrow_batch",
                  "source_corrupt_records_audit",
-                 "source_quarantine_roundtrip",
-                 # r13 pen (inert until STAGED_R13_ENABLED flips):
-                 # the corrupt fixture + stream checkpoint, the
-                 # fragmented-lineitem artifact, and the late feed
-                 # for the approx-distinct replay
-                 "stream_quarantine_routing",
+                 "source_quarantine_roundtrip", "stream_quarantine_routing",
                  "maintenance_compact_small_files",
-                 "stream_window_approx_distinct",
-                 # r14 pen (inert until STAGED_R14_ENABLED flips):
-                 # the XML table copy and the foreachBatch upsert's
-                 # checkpoint + versioned target
-                 "source_xml_roundtrip",
-                 "stream_foreach_batch_upsert",
-                 # r15 pen (inert until STAGED_R15_ENABLED flips):
-                 # the per-lang byte-file fixture, the tricky-CSV
-                 # fixture, and the stream-sink checkpoint + target
-                 "source_binary_files",
+                 "stream_window_approx_distinct", "source_xml_roundtrip",
+                 "stream_foreach_batch_upsert", "source_binary_files",
                  "source_csv_quoted_multiline",
                  "source_python_stream_writer"):
-        if name in qs:
-            try:
-                t0 = time.perf_counter()
-                run_full(qs[name](spark, sf_dir))
-                setup_sec[name] = round(time.perf_counter() - t0, 4)
-            except Exception as exc:
-                print(f"# setup {name} failed: {exc}", file=sys.stderr)
+        fn = qs[name]  # a renamed query must fail here, not drop silently
+        try:
+            t0 = time.perf_counter()
+            run_full(fn(spark, sf_dir))
+            setup_sec[name] = round(time.perf_counter() - t0, 4)
+        except Exception as exc:
+            print(f"# setup {name} failed: {exc}", file=sys.stderr)
     for name, sec in sorted(setup_sec.items()):
         print(f"# setup {name}: {sec:.3f}s", file=sys.stderr)
 

@@ -64,38 +64,6 @@ def token_count_bpe_estimate(text: Column | str) -> Column:
     return (pieces + long_word_extra).alias("bpe_tokens")
 
 
-def stopword_ratio(text: Column | str) -> Column:
-    """Fraction of tokens that are stopwords (0 for empty docs)."""
-    toks = tokens(text)
-    stop = F.array(*[F.lit(w) for w in STOPWORDS])
-    # note: array_intersect would dedup — count matching tokens instead
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-    return F.when(F.size(toks) > 0, n_stop / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def punct_ratio(text: Column | str) -> Column:
-    """Punctuation chars / total chars (0 for empty docs)."""
-    t = _c(text)
-    n_punct = F.length(t) - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
-    return F.when(F.length(t) > 0, n_punct / F.length(t)).otherwise(F.lit(0.0))
-
-
-def quality_score(text: Column | str) -> Column:
-    """Composite quality score in [0,1]: rewards mid-length docs and a
-    natural stopword ratio, penalizes punctuation soup. The formula is
-    simple integer/double arithmetic on counts → bit-identical vs the
-    oracle."""
-    t = _c(text)
-    n_chars = F.length(t)
-    len_score = F.least(n_chars / F.lit(500.0), F.lit(1.0))
-    stop = stopword_ratio(t)
-    stop_score = F.least(stop * F.lit(4.0), F.lit(1.0))
-    punct_pen = punct_ratio(t)
-    return (
-        F.lit(0.5) * len_score + F.lit(0.5) * stop_score - punct_pen
-    )
-
-
 def lang_marker_score(text: Column | str, lang: str) -> Column:
     """Number of tokens that are markers of ``lang`` (with repeats)."""
     toks = tokens(text)

@@ -39,7 +39,6 @@ from rs_query_engine_spark.sources.corpus import spread
 FAKE_MAGIC = b"FAKE"
 
 BYTE_STATS_SCHEMA = "id bigint, n_bytes bigint, byte_sum bigint, byte_max int, mean_byte double"
-DECODE_SCHEMA = "id bigint, width int, height int, n_pixels bigint"
 FRAME_SCHEMA = "id bigint, frame_idx int, frame_bytes binary"
 
 
@@ -91,22 +90,6 @@ def byte_stats(df: DataFrame, id_col: str = "id", payload_col: str = "payload") 
 
     return spread(df.select(F.col(id_col), F.col(payload_col)), min_partitions=8).mapInPandas(
         extract, schema=BYTE_STATS_SCHEMA
-    )
-
-
-def decode_images(df: DataFrame, id_col: str = "id", payload_col: str = "payload") -> DataFrame:
-    """Decode fake-header images → (width, height, n_pixels) rows."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, px = decode_image(bytes(payload))
-                rows.append((i, w, h, len(px)))
-            yield pd.DataFrame(rows, columns=["id", "width", "height", "n_pixels"])
-
-    return spread(df.select(F.col(id_col), F.col(payload_col)), min_partitions=8).mapInPandas(
-        decode, schema=DECODE_SCHEMA
     )
 
 

@@ -41,17 +41,6 @@ def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.exceptAll(b)
 
 
-def union_by_name(
-    a: DataFrame, b: DataFrame, allow_missing_columns: bool = True
-) -> DataFrame:
-    """Schema-evolution-safe union: columns matched by NAME, not
-    position; columns absent on one side become NULL when
-    ``allow_missing_columns``. This is the append operation for
-    heterogeneous batch drops (an upstream added a field last week) —
-    positional ``UNION ALL`` silently misaligns them."""
-    return a.unionByName(b, allowMissingColumns=allow_missing_columns)
-
-
 def upsert_latest(
     base: DataFrame,
     updates: DataFrame,

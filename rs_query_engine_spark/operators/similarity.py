@@ -219,27 +219,6 @@ def kmeans_centroids(
     )
 
 
-def l2_normalize(a: Column) -> Column:
-    """Unit-normalize an embedding (array<double>); zero vectors map to
-    NULL elements via ``try_divide`` (never a divide error). Dot
-    products of l2-normalized vectors ARE cosine similarities — at
-    scale, normalize ONCE at ingest and every downstream cosine
-    becomes a plain dot product (saves two norm folds per pair in
-    brute-force/IVF search).
-
-    The norm is bound as a lambda variable of an outer transform over
-    a one-element array: a subtree captured directly in the per-element
-    lambda would be re-evaluated for EVERY element (HOF lambda bodies
-    are not CSE'd); as a lambda variable it is evaluated exactly
-    once per row."""
-    return F.flatten(
-        F.transform(
-            F.array(F.sqrt(norm_sq(a))),
-            lambda n: F.transform(a, lambda x: F.try_divide(x, n)),
-        )
-    )
-
-
 def pq_codebook(
     num_sub: int = 8, num_centroids: int = 16, sub_dim: int = 8
 ) -> list[list[list[float]]]:

@@ -76,13 +76,6 @@ def sample_fraction(df, fraction: float, seed: int = 42, with_replacement: bool 
     return df.sample(withReplacement=with_replacement, fraction=fraction, seed=seed)
 
 
-def sample_stratified(df, strata_col: str, fractions: dict, seed: int = 42):
-    """Stratified sampling (``sampleBy``): per-stratum Bernoulli rates
-    — the eval-set builder for imbalanced corpora (e.g. keep 100% of a
-    rare language, 1% of the head). Map-only like sample_fraction."""
-    return df.sampleBy(strata_col, fractions=fractions, seed=seed)
-
-
 def _salted_key(key: Column, salt: str) -> Column:
     """The stringified, optionally salted sampling key — shared by
     every hash sampler so a salting-scheme change can never make the

@@ -42,6 +42,9 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLE: dict[str, str] = {}
+# Written and oracle-checked, but not yet served by ``queries()``.
+_DORMANT: dict[str, QueryFn] = {}
+_DORMANT_ORACLE: dict[str, str] = {}
 
 # decimal grids for exact aggregation (corpus doubles live on a
 # 2-decimal grid; see module docstring)
@@ -49,16 +52,29 @@ D_PRICE = "decimal(12,2)"  # prices / balances / quantities (< 1e10)
 D_FRAC = "decimal(4,2)"  # discount/tax factors in [0, 2)
 
 
-def register(name: str, oracle: str | None = None):
-    """Decorator: add a query (and its oracle SQL) to the registry."""
+def register(name: str, oracle: str | None = None, *, dormant: bool = False):
+    """Decorator: add a query (and its oracle SQL) to the registry.
+    Every query module registers here; a name already taken, live or
+    dormant, raises."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
+        owner = _QUERIES.get(name) or _DORMANT.get(name)
+        if owner is not None:
+            raise ValueError(
+                f"query {name!r} is already registered by {owner.__module__}"
+            )
+        fns, sqls = (_DORMANT, _DORMANT_ORACLE) if dormant else (_QUERIES, _ORACLE)
+        fns[name] = fn
         if oracle is not None:
-            _ORACLE[name] = oracle
+            sqls[name] = oracle
         return fn
 
     return deco
+
+
+def register_dormant(name: str, oracle: str | None = None):
+    """Decorator: register a query in ``dormant_queries()`` only."""
+    return register(name, oracle, dormant=True)
 
 
 # The driver's correctness gate records rows for only the FIRST 50
@@ -189,78 +205,14 @@ _CODE_CHANGED_ROUND: dict[str, int] = {
 }
 
 
-# Every holding pen ever created, as (flag name, module name) pairs —
-# the ONE place a new pen is declared. ``_registries()`` merges the
-# flag-enabled ones; ``all_pen_modules()`` imports them ALL (flags
-# ignored) so the registry-wide lints in
-# tests/unit/test_plan_properties.py cover pen queries BEFORE
-# activation (VERDICT r09 #5: a hardcoded pen import there meant a new
-# pen's broadcast hints went un-linted until its flag flipped).
-_PEN_MODULES: tuple[tuple[str, str], ...] = (
-    ("STAGED_ENABLED", "queries_staged"),
-    ("STAGED_R7_ENABLED", "queries_staged_r7"),
-    ("STAGED_R8_ENABLED", "queries_staged_r8"),
-    ("STAGED_R9_ENABLED", "queries_staged_r9"),
-    ("STAGED_R10_ENABLED", "queries_staged_r10"),
-    ("STAGED_R11_ENABLED", "queries_staged_r11"),
-    ("STAGED_R12_ENABLED", "queries_staged_r12"),
-    ("STAGED_R13_ENABLED", "queries_staged_r13"),
-    ("STAGED_R14_ENABLED", "queries_staged_r14"),
-    ("STAGED_R15_ENABLED", "queries_staged_r15"),
-    ("STAGED_R16_ENABLED", "queries_staged_r16"),
-    ("STAGED_R17_ENABLED", "queries_staged_r17"),
-    ("STAGED_R18_ENABLED", "queries_staged_r18"),
-    ("STAGED_R19_ENABLED", "queries_staged_r19"),
-)
-
-
-def all_pen_modules() -> list:
-    """Import and return every holding-pen module regardless of its
-    activation flag — lint/test discovery surface, not a query path."""
-    import importlib
-
-    return [
-        importlib.import_module(f"rs_query_engine_spark.{mod_name}")
-        for _, mod_name in _PEN_MODULES
-    ]
-
-
-def _registries() -> tuple[dict[str, QueryFn], dict[str, str]]:
-    """The live registries, with staged entries merged in when
-    STAGED_ENABLED is on. The merge is a LAZY read-time view, never an
-    import-time mutation: queries_staged imports this module for its
-    helpers, so an import-time merge would deadlock on whichever
-    module is imported first (partially-initialized-module
-    AttributeError). Reading the flag at call time also lets tests
-    flip it without re-importing. Live registrations win on any name
-    collision (guarded by tests/unit/test_staged_ops.py)."""
-    import importlib
-
-    flags = {name: globals()[name] for name, _ in _PEN_MODULES}
-    if not any(flags.values()):
-        return _QUERIES, _ORACLE
-    merged_q = dict(_QUERIES)
-    merged_o = dict(_ORACLE)
-    staged_mods = [
-        importlib.import_module(f"rs_query_engine_spark.{mod_name}")
-        for flag_name, mod_name in _PEN_MODULES
-        if flags[flag_name]
-    ]
-    for mod in staged_mods:
-        for n, fn in mod._QUERIES.items():
-            merged_q.setdefault(n, fn)
-        for n, sql in mod._ORACLE.items():
-            merged_o.setdefault(n, sql)
-    return merged_q, merged_o
-
-
 def _rotation_order(qs: dict[str, QueryFn], osql: dict[str, str]) -> list[str]:
     # A query counts as UNVERIFIED when it has no green driver row at
     # all, OR when its latest green row was rows-only (``no_oracle``)
     # but an oracle is NOW registered — the hash check has never run
     # for it, so old rows-only stamps must not grant re-check seniority
     # (computed at call time: _ORACLE fills after the import-time
-    # _GREEN_ROUND computation, and staged oracles merge in lazily).
+    # _GREEN_ROUND computation, and the other query modules load
+    # lazily).
     def _verified(n: str) -> bool:
         return (
             n in _GREEN_ROUND
@@ -279,14 +231,70 @@ def _rotation_order(qs: dict[str, QueryFn], osql: dict[str, str]) -> list[str]:
     return unverified + verified
 
 
+# The query modules besides this one, in registration order.
+_QUERY_MODULES: tuple[str, ...] = (
+    "queries_staged",
+    "queries_staged_r7",
+    "queries_staged_r8",
+    "queries_staged_r9",
+    "queries_staged_r10",
+    "queries_staged_r11",
+    "queries_staged_r12",
+    "queries_staged_r13",
+    "queries_staged_r14",
+    "queries_staged_r15",
+    "queries_staged_r16",
+)
+
+# Modules whose queries register dormant: loaded only by
+# ``dormant_queries()``, never by ``queries()``.
+_DORMANT_MODULES: tuple[str, ...] = (
+    "queries_staged_r17",
+    "queries_staged_r18",
+    "queries_staged_r19",
+)
+
+
+def _registered() -> dict[str, QueryFn]:
+    """The whole registry in registration order: this module first,
+    then ``_QUERY_MODULES`` in list order, each in definition order.
+    Loading the modules here rather than at import time lets any of
+    them be imported first (each imports this module for its
+    helpers); sorting by module makes the order independent of which
+    one that was."""
+    import importlib
+
+    for mod in _QUERY_MODULES:
+        importlib.import_module(f"{__package__}.{mod}")
+    rank = {__name__: 0}
+    rank.update((f"{__package__}.{m}", i + 1) for i, m in enumerate(_QUERY_MODULES))
+    names = sorted(_QUERIES, key=lambda n: rank[_QUERIES[n].__module__])
+    return {n: _QUERIES[n] for n in names}
+
+
 def queries() -> dict[str, QueryFn]:
-    qs, osql = _registries()
-    return {n: qs[n] for n in _rotation_order(qs, osql)}
+    qs = _registered()
+    return {n: qs[n] for n in _rotation_order(qs, _ORACLE)}
 
 
 def oracle_sql() -> dict[str, str]:
-    qs, osql = _registries()
-    return {n: osql[n] for n in _rotation_order(qs, osql) if n in osql}
+    qs = _registered()
+    return {n: _ORACLE[n] for n in _rotation_order(qs, _ORACLE) if n in _ORACLE}
+
+
+def dormant_queries() -> dict[str, QueryFn]:
+    """The dormant queries, in ``_DORMANT_MODULES`` order."""
+    import importlib
+
+    for mod in _DORMANT_MODULES:
+        importlib.import_module(f"{__package__}.{mod}")
+    rank = {f"{__package__}.{m}": i for i, m in enumerate(_DORMANT_MODULES)}
+    names = sorted(_DORMANT, key=lambda n: rank[_DORMANT[n].__module__])
+    return {n: _DORMANT[n] for n in names}
+
+
+def dormant_oracle_sql() -> dict[str, str]:
+    return {n: _DORMANT_ORACLE[n] for n in dormant_queries() if n in _DORMANT_ORACLE}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -6426,199 +6434,3 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("novelty"),
         )
     )
-
-
-# =====================================================================
-# Staged registrations (round-6 activation)
-# =====================================================================
-# ``queries_staged.py`` holds queries implemented and locally
-# oracle-verified in round 5 but deliberately NOT registered: the
-# driver hashes only the first 50 rotation entries per round, and the
-# round-5 window is budgeted so the 17 events-family queries whose
-# last driver-green row predates the Spark-4.1 loader rewrite all get
-# re-hashed (VERDICT r04 priority #1 — the last of them sits at window
-# position 49, so even ONE new registration would evict it). Round 6:
-# flip STAGED_ENABLED to True; ``queries()``/``oracle_sql()`` then
-# merge the staged entries in lazily (see ``_registries`` — an
-# import-time merge would crash on the circular import whenever
-# queries_staged is imported first) and they front-load into the
-# driver window as unverified. Flipped True in round 6 per the r05
-# brief: all 20 staged queries were locally hash-verified at sf0.001
-# and sf0.01 before activation (tests/oracle/test_staged_parity.py).
-STAGED_ENABLED = True
-
-# Round-7 holding pen (``queries_staged_r7.py``): round 6's window was
-# exactly committed (24 front-loaders + 26 stalest re-checks), so new
-# round-6 operators staged here and activated in round 7 by flipping
-# this flag — same lazy read-time merge, same local parity harness
-# (tests/oracle/test_staged_r7_parity.py at sf0.001 + sf0.01). Flipped
-# True in round 7 per the r06 brief: all 18 staged queries were locally
-# hash-verified at sf0.001 and sf0.01 before activation; they
-# front-load the driver window as unverified (18 + 32 re-check slots,
-# covering the 17 r3-stamped rows).
-STAGED_R7_ENABLED = True
-
-# Round-8 holding pen (``queries_staged_r8.py``): round 7's window is
-# committed (18 r7 activations + re-checks), so new round-7 operators
-# stage here and activate next round by flipping this flag — same lazy
-# read-time merge, same local parity harness
-# (tests/oracle/test_staged_r8_parity.py at sf0.001 + sf0.01). Flipped
-# True in round 9 per the r08 brief: all 10 staged queries (incl. the
-# invariant-oracle companions for the rows-only class) were locally
-# hash-verified at sf0.001 and sf0.01 before activation; they
-# front-load the driver window as unverified (10 + 40 re-check slots).
-STAGED_R8_ENABLED = True
-
-# Round-9 holding pen (``queries_staged_r9.py``): round 9's window is
-# committed (10 r8 activations + 40 stalest re-checks), so new
-# round-9 operators — led by the persisted LSH index table and the
-# IVF recall-vs-nprobe audit (VERDICT r08 #4) — stage here and
-# activate in round 10 by flipping this flag; same lazy read-time
-# merge, same local parity harness
-# (tests/oracle/test_staged_r9_parity.py at sf0.001 + sf0.01).
-STAGED_R9_ENABLED = True
-
-# Round-10 holding pen (``queries_staged_r10.py``): filled in round
-# 10 (35 queries, all exact-oracled: LSH index delete/compact/
-# tombstone-stats + merged-generation compaction, the persisted IVF
-# index full lifecycle incl. merge/compaction/streaming probe, the
-# persisted PQ-code index, trained-centroid IVF, cosine range search,
-# TPC-H Q4/Q8/Q9/Q11/Q12/Q15/Q16 shapes, RF1/RF2 refresh analogues,
-# the IVM rollup family, the watermark late-data semantics family,
-# and the takedown audit), locally hash-verified at sf0.001 + sf0.01
-# (tests/oracle/test_staged_r10_parity.py). Flipped True in round 11
-# per the r10 brief: all 35 front-load the driver window as
-# unverified (35 + 15 re-check slots, covering the seven r6-stamped
-# carry rows).
-STAGED_R10_ENABLED = True
-
-# Round-11 holding pen (``queries_staged_r11.py``): filled during the
-# round-10 continuation session (22 queries, all exact-oracled:
-# timer-driven event-time-TTL flush with measured
-# applyInPandasWithState semantics, BOTH state-store inspections,
-# snapshot diff, SCD2 time travel, Poisson bootstrap, embedding
-# snapshot drift, bounded BFS blast radius, two-stage PQ refine,
-# daily-volume anomaly gate, retention sweep plan, VARIANT
-# extraction, mapInArrow + grouped applyInArrow byte/lang stats, the
-# complete pure-Python DataSource family (batch read, pushFilters,
-# two-phase-commit write, simple + executor-parallel stream readers),
-# exact two-sample KS, the point-in-time feature matrix, and the SAR
-# export), locally hash-verified at sf0.001 + sf0.01
-# (tests/oracle/test_staged_r11_parity.py). Flipped True in round 12
-# per the r11 brief: all 22 front-load the driver window as
-# unverified (22 + 28 re-check slots on the oldest r7-stamped rows).
-STAGED_R11_ENABLED = True
-
-# Round-12 holding pen (``queries_staged_r12.py``): filled in round
-# 11 (14 queries, all exact-oracled: the remaining state-store reader
-# surfaces — stream-stream JOIN state, state-metadata layout audit,
-# batchId point-in-time reads, the state-growth curve, the
-# offset-log watermark audit — plus the Arrow-batch Python DataSource
-# batch/pruned/streaming trio, bounded-round label propagation,
-# exact-integer mass diffusion, the quarantine writer roundtrip, the
-# epoch/mixture planner, the
-# documents dataset card, and the corrupt-record ingest audit),
-# locally hash-verified at sf0.001 + sf0.01
-# (tests/oracle/test_staged_r12_parity.py). Flipped in round 13.
-STAGED_R12_ENABLED = True
-
-# Round-13 holding pen (``queries_staged_r13.py``): filled in round
-# 12 (14 queries, all exact-oracled — within the ≤15 cap so round-14
-# re-check slots drain the rotation backlog: streaming windowed
-# approx-distinct with an exact admitted-set batch twin, the
-# streaming quarantine router with a restart-idempotence leg,
-# per-source quality-gate drift across two corpus generations, the
-# single-shuffle running-distinct window, dynamic-gap session
-# windows through the native MergingSessions operator, the
-# range-clustered write-layout audit, the small-file compaction
-# roundtrip, the native WITH RECURSIVE closure, the SQL-UDF
-# pipeline, the SQL table function, SQL scripting with a WHILE
-# sweep, SQL pipe syntax, the LATERAL correlated top-k, and the
-# single-pass Observation-API audit), locally hash-verified at
-# sf0.001 + sf0.01 (tests/oracle/test_staged_r13_parity.py).
-# Round 14 flipped this flag: the 14 queries are live and
-# front-load the driver's round-14 correctness window.
-STAGED_R13_ENABLED = True
-
-# Round-14 holding pen (``queries_staged_r14.py``): gate created
-# empty at round-12 end (ADVICE r07 precedent), seeded the same
-# round with 2 queries (embedding generation drift, polymorphic
-# UDTF), closed at 15 in round 13 — Spark-4 SQL surfaces (GROUP BY
-# ALL, named parameters, IDENTIFIER(), EXECUTE IMMEDIATE), raw-Arrow
-# mapInArrow/applyInArrow, native XML roundtrip, deterministic
-# rate-micro-batch, foreachBatch versioned upsert, URL-canonical
-# dedup, code-vs-prose detect, SHUFFLE_HASH hint, exact OLS trend —
-# all hash-verified at sf0.001 + sf0.01 in
-# tests/oracle/test_staged_r14_parity.py. Round 15 flipped this flag
-# after re-driving all 15 through the driver-shaped DuckDB loop at
-# sf0.01 (15/15 exact): the queries are live and front-load the
-# driver's round-15 correctness window.
-STAGED_R14_ENABLED = True
-
-# Round-15 holding pen (``queries_staged_r15.py``): gate created
-# EMPTY at round-13 end (ADVICE r07 precedent — pen, parity gate,
-# flag, and _PEN_MODULES entry all predate the first registration),
-# seeded the same round with 3 queries, then CLOSED at 15 in round 14
-# — ordered/conditional/bitwise aggregate families, UTF8_LCASE
-# collation, parse_url family, NOT-IN null semantics, exact
-# winsorize/Simpson/collocation/changepoint pipeline ops, RFC4180
-# multiline CSV, and the Python DataSource streaming writer — all
-# hash-verified at sf0.001 + sf0.01 in
-# tests/oracle/test_staged_r15_parity.py. FLIPPED ON in round 16
-# after the full pen re-passed the driver-shaped DuckDB gate at
-# sf0.01 (scripts/drive_pen.py, 15/15 PASS).
-STAGED_R15_ENABLED = True
-
-# Round-16 holding pen (``queries_staged_r16.py``): gate created
-# EMPTY at round-14 end (ADVICE r07 precedent — pen, parity gate,
-# flag, and _PEN_MODULES entry all predate the first registration),
-# seeded the same round with 6 queries (IANA-zone civil-time
-# bucketing, the positional-regexp family, the bitemporal as-of
-# read, multi-distinct Expand, interval-union coverage, Hamilton
-# apportionment), then CLOSED at 14 with a second wave of 8 (TWAP,
-# exact Gini, Pareto-frontier skyline, boolean AND search, path
-# trigrams, order-independent table checksums, the _metadata file
-# audit, sweep-line peak concurrency) — all hash-verified at
-# sf0.001 + sf0.01 in tests/oracle/test_staged_r16_parity.py.
-# Round 15 flips the r14 pen; round 17 flipped this flag after all
-# 14 re-passed the driver-shaped drive_pen.py gate (now
-# type-family-asserting) at sf0.01.
-STAGED_R16_ENABLED = True
-
-# Round-17 holding pen (``queries_staged_r17.py``): gate created
-# EMPTY at round-14 end (ADVICE r07 precedent — pen, parity gate,
-# flag, and _PEN_MODULES entry all predate the first registration),
-# seeded the same round with 8 queries (exact weighted median by
-# rank selection, systematic PPS sampling with Hamilton budgets,
-# sorted-neighborhood dedup, hapax-legomena ratio, inter-arrival
-# burstiness, trailing time-INTERVAL range frame, Benford digit
-# audit, funnel time-to-convert latency), hash-verified at
-# sf0.001 + sf0.01 in
-# tests/oracle/test_staged_r17_parity.py. Rounds 15-17 fill the
-# rest (≤ ~15 per the rotation-backlog cap); round 18 flips this
-# flag.
-STAGED_R17_ENABLED = False
-
-# Round-18 holding pen (``queries_staged_r18.py``): gate created
-# EMPTY at round-15 end (ADVICE r07 precedent — pen, parity gate,
-# flag, and _PEN_MODULES entry all predate the first registration).
-# Rounds 16-18 seed it (≤ ~15 per the rotation-backlog cap); round
-# 19 flips this flag. The pen header carries the round-15 evaluated
-# leads ledger (MAP-column operators, sequence grids, funnel decay,
-# stratified min_by matrix, checksum diff, percent-of-parent rollup
-# ratios) and the standing REJECTED list. CLOSED at 15 in round 16
-# (round-15 seeds + the round-16 wave and closing wave), 15/15
-# exact-oracled and hash-verified at sf0.001 + sf0.01 in
-# tests/oracle/test_staged_r18_parity.py.
-STAGED_R18_ENABLED = False
-
-# Round-19 holding pen (``queries_staged_r19.py``): gate created
-# EMPTY at round-16 end (ADVICE r07 precedent — pen, parity gate,
-# flag, and _PEN_MODULES entry all predate the first registration).
-# Rounds 17-19 seed it; round 20 — the final round — flips this
-# flag, so the pen must stay small enough that its first-ever
-# verification fits the round-20 window alongside the re-check
-# backlog. The pen header carries the round-16 evaluated-leads
-# ledger (UTF8-validation audit lead; everything else scanned and
-# covered or rejected).
-STAGED_R19_ENABLED = False

@@ -1,17 +1,11 @@
-"""Staged query registrations — implemented and locally oracle-verified
-in round 5, HELD OUT of the driver registry until round 6.
-
-Why staged: the driver's correctness gate hashes only the first 50
-entries of ``queries()`` per round, and round 5's window is budgeted to
-the slot so that the 17 events-family queries whose last driver-green
-row predates the Spark-4.1 loader rewrite all get re-hashed (VERDICT
-r04 priority #1 — `events_sessionization` sits at window position 49).
-Registering anything new this round would evict them. These queries
-therefore live in their own registry and run through the same local
-oracle-parity harness (`tests/oracle/test_staged_parity.py`, sf0.001 +
-sf0.01); round 6 activates them by flipping ``STAGED_ENABLED`` in
-``queries.py``, at which point they front-load into the driver window
-as unverified registrations.
+"""Queries added in round 5 (live since round 6), all with exact
+oracles: corpus splits, top-p and importance sampling, DSIR weights,
+quality calibration, tokenizer fertility and language-ID confusion;
+count-min heavy hitters, frequent item pairs and the MinHash estimate;
+Z-order clustering; the nearest as-of join; sequence patterns, Markov
+transitions and interpolated resampling over events; triangle counts
+and hierarchy rollups; Matryoshka recall; a SQL window entry; and the
+stream-static enrichment join.
 
 Float-determinism discipline is the same as ``queries.py`` (see its
 module docstring): exact integer/decimal arithmetic wherever a value
@@ -25,39 +19,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from rs_query_engine_spark.session import truncate_lineage
 
-from rs_query_engine_spark.queries import _MH_BANDS, _MH_SIG, D_PRICE, QueryFn, _t
-
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the staged
-    registry (merged into the live one when STAGED_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
+from rs_query_engine_spark.queries import _MH_BANDS, _MH_SIG, D_PRICE, _t, _ORACLE, register
 
 # =====================================================================
 # Corpus management — splits, mixtures, calibration
 # =====================================================================
 
 
-@register_staged(
+@register(
     "sample_split_assign",
     oracle="""
     SELECT doc_id, source,
@@ -94,7 +63,7 @@ def sample_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", "source", split.alias("split"))
 
 
-@register_staged(
+@register(
     "sample_topp_nucleus",
     oracle="""
     WITH s AS (
@@ -158,7 +127,7 @@ def sample_topp_nucleus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "text_quality_calibrate",
     oracle=r"""
     WITH s AS (
@@ -244,7 +213,7 @@ _DSIR_WEIGHTS_CTES = r"""tok AS (
     )"""
 
 
-@register_staged(
+@register(
     "text_dsir_weights",
     oracle=f"""
     WITH {_DSIR_WEIGHTS_CTES}
@@ -307,7 +276,7 @@ def text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "agg_countmin_heavy",
     oracle=r"""
     WITH tok AS (
@@ -406,7 +375,7 @@ def agg_countmin_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "layout_zorder_cluster",
     oracle=None,  # generated below (bit-interleave terms shared with Spark)
 )
@@ -464,7 +433,7 @@ _ORACLE["layout_zorder_cluster"] = _zorder_oracle()
 # =====================================================================
 
 
-@register_staged(
+@register(
     "join_asof_nearest",
     oracle="""
     WITH p AS (
@@ -556,7 +525,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "events_sequence_pattern",
     oracle="""
     WITH s AS (
@@ -627,7 +596,7 @@ def events_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "agg_itemset_pairs",
     oracle="""
     WITH i AS (
@@ -799,7 +768,7 @@ def _minhash_est_oracle() -> str:
     """
 
 
-@register_staged("dedup_minhash_estimate", oracle=None)
+@register("dedup_minhash_estimate", oracle=None)
 def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash SKETCH-ACCURACY audit: for every LSH candidate pair,
     the signature-based Jaccard estimate (matching components / 16)
@@ -913,7 +882,7 @@ def _triangle_oracle() -> str:
     """
 
 
-@register_staged("graph_triangle_count", oracle=None)
+@register("graph_triangle_count", oracle=None)
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRIANGLE COUNTING + local clustering coefficient over the
     near-dup pair graph: for every node in the MinHash-LSH edge list,
@@ -976,7 +945,7 @@ _ORACLE["graph_triangle_count"] = _triangle_oracle()
 # =====================================================================
 
 
-@register_staged(
+@register(
     "sample_importance_resample",
     oracle=f"""
     WITH {_DSIR_WEIGHTS_CTES}
@@ -1031,7 +1000,7 @@ _SQL_WINDOW_TOPK = """
     """
 
 
-@register_staged("sql_entry_window", oracle=_SQL_WINDOW_TOPK)
+@register("sql_entry_window", oracle=_SQL_WINDOW_TOPK)
 def sql_entry_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window functions through the SQL ENTRY POINT: top-3 orders per
     customer with the customer's decimal-exact lifetime total, issued
@@ -1088,7 +1057,7 @@ def _matryoshka_oracle() -> str:
     """
 
 
-@register_staged("similarity_matryoshka_recall", oracle=None)
+@register("similarity_matryoshka_recall", oracle=None)
 def similarity_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATRYOSHKA truncation audit: recall@10 of a 16-dim-PREFIX
     cosine ranking against the full 64-dim ranking, per query — the
@@ -1146,7 +1115,7 @@ _ORACLE["similarity_matryoshka_recall"] = _matryoshka_oracle()
 # =====================================================================
 
 
-@register_staged(
+@register(
     "events_markov_transitions",
     oracle="""
     WITH t AS (
@@ -1246,7 +1215,7 @@ def _langid_confusion_oracle() -> str:
     """
 
 
-@register_staged("text_langid_confusion", oracle=None)
+@register("text_langid_confusion", oracle=None)
 def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID CONFUSION MATRIX: the marker-word classifier of
     ``text_lang_id`` evaluated against the corpus's ground-truth
@@ -1280,7 +1249,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ORACLE["text_langid_confusion"] = _langid_confusion_oracle()
 
 
-@register_staged(
+@register(
     "text_tokenizer_fertility",
     oracle=r"""
     WITH x AS (
@@ -1345,7 +1314,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "events_resample_interp",
     oracle="""
     WITH e AS (
@@ -1509,7 +1478,7 @@ def events_resample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "graph_hierarchy_rollup",
     oracle="""
     WITH h AS (
@@ -1573,7 +1542,7 @@ def graph_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "stream_static_enrich",
     oracle="""
     SELECT n.n_name,

@@ -1,14 +1,7 @@
-"""Staged query registrations for ROUND 11 — the round-10 holding pen.
+"""Queries added in round 10 (live since round 11).
 
-The activation gate (``tests/oracle/test_staged_r10_parity.py`` +
-``STAGED_R10_ENABLED`` in ``queries.py``) pre-existed this content
-(ADVICE r07 precedent), so every registration below was
-verified-by-construction from its first commit. Round 11 flips the
-flag.
-
-Round-10 pen (VERDICT r09 next-round #3) — 35 queries, all with exact
-oracles. The two index-lifecycle completions the r9 verdict named
-lead:
+35 queries, all with exact oracles, led by two index-lifecycle
+completions:
 
 - **LSH index delete path** (``operators/lsh_index.py``): tombstone
   generation (takedown/license-recall feed), a probe that honors
@@ -48,7 +41,9 @@ deterministic set, so they get exact oracles where keyed-dedup
 expiry could not).
 
 Float-determinism discipline matches ``queries.py`` (see its module
-docstring).
+docstring): row-level doubles raw, no round(), SUM/AVG through exact
+decimals, every aggregate/computed column aliased identically in the
+Spark code and the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -66,39 +61,8 @@ from rs_query_engine_spark.operators.lsh_index import (
     REVOKE_MOD,
     REVOKE_REM,
 )
-from rs_query_engine_spark.queries import _COS_SQL, QueryFn, _t
+from rs_query_engine_spark.queries import _COS_SQL, _t, _ORACLE, register
 from rs_query_engine_spark.queries_staged_r9 import _LSH_IDX_CTES, _SIG_MATCH
-
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r10 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-10
-    staged registry (merged live when STAGED_R10_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
 
 # =====================================================================
 # LSH index lifecycle completion: delete (tombstones) → compaction →
@@ -108,7 +72,7 @@ def oracle_sql() -> dict[str, str]:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "dedup_lsh_index_delete",
     oracle=f"""
     WITH {_LSH_IDX_CTES},
@@ -168,7 +132,7 @@ def dedup_lsh_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_index(spark, root, batch, tombstones=tombs)
 
 
-@register_staged(
+@register(
     "dedup_lsh_index_compact",
     oracle=f"""
     WITH {_LSH_IDX_CTES}
@@ -200,7 +164,7 @@ def dedup_lsh_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_index_bands(spark, root)
 
 
-@register_staged(
+@register(
     "dedup_lsh_index_tombstone_stats",
     oracle=f"""
     WITH {_LSH_IDX_CTES}
@@ -246,7 +210,7 @@ def dedup_lsh_index_tombstone_stats(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@register_staged(
+@register(
     "dedup_lsh_index_merge_compact",
     oracle=f"""
     WITH {_LSH_IDX_CTES},
@@ -289,7 +253,7 @@ def dedup_lsh_index_merge_compact(spark: SparkSession, sf_dir: str) -> DataFrame
     return read_index_bands(spark, root)
 
 
-@register_staged(
+@register(
     "governance_takedown_audit",
     oracle=f"""
     WITH {_LSH_IDX_CTES},
@@ -491,7 +455,7 @@ _IVF_CENT_CTES = f"""
 """
 
 
-@register_staged(
+@register(
     "similarity_ivf_index_build",
     oracle=f"""
     WITH {_IVF_CENT_CTES}
@@ -523,7 +487,7 @@ def similarity_ivf_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_ivf_assign(spark, root).select("vec_id", "centroid_id")
 
 
-@register_staged(
+@register(
     "similarity_ivf_index_probe",
     oracle=f"""
     WITH {_IVF_CENT_CTES},
@@ -565,7 +529,7 @@ def similarity_ivf_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_ivf_index(spark, root, q, 10, nprobe=2)
 
 
-@register_staged(
+@register(
     "similarity_ivf_index_stats",
     oracle=f"""
     WITH {_IVF_CENT_CTES}
@@ -612,7 +576,7 @@ def similarity_ivf_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "similarity_ivf_index_delete",
     oracle=f"""
     WITH {_IVF_CENT_CTES},
@@ -660,7 +624,7 @@ def similarity_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_ivf_index(spark, root, q, 10, nprobe=2, tombstones=tombs)
 
 
-@register_staged(
+@register(
     "similarity_ivf_index_merge",
     oracle=f"""
     WITH {_IVF_CENT_CTES}
@@ -699,7 +663,7 @@ def similarity_ivf_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "similarity_ivf_index_compact",
     oracle=f"""
     WITH {_IVF_CENT_CTES}
@@ -729,7 +693,7 @@ def similarity_ivf_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_ivf_assign(spark, root).select("vec_id", "centroid_id")
 
 
-@register_staged(
+@register(
     "stream_ivf_probe",
     oracle=_ORACLE["similarity_ivf_index_probe"],
 )
@@ -814,7 +778,7 @@ def stream_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out).select("query_id", "vec_id", "cos", "rnk")
 
 
-@register_staged(
+@register(
     "similarity_ivf_trained_invariants",
     oracle="""
     SELECT (SELECT COUNT(*) FROM embeddings) AS n_assigned,
@@ -900,7 +864,7 @@ def _pq_build_oracle() -> str:
     """
 
 
-@register_staged("similarity_pq_index_build", oracle=_pq_build_oracle())
+@register("similarity_pq_index_build", oracle=_pq_build_oracle())
 def similarity_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-and-read-back of the persisted PQ-ENCODED index
     (``operators/ivf_index.ensure_pq_index``): every corpus vector as
@@ -936,7 +900,7 @@ def _pq_probe_oracle() -> str:
     return _pq_adc_oracle_sql()
 
 
-@register_staged("similarity_pq_index_probe", oracle=_pq_probe_oracle())
+@register("similarity_pq_index_probe", oracle=_pq_probe_oracle())
 def similarity_pq_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC top-10 (nprobe=2) against the PERSISTED PQ codes — the
     steady-state compressed search path: query vectors assign against
@@ -971,7 +935,7 @@ def similarity_pq_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RANGE_THRESH = 0.3  # parses to the identical double in both engines
 
 
-@register_staged(
+@register(
     "similarity_range_search",
     oracle=f"""
     WITH corpus AS (
@@ -1018,7 +982,7 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "tpch_q4_shape",
     oracle="""
     SELECT o.o_orderpriority, COUNT(*) AS order_count
@@ -1066,7 +1030,7 @@ def tpch_q4_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "tpch_q8_shape",
     oracle="""
     WITH base AS (
@@ -1159,7 +1123,7 @@ def tpch_q8_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "tpch_q9_shape",
     oracle="""
     SELECT n.n_name AS nation, EXTRACT(YEAR FROM o.o_orderdate) AS o_year,
@@ -1214,7 +1178,7 @@ def tpch_q9_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "tpch_q11_shape",
     oracle="""
     WITH pv AS (
@@ -1272,7 +1236,7 @@ def tpch_q11_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "tpch_q12_shape",
     oracle="""
     SELECT l.l_returnflag,
@@ -1318,7 +1282,7 @@ def tpch_q12_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "tpch_q15_shape",
     oracle="""
     WITH revenue AS (
@@ -1379,7 +1343,7 @@ def tpch_q15_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "tpch_q16_shape",
     oracle="""
     SELECT p.p_brand, p.p_type, p.p_size,
@@ -1446,7 +1410,7 @@ RF_MOD = 97
 RF_REM = 3
 
 
-@register_staged(
+@register(
     "maintenance_rf1_insert",
     oracle=f"""
     SELECT o_orderstatus,
@@ -1496,7 +1460,7 @@ def maintenance_rf1_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "maintenance_rf2_delete",
     oracle=f"""
     SELECT
@@ -1573,7 +1537,7 @@ def maintenance_rf2_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "stream_late_data_drop",
     oracle="""
     WITH e AS (
@@ -1668,7 +1632,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "maintenance_ivm_rollup",
     oracle="""
     SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS TIMESTAMP)
@@ -1706,7 +1670,7 @@ def maintenance_ivm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return refreshed_rollup(spark, sf_dir)
 
 
-@register_staged(
+@register(
     "maintenance_ivm_retract",
     oracle="""
     SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS TIMESTAMP)
@@ -1745,7 +1709,7 @@ def maintenance_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return retracted_rollup(spark, sf_dir, F.col("user_id") % 31 == 7)
 
 
-@register_staged(
+@register(
     "maintenance_ivm_merge",
     oracle="""
     SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS TIMESTAMP)
@@ -1788,7 +1752,7 @@ def maintenance_ivm_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "stream_ivm_maintenance",
     oracle="""
     SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS TIMESTAMP)
@@ -1927,7 +1891,7 @@ def _ss_wf(shift: str = "") -> str:
     )
 
 
-@register_staged(
+@register(
     "stream_stream_join_late",
     oracle=f"""{_SS_PROLOGUE}{_SS_ACC}
     SELECT v.user_id,
@@ -1999,7 +1963,7 @@ def stream_stream_join_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "stream_stream_left_outer_late",
     oracle=f"""{_SS_PROLOGUE}
     -- final watermark: the trailing no-data batch evicts with the
@@ -2092,7 +2056,7 @@ def stream_stream_left_outer_late(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@register_staged(
+@register(
     "stream_chained_stateful",
     oracle=f"""{_SS_PROLOGUE}
     -- the aggregate sits DOWNSTREAM of the join, so its eviction
@@ -2197,7 +2161,7 @@ def stream_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "stream_stream_full_outer_late",
     oracle=f"""{_SS_PROLOGUE}
 {_ss_wf()}{_SS_ACC},
@@ -2288,7 +2252,7 @@ def stream_stream_full_outer_late(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@register_staged(
+@register(
     "maintenance_ivm_two_grain",
     oracle="""
     SELECT 'hour' AS grain,

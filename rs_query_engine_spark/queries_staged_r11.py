@@ -1,13 +1,6 @@
-"""Staged query registrations for ROUND 12 — the round-11 holding pen.
+"""Queries added in round 11 (live since round 12).
 
-The activation gate (``tests/oracle/test_staged_r11_parity.py`` +
-``STAGED_R11_ENABLED`` in ``queries.py``) pre-existed this content
-(ADVICE r07 precedent), so every registration below was
-verified-by-construction from its first commit. Round 12 flips the
-flag.
-
-Round-11 pen — 22 queries, ALL with exact oracles. The r10-named
-stateful lead heads it:
+22 queries, all with exact oracles:
 
 - **Timer-driven event-time-TTL flush** — the r10 lead named
   ``transformWithStateInPandas``, but that API cannot run in this
@@ -71,38 +64,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rs_query_engine_spark.queries import QueryFn, _t
-
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r11 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-11
-    staged registry (merged live when STAGED_R11_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
+from rs_query_engine_spark.queries import _t, register
 
 # ---------------------------------------------------------------------------
 # Timer-driven TTL flush (applyInPandasWithState + EventTimeTimeout)
@@ -111,7 +73,7 @@ def oracle_sql() -> dict[str, str]:
 TTL_FLUSH_MS = 12 * 3600 * 1000  # shared by the ledger and the state reader
 
 
-@register_staged(
+@register(
     "stream_ttl_flush_ledger",
     oracle="""
     WITH e AS (
@@ -213,7 +175,7 @@ DIFF_INS_REM = 9  # keys cloned as NEW rows (re-keyed) in B
 DIFF_KEY_OFFSET = 1 << 42  # re-key offset, above any dbgen orderkey
 
 
-@register_staged(
+@register(
     "maintenance_snapshot_diff",
     oracle=f"""
     WITH a AS (
@@ -307,7 +269,7 @@ def maintenance_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "maintenance_scd2_asof",
     oracle="""
     WITH o AS (
@@ -416,7 +378,7 @@ def _poisson_w_sql(u: str) -> str:
     return f"CASE{arms} ELSE 8 END"
 
 
-@register_staged(
+@register(
     "sample_poisson_bootstrap",
     oracle=f"""
     WITH rep AS (
@@ -504,7 +466,7 @@ def sample_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "embedding_snapshot_drift",
     oracle="""
     WITH e AS (
@@ -615,7 +577,7 @@ def _bfs_oracle() -> str:
     """
 
 
-@register_staged("graph_bfs_contamination", oracle=_bfs_oracle())
+@register("graph_bfs_contamination", oracle=_bfs_oracle())
 def graph_bfs_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded multi-source BFS over the near-dup graph — the BLAST
     RADIUS question every takedown/contamination event asks: given a
@@ -690,7 +652,7 @@ def _pq_refine_oracle() -> str:
     """
 
 
-@register_staged("similarity_pq_refine", oracle=_pq_refine_oracle())
+@register("similarity_pq_refine", oracle=_pq_refine_oracle())
 def similarity_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO-STAGE retrieval — ADC shortlist, exact rerank: the
     persisted PQ index ranks a {REFINE_SHORTLIST}-candidate shortlist
@@ -766,7 +728,7 @@ def similarity_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "quality_anomaly_daily_volume",
     oracle="""
     WITH daily AS (
@@ -872,7 +834,7 @@ RETAIN_DAYS = 21  # policy: delete event data older than this
 LEGAL_HOLD_TYPES = ("purchase",)  # types under legal hold, never swept
 
 
-@register_staged(
+@register(
     "governance_retention_sweep",
     oracle=f"""
     WITH e AS (
@@ -946,7 +908,7 @@ def governance_retention_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "json_variant_extract",
     oracle="""
     SELECT event_type,
@@ -1001,7 +963,7 @@ def json_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "udf_arrow_byte_stats",
     oracle="""
     SELECT doc_id,
@@ -1061,7 +1023,7 @@ CUSTOMER_DDL = (
 )
 
 
-@register_staged(
+@register(
     "source_python_datasource",
     oracle="""
     SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
@@ -1112,7 +1074,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "sample_ks_two_sample",
     oracle="""
     WITH x AS (
@@ -1212,7 +1174,7 @@ def sample_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "join_pit_feature_matrix",
     oracle="""
     WITH labels AS (
@@ -1311,7 +1273,7 @@ def join_pit_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "governance_sar_export",
     oracle="""
     WITH subjects AS (
@@ -1403,7 +1365,7 @@ def governance_sar_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "stream_state_inspection",
     oracle="""
     WITH e AS (
@@ -1476,7 +1438,7 @@ def stream_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "udf_arrow_grouped_lang_stats",
     oracle="""
     SELECT lang,
@@ -1535,7 +1497,7 @@ def udf_arrow_grouped_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "source_python_pushdown",
     oracle="""
     SELECT c_custkey, c_name, c_acctbal
@@ -1587,7 +1549,7 @@ def source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "c_name", "c_acctbal")
 
 
-@register_staged(
+@register(
     "source_python_writer_roundtrip",
     oracle="""
     SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
@@ -1638,7 +1600,7 @@ def source_python_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     return spark.read.csv(out, schema=CUSTOMER_DDL, header=True)
 
 
-@register_staged(
+@register(
     "stream_window_state_inspection",
     oracle="""
     WITH e AS (
@@ -1710,7 +1672,7 @@ def stream_window_state_inspection(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@register_staged(
+@register(
     "source_python_stream_reader",
     oracle="""
     SELECT c_mktsegment,
@@ -1770,7 +1732,7 @@ def source_python_stream_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "source_python_stream_partitioned",
     oracle="""
     SELECT c_nationkey,

@@ -1,15 +1,9 @@
-"""Staged query registrations for ROUND 13 — the round-12 holding pen.
+"""Queries added in round 12 (live since round 13).
 
-The activation gate (``tests/oracle/test_staged_r12_parity.py`` +
-``STAGED_R12_ENABLED`` in ``queries.py``) pre-existed this content
-(ADVICE r07 precedent), so every registration below was
-verified-by-construction from its first commit. Round 12 flips the
-r11 flag; round 13 flips this one.
+14 queries, ALL with exact oracles:
 
-Round-12 pen — 14 queries, ALL with exact oracles:
-
-- **State-store reader, remaining surfaces** (the r11-named leads,
-  all probed before registration): the stream-stream JOIN state
+- **State-store reader, remaining surfaces** (all probed before
+  registration): the stream-stream JOIN state
   layout (per-side reads of the ``symmetricHashJoin`` stores over a
   new persisted join checkpoint — buffered rows ≙ admitted events
   still inside their condition-derived retention bounds), the
@@ -62,38 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rs_query_engine_spark.queries import QueryFn, _t
-
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r12 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-12
-    staged registry (merged live when STAGED_R12_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
+from rs_query_engine_spark.queries import _t, register
 
 # ---------------------------------------------------------------------------
 # State-store data source, remaining surfaces (the r11 leads): the
@@ -133,7 +96,7 @@ _WAGG_TIERS = """
              WHERE date_trunc('hour', b.ts) + INTERVAL 1 HOUR > wa.w)"""
 
 
-@register_staged(
+@register(
     "stream_state_time_travel",
     oracle=f"""{_WAGG_TIERS},
     accepted AS (
@@ -185,7 +148,7 @@ def stream_state_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "stream_state_growth_curve",
     oracle=f"""{_WAGG_TIERS},
     held0 AS (SELECT DISTINCT date_trunc('hour', ts) AS ws, event_type
@@ -282,7 +245,7 @@ def _join_state_oracle() -> str:
     """
 
 
-@register_staged("stream_join_state_inspection", oracle=_join_state_oracle())
+@register("stream_join_state_inspection", oracle=_join_state_oracle())
 def stream_join_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STREAM JOIN state layout — the third state family the
     ``statestore`` reader exposes (``symmetricHashJoin`` keeps four
@@ -338,7 +301,7 @@ def stream_join_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return left.unionByName(right)
 
 
-@register_staged(
+@register(
     "stream_state_metadata_audit",
     oracle="""
     SELECT * FROM (VALUES
@@ -410,7 +373,7 @@ def stream_state_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@register_staged(
+@register(
     "stream_checkpoint_watermark_audit",
     oracle="""
     WITH e AS (
@@ -556,7 +519,7 @@ _ARROW_CUSTOMER_DDL = (
 )
 
 
-@register_staged(
+@register(
     "source_python_arrow_batch",
     oracle="""
     SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
@@ -599,7 +562,7 @@ def source_python_arrow_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.filter(F.col("c_acctbal") <= 1000.0)
 
 
-@register_staged(
+@register(
     "source_python_arrow_pruned",
     oracle="""
     SELECT c_mktsegment,
@@ -693,7 +656,7 @@ def _lp_round(prev: str, out: str) -> str:
     )"""
 
 
-@register_staged(
+@register(
     "graph_label_propagation",
     oracle=f"""{_JACCARD_EDGES},
     l0 AS (SELECT doc_id, doc_id AS label FROM documents),
@@ -743,7 +706,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "sample_epoch_mixture_plan",
     oracle=r"""
     WITH tok AS (
@@ -833,7 +796,7 @@ def sample_epoch_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "profile_documents_card",
     oracle=r"""
     WITH fp AS (
@@ -957,7 +920,7 @@ def _ensure_corrupt_orders_json(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-@register_staged(
+@register(
     "source_corrupt_records_audit",
     oracle="""
     SELECT COUNT(*) AS n_rows,
@@ -1020,7 +983,7 @@ def source_corrupt_records_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "source_python_arrow_stream",
     oracle="""
     SELECT c_mktsegment,
@@ -1104,7 +1067,7 @@ def _diffusion_round(prev_m: str, rnd: int) -> str:
     )"""
 
 
-@register_staged(
+@register(
     "graph_mass_diffusion",
     oracle=f"""{_JACCARD_EDGES},
     deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
@@ -1157,7 +1120,7 @@ def graph_mass_diffusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "source_quarantine_roundtrip",
     oracle="""
     SELECT CAST(COUNT(*) FILTER (o_orderkey % 97 <> 0) AS BIGINT)

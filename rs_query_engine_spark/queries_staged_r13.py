@@ -1,16 +1,8 @@
-"""Staged query registrations for ROUND 14 — the round-13 holding pen.
+"""Queries added in round 13 (live since round 14).
 
-The activation gate (``tests/oracle/test_staged_r13_parity.py`` +
-``STAGED_R13_ENABLED`` in ``queries.py``) pre-existed this content
-(ADVICE r07 precedent), so every registration below was
-verified-by-construction from its first commit. Round 13 flips the
-r12 flag; round 14 flips this one.
+14 queries, all with exact oracles:
 
-Round-13 pen — 14 queries (within the ≤15 cap: the rotation ledger in
-BENCH_NOTES carries a re-check backlog through round 14; a small pen
-maximizes re-check slots), ALL with exact oracles:
-
-- **Streaming windowed APPROX-DISTINCT** (the r12-named lead):
+- **Streaming windowed APPROX-DISTINCT**:
   streaming aggregation rejects ``COUNT(DISTINCT)`` outright
   (measured AnalysisException, r11), so the streaming form of
   per-window unique-user counting is ``approx_count_distinct`` —
@@ -21,7 +13,7 @@ maximizes re-check slots), ALL with exact oracles:
   oracle-recomputed; the HLL estimate itself is checked as an
   error-bound BOOLEAN against the exact twin (bound chosen from
   measured worst-case error — see the registration).
-- **Streaming QUARANTINE routing** (the other r12-named lead): the
+- **Streaming QUARANTINE routing**: the
   ``sinks.quarantine_json_stream`` sink (unit-pinned r11) driven as
   a registered query over the corrupt-orders fixture, including a
   RESTART against the same checkpoint proving batch-id-partitioned
@@ -69,18 +61,6 @@ maximizes re-check slots), ALL with exact oracles:
   — rows and decimal mass preserved exactly, file count reduced
   (the operational failure mode of long-running ingestion).
 
-Leads evaluated and CLOSED in earlier rounds (do not rebuild):
-exact-integer mass diffusion + quarantine writer (r12 pen), the
-whole Python DataSource family incl. Arrow stream (r11/r12 pens),
-state-store reader surfaces (r12 pen), ``transformWithStateInPandas``
-(BLOCKED: hard ``google.protobuf`` import in this container, probed
-r11 — do not re-probe unless protobuf appears). The CSV/JSON
-path-only-keyed artifact migration to ``artifacts.artifact_root``
-landed in round 12 as a refactor of the LIVE queries (not a pen
-entry). A code-vs-prose text classifier was evaluated and dropped:
-the synthetic corpus has no code-like characters (measured — zero
-braces/semicolons/newlines), so the query would be degenerate.
-
 Float-determinism discipline matches ``queries.py`` (see its module
 docstring): row-level doubles raw, no round(), SUM/AVG through exact
 decimals, every aggregate/computed column aliased identically in the
@@ -92,38 +72,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rs_query_engine_spark.queries import QueryFn, _t
-
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r13 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-13
-    staged registry (merged live when STAGED_R13_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
+from rs_query_engine_spark.queries import _t, register
 
 # ---------------------------------------------------------------------------
 # Streaming windowed approx-distinct + its exact batch twin
@@ -139,7 +88,7 @@ _ACD_REL_DEN = 4
 _ACD_ABS_SLACK = 4
 
 
-@register_staged(
+@register(
     "stream_window_approx_distinct",
     oracle=f"""
     WITH e AS (
@@ -299,7 +248,7 @@ def stream_window_approx_distinct(
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "stream_quarantine_routing",
     oracle="""
     SELECT CAST(COUNT(*) FILTER (o_orderkey % 97 <> 0) AS BIGINT)
@@ -420,7 +369,7 @@ _DRIFT_GATE_MIN_CHARS = 120
 _DRIFT_ALERT = 0.05  # flag a source when its pass rate drops >5 pts
 
 
-@register_staged(
+@register(
     "quality_gate_drift",
     oracle=f"""
     WITH g AS (
@@ -499,7 +448,7 @@ def quality_gate_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "sql_pipe_syntax_shape",
     oracle="""
     SELECT l_returnflag,
@@ -551,7 +500,7 @@ def sql_pipe_syntax_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LATERAL_TOPK = 2
 
 
-@register_staged(
+@register(
     "join_lateral_topk",
     oracle=f"""
     SELECT c_mktsegment, c_custkey, c_acctbal
@@ -606,7 +555,7 @@ def join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "quality_observe_single_pass",
     oracle="""
     SELECT COUNT(*) AS n_rows,
@@ -682,7 +631,7 @@ def _recursive_closure_oracle() -> str:
     """
 
 
-@register_staged("graph_recursive_closure", oracle=_recursive_closure_oracle())
+@register("graph_recursive_closure", oracle=_recursive_closure_oracle())
 def graph_recursive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ENGINE-NATIVE recursion — Spark 4.x ``WITH RECURSIVE`` (probed
     this build: UNION ALL recursion works; UNION dedup is rejected
@@ -748,7 +697,7 @@ _SQLUDF_GATE_MIN_CHARS = 120
 _SQLUDF_MIN_DENSITY = 0.5
 
 
-@register_staged(
+@register(
     "scalar_sql_udf_pipeline",
     oracle=f"""
     SELECT doc_id,
@@ -806,7 +755,7 @@ def scalar_sql_udf_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TVF_MIN_PRICE = 300000.0
 
 
-@register_staged(
+@register(
     "source_sql_table_function",
     oracle=f"""
     SELECT COUNT(*) AS n,
@@ -863,7 +812,7 @@ _SWEEP_START = 1000.0
 _SWEEP_STOP_BELOW = 100
 
 
-@register_staged(
+@register(
     "sql_script_threshold_sweep",
     oracle=f"""
     WITH ks AS (SELECT k FROM generate_series(0, 30) AS t(k)),
@@ -929,7 +878,7 @@ def sql_script_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "events_session_dynamic_gap",
     oracle="""
     WITH e AS (
@@ -1026,7 +975,7 @@ def events_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "window_running_distinct",
     oracle="""
     WITH e AS (
@@ -1124,7 +1073,7 @@ def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RANGE_CLUSTER_FILES = 8
 
 
-@register_staged(
+@register(
     "maintenance_range_cluster_layout",
     oracle="""
     SELECT COUNT(*) AS n_rows,
@@ -1258,7 +1207,7 @@ def _ensure_fragmented_lineitem(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-@register_staged(
+@register(
     "maintenance_compact_small_files",
     oracle="""
     SELECT COUNT(*) AS n_rows,

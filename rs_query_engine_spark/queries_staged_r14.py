@@ -1,13 +1,10 @@
-"""Staged query registrations for ROUND 15 — the round-14 holding pen.
+"""Queries added in rounds 12-13 (live since round 15).
 
-CLOSED at 15 queries in round 13 (at the ≤15 cap; 36 re-check slots
-remain for round 14's rotation — see the BENCH_NOTES ledger).
-Seeded with TWO at round-12 end (per-label EMBEDDING GENERATION
-DRIFT — exact-quantized centroid-shift L2 between corpus
-generations — and the POLYMORPHIC Python UDTF whose ``analyze()``
-computes the schema from a DDL argument), then filled with THIRTEEN
-in round 13: four Spark-4 SQL surfaces (GROUP BY ALL / ORDER BY
-ALL, named parameter markers, the IDENTIFIER() clause, EXECUTE
+15 queries, all with exact oracles: per-label embedding generation
+drift (exact-quantized centroid-shift L2 between corpus generations),
+the polymorphic Python UDTF whose ``analyze()`` computes the schema
+from a DDL argument, four Spark-4 SQL surfaces (GROUP BY ALL / ORDER
+BY ALL, named parameter markers, the IDENTIFIER() clause, EXECUTE
 IMMEDIATE over a session variable), the two raw-Arrow Python tiers
 (``mapInArrow`` map-only quantization, ``groupBy().applyInArrow``
 whole-group reduction), the native XML writer/reader roundtrip, the
@@ -16,50 +13,11 @@ drain), the ``foreachBatch`` versioned-parquet upsert with a
 restart-idempotence leg, URL-canonicalization dedup (``parse_url``
 vs string-level oracle), code-vs-prose detection, the SHUFFLE_HASH
 join hint (plan-pinned), and the decimal-exact per-group OLS trend.
-All hash-verified at sf0.001 + sf0.01 from their first commit via
-``tests/oracle/test_staged_r14_parity.py`` (the gate predates every
-registration — ADVICE r07 precedent). Round 15 flips the flag.
 
 Float-determinism discipline matches ``queries.py`` (see its module
 docstring): row-level doubles raw, no round(), SUM/AVG through exact
 decimals, every aggregate/computed column aliased identically in the
 Spark code and the DuckDB oracle.
-
-Candidate leads for round 13 (from round-12 loose ends — evaluate,
-don't assume):
-
-- **Streaming surfaces are broadly COMPLETE**: state-store reader
-  (all layouts + time travel + growth + offset-log audit, r12 pen),
-  quarantine routing batch+stream (r12/r13 pens), windowed
-  approx-distinct (r13 pen), TTL flush, stream-stream joins with
-  late tiers, IVM. ``transformWithStateInPandas`` remains BLOCKED
-  (hard ``google.protobuf`` import — probed r11; do not re-probe
-  unless protobuf appears in the image).
-- **LANDED IN THE R13 PEN — do not rebuild**: dynamic-gap session
-  windows (batch ``session_window`` with a STRING gap expression —
-  a DayTimeIntervalType CASE is rejected, measured), the
-  range-clustered write-layout audit, native ``WITH RECURSIVE``
-  (UnionLoop; UNION-dedup recursion rejected with
-  UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE — measured, don't re-probe),
-  SQL UDFs (nesting works; SQL TABLE functions reject a
-  parameterized LIMIT — INVALID_LIMIT_LIKE_EXPRESSION, measured),
-  SQL pipe syntax, LATERAL correlated top-k, and the Observation
-  API single-pass audit.
-- **Probe-worthy surfaces now CLOSED**: SQL scripting + the
-  constant/parameterized TVF boundary landed in the r13 pen; the
-  polymorphic UDTF landed HERE. Remaining: nothing known on the SQL
-  surface — scan Spark release notes next round.
-- **A bucketed-broadcast hybrid similarity join** if any plan audit
-  surfaces a shuffle worth removing (carried lead — none found in
-  the r11/r12 audits).
-- **Drift families**: CLOSED — quality-gate drift (r13 pen) +
-  embedding generation drift (here) complete the
-  pass-rate/embedding-space pair alongside
-  ``embedding_snapshot_drift``.
-- The rows-only trio (``similarity_ivf_kmeans``,
-  ``agg_approx_percentile``, ``text_unigram_logprob``) stays
-  rows-only by design with invariant companions — re-evaluate only
-  if one becomes exactly oracle-able.
 """
 
 from __future__ import annotations
@@ -67,38 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rs_query_engine_spark.queries import QueryFn, _t
-
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r14 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-14
-    staged registry (merged live when STAGED_R14_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
+from rs_query_engine_spark.queries import _t, register
 
 # ---------------------------------------------------------------------------
 # Polymorphic Python UDTF (analyze() computes the schema from an arg)
@@ -177,7 +104,7 @@ class UnpackDelimUDTF:
 _UDTF_DDL = "c_custkey bigint, c_name string, c_acctbal double"
 
 
-@register_staged(
+@register(
     "udtf_polymorphic_unpack",
     oracle="""
     SELECT c_custkey, c_name, c_acctbal FROM customer
@@ -242,7 +169,7 @@ _Q30 = 1073741824.0  # 2^30
 _Q40 = 1099511627776.0  # 2^40
 
 
-@register_staged(
+@register(
     "embedding_generation_drift",
     oracle=f"""
     WITH e AS (
@@ -349,7 +276,7 @@ def embedding_generation_drift(spark: SparkSession, sf_dir: str):
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "sql_group_by_all",
     oracle="""
     SELECT l_returnflag, l_linestatus,
@@ -396,7 +323,7 @@ _PARAM_QTY_MAX = 24.0
 _PARAM_SHIP_YEAR = 1995
 
 
-@register_staged(
+@register(
     "sql_named_parameters",
     oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -441,7 +368,7 @@ def sql_named_parameters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "sql_identifier_clause",
     oracle="""
     SELECT c_mktsegment AS seg,
@@ -482,7 +409,7 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EXEC_IMM_BAL_MIN = 1000.0
 
 
-@register_staged(
+@register(
     "sql_execute_immediate",
     oracle=f"""
     SELECT c_nationkey,
@@ -523,7 +450,7 @@ def sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ARROW_CENTS = 100  # exact integer-cents quantization (2 decimals)
 
 
-@register_staged(
+@register(
     "udf_map_in_arrow",
     oracle=f"""
     WITH q AS (
@@ -598,7 +525,7 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "udf_apply_in_arrow",
     oracle=f"""
     WITH q AS (
@@ -682,7 +609,7 @@ _XML_SCHEMA = (
 )
 
 
-@register_staged(
+@register(
     "source_xml_roundtrip",
     oracle="""
     SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
@@ -746,7 +673,7 @@ _RATE_ROWS_PER_BATCH = 600
 _RATE_PARTITIONS = 8
 
 
-@register_staged(
+@register(
     "source_rate_micro_batch",
     oracle=f"""
     WITH r AS (
@@ -813,7 +740,7 @@ def source_rate_micro_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "stream_foreach_batch_upsert",
     oracle="""
     SELECT user_id,
@@ -988,7 +915,7 @@ _URL_PATH_MOD = 50
 _URL_ID_MOD = 20
 
 
-@register_staged(
+@register(
     "dedup_url_canonicalize",
     oracle=f"""
     WITH u AS (
@@ -1082,7 +1009,7 @@ _CODE_SYM_PCT_MIN = 3.0  # symbol chars per 100 chars
 _CODE_AVG_LINE_MAX = 60.0  # code lines are short
 
 
-@register_staged(
+@register(
     "text_code_detect",
     oracle=f"""
     WITH s AS (
@@ -1166,7 +1093,7 @@ def text_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "join_shuffle_hash_hint",
     oracle="""
     SELECT c_mktsegment,
@@ -1203,7 +1130,7 @@ def join_shuffle_hash_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "agg_regression_trend",
     oracle="""
     WITH d AS (

@@ -1,22 +1,6 @@
-"""Staged query registrations for ROUND 16 — the round-15 holding pen.
+"""Queries added in round 14 (live since round 16).
 
-EMPTY at creation (round-13 end; ADVICE r07 precedent: the pen, its
-parity gate ``tests/oracle/test_staged_r15_parity.py``, the
-``STAGED_R15_ENABLED`` flag, and the ``_PEN_MODULES`` entry all
-exist BEFORE the first round-15 query lands, so every registration
-is verified-by-construction from its first commit). Round 14 fills
-this pen (≤ ~15 queries — the rotation-backlog cap, see the
-BENCH_NOTES ledger) while activating the r13 one; round 16 flips
-the flag.
-
-Float-determinism discipline matches ``queries.py`` (see its module
-docstring): row-level doubles raw, no round(), SUM/AVG through exact
-decimals, every aggregate/computed column aliased identically in the
-Spark code and the DuckDB oracle.
-
-CLOSED at 15 queries in round 14 (the ≤15 rotation-backlog cap),
-every one exact-oracled and hash-verified at sf0.001 + sf0.01 in
-``tests/oracle/test_staged_r15_parity.py``:
+15 queries, all with exact oracles:
 
 - 3 round-13 seeds: ``source_binary_files`` (whole-file binary
   ingestion, sort hardened per ADVICE r13),
@@ -42,54 +26,18 @@ every one exact-oracled and hash-verified at sf0.001 + sf0.01 in
   (DataSourceStreamWriter — the pure-Python format family's last
   surface).
 
-Leads evaluated and NOT taken (round-13 loose ends): SQL and
-Python-compute tiers remain CLOSED (r13/r14 pens; nothing new in
-4.1 release notes beyond what's covered); Avro still BLOCKED (no
-spark-avro in pip pyspark — do not re-probe unless the jar
-appears); ``transformWithStateInPandas`` still BLOCKED (hard
-google.protobuf import); the bucketed-broadcast hybrid similarity
-join stays shelved — the r11–r13 plan audits found no shuffle it
-would remove, and no new one appeared this round; an as-of-with-
-tolerance query was drafted then dropped as redundant with the live
-``join_asof_nearest`` (already tolerance-bounded both directions).
-The rows-only trio stays rows-only by design with invariant
-companions.
+Float-determinism discipline matches ``queries.py`` (see its module
+docstring): row-level doubles raw, no round(), SUM/AVG through exact
+decimals, every aggregate/computed column aliased identically in the
+Spark code and the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from rs_query_engine_spark.queries import QueryFn
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r15 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-15
-    staged registry (merged live when STAGED_R15_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
+from rs_query_engine_spark.queries import _t, register
 
 # ---------------------------------------------------------------------------
 # binaryFile source — whole-file ingestion with content fingerprints
@@ -100,13 +48,8 @@ def oracle_sql() -> dict[str, str]:
 # spark-avro and the container has no package download, so the Avro
 # surface is BLOCKED. Do not re-probe unless the jar appears.
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
 
-from rs_query_engine_spark.queries import _t  # noqa: E402
-
-
-@register_staged(
+@register(
     "source_binary_files",
     oracle="""
     WITH lines AS (
@@ -230,7 +173,7 @@ _TRY_DIV_MOD = 7  # every 7th order gets a zero denominator
 _TRY_POISON_MOD = 101  # every 101st order carries the poisoned cell
 
 
-@register_staged(
+@register(
     "scalar_try_ansi_family",
     oracle=f"""
     WITH t AS (
@@ -348,7 +291,7 @@ _COV_MISS_MOD = 11  # embeddings absent for doc_id % 11 == 0
 _COV_DEL_MOD = 13  # corpus rows absent for doc_id % 13 == 0
 
 
-@register_staged(
+@register(
     "quality_embedding_coverage",
     oracle=f"""
     WITH docs AS (
@@ -424,7 +367,7 @@ def quality_embedding_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "agg_listagg_ordered",
     oracle="""
     WITH nat AS (
@@ -495,7 +438,7 @@ def agg_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "agg_conditional_family",
     oracle="""
     SELECT l_returnflag,
@@ -553,7 +496,7 @@ def agg_conditional_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "agg_bitwise_family",
     oracle="""
     SELECT o_orderpriority,
@@ -597,7 +540,7 @@ def agg_bitwise_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "quality_simpson_index",
     oracle="""
     WITH per_lang AS (
@@ -653,7 +596,7 @@ def quality_simpson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COLL_CASE_MOD = 2
 
 
-@register_staged(
+@register(
     "string_collation_groupby",
     oracle=f"""
     WITH m AS (
@@ -725,7 +668,7 @@ _URLP_Q_MOD = 5
 _URLP_X_MOD = 7
 
 
-@register_staged(
+@register(
     "string_url_parse_family",
     oracle=f"""
     SELECT doc_id,
@@ -784,7 +727,7 @@ def string_url_parse_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "join_not_in_null_semantics",
     oracle="""
     WITH probe_clean AS (
@@ -862,7 +805,7 @@ def join_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "quality_winsorize_clip",
     oracle="""
     WITH ranked AS (
@@ -963,7 +906,7 @@ _COLLOC_MIN_COUNT = 5  # bigram support floor (shared with the oracle)
 _COLLOC_TOP_K = 10
 
 
-@register_staged(
+@register(
     "text_collocation_pmi_rank",
     oracle=rf"""
     WITH toks AS (
@@ -1085,7 +1028,7 @@ def text_collocation_pmi_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "events_cumdev_changepoint",
     oracle="""
     WITH daily AS (
@@ -1180,7 +1123,7 @@ def events_cumdev_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "source_csv_quoted_multiline",
     oracle="""
     SELECT doc_id,
@@ -1264,7 +1207,7 @@ def source_csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "source_python_stream_writer",
     oracle="""
     SELECT event_type,

@@ -1,95 +1,33 @@
-"""Staged query registrations for ROUND 17 — the round-16 holding pen.
+"""Queries added in round 14 (live since round 17).
 
-EMPTY at creation (round-14 end; ADVICE r07 precedent: the pen, its
-parity gate ``tests/oracle/test_staged_r16_parity.py``, the
-``STAGED_R16_ENABLED`` flag, and the ``_PEN_MODULES`` entry all
-exist BEFORE the first round-16 query lands, so every registration
-is verified-by-construction from its first commit), then SEEDED the
-same round with 6 queries hash-verified at sf0.001 + sf0.01
-(r13→r15 precedent): civil-time bucketing into an IANA zone with
-the DST hour-count invariant, the positional-regexp builtin family
-(count/substr/instr vs independent DuckDB emulations), the
+14 queries, all with exact oracles: civil-time bucketing into an IANA
+zone with the DST hour-count invariant, the positional-regexp builtin
+family (count/substr/instr vs independent DuckDB emulations), the
 bitemporal as-of read (versions × transaction-time cutoff — the
 training-snapshot reproducibility primitive), multi-column
-COUNT(DISTINCT) through the Expand rewrite, interval-union
-dwell-time coverage (gaps-and-islands with a running-max end, exact
-int64 microseconds), and largest-remainder sample-budget
-apportionment (pure int64 Hamilton quotas summing to exactly K) —
-then widened the SAME round with a second seed wave of 8
-(time-weighted average over event gaps, exact integer Gini
-concentration, Pareto-frontier skyline via an agg-then-tiny-window
-plan, inverted-index boolean AND search, user-path trigrams,
-order-independent md5 table checksums, the ``_metadata`` hidden-
-column file audit, and sweep-line peak concurrency), closing the
-pen at 14 ≤ the ~15 rotation-backlog cap (see the BENCH_NOTES
-ledger). Round 17 flips the flag.
+COUNT(DISTINCT) through the Expand rewrite, interval-union dwell-time
+coverage (gaps-and-islands with a running-max end, exact int64
+microseconds), largest-remainder sample-budget apportionment (pure
+int64 Hamilton quotas summing to exactly K), time-weighted average
+over event gaps, exact integer Gini concentration, Pareto-frontier
+skyline via an agg-then-tiny-window plan, inverted-index boolean AND
+search, user-path trigrams, order-independent md5 table checksums,
+the ``_metadata`` hidden-column file audit, and sweep-line peak
+concurrency.
 
 Float-determinism discipline matches ``queries.py`` (see its module
 docstring): row-level doubles raw, no round(), SUM/AVG through exact
 decimals, every aggregate/computed column aliased identically in the
 Spark code and the DuckDB oracle.
-
-Candidate leads for round 15 (from round-14 loose ends — evaluate,
-don't assume):
-
-- **SQL + Python-compute surfaces remain CLOSED** (r13/r14/r15
-  pens): recursive CTE, SQL UDF/table function/scripting, pipe
-  syntax, LATERAL, Observation, GROUP BY ALL, named params,
-  IDENTIFIER(), EXECUTE IMMEDIATE, listagg, collations, try_*; every
-  Python tier incl. the full DataSource family (batch r/w, pushdown,
-  Arrow, 3 stream readers, stream writer). Scan 4.1 release notes
-  before assuming anything new.
-- **Avro still BLOCKED** (no spark-avro in pip pyspark);
-  ``transformWithStateInPandas`` still BLOCKED (hard google.protobuf
-  import). Do not re-probe unless the image changes.
-- **The bucketed-broadcast hybrid similarity join** stays shelved
-  unless a plan audit finds a shuffle it would remove (r11–r14:
-  none).
-- The rows-only trio (``similarity_ivf_kmeans``,
-  ``agg_approx_percentile``, ``text_unigram_logprob``) stays
-  rows-only by design with invariant companions — re-evaluate only
-  if one becomes exactly oracle-able.
 """
 
 from __future__ import annotations
 
-from rs_query_engine_spark.queries import QueryFn
 
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r16 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-16
-    staged registry (merged live when STAGED_R16_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
-
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from rs_query_engine_spark.queries import D_PRICE, _t  # noqa: E402
+from rs_query_engine_spark.queries import D_PRICE, _t, register
 
 # ---------------------------------------------------------------------------
 # Round-14 seeds (r13 precedent: the pen is created empty, then seeded
@@ -97,7 +35,7 @@ from rs_query_engine_spark.queries import D_PRICE, _t  # noqa: E402
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "events_timezone_bucketing",
     oracle="""
     WITH loc AS (
@@ -155,7 +93,7 @@ def events_timezone_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
 _REGEXP_RUN = "[aeiou]{2,}"  # shared pattern: runs of 2+ vowels
 
 
-@register_staged(
+@register(
     "string_regexp_family",
     oracle=rf"""
     SELECT doc_id,
@@ -206,7 +144,7 @@ _BT_LAG_US = 86_400_000_000
 _BT_CUT_US = 2 * 86_400_000_000
 
 
-@register_staged(
+@register(
     "events_bitemporal_asof",
     oracle=f"""
     WITH ev AS (
@@ -308,7 +246,7 @@ def events_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "agg_multi_distinct",
     oracle="""
     SELECT o_orderpriority,
@@ -349,7 +287,7 @@ def agg_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COV_WINDOW_US = 1_800_000_000  # each event covers [ts, ts + 30 min)
 
 
-@register_staged(
+@register(
     "events_interval_coverage",
     oracle=f"""
     WITH w AS (
@@ -448,7 +386,7 @@ def events_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ALLOC_K = 1000  # total sample budget to apportion across sources
 
 
-@register_staged(
+@register(
     "sample_proportional_allocation",
     oracle=f"""
     WITH counts AS (
@@ -532,7 +470,7 @@ def sample_proportional_allocation(spark: SparkSession, sf_dir: str) -> DataFram
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "events_time_weighted_avg",
     oracle="""
     WITH e AS (
@@ -610,7 +548,7 @@ def events_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "quality_gini_concentration",
     oracle="""
     WITH ranked AS (
@@ -675,7 +613,7 @@ def quality_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "quality_pareto_frontier",
     oracle=r"""
     WITH f AS (
@@ -785,7 +723,7 @@ def _boolean_search_oracle() -> str:
     """
 
 
-@register_staged("text_boolean_search", oracle=_boolean_search_oracle())
+@register("text_boolean_search", oracle=_boolean_search_oracle())
 def text_boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index boolean AND search — documents containing ALL
     query terms, with per-term hit counts (the term-frequency columns
@@ -819,7 +757,7 @@ def text_boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "events_path_ngrams",
     oracle="""
     WITH seq AS (
@@ -865,7 +803,7 @@ def events_path_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "maintenance_table_checksum",
     oracle="""
     WITH h AS (
@@ -934,7 +872,7 @@ def maintenance_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "source_file_metadata_audit",
     oracle="""
     SELECT lang,
@@ -1022,7 +960,7 @@ def source_file_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONC_WINDOW_US = 1_800_000_000  # each event holds a slot for 30 min
 
 
-@register_staged(
+@register(
     "events_concurrency_peak",
     oracle=f"""
     WITH e AS (

@@ -1,11 +1,9 @@
-"""Staged query registrations for ROUND 18 — the round-17 holding pen.
+"""Dormant queries written in round 17: registered with
+``register_dormant``, so ``dormant_queries()`` serves them and
+``tests/oracle/test_staged_r17_parity.py`` checks them
+against their oracles, but ``queries()`` does not.
 
-EMPTY at creation (round-14 end; ADVICE r07 precedent: the pen, its
-parity gate ``tests/oracle/test_staged_r17_parity.py``, the
-``STAGED_R17_ENABLED`` flag, and the ``_PEN_MODULES`` entry all exist
-BEFORE the first round-17 query lands, so every registration is
-verified-by-construction from its first commit), then seeded the
-same round with 8 queries hash-verified at sf0.001 + sf0.01: the
+Seeded with 8 queries hash-verified at sf0.001 + sf0.01: the
 exact WEIGHTED median by integer rank selection (the length of the
 document holding the median character — 2·cum ≥ total crossing,
 WindowGroupLimit-pushed rn=1 pick), SYSTEMATIC PPS sampling
@@ -49,9 +47,7 @@ CUBE cross-tabulation (``DataFrame.cube`` over
 (``GroupedData.pivot`` desugaring to one-pass conditional
 aggregates, coalesced against the FILTER-clause oracle; the row
 total is a projection over the pivoted columns, never a second
-aggregate joined back). Round 18 flips the flag; rounds 16-17 seed the
-round-18 pen (created EMPTY with its gate at round-15 end) rather
-than this one.
+aggregate joined back).
 
 Round-15 Spark 4.1 surface scan (VERDICT r14 next-#6): probed the
 installed 4.1.2 function/type surface once. NEW and seeded: the
@@ -112,43 +108,10 @@ Candidate leads (from round-14 loose ends — evaluate, don't assume):
 
 from __future__ import annotations
 
-from rs_query_engine_spark.queries import QueryFn
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r17 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-17
-    staged registry (merged live when STAGED_R17_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
-
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from rs_query_engine_spark.queries import D_PRICE, _t  # noqa: E402
+from rs_query_engine_spark.queries import D_PRICE, _t, register_dormant
 
 # ---------------------------------------------------------------------------
 # Round-14 seeds (r13-r16 precedent: the pen is created at round end
@@ -156,7 +119,7 @@ from rs_query_engine_spark.queries import D_PRICE, _t  # noqa: E402
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register_dormant(
     "agg_weighted_median_exact",
     oracle="""
     WITH s AS (
@@ -237,7 +200,7 @@ def agg_weighted_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PPS_K = 500  # total systematic sample budget across the corpus
 
 
-@register_staged(
+@register_dormant(
     "sample_systematic_pps",
     oracle=f"""
     WITH mass AS (
@@ -382,7 +345,7 @@ def _snm_oracle() -> str:
     """
 
 
-@register_staged("dedup_sorted_neighborhood", oracle=_snm_oracle())
+@register_dormant("dedup_sorted_neighborhood", oracle=_snm_oracle())
 def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SORTED-NEIGHBORHOOD dedup (SNM) — the third classic blocking
     family alongside the repo's LSH banding and key blocking: sort
@@ -457,7 +420,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "text_hapax_ratio",
     oracle=r"""
     WITH toks AS (
@@ -516,7 +479,7 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "events_interarrival_burstiness",
     oracle="""
     WITH e AS (
@@ -626,7 +589,7 @@ def events_interarrival_burstiness(
 _TRAIL_WIN = "INTERVAL 1 HOUR"  # trailing event-time frame width
 
 
-@register_staged(
+@register_dormant(
     "events_trailing_window_metrics",
     oracle=f"""
     SELECT event_id, event_type,
@@ -700,7 +663,7 @@ def _benford_parts() -> tuple[dict, str]:
     return probs, sql_case
 
 
-@register_staged(
+@register_dormant(
     "quality_benford_audit",
     oracle=f"""
     WITH cents AS (
@@ -773,7 +736,7 @@ def quality_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "events_funnel_latency",
     oracle="""
     WITH fv AS (
@@ -892,7 +855,7 @@ def _ensure_time_type(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.timeType.enabled", "true")
 
 
-@register_staged(
+@register_dormant(
     "events_time_of_day_profile",
     oracle="""
     WITH m AS (
@@ -960,7 +923,7 @@ def events_time_of_day_profile(
     )
 
 
-@register_staged(
+@register_dormant(
     "events_ab_lift",
     oracle="""
     WITH per AS (
@@ -1041,7 +1004,7 @@ def events_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EWMA_W = 16  # dyadic window width: weights 2^15 .. 2^0, newest first
 
 
-@register_staged(
+@register_dormant(
     "events_ewma_dyadic",
     oracle=f"""
     WITH r AS (
@@ -1173,7 +1136,7 @@ def _sweep_stale_mwclust(current: str) -> None:
             shutil.rmtree(path, ignore_errors=True)
 
 
-@register_staged(
+@register_dormant(
     "maintenance_multiway_cluster_audit",
     oracle="""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -1281,7 +1244,7 @@ def maintenance_multiway_cluster_audit(
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register_dormant(
     "agg_rollup_returnflag",
     oracle="""
     SELECT l_returnflag, l_linestatus,
@@ -1327,7 +1290,7 @@ def agg_rollup_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "agg_cube_type_dow",
     oracle="""
     WITH e AS (
@@ -1378,7 +1341,7 @@ def agg_cube_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PIVOT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
-@register_staged(
+@register_dormant(
     "agg_pivot_type_matrix",
     oracle=f"""
     SELECT CAST(EXTRACT(dow FROM CAST(ts AS TIMESTAMP)) + 1 AS INT)

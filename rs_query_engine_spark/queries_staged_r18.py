@@ -1,11 +1,9 @@
-"""Staged query registrations for ROUND 19 — the round-18 holding pen.
+"""Dormant queries written in round 18: registered with
+``register_dormant``, so ``dormant_queries()`` serves them and
+``tests/oracle/test_staged_r18_parity.py`` checks them
+against their oracles, but ``queries()`` does not.
 
-EMPTY at creation (round-15 end; ADVICE r07 precedent: the pen, its
-parity gate ``tests/oracle/test_staged_r18_parity.py``, the
-``STAGED_R18_ENABLED`` flag, and the ``_PEN_MODULES`` entry all exist
-BEFORE the first round-18 registration, so every query is
-verified-by-construction from its first commit), then seeded the
-same round with 3 queries hash-verified at sf0.001 + sf0.01:
+Seeded with 3 queries hash-verified at sf0.001 + sf0.01:
 PERCENT-OF-PARENT hierarchy shares (exact DECIMAL window sums over
 the leaf frame, the drill-down companion to agg_rollup_returnflag),
 the HIGHER-ORDER map-operator pipeline (map_filter →
@@ -15,9 +13,7 @@ the MAP surface whose build/lookup tier is map_functions), and the
 ANTI-ENTROPY checksum DIFF (per-bucket SUM+BIT_XOR digests of two
 deterministically-derived table generations, differing buckets
 only — the repair-scoping companion to maintenance_table_checksum,
-computed in one conditional-aggregate pass). Rounds
-16-18 fill the rest (≤ ~15 queries — the rotation-backlog cap, see
-the BENCH_NOTES ledger); round 19 flips the flag.
+computed in one conditional-aggregate pass).
 
 ROUND-16 wave (8 queries, every one hash-verified at sf0.001 +
 sf0.01 from first commit, plan-pinned in
@@ -120,43 +116,10 @@ Candidate leads (round-15 loose ends — evaluate, don't assume):
 
 from __future__ import annotations
 
-from rs_query_engine_spark.queries import QueryFn
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r18 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-18
-    staged registry (merged live when STAGED_R18_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
-
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from rs_query_engine_spark.queries import D_PRICE, _t  # noqa: E402
+from rs_query_engine_spark.queries import D_PRICE, _t, register_dormant
 
 # ---------------------------------------------------------------------------
 # Round-15 seeds (r13-r17 precedent: the pen is created at round end
@@ -164,7 +127,7 @@ from rs_query_engine_spark.queries import D_PRICE, _t  # noqa: E402
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register_dormant(
     "agg_pct_of_parent_hierarchy",
     oracle="""
     WITH leaf AS (
@@ -230,7 +193,7 @@ def agg_pct_of_parent_hierarchy(
     )
 
 
-@register_staged(
+@register_dormant(
     "text_token_map_pipeline",
     oracle=r"""
     WITH tok AS (
@@ -301,7 +264,7 @@ def text_token_map_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "maintenance_checksum_diff",
     oracle="""
     WITH h AS (
@@ -418,7 +381,7 @@ def maintenance_checksum_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register_dormant(
     "array_higher_order_pipeline",
     oracle="""
     WITH a AS (
@@ -498,7 +461,7 @@ def array_higher_order_pipeline(
     )
 
 
-@register_staged(
+@register_dormant(
     "string_str_to_map_parse",
     oracle="""
     SELECT doc_id,
@@ -548,7 +511,7 @@ def string_str_to_map_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "scalar_from_csv_parse",
     oracle="""
     SELECT o_orderkey,
@@ -597,7 +560,7 @@ def scalar_from_csv_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "events_ab_rank_sum",
     oracle="""
     WITH r AS (
@@ -687,7 +650,7 @@ def events_ab_rank_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "events_funnel_conversion_decay",
     oracle="""
     WITH f AS (
@@ -775,7 +738,7 @@ def events_funnel_conversion_decay(
     )
 
 
-@register_staged(
+@register_dormant(
     "string_binary_codec_family",
     oracle="""
     SELECT doc_id,
@@ -817,7 +780,7 @@ def string_binary_codec_family(
     )
 
 
-@register_staged(
+@register_dormant(
     "agg_moments_skew_kurtosis",
     oracle="""
     WITH s AS (
@@ -914,7 +877,7 @@ def agg_moments_skew_kurtosis(
     )
 
 
-@register_staged(
+@register_dormant(
     "text_sentence_segmentation",
     oracle="""
     WITH s AS (
@@ -984,7 +947,7 @@ def text_sentence_segmentation(
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register_dormant(
     "string_format_family",
     oracle="""
     SELECT p_partkey,
@@ -1026,7 +989,7 @@ def string_format_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "scalar_epoch_conversions",
     oracle="""
     SELECT event_id,
@@ -1081,7 +1044,7 @@ def scalar_epoch_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "array_posexplode_outer",
     oracle="""
     WITH heavy AS (
@@ -1137,7 +1100,7 @@ def array_posexplode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "sample_neyman_allocation",
     oracle="""
     WITH s AS (

@@ -1,11 +1,9 @@
-"""Staged query registrations for ROUND 20 — the round-19 holding pen.
+"""Dormant queries written in round 19: registered with
+``register_dormant``, so ``dormant_queries()`` serves them and
+``tests/oracle/test_staged_r19_parity.py`` checks them
+against their oracles, but ``queries()`` does not.
 
-EMPTY at creation (round-16 end; ADVICE r07 precedent: the pen, its
-parity gate ``tests/oracle/test_staged_r19_parity.py``, the
-``STAGED_R19_ENABLED`` flag, and the ``_PEN_MODULES`` entry all exist
-BEFORE the first round-19 registration, so every query is
-verified-by-construction from its first commit), then SEEDED the
-same round with 3 queries hash-verified at sf0.001 + sf0.01:
+Seeded with 3 queries hash-verified at sf0.001 + sf0.01:
 ``quality_utf8_validation_audit`` (the header's make_valid_utf8
 lead, probed and landed — is_valid_utf8 / make_valid_utf8 /
 try_validate_utf8 over deterministically-corrupted bytes, pinned by
@@ -30,21 +28,14 @@ from exact sufficient statistics, lineage-cut single scan,
 plan-pinned), ``string_common_prefix_groups`` (per-group LCP via
 the lexicographic MIN/MAX trick + monotone prefix max),
 ``date_iso_week_boundaries`` (ISO week-year boundary audit,
-YEAROFWEEK ≡ isoyear) — all hash-verified at sf0.001 + sf0.01 via
-scripts/drive_pen.py (type-family-asserting) from first commit.
+YEAROFWEEK ≡ isoyear) — all hash-verified at sf0.001 + sf0.01 (type
+families included) from first commit.
 CLOSED at 10 the same round with
 ``quality_split_leakage_audit`` (train/eval eval-contamination
 gate: bag-of-words-set near-dup fingerprints crossing the 90/5/5
 hash splits, single-pass stack unpivot, plan-pinned — the
 fingerprint is deliberately the token-SET form so the report is
-non-degenerate at every SF). Rounds 18-19 add NOTHING unless a
-driver finding demands it — this pen flips in the FINAL round-20
-window alongside the re-check backlog; round 20 flips the flag. Flip cadence for context: round 16
-flipped the r15 pen, round 17 flips the r16 pen, round 18 flips the
-r17 pen, round 19 flips the r18 pen (closed at 15 in round 16), and
-round 20 — the final round — flips this one, so keep it SMALL enough
-that its first-ever verification fits the round-20 window alongside
-the re-check backlog.
+non-degenerate at every SF).
 
 Float-determinism discipline matches ``queries.py`` (see its module
 docstring): row-level doubles raw, no round(), SUM/AVG through exact
@@ -78,43 +69,10 @@ Candidate leads (round-16 loose ends — evaluate, don't assume):
 
 from __future__ import annotations
 
-from rs_query_engine_spark.queries import QueryFn
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r19 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-19
-    staged registry (merged live when STAGED_R19_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
-
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from rs_query_engine_spark.queries import _t  # noqa: E402
+from rs_query_engine_spark.queries import _t, register_dormant
 
 # ---------------------------------------------------------------------------
 # Round-16 seed (the pen-header's make_valid_utf8 lead, probed and
@@ -122,7 +80,7 @@ from rs_query_engine_spark.queries import _t  # noqa: E402
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register_dormant(
     "quality_utf8_validation_audit",
     oracle="""
     SELECT doc_id,
@@ -186,7 +144,7 @@ def quality_utf8_validation_audit(
     )
 
 
-@register_staged(
+@register_dormant(
     "events_dau_wau_stickiness",
     oracle="""
     WITH ud AS (
@@ -262,7 +220,7 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "events_session_relative_features",
     oracle="""
     WITH o AS (
@@ -353,7 +311,7 @@ def events_session_relative_features(
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register_dormant(
     "events_activity_islands",
     oracle="""
     WITH ud AS (
@@ -436,7 +394,7 @@ def events_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "events_type_churn_sets",
     oracle="""
     WITH mid AS (
@@ -528,7 +486,7 @@ def events_type_churn_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "events_association_residuals",
     oracle="""
     WITH cells AS (
@@ -622,7 +580,7 @@ def events_association_residuals(
     )
 
 
-@register_staged(
+@register_dormant(
     "events_autocorr_daily",
     # second-moment sums can exceed 2^53 at larger SFs; VARCHAR hop
     # per the agg_corr_exact discipline.
@@ -713,7 +671,7 @@ def events_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select("lag", "n", (num / den).alias("autocorr"))
 
 
-@register_staged(
+@register_dormant(
     "string_common_prefix_groups",
     oracle="""
     WITH g AS (
@@ -799,7 +757,7 @@ def string_common_prefix_groups(
     )
 
 
-@register_staged(
+@register_dormant(
     "date_iso_week_boundaries",
     oracle="""
     WITH o AS (
@@ -867,7 +825,7 @@ def date_iso_week_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register_dormant(
     "quality_split_leakage_audit",
     oracle=r"""
     WITH f AS (

@@ -1,16 +1,10 @@
-"""Staged query registrations for ROUND 7 — implemented and locally
-oracle-verified in round 6, HELD OUT of the driver registry until the
-round-7 window has budget.
-
-Why staged: round 6's 50-row driver window is exactly committed — 20
-round-5 staged activations + 4 newly-oracled sketch/PQ queries
-front-load as unverified, leaving 26 re-check slots for the stalest
-verified rows (the r01 multimodal pair among them). Any further
-registration would evict a re-check (VERDICT r05 #3/#7). These queries
-therefore run through the same local oracle-parity harness
-(``tests/oracle/test_staged_r7_parity.py``, sf0.001 + sf0.01) and
-activate in round 7 by flipping ``STAGED_R7_ENABLED`` in
-``queries.py``.
+"""Queries added in round 6 (live since round 7), all with exact
+oracles: exact-substring span dedup, cross-source duplicate matrices
+and survivorship merge; hybrid lexical + vector retrieval (RRF);
+fuzzy name joins; training-shard layout; attribution, disorder, EWMA
+and RFM event features; l-diversity and bad-word filters; the binary
+SimHash; the ORC source roundtrip; correlated (Q17) and recursive SQL
+entries; and the windowed streaming top-k.
 
 Float-determinism discipline matches ``queries.py`` (see its module
 docstring).
@@ -21,32 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rs_query_engine_spark.queries import QueryFn, _t
-
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-7
-    staged registry (merged live when STAGED_R7_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
+from rs_query_engine_spark.queries import _t, _ORACLE, register
 
 # =====================================================================
 # Dedup — EXACT substring spans (Lee et al. ExactSubstr)
@@ -95,7 +64,7 @@ _SUBSTR_CTES = rf"""
 """
 
 
-@register_staged(
+@register(
     "text_exact_substr_spans",
     oracle=f"""
     WITH {_SUBSTR_CTES}
@@ -124,7 +93,7 @@ def text_exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_substring_spans(d, "doc_id", "text", min_len=_SUBSTR_L)
 
 
-@register_staged(
+@register(
     "text_exact_substr_fraction",
     oracle=f"""
     WITH {_SUBSTR_CTES}
@@ -246,7 +215,7 @@ def _hybrid_rrf_oracle() -> str:
     """
 
 
-@register_staged("similarity_hybrid_rrf", oracle=None)
+@register("similarity_hybrid_rrf", oracle=None)
 def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID retrieval — dense + lexical with reciprocal-rank fusion
     (the production RAG/retrieval shape: embedding cosine catches
@@ -360,7 +329,7 @@ _N_SHARDS = 8
 _EPOCH_SALT = "epoch0"
 
 
-@register_staged(
+@register(
     "layout_training_shards",
     oracle=f"""
     WITH k AS (
@@ -437,7 +406,7 @@ def _cross_source_oracle() -> str:
     """
 
 
-@register_staged("dedup_cross_source_matrix", oracle=None)
+@register("dedup_cross_source_matrix", oracle=None)
 def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSS-SOURCE near-dup contamination matrix: aggregate the
     MinHash-LSH verified pair set by unordered source pair — the
@@ -510,7 +479,7 @@ def _binary_simhash_oracle() -> str:
     """
 
 
-@register_staged("multimodal_binary_simhash", oracle=None)
+@register("multimodal_binary_simhash", oracle=None)
 def multimodal_binary_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-level SimHash over BINARY payloads through the multimodal
     Python tier — the near-dup primitive for opaque media columns
@@ -561,7 +530,7 @@ _Q17_SQL = """
 """
 
 
-@register_staged("sql_entry_q17_corr", oracle=_Q17_SQL)
+@register("sql_entry_q17_corr", oracle=_Q17_SQL)
 def sql_entry_q17_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17's CORRELATED SCALAR SUBQUERY through the SQL entry:
     small-quantity-order revenue where each lineitem compares against
@@ -588,7 +557,7 @@ def sql_entry_q17_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "stream_window_topk",
     oracle="""
     WITH counts AS (
@@ -656,7 +625,7 @@ def stream_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "events_disorder_audit",
     oracle="""
     WITH o AS (
@@ -709,7 +678,7 @@ def events_disorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "quality_l_diversity",
     oracle="""
     SELECT d.lang, d.source,
@@ -748,7 +717,7 @@ def quality_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "source_orc_roundtrip",
     oracle="""
     SELECT p_partkey, p_name, p_brand, p_type, p_size,
@@ -812,7 +781,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "join_fuzzy_names",
     oracle="""
     WITH names AS (
@@ -891,7 +860,7 @@ def join_fuzzy_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "dedup_survivorship_merge",
     oracle=r"""
     WITH f AS (
@@ -968,7 +937,7 @@ def dedup_survivorship_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "sql_entry_recursive_walk",
     oracle="""
     WITH RECURSIVE walk(doc_id, node, steps) AS (
@@ -1024,7 +993,7 @@ def sql_entry_recursive_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EWMA_K = 8  # truncation depth: weights 2^-1 .. 2^-8, tail mass 2^-8
 
 
-@register_staged(
+@register(
     "events_ewma_smoothing",
     oracle=f"""
     WITH o AS (
@@ -1077,7 +1046,7 @@ def events_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BADWORDS = ("slow", "dup", "error")  # demo lexicon; production swaps a real list
 
 
-@register_staged(
+@register(
     "text_badwords_filter",
     oracle=rf"""
     WITH toks AS (
@@ -1133,7 +1102,7 @@ def text_badwords_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "events_rfm_features",
     oracle="""
     WITH now_ts AS (
@@ -1180,7 +1149,7 @@ def events_rfm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "events_attribution_touch",
     oracle="""
     WITH o AS (

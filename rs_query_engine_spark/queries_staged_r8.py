@@ -1,15 +1,8 @@
-"""Staged query registrations for ROUND 8 — implemented and locally
-oracle-verified in round 7, HELD OUT of the driver registry until the
-round-8 window has budget.
-
-Why staged: round 7's 50-row driver window is exactly committed — the
-18 round-6 staged activations front-load as unverified, leaving 32
-re-check slots that cover all 17 r3-stamped rows plus the stalest r4
-rows. Any further registration would evict a re-check (VERDICT r06
-#5). These queries therefore run through the same local oracle-parity
-harness (``tests/oracle/test_staged_r8_parity.py``, sf0.001 + sf0.01)
-and activate in round 8 by flipping ``STAGED_R8_ENABLED`` in
-``queries.py``.
+"""Queries added in round 7 (live since round 9), all with exact
+oracles: TPC-H Q20/Q21 shapes, ``EXCEPT ALL``, percentile bounds,
+compaction bin packing, k-means and unigram invariant companions for
+the rows-only queries, a LATERAL top-k SQL entry, a Python UDTF
+(language runs) and ``IGNORE NULLS`` windows.
 
 Float-determinism discipline matches ``queries.py`` (see its module
 docstring).
@@ -21,38 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from rs_query_engine_spark.session import truncate_lineage
 
-from rs_query_engine_spark.queries import QueryFn, _t
-
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r8 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-8
-    staged registry (merged live when STAGED_R8_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
+from rs_query_engine_spark.queries import _t, register
 
 # =====================================================================
 # TPC-H Q20/Q21-shaped nested correlated semi/anti joins (VERDICT r07
@@ -60,7 +22,7 @@ def oracle_sql() -> dict[str, str]:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "tpch_q20_shape",
     oracle="""
     WITH per_sp AS (
@@ -125,7 +87,7 @@ def tpch_q20_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "tpch_q21_shape",
     oracle="""
     WITH l1 AS (
@@ -214,7 +176,7 @@ def tpch_q21_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "sql_entry_lateral_topk",
     oracle="""
     SELECT n.n_name, t.c_name, t.c_acctbal
@@ -254,7 +216,7 @@ def sql_entry_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "window_ignore_nulls",
     oracle="""
     WITH base AS (
@@ -312,7 +274,7 @@ def window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "setop_except_all",
     oracle="""
     SELECT 'except_all' AS op, o_custkey FROM (
@@ -356,7 +318,7 @@ def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COMPACT_TARGET_CHARS = 2000
 
 
-@register_staged(
+@register(
     "layout_compaction_bins",
     oracle=f"""
     WITH sized AS (
@@ -417,7 +379,7 @@ def layout_compaction_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "udtf_lang_runs",
     oracle=r"""
     WITH g AS (
@@ -501,7 +463,7 @@ def udtf_lang_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "agg_percentile_bounds",
     oracle="""
     SELECT CAST(t.p AS DOUBLE) AS p,
@@ -562,7 +524,7 @@ def agg_percentile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select("p", "n", rank_ok.alias("rank_ok"))
 
 
-@register_staged(
+@register(
     "similarity_kmeans_invariants",
     oracle="""
     SELECT CAST(8 AS BIGINT) AS k,
@@ -642,7 +604,7 @@ def similarity_kmeans_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "text_unigram_invariants",
     oracle=r"""
     WITH tok AS (

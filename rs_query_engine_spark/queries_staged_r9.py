@@ -1,19 +1,6 @@
-"""Staged query registrations for ROUND 10 — implemented and locally
-oracle-verified in round 9, HELD OUT of the driver registry until the
-round-10 window has budget.
+"""Queries added in round 9 (live since round 10).
 
-Why staged: round 9's 50-row driver window is exactly committed — the
-10 round-8 staged activations front-load as unverified, leaving 40
-re-check slots that must cover every r4/r5-stamped row. Any further
-registration would evict a re-check (VERDICT r06 #5 / CLAUDE.md
-rotation note). These queries run through the same local
-oracle-parity harness (``tests/oracle/test_staged_r9_parity.py``,
-sf0.001 + sf0.01) and activate in round 10 by flipping
-``STAGED_R9_ENABLED`` in ``queries.py``.
-
-Round-9 pen (VERDICT r08 next-round #4) — 15 queries, all with exact
-oracles. The two candidates the r7 brief named and r8 skipped lead:
-the PERSISTED bucketed LSH index (``operators/lsh_index.py``) as a
+15 queries, all with exact oracles, led by the PERSISTED bucketed LSH index (``operators/lsh_index.py``) as a
 full lifecycle — build/read-back, batch probe with no corpus
 recompute (the real incremental-ingest shape at 100 TB), LSM-style
 merge generation, bucket-health stats, and a streaming foreachBatch
@@ -40,38 +27,7 @@ from rs_query_engine_spark.operators.dedup import (
     MINHASH_NUM_HASHES,
 )
 from rs_query_engine_spark.operators.lsh_index import BATCH_MOD, BATCH_REM
-from rs_query_engine_spark.queries import _COS_SQL, _MH_BANDS, _MH_SIG, D_PRICE, QueryFn, _t
-
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLE: dict[str, str] = {}
-
-# Queries deliberately registered WITHOUT a DuckDB oracle (rows-only
-# driver check). Every entry needs a registration-site docstring
-# justifying why SQL can't express it; the r9 parity harness asserts
-# this list is exactly the oracle-less set.
-ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset()
-
-
-def register_staged(name: str, oracle: str | None = None):
-    """Decorator twin of ``queries.register`` writing to the round-9
-    staged registry (merged live when STAGED_R9_ENABLED flips)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLE)
-
+from rs_query_engine_spark.queries import _COS_SQL, _MH_BANDS, _MH_SIG, D_PRICE, _t, _ORACLE, register
 
 # =====================================================================
 # Persisted LSH index + indexed incremental dedup (VERDICT r08 #4's
@@ -115,7 +71,7 @@ _LSH_IDX_CTES = rf"""
 """
 
 
-@register_staged(
+@register(
     "dedup_lsh_index_build",
     oracle=f"""
     WITH {_LSH_IDX_CTES}
@@ -156,7 +112,7 @@ _SIG_MATCH = " + ".join(
 )
 
 
-@register_staged(
+@register(
     "dedup_incremental_indexed",
     oracle=f"""
     WITH {_LSH_IDX_CTES},
@@ -235,7 +191,7 @@ _IVF_TOPK_SQL = """
 """
 
 
-@register_staged(
+@register(
     "similarity_ivf_recall_audit",
     oracle=f"""
     WITH corpus AS (
@@ -408,7 +364,7 @@ def similarity_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register_staged(
+@register(
     "tpch_q2_shape",
     oracle="""
     WITH sup AS (
@@ -482,7 +438,7 @@ def tpch_q2_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "tpch_q13_shape",
     oracle="""
     WITH per_c AS (
@@ -522,7 +478,7 @@ def tpch_q13_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_c.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
 
 
-@register_staged(
+@register(
     "tpch_q22_shape",
     oracle="""
     WITH avg_bal AS (
@@ -603,7 +559,7 @@ def tpch_q22_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LANGS = ("de", "en", "es", "fr", "zh")
 
 
-@register_staged(
+@register(
     "agg_pivot_wide",
     oracle=f"""
     SELECT source, {", ".join(_LANGS)},
@@ -640,7 +596,7 @@ def agg_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide.withColumn("total", total)
 
 
-@register_staged(
+@register(
     "sample_split_train_val_test",
     oracle="""
     WITH b AS (
@@ -683,7 +639,7 @@ def sample_split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "events_rolling_dau",
     oracle="""
     WITH ud AS (
@@ -728,7 +684,7 @@ def events_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "skew_key_diagnostics",
     oracle="""
     WITH cnts AS (
@@ -778,7 +734,7 @@ def skew_key_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "text_cdc_chunks",
     oracle=r"""
     WITH t AS (
@@ -830,7 +786,7 @@ def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cdc_chunk_stats(d, "doc_id", "text", mask=8)
 
 
-@register_staged(
+@register(
     "text_feature_hashing",
     oracle=r"""
     WITH tok AS (
@@ -871,7 +827,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "dedup_lsh_index_merge",
     oracle=f"""
     WITH {_LSH_IDX_CTES},
@@ -916,7 +872,7 @@ def dedup_lsh_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # one micro-batch at a time — per-document decisions are independent,
 # so the union of all micro-batch outputs equals the one-shot batch
 # probe and the two queries share one oracle by construction.
-@register_staged("stream_index_probe", oracle=_ORACLE["dedup_incremental_indexed"])
+@register("stream_index_probe", oracle=_ORACLE["dedup_incremental_indexed"])
 def stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS-ingest dedup — the streaming face of the persisted
     LSH index: new documents arrive as a stream, each micro-batch is
@@ -1008,7 +964,7 @@ def stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out).select("doc_id", "n_matches", "admitted")
 
 
-@register_staged(
+@register(
     "dedup_lsh_index_stats",
     oracle=f"""
     WITH {_LSH_IDX_CTES},

@@ -75,12 +75,6 @@ def write_orc(
     df.write.mode(mode).orc(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Re-open a written dataset (partition columns come back as
-    regular columns; filters on them prune directories)."""
-    return spark.read.parquet(path)
-
-
 def write_bucketed_table(
     df: DataFrame,
     table_name: str,

@@ -2,11 +2,10 @@
 
 The round driver's value hash is TYPE-sensitive (CLAUDE.md): a DuckDB
 HUGEINT/DECIMAL column vs a Spark bigint/double column mismatches even
-at equal values. Both the oracle parity tests
-(``tests/oracle/test_oracle_parity.py``) and the pre-flip pen gate
-(``scripts/drive_pen.py``) must therefore assert that every result
-column lands in the same coarse type family on both engines. Keeping
-the mapping here ensures the gate and the tests can never drift apart.
+at equal values. The oracle parity test
+(``tests/oracle/test_oracle_parity.py``) therefore asserts that every
+result column lands in the same coarse type family on both engines,
+using the mapping kept here.
 """
 
 from __future__ import annotations

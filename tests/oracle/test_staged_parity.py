@@ -1,68 +1,37 @@
-"""DuckDB-oracle parity for STAGED queries (round-6 registrations).
+"""DuckDB-oracle parity for the queries of ``queries_staged``.
 
-Same gate as ``test_oracle_parity.py`` — value-exact compare plus the
-type-family check the driver hash is sensitive to — run over
-``rs_query_engine_spark.queries_staged``. Keeping staged queries under
-the full harness means flipping ``queries.STAGED_ENABLED`` in round 6
-registers already-verified code, not a gamble.
+The same checks as ``test_oracle_parity.py``, read from the same
+single build of each query (``parity()``).
 """
 
 from __future__ import annotations
 
 import pytest
 
-from rs_query_engine_spark import queries_staged as staged
-
 # no tests/__init__.py: pytest rootless mode puts this directory on
 # sys.path, so the sibling harness imports as a top-level module
 from test_oracle_parity import (
-    SF_DIR,
-    _arrow_family,
-    _duck,
-    _normalize,
-    _spark_family,
+    ROWS_ONLY,
+    assert_matches_oracle,
+    assert_names_taken,
+    assert_type_families_match,
+    module_oracled,
+    module_queries,
 )
 
-STAGED_QUERIES = sorted(staged.oracle_sql())
+MODULE = "queries_staged"
+ORACLED = module_oracled(MODULE)
 
 
 def test_all_staged_queries_have_oracles():
-    # staged queries exist to be hash-verified on activation; a staged
-    # rows-only query would defeat the point of staging
-    assert sorted(staged.queries()) == STAGED_QUERIES
+    assert module_queries(MODULE) == ORACLED
 
 
-@pytest.mark.parametrize("name", STAGED_QUERIES)
+@pytest.mark.parametrize("name", ORACLED)
 def test_staged_query_matches_oracle(spark, name):
-    sdf = staged.queries()[name](spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    tbl = _duck(staged.oracle_sql()[name])
-    duck_cols = tbl.column_names
-    duck_rows = [tuple(r.values()) for r in tbl.to_pylist()]
-
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column mismatch {spark_cols} vs {duck_cols}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    ns = _normalize(spark_rows, spark_cols)
-    nd = _normalize(duck_rows, duck_cols)
-    mismatches = [(a, b) for a, b in zip(ns, nd) if a != b]
-    assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
+    assert_matches_oracle(spark, name)
 
 
-@pytest.mark.parametrize("name", STAGED_QUERIES)
+@pytest.mark.parametrize("name", ORACLED)
 def test_staged_result_type_families_match(spark, name):
-    sdf = staged.queries()[name](spark, SF_DIR)
-    spark_types = {
-        f.name: _spark_family(f.dataType.simpleString())
-        for f in sdf.schema.fields
-    }
-    tbl = _duck(f"SELECT * FROM ({staged.oracle_sql()[name]}) LIMIT 0")
-    duck_types = {f.name: _arrow_family(f.type) for f in tbl.schema}
-    assert spark_types == duck_types, (
-        f"{name}: type-family mismatch (driver hash is type-sensitive)"
-    )
+    assert_type_families_match(spark, name)

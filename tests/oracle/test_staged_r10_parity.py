@@ -1,91 +1,41 @@
-"""DuckDB-oracle parity for ROUND-10 staged queries.
+"""DuckDB-oracle parity for the queries of ``queries_staged_r10``.
 
-Same gate as ``test_oracle_parity.py`` — value-exact compare plus the
-type-family check the driver hash is sensitive to — run over
-``rs_query_engine_spark.queries_staged_r10``. The harness exists
-while the pen is still empty (ADVICE r07 precedent) so every
-round-10 registration is verified-by-construction from its first
-commit.
+The same checks as ``test_oracle_parity.py``, read from the same
+single build of each query (``parity()``).
 """
 
 from __future__ import annotations
 
 import pytest
 
-from rs_query_engine_spark import queries_staged_r10 as staged
-
 # no tests/__init__.py: pytest rootless mode puts this directory on
 # sys.path, so the sibling harness imports as a top-level module
 from test_oracle_parity import (
-    SF_DIR,
-    _arrow_family,
-    _duck,
-    _normalize,
-    _spark_family,
+    ROWS_ONLY,
+    assert_matches_oracle,
+    assert_names_taken,
+    assert_type_families_match,
+    module_oracled,
+    module_queries,
 )
 
-STAGED_QUERIES = sorted(staged.queries())
-ORACLED = sorted(staged.oracle_sql())
+MODULE = "queries_staged_r10"
+ORACLED = module_oracled(MODULE)
 
 
 def test_staged_r10_rows_only_queries_are_documented():
-    rows_only_by_design: set[str] = set(staged.ROWS_ONLY_BY_DESIGN)
-    assert set(STAGED_QUERIES) - set(ORACLED) == rows_only_by_design
+    assert set(module_queries(MODULE)) - set(ORACLED) <= ROWS_ONLY
 
 
 def test_staged_r10_names_collide_with_nothing_live():
-    from rs_query_engine_spark import queries as registry
-    from rs_query_engine_spark import (
-        queries_staged,
-        queries_staged_r7,
-        queries_staged_r8,
-        queries_staged_r9,
-    )
-
-    assert not set(staged.queries()) & set(registry._QUERIES)
-    assert not set(staged.queries()) & set(queries_staged._QUERIES)
-    assert not set(staged.queries()) & set(queries_staged_r7.queries())
-    assert not set(staged.queries()) & set(queries_staged_r8.queries())
-    assert not set(staged.queries()) & set(queries_staged_r9.queries())
+    assert_names_taken(MODULE)
 
 
 @pytest.mark.parametrize("name", ORACLED)
 def test_staged_r10_query_matches_oracle(spark, name):
-    sdf = staged.queries()[name](spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    tbl = _duck(staged.oracle_sql()[name])
-    duck_cols = tbl.column_names
-    duck_rows = [tuple(r.values()) for r in tbl.to_pylist()]
-
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column mismatch {spark_cols} vs {duck_cols}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    ns = _normalize(spark_rows, spark_cols)
-    nd = _normalize(duck_rows, duck_cols)
-    mismatches = [(a, b) for a, b in zip(ns, nd) if a != b]
-    assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
+    assert_matches_oracle(spark, name)
 
 
 @pytest.mark.parametrize("name", ORACLED)
 def test_staged_r10_result_type_families_match(spark, name):
-    sdf = staged.queries()[name](spark, SF_DIR)
-    spark_types = {
-        f.name: _spark_family(f.dataType.simpleString())
-        for f in sdf.schema.fields
-    }
-    tbl = _duck(f"SELECT * FROM ({staged.oracle_sql()[name]}) LIMIT 0")
-    duck_types = {f.name: _arrow_family(f.type) for f in tbl.schema}
-    assert spark_types == duck_types, (
-        f"{name}: type-family mismatch (driver hash is type-sensitive)"
-    )
-
-
-@pytest.mark.parametrize("name", sorted(set(STAGED_QUERIES) - set(ORACLED)))
-def test_staged_r10_rows_only_query_runs(spark, name):
-    sdf = staged.queries()[name](spark, SF_DIR)
-    assert len(sdf.collect()) >= 0
+    assert_type_families_match(spark, name)

@@ -668,22 +668,18 @@ BIG_TABLE_BROADCAST_OK = {
     # per group) — group-cardinality-sized, but the detector only
     # credits Join/Aggregate nodes as reducing.
     "agg_mad_outliers": "rank-filtered window -> one median row per event_type",
-    # Staged for round 10 (queries_staged_r9.py) — pre-listed so the
-    # activation flip doesn't trip the lint: same probe/seed pattern
-    # as the other similarity entries.
+    # same probe/seed pattern as the other similarity entries
     "similarity_ivf_recall_audit": "seed centroids + probe set broadcast in the IVF and brute arms",
-    # Staged for round 11 (queries_staged_r10.py) — pre-listed per the
-    # cadence rule: bounded probe batch (every-100th vector) broadcast,
-    # corpus streams map-only; same contract as bruteforce_topk.
+    # bounded probe batch (every-100th vector) broadcast, corpus
+    # streams map-only; same contract as bruteforce_topk.
     "similarity_range_search": "query set broadcast; corpus streams (no shuffle at all)",
-    # Staged for round 12 (queries_staged_r11.py) — pre-listed per the
-    # cadence rule: the exact-rerank stage broadcasts the query-vector
+    # the exact-rerank stage broadcasts the query-vector
     # batch (every-100th vector, the bounded ANN probe-batch contract)
     # against the shortlist join; the corpus-side raw vectors arrive
     # through the shortlist equi-join (queries x 40 rows), never as a
     # corpus broadcast.
     "similarity_pq_refine": "probe-batch vectors broadcast for the rerank; corpus reduced by the shortlist join",
-    # Staged for round 16 (queries_staged_r15.py): NOT IN compiles to
+    # NOT IN compiles to
     # Spark's null-aware anti join, which is BROADCAST-ONLY by design
     # (a shuffled NAAJ cannot decide the any-null-matches-everything
     # case locally) — no hint involved, no alternative strategy
@@ -710,21 +706,11 @@ def test_registry_no_forced_broadcast_of_unreduced_big_table(spark):
 
     from rs_query_engine_spark import queries as registry
 
-    # keep the allowlist honest: every entry must name a live query or
-    # one staged in a holding pen awaiting activation. Pens are
-    # discovered from queries._PEN_MODULES (VERDICT r09 #5) so a new
-    # pen file is lintable/pre-listable with no edit here.
-    known = set(registry.queries())
-    for pen in registry.all_pen_modules():
-        known |= set(pen.queries())
-    assert set(BIG_TABLE_BROADCAST_OK) <= known
-
-    # walk activated queries PLUS not-yet-activated pen queries, so a
-    # pen hint is linted the round it lands, not the round it flips
-    walk = dict(registry.queries())
-    for pen in registry.all_pen_modules():
-        for n, fn in pen.queries().items():
-            walk.setdefault(n, fn)
+    # walk the dormant queries too, so a hint is linted the day it
+    # lands, not the day its query goes live; every allowlist entry
+    # must name one of the walked queries
+    walk = {**registry.queries(), **registry.dormant_queries()}
+    assert set(BIG_TABLE_BROADCAST_OK) <= set(walk)
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1013,10 +999,8 @@ def test_q11_q15_threshold_reuses_single_fact_scan(spark):
     job before stage-reuse matching); the empty-partition window over
     the reduced aggregate guarantees one fact scan by construction.
     Regressing to two scans doubles the dominant cost at 100 TB."""
-    from rs_query_engine_spark import queries_staged_r10 as r10
-
     for name in ("tpch_q11_shape", "tpch_q15_shape"):
-        df = r10.queries()[name](spark, SF_DIR)
+        df = registry.queries()[name](spark, SF_DIR)
         plan = explain_str(df)
         assert plan.count("lineitem.parquet") == 1, f"{name}: fact scanned twice"
 
@@ -1153,9 +1137,7 @@ def test_label_propagation_no_cartesian_and_exchange_reuse_key(spark):
     edge set — no cartesian/nested-loop anywhere — and every round's
     edges-to-labels join must be an equi-join (hash-partitionable on
     the vertex id), which is what keeps 3 rounds at 3 x O(|E|)."""
-    from rs_query_engine_spark import queries_staged_r12 as r12
-
-    df = r12.queries()["graph_label_propagation"](spark, SF_DIR)
+    df = registry.queries()["graph_label_propagation"](spark, SF_DIR)
     plan = explain_str(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -1167,9 +1149,7 @@ def test_arrow_datasource_pruned_scan_carries_narrow_schema(spark):
     (projection rides the bound schema — the only pruning surface a
     Python source has on 4.1, measured), and the aggregate above it
     must keep map-side partials."""
-    from rs_query_engine_spark import queries_staged_r12 as r12
-
-    df = r12.queries()["source_python_arrow_pruned"](spark, SF_DIR)
+    df = registry.queries()["source_python_arrow_pruned"](spark, SF_DIR)
     plan = explain_str(df)
     assert "BatchScan rsqes_pycsv_arrow" in plan
     scan = [b for b in plan.split("\n\n") if "BatchScan rsqes_pycsv_arrow" in b]
@@ -1187,9 +1167,7 @@ def test_epoch_mixture_plan_single_shuffle_with_partials(spark):
     partial aggregation ahead of it. The single-partition window that
     totals the weight vector runs on the 20-row aggregate, never on
     the corpus — the plan must show the window ABOVE the aggregate."""
-    from rs_query_engine_spark import queries_staged_r12 as r12
-
-    df = r12.queries()["sample_epoch_mixture_plan"](spark, SF_DIR)
+    df = registry.queries()["sample_epoch_mixture_plan"](spark, SF_DIR)
     plan = explain_str(df)
     assert "partial_sum" in plan or "partial" in plan
     # corpus-sized exchanges: hash on source for the aggregate; the
@@ -1204,9 +1182,7 @@ def test_mass_diffusion_no_cartesian(spark):
     """Exact-integer diffusion walks the blocked edge set: every
     round is an equi-join on the vertex id — no cartesian or
     nested-loop anywhere in the 3-round plan."""
-    from rs_query_engine_spark import queries_staged_r12 as r12
-
-    df = r12.queries()["graph_mass_diffusion"](spark, SF_DIR)
+    df = registry.queries()["graph_mass_diffusion"](spark, SF_DIR)
     plan = explain_str(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -1222,9 +1198,8 @@ def test_running_distinct_single_shuffle_no_join(spark):
     Window node, zero joins."""
     import re
 
-    from rs_query_engine_spark import queries_staged_r13 as r13
 
-    df = r13.queries()["window_running_distinct"](spark, SF_DIR)
+    df = registry.queries()["window_running_distinct"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning\(", plan)) == 1
     assert plan.count("Window [") == 1
@@ -1238,9 +1213,7 @@ def test_quality_gate_drift_single_scan_partial_agg(spark):
     """Both corpus generations ride ONE documents scan (generation B
     is a projected CASE, never a second read) with map-side partial
     aggregation before the single source-keyed exchange."""
-    from rs_query_engine_spark import queries_staged_r13 as r13
-
-    df = r13.queries()["quality_gate_drift"](spark, SF_DIR)
+    df = registry.queries()["quality_gate_drift"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") == 1
     assert plan.count("Exchange") == 1
@@ -1255,9 +1228,8 @@ def test_session_dynamic_gap_single_shuffle_native_merge(spark):
     reusing that partitioning; no Python, no second corpus shuffle."""
     import re
 
-    from rs_query_engine_spark import queries_staged_r13 as r13
 
-    df = r13.queries()["events_session_dynamic_gap"](spark, SF_DIR)
+    df = registry.queries()["events_session_dynamic_gap"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MergingSessions" in plan
     assert len(re.findall(r"Exchange hashpartitioning\(", plan)) == 1
@@ -1269,9 +1241,7 @@ def test_sql_udf_pipeline_inlines_no_python(spark):
     carries plain JVM expressions over one documents scan — no
     Python evaluation node anywhere (the whole point of preferring
     CREATE FUNCTION over @udf at scale)."""
-    from rs_query_engine_spark import queries_staged_r13 as r13
-
-    df = r13.queries()["scalar_sql_udf_pipeline"](spark, SF_DIR)
+    df = registry.queries()["scalar_sql_udf_pipeline"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
     assert plan.count("FileScan") == 1
@@ -1282,9 +1252,7 @@ def test_recursive_closure_uses_union_loop_no_cartesian(spark):
     UnionLoop recursion (one plan, no driver-side iteration) and
     every step must be a key equi-join — no cartesian or nested-loop
     expansion anywhere in the recursive plan."""
-    from rs_query_engine_spark import queries_staged_r13 as r13
-
-    df = r13.queries()["graph_recursive_closure"](spark, SF_DIR)
+    df = registry.queries()["graph_recursive_closure"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "UnionLoop" in plan
     assert "CartesianProduct" not in plan
@@ -1295,9 +1263,7 @@ def test_shuffle_hash_hint_is_honored_no_sort(spark):
     """The SHUFFLE_HASH hint must produce a ShuffledHashJoin with no
     Sort below the join — skipping both sort passes is the hint's
     entire value over the sort-merge default for two large sides."""
-    from rs_query_engine_spark import queries_staged_r14 as r14
-
-    df = r14.queries()["join_shuffle_hash_hint"](spark, SF_DIR)
+    df = registry.queries()["join_shuffle_hash_hint"](spark, SF_DIR)
     plan = explain_str(df)
     assert "ShuffledHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -1309,9 +1275,7 @@ def test_map_in_arrow_stage_is_maponly_with_spark_side_agg(spark):
     cross-row reduction left to Spark's partial+final hash aggregate
     (the Python stage must never sit above an Exchange — it fans
     map-side)."""
-    from rs_query_engine_spark import queries_staged_r14 as r14
-
-    df = r14.queries()["udf_map_in_arrow"](spark, SF_DIR)
+    df = registry.queries()["udf_map_in_arrow"](spark, SF_DIR)
     plan = explain_str(df)
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan
     assert "partial_count" in plan
@@ -1330,9 +1294,7 @@ def test_url_canonicalize_is_single_shuffle_expression_only(spark):
     """dedup_url_canonicalize: canonicalization must be pure JVM
     expression work (no Python anywhere) and the dedup one hash
     shuffle with map-side partial aggregation."""
-    from rs_query_engine_spark import queries_staged_r14 as r14
-
-    df = r14.queries()["dedup_url_canonicalize"](spark, SF_DIR)
+    df = registry.queries()["dedup_url_canonicalize"](spark, SF_DIR)
     plan = explain_str(df)
     assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
     shuffles = [
@@ -1350,9 +1312,7 @@ def test_not_in_null_semantics_no_cartesian_anti_joins(spark):
     (null-aware) anti join on the key — the naive decorrelation is a
     per-row cartesian re-check, which is exactly what NAAJ exists to
     avoid; the EXISTS legs plan as semi joins."""
-    from rs_query_engine_spark import queries_staged_r15 as r15
-
-    df = r15.queries()["join_not_in_null_semantics"](spark, SF_DIR)
+    df = registry.queries()["join_not_in_null_semantics"](spark, SF_DIR)
     plan = explain_str(df)
     assert "CartesianProduct" not in plan
     assert "LeftAnti" in plan and "LeftSemi" in plan
@@ -1364,9 +1324,7 @@ def test_winsorize_broadcasts_cuts_onto_corpus_scan(spark):
     BROADCAST join — shuffling the corpus a second time to meet its
     own 20-row statistics table is the anti-pattern; and neither pass
     may read the document text."""
-    from rs_query_engine_spark import queries_staged_r15 as r15
-
-    df = r15.queries()["quality_winsorize_clip"](spark, SF_DIR)
+    df = registry.queries()["quality_winsorize_clip"](spark, SF_DIR)
     plan = explain_str(df)
     assert "BroadcastHashJoin" in plan
     assert "Window" in plan
@@ -1380,9 +1338,7 @@ def test_collocation_vocab_joins_no_allpairs(spark):
     vocabulary-keyed equi-joins with map-side partial counts — never
     a cartesian/all-pairs shape — and the support filter must sit
     below the unigram joins (only frequent bigrams get enriched)."""
-    from rs_query_engine_spark import queries_staged_r15 as r15
-
-    df = r15.queries()["text_collocation_pmi_rank"](spark, SF_DIR)
+    df = registry.queries()["text_collocation_pmi_rank"](spark, SF_DIR)
     plan = explain_str(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -1395,9 +1351,7 @@ def test_cumdev_changepoint_preaggregates_before_window(spark):
     (type, day) grain via a partial+final hash aggregate BEFORE any
     window sort — windowing raw events would sort the corpus; the
     scan must read only (event_type, ts)."""
-    from rs_query_engine_spark import queries_staged_r15 as r15
-
-    df = r15.queries()["events_cumdev_changepoint"](spark, SF_DIR)
+    df = registry.queries()["events_cumdev_changepoint"](spark, SF_DIR)
     plan = explain_str(df)
     assert "partial_count" in plan
     assert "Window" in plan
@@ -1410,9 +1364,7 @@ def test_binary_files_fingerprint_is_map_only(spark):
     """source_binary_files: the whole-file fingerprint must be a
     map-only projection over the binaryFile scan — file bytes must
     never cross a shuffle."""
-    from rs_query_engine_spark import queries_staged_r15 as r15
-
-    df = r15.queries()["source_binary_files"](spark, SF_DIR)
+    df = registry.queries()["source_binary_files"](spark, SF_DIR)
     plan = explain_str(df)
     shuffles = [
         ln for ln in plan.splitlines()
@@ -1427,9 +1379,7 @@ def test_multi_distinct_uses_expand_rewrite(spark):
     must compile through the Expand rewrite (row fan-out + two
     aggregate passes) — the shape that keeps multi-distinct linear;
     an engine without it recomputes the child per distinct column."""
-    from rs_query_engine_spark import queries_staged_r16 as r16
-
-    df = r16.queries()["agg_multi_distinct"](spark, SF_DIR)
+    df = registry.queries()["agg_multi_distinct"](spark, SF_DIR)
     plan = explain_str(df)
     assert "Expand" in plan
     assert plan.count("HashAggregate") >= 2
@@ -1440,9 +1390,7 @@ def test_interval_coverage_single_sort_two_reduces(spark):
     key-partitioned sort (same window spec), and everything after is
     partial-agg reduces — the corpus must never be sorted twice or
     joined to itself."""
-    from rs_query_engine_spark import queries_staged_r16 as r16
-
-    df = r16.queries()["events_interval_coverage"](spark, SF_DIR)
+    df = registry.queries()["events_interval_coverage"](spark, SF_DIR)
     plan = explain_str(df)
     assert "CartesianProduct" not in plan and "Join" not in plan
     # one exchange for the user-key window, one for the final agg at
@@ -1456,9 +1404,7 @@ def test_twap_single_key_sort_no_join(spark):
     sort and the rollup is a partial+final aggregate — the corpus is
     never self-joined, and the scan reads only the four columns the
     query touches."""
-    from rs_query_engine_spark import queries_staged_r16 as r16
-
-    df = r16.queries()["events_time_weighted_avg"](spark, SF_DIR)
+    df = registry.queries()["events_time_weighted_avg"](spark, SF_DIR)
     plan = explain_str(df)
     assert "CartesianProduct" not in plan and "Join" not in plan
     assert "partial_sum" in plan
@@ -1471,9 +1417,7 @@ def test_gini_rank_sort_then_partial_agg(spark):
     row_number, then partial+final aggregation — no join, and the
     scan must not read the text column (the formula runs on n_chars
     alone)."""
-    from rs_query_engine_spark import queries_staged_r16 as r16
-
-    df = r16.queries()["quality_gini_concentration"](spark, SF_DIR)
+    df = registry.queries()["quality_gini_concentration"](spark, SF_DIR)
     plan = explain_str(df)
     assert "CartesianProduct" not in plan and "Join" not in plan
     assert "partial_sum" in plan
@@ -1488,9 +1432,7 @@ def test_pareto_frontier_collapses_before_global_window(spark):
     frontier window — the SinglePartition exchange is only safe
     because its input is the |distinct sizes|-bounded frame, and no
     all-pairs dominance join may exist anywhere."""
-    from rs_query_engine_spark import queries_staged_r16 as r16
-
-    df = r16.queries()["quality_pareto_frontier"](spark, SF_DIR)
+    df = registry.queries()["quality_pareto_frontier"](spark, SF_DIR)
     plan = explain_str(df)
     assert "CartesianProduct" not in plan and "Join" not in plan
     assert "partial_max" in plan
@@ -1501,9 +1443,7 @@ def test_boolean_search_posting_lists_no_self_join(spark):
     """text_boolean_search: the AND of k terms must be the posting-
     list collapse (explode → filter → one doc-grain aggregate), NOT
     the naive k-way self-join of per-term scans."""
-    from rs_query_engine_spark import queries_staged_r16 as r16
-
-    df = r16.queries()["text_boolean_search"](spark, SF_DIR)
+    df = registry.queries()["text_boolean_search"](spark, SF_DIR)
     plan = explain_str(df)
     assert "CartesianProduct" not in plan and "Join" not in plan
     assert "Generate" in plan  # the explode that builds the postings
@@ -1515,9 +1455,7 @@ def test_path_ngrams_two_leads_share_one_sort(spark):
     plan carries a single (user)-keyed sort; the rollup (with its
     distinct-user Expand) is partial+final — never a self-join of the
     sequence against itself."""
-    from rs_query_engine_spark import queries_staged_r16 as r16
-
-    df = r16.queries()["events_path_ngrams"](spark, SF_DIR)
+    df = registry.queries()["events_path_ngrams"](spark, SF_DIR)
     plan = explain_str(df)
     assert "CartesianProduct" not in plan and "Join" not in plan
     assert plan.count("Sort ") <= 1
@@ -1528,9 +1466,7 @@ def test_table_checksum_is_sort_free(spark):
     """maintenance_table_checksum: order-independence is the point —
     the plan must contain NO sort anywhere (commutative aggregates
     over a map-side hash fold), no join, and map-side partials."""
-    from rs_query_engine_spark import queries_staged_r16 as r16
-
-    df = r16.queries()["maintenance_table_checksum"](spark, SF_DIR)
+    df = registry.queries()["maintenance_table_checksum"](spark, SF_DIR)
     plan = explain_str(df)
     assert "Sort " not in plan
     assert "CartesianProduct" not in plan and "Join" not in plan
@@ -1541,9 +1477,7 @@ def test_concurrency_peak_sweep_line_no_self_join(spark):
     """events_concurrency_peak: the sweep-line plan is endpoint union
     → one keyed window sort → partial+final max; the naive O(n²)
     interval-overlap self-join must not appear."""
-    from rs_query_engine_spark import queries_staged_r16 as r16
-
-    df = r16.queries()["events_concurrency_peak"](spark, SF_DIR)
+    df = registry.queries()["events_concurrency_peak"](spark, SF_DIR)
     plan = explain_str(df)
     assert "Union" in plan
     assert "CartesianProduct" not in plan and "Join" not in plan
@@ -1555,9 +1489,7 @@ def test_weighted_median_one_sort_rank_limit(spark):
     running mass, the full-partition stats, AND the rn=1 pick (which
     Spark pushes down as a WindowGroupLimit) — no join, no second
     sort, no global order."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
-    df = r17.queries()["agg_weighted_median_exact"](spark, SF_DIR)
+    df = registry.dormant_queries()["agg_weighted_median_exact"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert "Join" not in plan
     assert plan.count("Sort ") == 1
@@ -1570,9 +1502,7 @@ def test_systematic_pps_two_scans_broadcast_alloc(spark):
     total comes from a window over the tiny mass frame, never a
     third corpus aggregate), the alloc rides back as a broadcast
     hash join, and no cartesian product exists."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
-    df = r17.queries()["sample_systematic_pps"](spark, SF_DIR)
+    df = registry.dormant_queries()["sample_systematic_pps"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("FileScan parquet") == 2
     assert "BroadcastHashJoin" in plan
@@ -1584,9 +1514,7 @@ def test_snm_one_sort_one_scan_no_join(spark):
     window spec, so the plan carries exactly ONE keyed sort and ONE
     corpus scan (a per-offset union would sort the corpus W times);
     candidates unfold map-side (Generate), never via a self-join."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
-    df = r17.queries()["dedup_sorted_neighborhood"](spark, SF_DIR)
+    df = registry.dormant_queries()["dedup_sorted_neighborhood"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("Sort ") == 1
     assert plan.count("FileScan parquet") == 1
@@ -1598,9 +1526,7 @@ def test_hapax_ratio_sort_free_stacked_partials(spark):
     """text_hapax_ratio: two stacked hash aggregates with map-side
     partials and NO sort anywhere — the vocabulary rollup never
     orders anything; the scan reads only (source, text)."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
-    df = r17.queries()["text_hapax_ratio"](spark, SF_DIR)
+    df = registry.dormant_queries()["text_hapax_ratio"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert "Sort " not in plan
     assert "Join" not in plan
@@ -1613,9 +1539,7 @@ def test_burstiness_one_sort_partial_agg(spark):
     """events_interarrival_burstiness: one (type)-keyed sort powers
     the LEAD, the moment sums keep map-side partials, and the double
     arithmetic runs on the collapsed |types| frame — no join."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
-    df = r17.queries()["events_interarrival_burstiness"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_interarrival_burstiness"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("Sort ") == 1
     assert "Join" not in plan
@@ -1628,9 +1552,7 @@ def test_trailing_interval_frame_shares_one_window(spark):
     operator over ONE (type)-keyed sort — and no join exists (the
     self-join spelling of a trailing window is the O(n·k) plan this
     query replaces)."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
-    df = r17.queries()["events_trailing_window_metrics"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_trailing_window_metrics"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("Sort ") == 1
     assert plan.count("Window ") == 1
@@ -1644,9 +1566,7 @@ def test_ewma_dyadic_rank_limit_before_shuffle(spark):
     rows per user; Final after it) — per-key state is W rows, the
     shuffle never carries a user's full history, and the aggregate
     keeps map-side partials. No join anywhere."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
-    df = r17.queries()["events_ewma_dyadic"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_ewma_dyadic"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("WindowGroupLimit") == 2
     assert "Partial" in plan and "Final" in plan
@@ -1661,9 +1581,7 @@ def test_ab_lift_single_scan_tiny_broadcast_join(spark):
     the aggregate and reads events twice); the relative-lift join
     runs on the two ~5-row arm frames and must never be a cartesian
     product."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
-    df = r17.queries()["events_ab_lift"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_ab_lift"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("FileScan parquet") == 0  # cut: scan ran at build
     assert "CartesianProduct" not in plan
@@ -1675,9 +1593,7 @@ def test_time_of_day_profile_map_side_partials_no_join(spark):
     truncation are map-side projections feeding a partial+final
     aggregate onto the <=1440-row minute domain — one exchange keyed
     on the TIME value, no sort, no join."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
-    df = r17.queries()["events_time_of_day_profile"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_time_of_day_profile"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert "partial_count" in plan and "partial_sum" in plan
     assert "Join" not in plan
@@ -1690,9 +1606,7 @@ def test_multiway_cluster_audit_one_file_keyed_sort_no_join(spark):
     partial+final aggregates — no join anywhere, and the final
     reduce runs over the |files|x|types| run frame, never the
     corpus."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
-    df = r17.queries()["maintenance_multiway_cluster_audit"](
+    df = registry.dormant_queries()["maintenance_multiway_cluster_audit"](
         spark, SF_DIR
     )
     plan = explain_str(df, mode="simple")
@@ -1707,10 +1621,8 @@ def test_rollup_cube_plan_through_expand_with_partials(spark):
     replicated BEFORE the exchange) feeding a partial+final
     aggregate — subtotals are map-side partials like any leaf group,
     never a second pass or a union of aggregates. No join."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
     for name in ("agg_rollup_returnflag", "agg_cube_type_dow"):
-        df = r17.queries()[name](spark, SF_DIR)
+        df = registry.dormant_queries()[name](spark, SF_DIR)
         plan = explain_str(df, mode="simple")
         assert plan.count("Expand") == 1, name
         assert "partial_count" in plan, name
@@ -1724,9 +1636,7 @@ def test_pivot_single_aggregate_no_join_no_second_scan(spark):
     partial+final aggregate, no Expand, no join (the row total is a
     projection over the pivoted columns, not a second aggregate
     joined back)."""
-    from rs_query_engine_spark import queries_staged_r17 as r17
-
-    df = r17.queries()["agg_pivot_type_matrix"](spark, SF_DIR)
+    df = registry.dormant_queries()["agg_pivot_type_matrix"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("FileScan parquet") == 1
     assert "Join" not in plan
@@ -1738,9 +1648,7 @@ def test_pct_of_parent_windows_on_leaf_frame_one_scan(spark):
     """agg_pct_of_parent_hierarchy: one corpus aggregate, both
     hierarchy windows over the tiny leaf frame — one scan, no join,
     no Expand, map-side partials."""
-    from rs_query_engine_spark import queries_staged_r18 as r18
-
-    df = r18.queries()["agg_pct_of_parent_hierarchy"](spark, SF_DIR)
+    df = registry.dormant_queries()["agg_pct_of_parent_hierarchy"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("FileScan parquet") == 1
     assert "Join" not in plan
@@ -1752,9 +1660,7 @@ def test_token_map_pipeline_jvm_lambdas_no_join(spark):
     """text_token_map_pipeline: the map lambdas stay JVM-side (no
     BatchEvalPython / ArrowEvalPython anywhere), the pipeline is two
     keyed aggregates + a map-only explode — one scan, no join."""
-    from rs_query_engine_spark import queries_staged_r18 as r18
-
-    df = r18.queries()["text_token_map_pipeline"](spark, SF_DIR)
+    df = registry.dormant_queries()["text_token_map_pipeline"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("FileScan parquet") == 1
     assert "Join" not in plan
@@ -1767,9 +1673,7 @@ def test_checksum_diff_one_pass_no_join_no_sort(spark):
     ONE conditional-aggregate pass — one corpus scan, map-side md5 +
     fold with partial aggregates onto the 64-bucket domain, no join,
     no sort anywhere."""
-    from rs_query_engine_spark import queries_staged_r18 as r18
-
-    df = r18.queries()["maintenance_checksum_diff"](spark, SF_DIR)
+    df = registry.dormant_queries()["maintenance_checksum_diff"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("FileScan parquet") == 1
     assert "Join" not in plan
@@ -1785,9 +1689,7 @@ def test_rank_sum_one_exchange_feeds_sorts_windows_and_agg(spark):
     additional shuffle or join. This partitioning reuse is the whole
     scale story: the O(n log n) rank spelling of the U statistic
     costs exactly one shuffle."""
-    from rs_query_engine_spark import queries_staged_r18 as r18
-
-    df = r18.queries()["events_ab_rank_sum"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_ab_rank_sum"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("Exchange") == 1
     assert "Exchange hashpartitioning(event_type" in plan
@@ -1802,9 +1704,7 @@ def test_funnel_decay_conditional_agg_no_join(spark):
     K-way self-join anywhere (the naive funnel spelling is quadratic
     in events-per-user), partial aggregation map-side on both
     levels."""
-    from rs_query_engine_spark import queries_staged_r18 as r18
-
-    df = r18.queries()["events_funnel_conversion_decay"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_funnel_conversion_decay"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert "Join" not in plan
     assert plan.count("FileScan parquet") == 1
@@ -1818,9 +1718,7 @@ def test_array_hof_lambdas_jvm_side_one_shuffle(spark):
     JVM-side in the projection — no Python eval operator — and the
     only shuffle is the per-order collect (partial+final
     ObjectHashAggregate)."""
-    from rs_query_engine_spark import queries_staged_r18 as r18
-
-    df = r18.queries()["array_higher_order_pipeline"](spark, SF_DIR)
+    df = registry.dormant_queries()["array_higher_order_pipeline"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert "EvalPython" not in plan
     assert plan.count("Exchange") == 1
@@ -1834,21 +1732,19 @@ def test_parse_family_map_side_only_pruned_scans(spark):
     map-side scalar/array work — no shuffle, no join, one pruned
     scan each (the sentence stats never explode; sentences live and
     die inside the expression tree)."""
-    from rs_query_engine_spark import queries_staged_r18 as r18
-
     for name in (
         "string_str_to_map_parse",
         "scalar_from_csv_parse",
         "string_binary_codec_family",
         "text_sentence_segmentation",
     ):
-        df = r18.queries()[name](spark, SF_DIR)
+        df = registry.dormant_queries()[name](spark, SF_DIR)
         plan = explain_str(df, mode="simple")
         assert "Exchange" not in plan, name
         assert "Join" not in plan, name
         assert plan.count("FileScan parquet") == 1, name
     # pruning spot-check: sentence stats read exactly (doc_id, text)
-    df = r18.queries()["text_sentence_segmentation"](spark, SF_DIR)
+    df = registry.dormant_queries()["text_sentence_segmentation"](spark, SF_DIR)
     plan = explain_str(df)
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
     assert "doc_id" in read_schema and "text" in read_schema
@@ -1859,9 +1755,7 @@ def test_posexplode_outer_one_collect_no_join(spark):
     """array_posexplode_outer: the outer Generate replaces the
     oracle's distinct + LEFT JOIN spelling — one per-order collect
     shuffle, a Generate with the outer flag, and no join anywhere."""
-    from rs_query_engine_spark import queries_staged_r18 as r18
-
-    df = r18.queries()["array_posexplode_outer"](spark, SF_DIR)
+    df = registry.dormant_queries()["array_posexplode_outer"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert "Generate posexplode" in plan
     assert "Join" not in plan
@@ -1875,9 +1769,7 @@ def test_neyman_allocation_windows_on_strata_frame(spark):
     (weight total, remainder rank, floor total) runs on that tiny
     frame after the aggregate — the corpus is never re-shuffled or
     re-scanned."""
-    from rs_query_engine_spark import queries_staged_r18 as r18
-
-    df = r18.queries()["sample_neyman_allocation"](spark, SF_DIR)
+    df = registry.dormant_queries()["sample_neyman_allocation"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("FileScan parquet") == 1
     assert "Join" not in plan
@@ -1892,10 +1784,8 @@ def test_format_and_epoch_families_map_side_pushdown(spark):
     scalar codegen only — no shuffle, no join, one scan, and the
     modulus row filter evaluated at the scan (DataFilters), not in a
     post-shuffle stage."""
-    from rs_query_engine_spark import queries_staged_r18 as r18
-
     for name in ("string_format_family", "scalar_epoch_conversions"):
-        df = r18.queries()[name](spark, SF_DIR)
+        df = registry.dormant_queries()[name](spark, SF_DIR)
         plan = explain_str(df, mode="simple")
         assert "Exchange" not in plan, name
         assert "Join" not in plan, name
@@ -1915,9 +1805,7 @@ def test_utf8_validation_audit_map_side_only(spark):
     """quality_utf8_validation_audit: encode/corrupt/validate/repair
     all inside one map-side projection — no shuffle, no join, one
     pruned scan (doc_id, lang, source; never the text column)."""
-    from rs_query_engine_spark import queries_staged_r19 as r19
-
-    df = r19.queries()["quality_utf8_validation_audit"](spark, SF_DIR)
+    df = registry.dormant_queries()["quality_utf8_validation_audit"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert "Exchange" not in plan
     assert "Join" not in plan
@@ -1934,9 +1822,7 @@ def test_dau_wau_expansion_no_self_join_no_window_distinct(spark):
     a bounded x7 explode, a second distinct, and a day-keyed join of
     two tiny per-day frames. No day x day self-join (exactly one
     Join, the final DAU-WAU one), no window functions at all."""
-    from rs_query_engine_spark import queries_staged_r19 as r19
-
-    df = r19.queries()["events_dau_wau_stickiness"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_dau_wau_stickiness"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     # the (user, day) distinct is lineage-cut: the corpus never
     # appears in this plan (Scan ExistingRDD twice, FileScan zero)
@@ -1959,9 +1845,7 @@ def test_session_relative_features_single_exchange(spark):
     exchange and one in-partition sort — the naive spelling
     re-shuffles on (user, session_id) for a per-session window; no
     join anywhere."""
-    from rs_query_engine_spark import queries_staged_r19 as r19
-
-    df = r19.queries()["events_session_relative_features"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_session_relative_features"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("Exchange") == 1
     assert "Exchange hashpartitioning(user_id" in plan
@@ -1977,9 +1861,7 @@ def test_activity_islands_two_exchanges_no_join(spark):
     partitioning (a hash partitioning on a subset satisfies each
     clustered distribution) — exactly two exchanges total, one
     corpus scan, no join anywhere."""
-    from rs_query_engine_spark import queries_staged_r19 as r19
-
-    df = r19.queries()["events_activity_islands"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_activity_islands"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("Exchange") == 2
     assert "Exchange hashpartitioning(user_id" in plan
@@ -1995,9 +1877,7 @@ def test_type_churn_sets_broadcast_midpoint_one_set_pass(spark):
     build side — never a shuffled cartesian), and both period sets
     come from ONE ObjectHashAggregate pass with map-side
     partial_collect_set — one user exchange, not one per period."""
-    from rs_query_engine_spark import queries_staged_r19 as r19
-
-    df = r19.queries()["events_type_churn_sets"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_type_churn_sets"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
@@ -2010,9 +1890,7 @@ def test_autocorr_daily_single_scan_broadcast_lags(spark):
     (corpus scanned ONCE outside this plan — zero FileScans remain),
     and both lag joins broadcast the tiny |days| frame; the six-sum
     sufficient-statistics aggregate is partial+final."""
-    from rs_query_engine_spark import queries_staged_r19 as r19
-
-    df = r19.queries()["events_autocorr_daily"](spark, SF_DIR)
+    df = registry.dormant_queries()["events_autocorr_daily"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("FileScan parquet") == 0
     assert plan.count("BroadcastHashJoin") == 2
@@ -2026,9 +1904,7 @@ def test_common_prefix_groups_one_pass_aggregation(spark):
     (min/max/count are all map-side combinable), one group-by
     exchange, with the LCP expression on the aggregated frame only;
     no window, no join, no second pass over the corpus."""
-    from rs_query_engine_spark import queries_staged_r19 as r19
-
-    df = r19.queries()["string_common_prefix_groups"](spark, SF_DIR)
+    df = registry.dormant_queries()["string_common_prefix_groups"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("FileScan parquet") == 1
     assert plan.count("Exchange") == 1
@@ -2044,9 +1920,7 @@ def test_split_leakage_single_pass_stack(spark):
     union-per-leak-kind spelling would re-aggregate the fingerprint
     frame three times; no join, no union, both aggregates
     partial+final."""
-    from rs_query_engine_spark import queries_staged_r19 as r19
-
-    df = r19.queries()["quality_split_leakage_audit"](spark, SF_DIR)
+    df = registry.dormant_queries()["quality_split_leakage_audit"](spark, SF_DIR)
     plan = explain_str(df, mode="simple")
     assert plan.count("FileScan parquet") == 1
     assert "Join" not in plan

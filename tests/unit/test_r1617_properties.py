@@ -1,6 +1,6 @@
-"""Property-based cross-validation for the r16/r17 pen seeds
-(hypothesis): randomized mini-corpora written as parquet, the staged
-query run against them, and the result checked against an independent
+"""Property-based cross-validation for the round-16 queries and the
+round-17 dormant queries (hypothesis): randomized mini-corpora written
+as parquet, the query run against them, and the result checked against an independent
 pure-Python brute-force reference — the same discipline as
 ``test_properties.py`` / ``test_staged_properties.py``, extended to
 the sf_dir-shaped query surface. These pin the ALGORITHM (sweep-line,
@@ -20,8 +20,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from rs_query_engine_spark import queries_staged_r16 as r16
-from rs_query_engine_spark import queries_staged_r17 as r17
+from rs_query_engine_spark.queries import dormant_queries, queries
 
 _T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 _WIN_S = 1800  # the 30-min activity window shared by the r16 seeds
@@ -73,7 +72,7 @@ def test_concurrency_peak_matches_bruteforce(spark, times):
         for i, s in enumerate(times)
     ]
     sf = _sf(spark, "events", rows, _EV_SCHEMA)
-    [r] = r16.queries()["events_concurrency_peak"](spark, sf).collect()
+    [r] = queries()["events_concurrency_peak"](spark, sf).collect()
     # peak of a union of half-open [s, s+W) intervals occurs at some
     # interval start: count covers there
     peak = max(
@@ -91,7 +90,7 @@ def test_interval_coverage_matches_bruteforce(spark, times):
         for i, s in enumerate(times)
     ]
     sf = _sf(spark, "events", rows, _EV_SCHEMA)
-    [r] = r16.queries()["events_interval_coverage"](spark, sf).collect()
+    [r] = queries()["events_interval_coverage"](spark, sf).collect()
     # merge [s, s+W) in sorted order
     islands = []
     for s in sorted(times):
@@ -130,7 +129,7 @@ def test_pps_hits_telescope_to_hamilton_budgets(spark, docs):
     ]
     sf = _sf(spark, "documents", rows, _DOC_SCHEMA)
     got: dict[str, int] = {}
-    for r in r17.queries()["sample_systematic_pps"](spark, sf).collect():
+    for r in dormant_queries()["sample_systematic_pps"](spark, sf).collect():
         got[r["source"]] = got.get(r["source"], 0) + r["n_hits"]
     masses: dict[str, int] = {}
     for src, m in docs:
@@ -158,7 +157,7 @@ def test_pareto_frontier_matches_bruteforce(spark, pts):
     sf = _sf(spark, "documents", rows, _DOC_SCHEMA)
     got = sorted(
         tuple(r)
-        for r in r16.queries()["quality_pareto_frontier"](
+        for r in queries()["quality_pareto_frontier"](
             spark, sf
         ).collect()
     )
@@ -184,7 +183,7 @@ weights = st.lists(st.integers(1, 50), min_size=1, max_size=14)
 def test_weighted_median_matches_bruteforce(spark, ws):
     rows = [(i, "x", "en", "s", w) for i, w in enumerate(ws)]
     sf = _sf(spark, "documents", rows, _DOC_SCHEMA)
-    [r] = r17.queries()["agg_weighted_median_exact"](spark, sf).collect()
+    [r] = dormant_queries()["agg_weighted_median_exact"](spark, sf).collect()
     total = sum(ws)
     cum = 0
     for w, i in sorted((w, i) for i, w in enumerate(ws)):
@@ -200,7 +199,7 @@ def test_weighted_median_matches_bruteforce(spark, ws):
 def test_gini_matches_exact_formula(spark, ws):
     rows = [(i, "x", "en", "s", w) for i, w in enumerate(ws)]
     sf = _sf(spark, "documents", rows, _DOC_SCHEMA)
-    [r] = r16.queries()["quality_gini_concentration"](spark, sf).collect()
+    [r] = queries()["quality_gini_concentration"](spark, sf).collect()
     xs = sorted(ws)
     n, s0 = len(xs), sum(xs)
     s1 = sum(i * x for i, x in enumerate(xs, start=1))
@@ -225,7 +224,7 @@ def test_twap_matches_bruteforce(spark, evs):
         for i, (s, v) in enumerate(evs)
     ]
     sf = _sf(spark, "events", rows, _EV_SCHEMA)
-    [r] = r16.queries()["events_time_weighted_avg"](spark, sf).collect()
+    [r] = queries()["events_time_weighted_avg"](spark, sf).collect()
     seq = sorted(evs)
     num = sum(
         v * (seq[i + 1][0] - s) * 1_000_000
@@ -254,7 +253,7 @@ def test_ewma_dyadic_matches_bruteforce(spark, evs):
         for i, (s, v) in enumerate(evs)
     ]
     sf = _sf(spark, "events", rows, _EV_SCHEMA)
-    [r] = r17.queries()["events_ewma_dyadic"](spark, sf).collect()
+    [r] = dormant_queries()["events_ewma_dyadic"](spark, sf).collect()
     # newest first: ts desc then event_id desc, last W=16 kept
     order = sorted(
         range(len(evs)), key=lambda i: (-evs[i][0], -i)
@@ -275,7 +274,7 @@ def test_multiway_cluster_audit_invariants(spark, evs):
         for i, (s, v) in enumerate(evs)
     ]
     sf = _sf(spark, "events", rows, _EV_SCHEMA)
-    [r] = r17.queries()["maintenance_multiway_cluster_audit"](
+    [r] = dormant_queries()["maintenance_multiway_cluster_audit"](
         spark, sf
     ).collect()
     n_types = len({t for _, _, _, t, _, _ in rows})

@@ -13,7 +13,7 @@ import datetime as dt
 
 from pyspark.sql import Row
 
-from rs_query_engine_spark import queries_staged_r16 as r16
+from rs_query_engine_spark.queries import queries
 
 _T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
@@ -62,7 +62,7 @@ def test_concurrency_peak_back_to_back_does_not_double_count(
     )
     got = {
         r["event_type"]: (r["n_intervals"], r["peak_concurrent"])
-        for r in r16.queries()["events_concurrency_peak"](spark, sf).collect()
+        for r in queries()["events_concurrency_peak"](spark, sf).collect()
     }
     assert got == {"a": (2, 1), "b": (2, 2)}
 
@@ -81,7 +81,7 @@ def test_twap_weights_by_holding_time(spark, tmp_path):
         ],
         _EV_SCHEMA,
     )
-    [r] = r16.queries()["events_time_weighted_avg"](spark, sf).collect()
+    [r] = queries()["events_time_weighted_avg"](spark, sf).collect()
     assert r["n_segments"] == 2
     assert r["duration_us"] == 400_000_000
     assert r["twap"] == 17.5
@@ -100,7 +100,7 @@ def test_pareto_frontier_dominance_and_strictness(spark, tmp_path):
     sf = _write(spark, tmp_path, "documents", docs, _DOC_SCHEMA)
     got = sorted(
         tuple(r)
-        for r in r16.queries()["quality_pareto_frontier"](spark, sf).collect()
+        for r in queries()["quality_pareto_frontier"](spark, sf).collect()
     )
     assert got == [(10, 3, 2), (30, 4, 1)]
 
@@ -117,7 +117,7 @@ def test_gini_exact_formula(spark, tmp_path):
     sf = _write(spark, tmp_path, "documents", docs, _DOC_SCHEMA)
     got = {
         r["source"]: (r["n_docs"], r["total_chars"], r["gini"])
-        for r in r16.queries()["quality_gini_concentration"](
+        for r in queries()["quality_gini_concentration"](
             spark, sf
         ).collect()
     }
@@ -131,7 +131,7 @@ def test_boolean_search_requires_every_term(spark, tmp_path):
         (3, "spark", "en", "s", 5),
     ]
     sf = _write(spark, tmp_path, "documents", docs, _DOC_SCHEMA)
-    rows = r16.queries()["text_boolean_search"](spark, sf).collect()
+    rows = queries()["text_boolean_search"](spark, sf).collect()
     assert [tuple(r) for r in rows] == [(1, 2, 1, 1)]
 
 
@@ -150,7 +150,7 @@ def test_path_ngrams_consecutive_only(spark, tmp_path):
     )
     got = sorted(
         tuple(r)
-        for r in r16.queries()["events_path_ngrams"](spark, sf).collect()
+        for r in queries()["events_path_ngrams"](spark, sf).collect()
     )
     assert got == [("A", "B", "C", 1, 1), ("B", "C", "D", 1, 1)]
 
@@ -169,7 +169,7 @@ def test_table_checksum_is_order_and_layout_independent(spark, tmp_path):
     sf_b = _write(
         spark, tmp_path / "b", "orders", _ORD_ROWS[::-1], _ORD_SCHEMA
     )
-    q = r16.queries()["maintenance_table_checksum"]
+    q = queries()["maintenance_table_checksum"]
     a = sorted(tuple(r) for r in q(spark, sf_a).collect())
     b = sorted(tuple(r) for r in q(spark, sf_b).collect())
     assert a == b
@@ -182,7 +182,7 @@ def test_table_checksum_detects_a_changed_row(spark, tmp_path):
         spark, tmp_path / "a", "orders", _ORD_ROWS, _ORD_SCHEMA
     )
     sf_b = _write(spark, tmp_path / "b", "orders", mutated, _ORD_SCHEMA)
-    q = r16.queries()["maintenance_table_checksum"]
+    q = queries()["maintenance_table_checksum"]
     a = {r["o_orderpriority"]: tuple(r) for r in q(spark, sf_a).collect()}
     b = {r["o_orderpriority"]: tuple(r) for r in q(spark, sf_b).collect()}
     assert a["2-HIGH"] == b["2-HIGH"]  # untouched partition agrees
@@ -198,7 +198,7 @@ def test_file_metadata_audit_reconciles_exact_bytes(spark, tmp_path):
     sf = _write(spark, tmp_path, "documents", docs, _DOC_SCHEMA)
     got = {
         r["lang"]: (r["n_rows"], r["n_files"], r["file_bytes"])
-        for r in r16.queries()["source_file_metadata_audit"](
+        for r in queries()["source_file_metadata_audit"](
             spark, sf
         ).collect()
     }

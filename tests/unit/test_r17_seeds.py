@@ -1,10 +1,10 @@
-"""Micro-fixture semantics pins for the r17 pen seeds (oracle parity
+"""Micro-fixture semantics pins for the round-17 dormant queries (oracle parity
 runs on the driver corpus; these pin the conventions on corpora where
 the expected answer is computable by eye)."""
 
 from __future__ import annotations
 
-from rs_query_engine_spark import queries_staged_r17 as r17
+from rs_query_engine_spark.queries import dormant_queries
 
 _DOC_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -39,7 +39,7 @@ def test_weighted_median_follows_the_mass_not_the_count(spark, tmp_path):
             r["median_chars"],
             r["median_doc"],
         )
-        for r in r17.queries()["agg_weighted_median_exact"](
+        for r in dormant_queries()["agg_weighted_median_exact"](
             spark, sf
         ).collect()
     }
@@ -58,7 +58,7 @@ def test_systematic_pps_hits_telescope_to_exactly_k(spark, tmp_path):
     sf = _docs(spark, tmp_path, rows)
     got = {
         r["doc_id"]: r["n_hits"]
-        for r in r17.queries()["sample_systematic_pps"](spark, sf).collect()
+        for r in dormant_queries()["sample_systematic_pps"](spark, sf).collect()
     }
     assert got == {1: 5, 2: 5, 3: 490}
     assert sum(got.values()) == 500
@@ -73,7 +73,7 @@ def test_systematic_pps_budgets_split_by_hamilton(spark, tmp_path):
     sf = _docs(spark, tmp_path, rows)
     got = {
         r["source"]: r["n_hits"]
-        for r in r17.queries()["sample_systematic_pps"](spark, sf).collect()
+        for r in dormant_queries()["sample_systematic_pps"](spark, sf).collect()
     }
     assert got == {"s1": 300, "s2": 200}
 
@@ -100,7 +100,7 @@ def test_funnel_latency_rank_selection(spark, tmp_path):
     spark.createDataFrame(rows, ev_schema).write.mode(
         "overwrite"
     ).parquet(str(tmp_path / "events.parquet"))
-    [r] = r17.queries()["events_funnel_latency"](
+    [r] = dormant_queries()["events_funnel_latency"](
         spark, str(tmp_path)
     ).collect()
     # gaps 100/200/400s: lower median rn=2 -> 200s, p90 rn=3 -> 400s

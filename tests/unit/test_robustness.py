@@ -161,21 +161,13 @@ def test_cosine_zero_vector_is_null_not_error(spark):
 
 
 def test_sampling_deterministic_and_bounded(spark):
-    from rs_query_engine_spark.operators.sorts import (
-        sample_fraction,
-        sample_stratified,
-    )
+    from rs_query_engine_spark.operators.sorts import sample_fraction
 
-    df = spark.range(0, 10000).withColumn("s", (F.col("id") % 2 == 0).cast("string"))
+    df = spark.range(0, 10000)
     a = sample_fraction(df, 0.1, seed=7).count()
     b = sample_fraction(df, 0.1, seed=7).count()
     assert a == b  # deterministic for fixed seed + partitioning
     assert 700 < a < 1300  # ~10%
-
-    strat = sample_stratified(df, "s", {"true": 0.5, "false": 0.01}, seed=7)
-    counts = {r["s"]: r["count"] for r in strat.groupBy("s").count().collect()}
-    assert 2000 < counts["true"] < 3000  # ~50% of 5000
-    assert counts.get("false", 0) < 200  # ~1% of 5000
 
 
 def test_hash_sampling_deterministic_and_join_consistent(spark):
@@ -251,23 +243,6 @@ def test_chunking_is_map_only(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
-
-
-def test_l2_normalize(spark):
-    from rs_query_engine_spark.operators.similarity import dot, l2_normalize
-
-    df = spark.createDataFrame(
-        [(1, [3.0, 4.0]), (2, [0.0, 0.0])], "id long, v array<double>"
-    )
-    rows = {r["id"]: r for r in df.select(
-        "id",
-        l2_normalize(F.col("v")).alias("u"),
-        dot(l2_normalize(F.col("v")), l2_normalize(F.col("v"))).alias("unit"),
-    ).collect()}
-    assert rows[1]["u"] == [0.6, 0.8]
-    assert abs(rows[1]["unit"] - 1.0) < 1e-12
-    # zero vector → NULL elements, never a divide error
-    assert rows[2]["u"] == [None, None]
 
 
 def test_tfidf_topk_terms(spark):

@@ -111,7 +111,7 @@ def test_live_window_is_unverified_first_then_stalest():
     # oldest-green-first] — i.e. no verified query outranks an
     # unverified one, and verified green-rounds are monotone.
     names = list(registry.queries())
-    _, osql = registry._registries()
+    osql = registry.oracle_sql()
     green = registry._GREEN_ROUND
     rows_only = registry._ROWS_ONLY_GREEN
 
@@ -129,27 +129,24 @@ def test_live_window_is_unverified_first_then_stalest():
     assert rounds == sorted(rounds), "verified tail not oldest-green-first"
 
 
-def _without_pens_newer_than(qs: dict, fixture_round: int) -> dict:
-    """Drop every staged-pen registration that went live AFTER the
-    fixture round, so the window matches what that round's driver
-    actually saw regardless of future STAGED_R{N}_ENABLED flips
-    (ADVICE r07 medium — otherwise a populated newer pen front-loads
-    into the frozen fixture and evicts the asserted rows)."""
-    # derive (activation round, module) from the one pen declaration
-    # table: "queries_staged_r{N}" activates in round N, the original
-    # "queries_staged" pen activated in round 6. Hardcoding r7/r8 here
-    # broke when the r10 pen (35 names) flipped live — the frozen
-    # round-5/6 fixtures overflowed their 50-row windows.
-    import importlib
+def _activation_round(fn) -> int:
+    """Round a query went live, read from its module name:
+    ``queries_staged_r{N}`` in round N, ``queries_staged`` in round 6,
+    ``queries`` itself before any of them."""
+    mod = fn.__module__.rsplit(".", 1)[1]
+    if mod.startswith("queries_staged_r"):
+        return int(mod[len("queries_staged_r"):])
+    return 6 if mod == "queries_staged" else 0
 
-    newer = set()
-    for _, mod_name in registry._PEN_MODULES:
-        parts = mod_name.rsplit("_r", 1)
-        rnd = int(parts[1]) if len(parts) == 2 and parts[1].isdigit() else 6
-        if rnd > fixture_round + 1:
-            mod = importlib.import_module(f"rs_query_engine_spark.{mod_name}")
-            newer |= set(mod.queries())
-    return {n: f for n, f in qs.items() if n not in newer}
+
+def _without_pens_newer_than(qs: dict, fixture_round: int) -> dict:
+    """Drop every query that went live AFTER the fixture round, so the
+    window matches what that round's correctness check saw (ADVICE r07
+    medium — otherwise a newer module front-loads into the frozen
+    fixture and evicts the asserted rows)."""
+    return {
+        n: f for n, f in qs.items() if _activation_round(f) <= fixture_round + 1
+    }
 
 
 def test_round6_window_front_loaded_round6_targets_fixture():
@@ -167,8 +164,8 @@ def test_round6_window_front_loaded_round6_targets_fixture():
         # historical-window fixture must not apply them
         registry._CODE_CHANGED_ROUND = {}
         registry._GREEN_ROUND, registry._ROWS_ONLY_GREEN = _frozen_fixture(5)
-        qs, osql = registry._registries()
-        # pens activated after round 6 (r7, r8, ...) did not exist then
+        qs, osql = registry._registered(), registry.oracle_sql()
+        # queries activated after round 6 (r7, r8, ...) did not exist then
         qs = _without_pens_newer_than(qs, 5)
         names = registry._rotation_order(qs, osql)[:50]
         for n in [
@@ -195,13 +192,9 @@ def test_round6_window_front_loaded_round6_targets_fixture():
 
 def test_round7_window_front_loads_staged_r7_fixture():
     # round-7 composition, pinned against the FROZEN artifact set of
-    # rounds ≤ 6: with STAGED_R7_ENABLED live (flipped in round 7),
-    # every r7 name front-loads into the driver's 50-row window (no
-    # driver row in rounds ≤ 6), and the remaining re-check slots cover
-    # all 17 r3-stamped rows.
-    from rs_query_engine_spark import queries_staged_r7 as r7
-
-    assert registry.STAGED_R7_ENABLED, "round-7 activation flag must be on"
+    # rounds ≤ 6: every query that went live in round 7 front-loads
+    # into the 50-row correctness window (no green row in rounds ≤ 6),
+    # and the remaining re-check slots cover all 17 r3-stamped rows.
     saved = (
         registry._GREEN_ROUND,
         registry._ROWS_ONLY_GREEN,
@@ -211,14 +204,16 @@ def test_round7_window_front_loads_staged_r7_fixture():
         registry._CODE_CHANGED_ROUND = {}
         registry._GREEN_ROUND, registry._ROWS_ONLY_GREEN = _frozen_fixture(6)
         green, _ = registry._GREEN_ROUND, registry._ROWS_ONLY_GREEN
-        qs, osql = registry._registries()
-        # pens activated after round 7 (r8, ...) did not exist then
+        qs, osql = registry._registered(), registry.oracle_sql()
+        # queries activated after round 7 (r8, ...) did not exist then
         qs = _without_pens_newer_than(qs, 6)
         names = registry._rotation_order(qs, osql)
         window = set(names[:50])
-        for n in r7.queries():
+        r7 = [n for n, f in qs.items() if _activation_round(f) == 7]
+        assert len(r7) == 18
+        for n in r7:
             assert n in window, n
-        assert set(registry.oracle_sql()) >= set(r7.oracle_sql())
+            assert n in osql, n
         r3_stamped = {n for n, rnd in green.items() if rnd == 3 and n in qs}
         assert r3_stamped <= window, r3_stamped - window
     finally:

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from rs_query_engine_spark.catalog import Catalog
 from rs_query_engine_spark.plans.explain import explain_str
 from rs_query_engine_spark.sources.sinks import (
-    read_parquet,
     write_csv,
     write_json,
     write_parquet,
@@ -29,7 +28,7 @@ def small_df(spark):
 def test_parquet_partitioned_roundtrip_and_pruning(spark, small_df, tmp_path):
     path = str(tmp_path / "part_out")
     write_parquet(small_df, path, partition_by=["flag"], coalesce_files=1)
-    back = read_parquet(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == 4
     assert {r["flag"] for r in back.select("flag").distinct().collect()} == {"A", "B"}
     # filter on the partition key must prune directories, not scan+filter
@@ -93,15 +92,6 @@ def test_compact_files(spark, tmp_path):
     assert n_dst == 1
     # content preserved
     assert spark.read.parquet(dst).count() == 40000
-
-
-def test_union_by_name_schema_evolution(spark):
-    from rs_query_engine_spark.operators.setops import union_by_name
-
-    old = spark.createDataFrame([(1, "a")], "id long, name string")
-    new = spark.createDataFrame([(2, "b", 9.5)], "id long, name string, score double")
-    out = union_by_name(old, new).orderBy("id").collect()
-    assert [tuple(r) for r in out] == [(1, "a", None), (2, "b", 9.5)]
 
 
 def test_quarantine_json_routes_disjointly_and_preserves_bytes(spark, tmp_path):

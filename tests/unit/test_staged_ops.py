@@ -1,6 +1,6 @@
-"""Semantic + plan-shape tests for the staged (round-6) operators.
+"""Semantic + plan-shape tests for the ``queries_staged`` operators.
 
-Value-level parity is covered by ``tests/oracle/test_staged_parity.py``;
+Value-level parity is covered by ``tests/oracle/test_oracle_parity.py``;
 these tests pin the properties the oracle compare can NOT express —
 split disjointness, sketch one-sidedness and mergeability, Z-order
 locality vs a naive layout, nucleus mass coverage — and the physical
@@ -12,61 +12,50 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from rs_query_engine_spark import queries_staged as staged
+from rs_query_engine_spark.queries import oracle_sql
 from rs_query_engine_spark.plans.explain import explain_str
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-# --- staging mechanics ---------------------------------------------------
-
-
-def test_staged_names_do_not_collide_with_live_registry():
-    # activation does dict.update — a name collision would silently
-    # shadow a live (driver-verified) query
-    import pytest
-
-    from rs_query_engine_spark import queries as registry
-
-    if registry.STAGED_ENABLED:
-        pytest.skip("staged queries already merged into the live registry")
-    assert not set(staged.queries()) & set(registry._QUERIES)
-    assert not set(staged.oracle_sql()) & set(registry._ORACLE)
+# --- registration ------------------------------------------------------
 
 
 def test_staged_activation_is_import_order_safe_and_lazy():
-    # round-6 regression guard: the merge is a lazy read-time view, so
-    # activation works even when queries_staged is imported FIRST (an
-    # import-time merge crashed with a partially-initialized-module
-    # AttributeError), and flipping the flag back un-merges.
+    # a query module imported FIRST (it imports queries.py for its
+    # helpers) must leave the registry whole, and a dormant module
+    # imported first must still not be served by queries()
     import subprocess
     import sys
 
     code = (
+        "import rs_query_engine_spark.queries_staged_r17 as d\n"
         "import rs_query_engine_spark.queries_staged as s\n"
         "import rs_query_engine_spark.queries as q\n"
-        "q.STAGED_ENABLED = False\n"
-        "assert 'sample_split_assign' not in q.queries()\n"
-        "q.STAGED_ENABLED = True\n"
-        "assert 'sample_split_assign' in q.queries()\n"
+        "live = q.queries()\n"
+        "assert live['sample_split_assign'] is s.sample_split_assign\n"
         "assert 'sample_split_assign' in q.oracle_sql()\n"
-        "assert set(s.queries()) <= set(q.queries())\n"
-        "assert set(s.oracle_sql()) <= set(q.oracle_sql())\n"
-        "q.STAGED_ENABLED = False\n"
-        "assert 'sample_split_assign' not in q.queries()\n"
+        "dormant = q.dormant_queries()\n"
+        "assert dormant['agg_weighted_median_exact'].__module__ == d.__name__\n"
+        "assert not set(live) & set(dormant)\n"
+        "assert not set(q.oracle_sql()) & set(q.dormant_oracle_sql())\n"
     )
     subprocess.run([sys.executable, "-c", code], check=True)
 
 
 def test_staged_flag_consistent_with_registry():
-    # flag off (round 5): staged names stay out of the driver registry
-    # (window budget); flag on (round 6+): they are all registered
+    # where a module's queries land follows from the list it is in:
+    # queries_staged is in queries._QUERY_MODULES, so queries() serves
+    # its queries and dormant_queries() serves none of them
     from rs_query_engine_spark import queries as registry
 
-    live = set(registry.queries())
-    if registry.STAGED_ENABLED:
-        assert set(staged.queries()) <= live
-    else:
-        assert not set(staged.queries()) & live
+    assert "queries_staged" in registry._QUERY_MODULES
+    assert "queries_staged" not in registry._DORMANT_MODULES
+    assert registry.queries()["sample_split_assign"] is staged.sample_split_assign
+    assert not any(
+        fn.__module__ == staged.__name__
+        for fn in registry.dormant_queries().values()
+    )
 
 
 # --- sample_split_assign ------------------------------------------------
@@ -658,7 +647,7 @@ def test_resample_interp_hour_aligned_events_match_oracle(spark, tmp_path):
         (u, g.replace(tzinfo=None), p and p.replace(tzinfo=None),
          n and n.replace(tzinfo=None), v)
         for u, g, p, n, v in con.execute(
-            staged.oracle_sql()["events_resample_interp"]
+            oracle_sql()["events_resample_interp"]
         ).fetchall()
     )
     assert got == want

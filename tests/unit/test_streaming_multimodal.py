@@ -64,12 +64,6 @@ def media_df(spark):
     return spark.createDataFrame(rows, "id long, payload binary")
 
 
-def test_decode_images(spark, media_df):
-    out = {r.id: r for r in multimodal.decode_images(media_df).collect()}
-    assert (out[1].width, out[1].height, out[1].n_pixels) == (4, 3, 12)
-    assert (out[2].width, out[2].height, out[2].n_pixels) == (16, 2, 32)
-
-
 def test_decode_rejects_real_media(spark):
     with pytest.raises(NotImplementedError):
         multimodal.decode_image(b"\x89PNG\r\n\x1a\n....")
