@@ -1,4 +1,5 @@
-"""Micro-fixture semantics pins for the r16 second-wave queries.
+"""Micro-fixture semantics pins for the r16 second-wave queries and
+``text_contamination_check``.
 
 The oracle parity tests verify these queries against DuckDB on the
 driver corpus; these tests pin the SEMANTIC conventions on hand-built
@@ -204,3 +205,35 @@ def test_file_metadata_audit_reconciles_exact_bytes(spark, tmp_path):
     }
     # en file: "7\n" + "123\n" = 6 bytes; de file: "5\n" = 2 bytes
     assert got == {"en": (2, 1, 6), "de": (1, 1, 2)}
+
+
+def test_contamination_check_flags_a_near_copy_of_a_benchmark_doc(
+    spark, tmp_path
+):
+    # doc 0 is a benchmark doc (doc_id % 97 == 0) with six distinct
+    # 5-grams; doc 1 shares five of them. Doc 97 is an empty benchmark
+    # doc: its gram array is empty, which the query drops through the
+    # explode rather than a size filter, so it must add no rows.
+    import duckdb
+
+    from rs_query_engine_spark.queries import oracle_sql
+
+    bench = "the quick brown fox jumps over the lazy dog today"
+    docs = [
+        (0, bench, "en", "s", len(bench)),
+        (1, bench.replace("today", "again").title(), "en", "s", len(bench)),
+        (97, "", "en", "s", 0),
+    ]
+    sf = _write(spark, tmp_path, "documents", docs, _DOC_SCHEMA)
+    got = sorted(
+        tuple(r)
+        for r in queries()["text_contamination_check"](spark, sf).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf}/documents.parquet/*.parquet')"
+    )
+    want = sorted(con.execute(oracle_sql()["text_contamination_check"]).fetchall())
+    assert got == [(1, 0, 5, 5 / 6)]
+    assert got == want

@@ -16,9 +16,9 @@ REPO = Path(__file__).resolve().parents[2]
 
 
 def test_register_rejects_a_taken_name():
-    taken = next(iter(registry.queries()))
+    taken, owner = next(iter(registry.queries().items()))
     before = registry._QUERIES[taken], registry._ORACLE.get(taken)
-    with pytest.raises(ValueError, match=taken):
+    with pytest.raises(ValueError, match=f"{taken}.*{owner.__module__}"):
         registry.register(taken, oracle="SELECT 1")(lambda spark, sf_dir: None)
     assert (registry._QUERIES[taken], registry._ORACLE.get(taken)) == before
 
@@ -47,3 +47,13 @@ def test_order_does_not_depend_on_the_first_import():
     via_pen = _names_after_importing("rs_query_engine_spark.queries_staged_r10")
     assert len(via_entry) == 336
     assert via_entry == via_pen
+
+
+def test_every_query_module_is_loaded():
+    # a queries*.py file in neither list would register into a
+    # registry nothing reads
+    package = Path(registry.__file__).parent
+    modules = {p.stem for p in package.glob("queries*.py")} - {"queries"}
+    live, dormant = set(registry._QUERY_MODULES), set(registry._DORMANT_MODULES)
+    assert not live & dormant
+    assert modules == live | dormant
