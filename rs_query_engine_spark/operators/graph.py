@@ -212,19 +212,14 @@ def dedup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    algorithm: str = "star",
 ) -> DataFrame:
     """Consolidate near-dup pairs into clusters: (doc_id, cluster_id,
     cluster_size) with cluster_id = min doc id in the component —
-    the keep-candidate under a keep-smallest policy.
-
-    ``algorithm="star"`` (default) uses the O(log n)-round
-    large-star/small-star propagation — diameter-proof, the scale
-    default. ``"onehop"`` uses 1-hop min-label (one shuffle/round,
-    fine for small dense near-dup clusters).
+    the keep-candidate under a keep-smallest policy. Components come
+    from the O(log n)-round large-star/small-star propagation
+    (diameter-proof, the scale default).
     """
-    cc = connected_components_star if algorithm == "star" else connected_components
-    comp = cc(pairs, src=id_a, dst=id_b)
+    comp = connected_components_star(pairs, src=id_a, dst=id_b)
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "comp").select(
         F.col("node").alias("doc_id"),

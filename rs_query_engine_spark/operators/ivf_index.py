@@ -40,12 +40,16 @@ from rs_query_engine_spark.operators.similarity import (
     norm_sq,
 )
 from rs_query_engine_spark.session import truncate_lineage
-from rs_query_engine_spark.sources.artifacts import artifact_root, install_artifact
+from rs_query_engine_spark.sources.artifacts import ensure_artifact
 
 # Deterministic seed-centroid rule (corpus vectors vec_id < N_SEED) —
 # FIXED cardinality at every scale factor, mirrored literally in the
 # DuckDB oracles.
 N_SEED = 8
+
+# Completeness of an assign/cent index generation (the seed, base,
+# merged, trained and compacted ones all share the layout).
+_IVF_PARTS = ("assign/_SUCCESS", "cent/_SUCCESS")
 
 
 def _ivf_params() -> str:
@@ -74,40 +78,34 @@ def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     cross-score against N_SEED centroids + one per-vector top-1
     window; the write is partitioned by list."""
     src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    root = artifact_root(src, "ivfidx", _ivf_params())
-    if _ivf_complete(root):
-        return root
-    e = spark.read.parquet(src)
-    _install_ivf(src, root, "ivfidx", e, seed_centroids(e))
-    return root
+
+    def write(tmp: str) -> None:
+        e = spark.read.parquet(src)
+        _write_ivf(tmp, e, seed_centroids(e))
+
+    return ensure_artifact(src, "ivfidx", _ivf_params(), _IVF_PARTS, write)
 
 
-def _install_ivf(src: str, root: str, tag: str, e: DataFrame, cent: DataFrame) -> None:
-    """Shared build/write body for every IVF index generation: the
-    assign/cent layout is defined HERE once, so a seed-centroid and a
-    trained-centroid artifact can never drift schemas (their readers
-    are shared too)."""
-    assign = assign_centroids(e, cent).select(
-        "vec_id", F.col("_v").alias("v"), F.col("_n").alias("n"), "centroid_id"
-    )
-    cent_stored = cent.select(
+def _stored_centroids(cent: DataFrame) -> DataFrame:
+    """(centroid_id, cv, cn) — the stored centroid table of every IVF
+    and PQ index generation."""
+    return cent.select(
         "centroid_id",
         F.col("centroid_vec").cast("array<double>").alias("cv"),
         F.sqrt(norm_sq(F.col("centroid_vec").cast("array<double>"))).alias("cn"),
     )
 
-    def write(tmp: str) -> None:
-        assign.write.partitionBy("centroid_id").parquet(os.path.join(tmp, "assign"))
-        cent_stored.coalesce(1).write.parquet(os.path.join(tmp, "cent"))
 
-    install_artifact(root, tag, src, write, _ivf_complete)
-
-
-def _ivf_complete(root: str) -> bool:
-    return all(
-        os.path.exists(os.path.join(root, sub, "_SUCCESS"))
-        for sub in ("assign", "cent")
+def _write_ivf(tmp: str, e: DataFrame, cent: DataFrame) -> None:
+    """Shared write body for every IVF index generation built from
+    corpus vectors: the assign/cent layout is defined HERE once, so a
+    seed-centroid and a trained-centroid artifact can never drift
+    schemas (their readers are shared too)."""
+    assign = assign_centroids(e, cent).select(
+        "vec_id", F.col("_v").alias("v"), F.col("_n").alias("n"), "centroid_id"
     )
+    assign.write.partitionBy("centroid_id").parquet(os.path.join(tmp, "assign"))
+    _stored_centroids(cent).coalesce(1).write.parquet(os.path.join(tmp, "cent"))
 
 
 def read_ivf_assign(spark: SparkSession, root: str) -> DataFrame:
@@ -237,26 +235,14 @@ def ensure_base_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     merge exact)."""
     bm, br = _batch_mod_rem()
     src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    root = artifact_root(src, "ivfbase", f"{_ivf_params()}|bm={bm}|br={br}")
-    if _ivf_complete(root):
-        return root
-    e = spark.read.parquet(src)
-    cent = seed_centroids(e)
-    assign = assign_centroids(e.filter(F.col("vec_id") % bm != br), cent).select(
-        "vec_id", F.col("_v").alias("v"), F.col("_n").alias("n"), "centroid_id"
-    )
-    cent_stored = cent.select(
-        "centroid_id",
-        F.col("centroid_vec").cast("array<double>").alias("cv"),
-        F.sqrt(norm_sq(F.col("centroid_vec").cast("array<double>"))).alias("cn"),
-    )
 
     def write(tmp: str) -> None:
-        assign.write.partitionBy("centroid_id").parquet(os.path.join(tmp, "assign"))
-        cent_stored.coalesce(1).write.parquet(os.path.join(tmp, "cent"))
+        e = spark.read.parquet(src)
+        _write_ivf(tmp, e.filter(F.col("vec_id") % bm != br), seed_centroids(e))
 
-    install_artifact(root, "ivfbase", src, write, _ivf_complete)
-    return root
+    return ensure_artifact(
+        src, "ivfbase", f"{_ivf_params()}|bm={bm}|br={br}", _IVF_PARTS, write
+    )
 
 
 def ensure_merged_ivf_index(spark: SparkSession, sf_dir: str) -> str:
@@ -277,35 +263,35 @@ def ensure_merged_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     times more expensive than this merge."""
     bm, br = _batch_mod_rem()
     src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    root = artifact_root(src, "ivfmrg", f"{_ivf_params()}|bm={bm}|br={br}")
-    if _ivf_complete(root):
-        return root
-    base = ensure_base_ivf_index(spark, sf_dir)
-    cent = read_ivf_centroids(spark, base).select(
-        "centroid_id", F.col("cv").alias("centroid_vec")
-    )
-    batch = spark.read.parquet(src).filter(F.col("vec_id") % bm == br)
-    batch_assign = assign_centroids(batch, cent).select(
-        "vec_id",
-        F.col("_v").alias("v"),
-        F.col("_n").alias("n"),
-        F.lit("batch").alias("generation"),
-        "centroid_id",
-    )
-    merged = (
-        read_ivf_assign(spark, base)
-        .select("vec_id", "v", "n", F.lit("base").alias("generation"), "centroid_id")
-        .unionByName(batch_assign)
-    )
 
     def write(tmp: str) -> None:
+        base = ensure_base_ivf_index(spark, sf_dir)
+        cent = read_ivf_centroids(spark, base).select(
+            "centroid_id", F.col("cv").alias("centroid_vec")
+        )
+        batch = spark.read.parquet(src).filter(F.col("vec_id") % bm == br)
+        batch_assign = assign_centroids(batch, cent).select(
+            "vec_id",
+            F.col("_v").alias("v"),
+            F.col("_n").alias("n"),
+            F.lit("batch").alias("generation"),
+            "centroid_id",
+        )
+        merged = (
+            read_ivf_assign(spark, base)
+            .select(
+                "vec_id", "v", "n", F.lit("base").alias("generation"), "centroid_id"
+            )
+            .unionByName(batch_assign)
+        )
         merged.write.partitionBy("centroid_id").parquet(os.path.join(tmp, "assign"))
         read_ivf_centroids(spark, base).coalesce(1).write.parquet(
             os.path.join(tmp, "cent")
         )
 
-    install_artifact(root, "ivfmrg", src, write, _ivf_complete)
-    return root
+    return ensure_artifact(
+        src, "ivfmrg", f"{_ivf_params()}|bm={bm}|br={br}", _IVF_PARTS, write
+    )
 
 
 def read_ivf_merged_assign(spark: SparkSession, root: str) -> DataFrame:
@@ -344,24 +330,15 @@ def ensure_ivf_tombstones(spark: SparkSession, sf_dir: str) -> str:
     from rs_query_engine_spark.operators.lsh_index import REVOKE_MOD, REVOKE_REM
 
     src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    root = artifact_root(src, "ivftmb", _ivf_tomb_params())
-    if _ivf_tomb_complete(root):
-        return root
-    tombs = (
-        spark.read.parquet(src)
-        .filter(F.col("vec_id") % REVOKE_MOD == REVOKE_REM)
-        .select("vec_id")
-    )
 
     def write(tmp: str) -> None:
-        tombs.coalesce(1).write.parquet(os.path.join(tmp, "tombs"))
+        spark.read.parquet(src).filter(
+            F.col("vec_id") % REVOKE_MOD == REVOKE_REM
+        ).select("vec_id").coalesce(1).write.parquet(os.path.join(tmp, "tombs"))
 
-    install_artifact(root, "ivftmb", src, write, _ivf_tomb_complete)
-    return root
-
-
-def _ivf_tomb_complete(root: str) -> bool:
-    return os.path.exists(os.path.join(root, "tombs", "_SUCCESS"))
+    return ensure_artifact(
+        src, "ivftmb", _ivf_tomb_params(), ("tombs/_SUCCESS",), write
+    )
 
 
 def read_ivf_tombstones(spark: SparkSession, root: str) -> DataFrame:
@@ -386,12 +363,14 @@ def ensure_trained_ivf_index(spark: SparkSession, sf_dir: str, k: int = N_SEED) 
     fam = hashlib.md5(
         (inspect.getsource(assign_centroids) + inspect.getsource(kmeans_centroids)).encode()
     ).hexdigest()[:8]
-    root = artifact_root(src, "ivftrn", f"k={k}|metric=cos|fam={fam}")
-    if _ivf_complete(root):
-        return root
-    e = spark.read.parquet(src)
-    _install_ivf(src, root, "ivftrn", e, kmeans_centroids(e, k))
-    return root
+
+    def write(tmp: str) -> None:
+        e = spark.read.parquet(src)
+        _write_ivf(tmp, e, kmeans_centroids(e, k))
+
+    return ensure_artifact(
+        src, "ivftrn", f"k={k}|metric=cos|fam={fam}", _IVF_PARTS, write
+    )
 
 
 # =====================================================================
@@ -433,46 +412,33 @@ def ensure_pq_index(spark: SparkSession, sf_dir: str) -> str:
     from rs_query_engine_spark.operators.similarity import _pq_dist_tables
 
     src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    root = artifact_root(src, "pqidx", _pq_params())
-    if _pq_complete(root):
-        return root
-    e = spark.read.parquet(src)
-    cent = seed_centroids(e)
-    assigned = assign_centroids(e, cent).select(
-        "vec_id", F.col("_v"), F.col("centroid_id")
-    )
-    codes = _pq_dist_tables(
-        assigned,
-        "vec_id", "_v", PQ_NUM_SUB, PQ_NUM_CENTROIDS, PQ_SUB_DIM,
-        passthrough=("centroid_id",),
-    ).select(
-        F.col("_id").alias("vec_id"),
-        *[
-            (
-                F.array_position(F.col(f"_d{b}"), F.array_min(F.col(f"_d{b}"))) - 1
-            ).cast("int").alias(f"c{b}")
-            for b in range(PQ_NUM_SUB)
-        ],
-        "centroid_id",
-    )
-    cent_stored = cent.select(
-        "centroid_id",
-        F.col("centroid_vec").cast("array<double>").alias("cv"),
-        F.sqrt(norm_sq(F.col("centroid_vec").cast("array<double>"))).alias("cn"),
-    )
 
     def write(tmp: str) -> None:
+        e = spark.read.parquet(src)
+        cent = seed_centroids(e)
+        assigned = assign_centroids(e, cent).select(
+            "vec_id", F.col("_v"), F.col("centroid_id")
+        )
+        codes = _pq_dist_tables(
+            assigned,
+            "vec_id", "_v", PQ_NUM_SUB, PQ_NUM_CENTROIDS, PQ_SUB_DIM,
+            passthrough=("centroid_id",),
+        ).select(
+            F.col("_id").alias("vec_id"),
+            *[
+                (
+                    F.array_position(F.col(f"_d{b}"), F.array_min(F.col(f"_d{b}")))
+                    - 1
+                ).cast("int").alias(f"c{b}")
+                for b in range(PQ_NUM_SUB)
+            ],
+            "centroid_id",
+        )
         codes.write.partitionBy("centroid_id").parquet(os.path.join(tmp, "codes"))
-        cent_stored.coalesce(1).write.parquet(os.path.join(tmp, "cent"))
+        _stored_centroids(cent).coalesce(1).write.parquet(os.path.join(tmp, "cent"))
 
-    install_artifact(root, "pqidx", src, write, _pq_complete)
-    return root
-
-
-def _pq_complete(root: str) -> bool:
-    return all(
-        os.path.exists(os.path.join(root, sub, "_SUCCESS"))
-        for sub in ("codes", "cent")
+    return ensure_artifact(
+        src, "pqidx", _pq_params(), ("codes/_SUCCESS", "cent/_SUCCESS"), write
     )
 
 
@@ -551,18 +517,14 @@ def ensure_compacted_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     broadcast anti-join + partitioned write — the corpus embeddings
     are never re-read and no assignment is recomputed."""
     src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    root = artifact_root(src, "ivfcmp", _ivf_tomb_params())
-    if _ivf_complete(root):
-        return root
-    base = ensure_ivf_index(spark, sf_dir)
-    tombs = read_ivf_tombstones(spark, ensure_ivf_tombstones(spark, sf_dir))
-    live = read_ivf_assign(spark, base).join(tombs, "vec_id", "left_anti")
 
     def write(tmp: str) -> None:
+        base = ensure_ivf_index(spark, sf_dir)
+        tombs = read_ivf_tombstones(spark, ensure_ivf_tombstones(spark, sf_dir))
+        live = read_ivf_assign(spark, base).join(tombs, "vec_id", "left_anti")
         live.write.partitionBy("centroid_id").parquet(os.path.join(tmp, "assign"))
         read_ivf_centroids(spark, base).coalesce(1).write.parquet(
             os.path.join(tmp, "cent")
         )
 
-    install_artifact(root, "ivfcmp", src, write, _ivf_complete)
-    return root
+    return ensure_artifact(src, "ivfcmp", _ivf_tomb_params(), _IVF_PARTS, write)

@@ -29,12 +29,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rs_query_engine_spark.sources.artifacts import artifact_root, install_artifact
+from rs_query_engine_spark.sources.artifacts import ensure_artifact
 
 # Delta horizon: everything within the last N days of the corpus max
 # is "new arrivals" the maintained view has not absorbed yet.
 ROLLUP_DELTA_DAYS = 2
 D_VAL = "decimal(12,2)"
+# Completeness of a daily-grain rollup generation (base and merged).
+_DAY_PARTS = ("partials/_SUCCESS", "meta/_SUCCESS")
 
 
 def day_partials(df: DataFrame) -> DataFrame:
@@ -48,13 +50,6 @@ def day_partials(df: DataFrame) -> DataFrame:
     ).agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum(F.col("value").cast(D_VAL)).alias("val_sum"),
-    )
-
-
-def _complete(root: str) -> bool:
-    return all(
-        os.path.isfile(os.path.join(root, part, "_SUCCESS"))
-        for part in ("partials", "meta")
     )
 
 
@@ -74,21 +69,19 @@ def ensure_rollup_partials(spark: SparkSession, sf_dir: str) -> str:
     from rs_query_engine_spark.sources.corpus import load_table
 
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    root = artifact_root(src, "ivmroll", f"d={ROLLUP_DELTA_DAYS}|grain=day")
-    if _complete(root):
-        return root
-    ev = load_table(spark, sf_dir, "events")
-    mx = ev.agg(F.max("ts")).collect()[0][0]
-    cutoff = mx - timedelta(days=ROLLUP_DELTA_DAYS)
-    partials = day_partials(ev.filter(F.col("ts") < F.lit(cutoff)))
-    meta = spark.createDataFrame([(cutoff,)], "cutoff timestamp")
 
     def write(tmp: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        mx = ev.agg(F.max("ts")).collect()[0][0]
+        cutoff = mx - timedelta(days=ROLLUP_DELTA_DAYS)
+        partials = day_partials(ev.filter(F.col("ts") < F.lit(cutoff)))
+        meta = spark.createDataFrame([(cutoff,)], "cutoff timestamp")
         partials.write.parquet(os.path.join(tmp, "partials"))
         meta.coalesce(1).write.parquet(os.path.join(tmp, "meta"))
 
-    install_artifact(root, "ivmroll", src, write, _complete)
-    return root
+    return ensure_artifact(
+        src, "ivmroll", f"d={ROLLUP_DELTA_DAYS}|grain=day", _DAY_PARTS, write
+    )
 
 
 def read_rollup_partials(spark: SparkSession, root: str) -> DataFrame:
@@ -185,32 +178,30 @@ def ensure_merged_rollup_partials(spark: SparkSession, sf_dir: str) -> str:
     from rs_query_engine_spark.sources.corpus import load_table
 
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    root = artifact_root(src, "ivmrollm", f"d={ROLLUP_DELTA_DAYS}|grain=day")
-    if _complete(root):
-        return root
-    base_root = ensure_rollup_partials(spark, sf_dir)
-    cutoff = read_rollup_cutoff(spark, base_root)
-    mx = cutoff + timedelta(days=ROLLUP_DELTA_DAYS)
-    ev = load_table(spark, sf_dir, "events")
-    merged = (
-        read_rollup_partials(spark, base_root)
-        .unionByName(day_partials(ev.filter(F.col("ts") >= F.lit(cutoff))))
-        .groupBy("day", "event_type")
-        .agg(F.sum("cnt").alias("cnt"), F.sum("val_sum").alias("val_sum"))
-        # re-reduce widened the sum type; restore the generation's
-        # storage type so probe code is generation-agnostic
-        .withColumn("val_sum", F.col("val_sum").cast("decimal(22,2)"))
-    )
-    meta = spark.createDataFrame(
-        [(mx + timedelta(microseconds=1),)], "cutoff timestamp"
-    )
 
     def write(tmp: str) -> None:
+        base_root = ensure_rollup_partials(spark, sf_dir)
+        cutoff = read_rollup_cutoff(spark, base_root)
+        mx = cutoff + timedelta(days=ROLLUP_DELTA_DAYS)
+        ev = load_table(spark, sf_dir, "events")
+        merged = (
+            read_rollup_partials(spark, base_root)
+            .unionByName(day_partials(ev.filter(F.col("ts") >= F.lit(cutoff))))
+            .groupBy("day", "event_type")
+            .agg(F.sum("cnt").alias("cnt"), F.sum("val_sum").alias("val_sum"))
+            # re-reduce widened the sum type; restore the generation's
+            # storage type so probe code is generation-agnostic
+            .withColumn("val_sum", F.col("val_sum").cast("decimal(22,2)"))
+        )
+        meta = spark.createDataFrame(
+            [(mx + timedelta(microseconds=1),)], "cutoff timestamp"
+        )
         merged.write.parquet(os.path.join(tmp, "partials"))
         meta.coalesce(1).write.parquet(os.path.join(tmp, "meta"))
 
-    install_artifact(root, "ivmrollm", src, write, _complete)
-    return root
+    return ensure_artifact(
+        src, "ivmrollm", f"d={ROLLUP_DELTA_DAYS}|grain=day", _DAY_PARTS, write
+    )
 
 
 def hour_partials(df: DataFrame) -> DataFrame:
@@ -237,27 +228,22 @@ def ensure_hourly_partials(spark: SparkSession, sf_dir: str) -> str:
     from rs_query_engine_spark.sources.corpus import load_table
 
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    root = artifact_root(src, "ivmrollh", f"d={ROLLUP_DELTA_DAYS}|grain=hour")
-    if _complete_h(root):
-        return root
-    ev = load_table(spark, sf_dir, "events")
-    mx = ev.agg(F.max("ts")).collect()[0][0]
-    cutoff = mx - timedelta(days=ROLLUP_DELTA_DAYS)
-    partials = hour_partials(ev.filter(F.col("ts") < F.lit(cutoff)))
-    meta = spark.createDataFrame([(cutoff,)], "cutoff timestamp")
 
     def write(tmp: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        mx = ev.agg(F.max("ts")).collect()[0][0]
+        cutoff = mx - timedelta(days=ROLLUP_DELTA_DAYS)
+        partials = hour_partials(ev.filter(F.col("ts") < F.lit(cutoff)))
+        meta = spark.createDataFrame([(cutoff,)], "cutoff timestamp")
         partials.write.parquet(os.path.join(tmp, "hourly"))
         meta.coalesce(1).write.parquet(os.path.join(tmp, "meta"))
 
-    install_artifact(root, "ivmrollh", src, write, _complete_h)
-    return root
-
-
-def _complete_h(root: str) -> bool:
-    return all(
-        os.path.isfile(os.path.join(root, part, "_SUCCESS"))
-        for part in ("hourly", "meta")
+    return ensure_artifact(
+        src,
+        "ivmrollh",
+        f"d={ROLLUP_DELTA_DAYS}|grain=hour",
+        ("hourly/_SUCCESS", "meta/_SUCCESS"),
+        write,
     )
 
 

@@ -51,7 +51,7 @@ from rs_query_engine_spark.operators.dedup import (
     _minhash_from_shingles,
     minhash_band_keys,
 )
-from rs_query_engine_spark.sources.artifacts import artifact_root, install_artifact
+from rs_query_engine_spark.sources.artifacts import ensure_artifact
 from rs_query_engine_spark.sources.corpus import spread
 
 # The incremental-ingest stand-in split: "today's batch" is every
@@ -62,6 +62,10 @@ BATCH_MOD = 20
 BATCH_REM = 7
 
 SHINGLE_N = 3  # word n-gram size for index signatures
+
+# Completeness of a bands/sigs index generation (base, merged and
+# compacted generations share the layout).
+INDEX_PARTS = ("bands/_SUCCESS", "sigs/_SUCCESS")
 
 
 def _index_params() -> str:
@@ -140,24 +144,20 @@ def ensure_lsh_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) and return the root path of the persisted LSH
     index over the non-batch corpus slice of ``{sf_dir}/documents``."""
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    root = artifact_root(src, "lshidx", _index_params())
-    if _index_complete(root):
-        return root
-    docs = spark.read.parquet(src).filter(
-        F.col("doc_id") % BATCH_MOD != BATCH_REM
-    )
-    sigs = doc_signatures(docs)
-    bands = _cap_buckets(band_postings(sigs))
 
     def write(tmp: str) -> None:
+        docs = spark.read.parquet(src).filter(
+            F.col("doc_id") % BATCH_MOD != BATCH_REM
+        )
+        sigs = doc_signatures(docs)
+        bands = _cap_buckets(band_postings(sigs))
         # band partitioning: probes for one band prune the other
         # directories; at cluster scale bands.bucketBy("key") makes
         # the probe join shuffle-free on the batch side too
         bands.write.partitionBy("band").parquet(os.path.join(tmp, "bands"))
         sigs.write.parquet(os.path.join(tmp, "sigs"))
 
-    install_artifact(root, "lshidx", src, write, _index_complete)
-    return root
+    return ensure_artifact(src, "lshidx", _index_params(), INDEX_PARTS, write)
 
 
 def ensure_merged_lsh_index(spark: SparkSession, sf_dir: str) -> str:
@@ -173,32 +173,21 @@ def ensure_merged_lsh_index(spark: SparkSession, sf_dir: str) -> str:
     the standard write-once trade, documented so the oracle mirrors
     the same two-stage cap)."""
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    root = artifact_root(src, "lshmrg", _index_params())
-    if _index_complete(root):
-        return root
-    base = ensure_lsh_index(spark, sf_dir)
-    batch = spark.read.parquet(src).filter(
-        F.col("doc_id") % BATCH_MOD == BATCH_REM
-    )
-    bsigs = doc_signatures(batch)
-    merged_bands = _cap_buckets(
-        read_index_bands(spark, base).unionByName(band_postings(bsigs))
-    )
-    merged_sigs = read_index_sigs(spark, base).unionByName(bsigs)
 
     def write(tmp: str) -> None:
+        base = ensure_lsh_index(spark, sf_dir)
+        batch = spark.read.parquet(src).filter(
+            F.col("doc_id") % BATCH_MOD == BATCH_REM
+        )
+        bsigs = doc_signatures(batch)
+        merged_bands = _cap_buckets(
+            read_index_bands(spark, base).unionByName(band_postings(bsigs))
+        )
+        merged_sigs = read_index_sigs(spark, base).unionByName(bsigs)
         merged_bands.write.partitionBy("band").parquet(os.path.join(tmp, "bands"))
         merged_sigs.write.parquet(os.path.join(tmp, "sigs"))
 
-    install_artifact(root, "lshmrg", src, write, _index_complete)
-    return root
-
-
-def _index_complete(root: str) -> bool:
-    return all(
-        os.path.exists(os.path.join(root, sub, "_SUCCESS"))
-        for sub in ("bands", "sigs")
-    )
+    return ensure_artifact(src, "lshmrg", _index_params(), INDEX_PARTS, write)
 
 
 def read_index_bands(spark: SparkSession, root: str) -> DataFrame:
@@ -332,27 +321,19 @@ def ensure_lsh_tombstones(spark: SparkSession, sf_dir: str) -> str:
     later compaction folds them in physically. At 100 TB the tombstone
     table is tiny (takedowns are rare) and broadcast at probe time."""
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    root = artifact_root(src, "lshtmb", _tomb_params())
-    if _tomb_complete(root):
-        return root
-    tombs = (
-        spark.read.parquet(src)
-        .filter(
-            (F.col("doc_id") % BATCH_MOD != BATCH_REM)
-            & (F.col("doc_id") % REVOKE_MOD == REVOKE_REM)
-        )
-        .select("doc_id")
-    )
 
     def write(tmp: str) -> None:
+        tombs = (
+            spark.read.parquet(src)
+            .filter(
+                (F.col("doc_id") % BATCH_MOD != BATCH_REM)
+                & (F.col("doc_id") % REVOKE_MOD == REVOKE_REM)
+            )
+            .select("doc_id")
+        )
         tombs.coalesce(1).write.parquet(os.path.join(tmp, "tombs"))
 
-    install_artifact(root, "lshtmb", src, write, _tomb_complete)
-    return root
-
-
-def _tomb_complete(root: str) -> bool:
-    return os.path.exists(os.path.join(root, "tombs", "_SUCCESS"))
+    return ensure_artifact(src, "lshtmb", _tomb_params(), ("tombs/_SUCCESS",), write)
 
 
 def read_tombstones(spark: SparkSession, root: str) -> DataFrame:
@@ -381,21 +362,17 @@ def ensure_compacted_lsh_index(
     and no signature is recomputed."""
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
     tag = "lshcm2" if merged else "lshcmp"
-    root = artifact_root(src, tag, _tomb_params())
-    if _index_complete(root):
-        return root
-    base = (
-        ensure_merged_lsh_index(spark, sf_dir)
-        if merged
-        else ensure_lsh_index(spark, sf_dir)
-    )
-    tombs = read_tombstones(spark, ensure_lsh_tombstones(spark, sf_dir))
-    live_bands = read_index_bands(spark, base).join(tombs, "doc_id", "left_anti")
-    live_sigs = read_index_sigs(spark, base).join(tombs, "doc_id", "left_anti")
 
     def write(tmp: str) -> None:
+        base = (
+            ensure_merged_lsh_index(spark, sf_dir)
+            if merged
+            else ensure_lsh_index(spark, sf_dir)
+        )
+        tombs = read_tombstones(spark, ensure_lsh_tombstones(spark, sf_dir))
+        live_bands = read_index_bands(spark, base).join(tombs, "doc_id", "left_anti")
+        live_sigs = read_index_sigs(spark, base).join(tombs, "doc_id", "left_anti")
         live_bands.write.partitionBy("band").parquet(os.path.join(tmp, "bands"))
         live_sigs.write.parquet(os.path.join(tmp, "sigs"))
 
-    install_artifact(root, tag, src, write, _index_complete)
-    return root
+    return ensure_artifact(src, tag, _tomb_params(), INDEX_PARTS, write)

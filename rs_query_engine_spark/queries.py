@@ -3349,28 +3349,16 @@ def _ensure_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
     """The hive-partitioned events copy + the 5-row event-type dim —
     ONE artifact shared by ``source_partition_pruning`` and
     ``join_dynamic_partition_pruning``, keyed through the standard
-    mtime+size ``artifacts.artifact_root`` machinery (migrated r12
+    mtime+size ``artifacts.ensure_artifact`` machinery (migrated r12
     from the path-only ``_SUCCESS`` convention: an in-place corpus
     regen used to serve the copies stale). Returns the base dir
     containing ``events`` and ``etype_dim``."""
     import os
 
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
     from rs_query_engine_spark.sources.sinks import write_parquet
 
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    root = artifact_root(src, "evpart", "by=event_type|files=4|dim=5boost")
-
-    def complete(r: str) -> bool:
-        return os.path.exists(
-            os.path.join(r, "events", "_SUCCESS")
-        ) and os.path.exists(os.path.join(r, "etype_dim", "_SUCCESS"))
-
-    if complete(root):
-        return root
 
     def write(tmp: str) -> None:
         write_parquet(
@@ -3387,8 +3375,13 @@ def _ensure_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(tmp, "etype_dim")
         )
 
-    install_artifact(root, "evpart", src, write, complete)
-    return root
+    return ensure_artifact(
+        src,
+        "evpart",
+        "by=event_type|files=4|dim=5boost",
+        ("events/_SUCCESS", "etype_dim/_SUCCESS"),
+        write,
+    )
 
 
 @register(
@@ -3996,28 +3989,20 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from rs_query_engine_spark.catalog import Catalog
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
     from rs_query_engine_spark.sources.sinks import write_json
 
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    root = artifact_root(src, "jsondocs", "files=4")
+
+    def write(tmp: str) -> None:
+        write_json(
+            _t(spark, sf_dir, "documents"),
+            os.path.join(tmp, "documents"),
+            coalesce_files=4,
+        )
+
+    root = ensure_artifact(src, "jsondocs", "files=4", ("documents/_SUCCESS",), write)
     path = os.path.join(root, "documents")
-
-    def _complete(r: str) -> bool:
-        return os.path.exists(os.path.join(r, "documents", "_SUCCESS"))
-
-    if not _complete(root):
-        def _write(tmp: str) -> None:
-            write_json(
-                _t(spark, sf_dir, "documents"),
-                os.path.join(tmp, "documents"),
-                coalesce_files=4,
-            )
-
-        install_artifact(root, "jsondocs", src, _write, _complete)
     digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
     cat = Catalog(spark)
     jdf = cat.register_json(
@@ -6282,31 +6267,27 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     metastore-declared schema which this read does not require."""
     import os
 
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
 
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    root = artifact_root(src, "evodocs", "split=doc_id%2|v2adds=lang")
+
+    def write(tmp: str) -> None:
+        d = _t(spark, sf_dir, "documents")
+        d.filter(F.col("doc_id") % 2 == 0).select(
+            "doc_id", "n_chars"
+        ).write.parquet(os.path.join(tmp, "v1"))
+        d.filter(F.col("doc_id") % 2 == 1).select(
+            "doc_id", "n_chars", "lang"
+        ).write.parquet(os.path.join(tmp, "v2"))
+
+    root = ensure_artifact(
+        src,
+        "evodocs",
+        "split=doc_id%2|v2adds=lang",
+        ("v1/_SUCCESS", "v2/_SUCCESS"),
+        write,
+    )
     v1, v2 = os.path.join(root, "v1"), os.path.join(root, "v2")
-
-    def _complete(r: str) -> bool:
-        return os.path.exists(
-            os.path.join(r, "v1", "_SUCCESS")
-        ) and os.path.exists(os.path.join(r, "v2", "_SUCCESS"))
-
-    if not _complete(root):
-        def _write(tmp: str) -> None:
-            d = _t(spark, sf_dir, "documents")
-            d.filter(F.col("doc_id") % 2 == 0).select(
-                "doc_id", "n_chars"
-            ).write.parquet(os.path.join(tmp, "v1"))
-            d.filter(F.col("doc_id") % 2 == 1).select(
-                "doc_id", "n_chars", "lang"
-            ).write.parquet(os.path.join(tmp, "v2"))
-
-        install_artifact(root, "evodocs", src, _write, _complete)
     return (
         spark.read.option("mergeSchema", "true")
         .parquet(v1, v2)

@@ -723,24 +723,15 @@ def stream_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_ivf_index,
         probe_ivf_index,
     )
+    from rs_query_engine_spark.sources.corpus import stream_source_dir
 
     root = ensure_ivf_index(spark, sf_dir)
     src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
     schema = spark.read.parquet(src).schema
-    if os.path.isfile(src):
-        digest = _hashlib.md5(src.encode()).hexdigest()[:16]
-        shim = os.path.join(tempfile.gettempdir(), f"rsqes_embstream_{digest}")
-        os.makedirs(shim, exist_ok=True)
-        link = os.path.join(shim, "embeddings.parquet")
-        if not os.path.exists(link):
-            os.symlink(src, link)
-        stream_src = shim
-    else:
-        stream_src = src
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stream_src)
+        .parquet(stream_source_dir(src))
         .filter(F.col("vec_id") % 100 == 0)
         .select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")

@@ -1522,10 +1522,10 @@ def source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader because implementing pushFilters is a contract: Spark
     refuses the scan when ``spark.sql.python.filterPushdown.enabled``
     is off (measured — hard AnalysisException), so the conf is
-    ensured per query the same way ensure_nanos_as_long handles the
-    driver's own session. At 100 TB this boundary is the difference
-    between shipping a full partition through Arrow to drop 99% of
-    it JVM-side and dropping it where the bytes already are."""
+    ensured per query on the driver's own session. At 100 TB this
+    boundary is the difference between shipping a full partition
+    through Arrow to drop 99% of it JVM-side and dropping it where
+    the bytes already are."""
     from rs_query_engine_spark.sources.pydatasource import (
         CsvPushdownDataSource,
         ensure_customer_csv,

@@ -883,21 +883,10 @@ def _ensure_corrupt_orders_json(spark: SparkSession, sf_dir: str) -> str:
     to JSON timestamp-format round-tripping."""
     import os
 
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
     from rs_query_engine_spark.sources.corpus import load_table
 
     src = os.path.join(os.path.abspath(sf_dir), "orders.parquet")
-    root = artifact_root(src, "badjson", "rule=key%97|chop=1")
-    path = os.path.join(root, "orders")
-
-    def complete(r: str) -> bool:
-        return os.path.exists(os.path.join(r, "orders", "_SUCCESS"))
-
-    if complete(root):
-        return path
 
     def write(tmp: str) -> None:
         o = load_table(spark, sf_dir, "orders").withColumn(
@@ -916,8 +905,10 @@ def _ensure_corrupt_orders_json(spark: SparkSession, sf_dir: str) -> str:
         )
         js.coalesce(4).write.mode("overwrite").text(os.path.join(tmp, "orders"))
 
-    install_artifact(root, "badjson", src, write, complete)
-    return path
+    root = ensure_artifact(
+        src, "badjson", "rule=key%97|chop=1", ("orders/_SUCCESS",), write
+    )
+    return os.path.join(root, "orders")
 
 
 @register(

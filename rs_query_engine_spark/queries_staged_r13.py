@@ -1180,20 +1180,9 @@ def _ensure_fragmented_lineitem(spark: SparkSession, sf_dir: str) -> str:
     through the standard mtime+size-keyed atomic install."""
     import os
 
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
 
     src = os.path.join(os.path.abspath(sf_dir), "lineitem.parquet")
-    root = artifact_root(src, "fragli", f"n={_COMPACT_FRAG_FILES}|cols=3")
-    path = os.path.join(root, "frag")
-
-    def complete(r: str) -> bool:
-        return os.path.exists(os.path.join(r, "frag", "_SUCCESS"))
-
-    if complete(root):
-        return path
 
     def write(tmp: str) -> None:
         li = _t(spark, sf_dir, "lineitem").select(
@@ -1203,8 +1192,10 @@ def _ensure_fragmented_lineitem(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(tmp, "frag")
         )
 
-    install_artifact(root, "fragli", src, write, complete)
-    return path
+    root = ensure_artifact(
+        src, "fragli", f"n={_COMPACT_FRAG_FILES}|cols=3", ("frag/_SUCCESS",), write
+    )
+    return os.path.join(root, "frag")
 
 
 @register(

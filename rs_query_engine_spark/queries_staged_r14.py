@@ -630,33 +630,24 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     XML writer/parser pair too)."""
     import os
 
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
 
     src = os.path.join(os.path.abspath(sf_dir), "customer.parquet")
-    root = artifact_root(src, "xmlcust", "files=2|rowTag=customer")
-    path = os.path.join(root, "customer_xml")
 
-    def _complete(r: str) -> bool:
-        return os.path.exists(
-            os.path.join(r, "customer_xml", "_SUCCESS")
+    def write(tmp: str) -> None:
+        (
+            _t(spark, sf_dir, "customer")
+            .coalesce(2)
+            .write.format("xml")
+            .option("rootTag", "customers")
+            .option("rowTag", "customer")
+            .save(os.path.join(tmp, "customer_xml"))
         )
 
-    if not _complete(root):
-
-        def _write(tmp: str) -> None:
-            (
-                _t(spark, sf_dir, "customer")
-                .coalesce(2)
-                .write.format("xml")
-                .option("rootTag", "customers")
-                .option("rowTag", "customer")
-                .save(os.path.join(tmp, "customer_xml"))
-            )
-
-        install_artifact(root, "xmlcust", src, _write, _complete)
+    root = ensure_artifact(
+        src, "xmlcust", "files=2|rowTag=customer", ("customer_xml/_SUCCESS",), write
+    )
+    path = os.path.join(root, "customer_xml")
 
     xdf = (
         spark.read.format("xml")

@@ -88,68 +88,65 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-sized crosses a shuffle."""
     import os
 
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
 
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
+
+    def write(tmp: str) -> None:
+        # The sort is the LAST node before the write and orders by
+        # (lang, doc_id-recomputed-from-value), so the writer's
+        # required ordering on the partition column is satisfied
+        # by the sort itself — no reliance on outputOrdering
+        # propagating through a later projection (ADVICE r13: that
+        # propagation is an implementation detail a Spark upgrade
+        # could drop, silently letting FileFormatWriter insert its
+        # own non-stable sort and scramble the file bytes).
+        (
+            _t(spark, sf_dir, "documents")
+            .select(
+                "lang",
+                F.concat_ws(
+                    ",",
+                    F.col("doc_id").cast("string"),
+                    F.col("n_chars").cast("string"),
+                ).alias("value"),
+            )
+            .repartition(F.col("lang"))
+            .sortWithinPartitions(
+                F.col("lang"),
+                F.split(F.col("value"), ",").getItem(0).cast("long"),
+            )
+            .write.partitionBy("lang")
+            .text(os.path.join(tmp, "byte_files"))
+        )
+        # Byte-exactness also needs each lang's rows in ONE file
+        # (repartition-by-lang guarantees one task per lang, hence
+        # one file) — assert it so a layout drift fails the
+        # install loudly instead of hash-mismatching downstream.
+        out = os.path.join(tmp, "byte_files")
+        for d in os.listdir(out):
+            if not d.startswith("lang="):
+                continue
+            n = len([
+                f for f in os.listdir(os.path.join(out, d))
+                if f.endswith(".txt")
+            ])
+            if n != 1:
+                raise AssertionError(
+                    f"binaryFile fixture: {d} has {n} data files,"
+                    " expected exactly 1"
+                )
+
     # v2: sort moved after the projection (ADVICE r13) — same bytes,
     # re-keyed so cached v1 fixtures rebuild through the hardened path.
-    root = artifact_root(src, "binfiles", "layout=lang_csv_sorted_v2")
+    root = ensure_artifact(
+        src,
+        "binfiles",
+        "layout=lang_csv_sorted_v2",
+        ("byte_files/_SUCCESS",),
+        write,
+    )
     path = os.path.join(root, "byte_files")
-
-    def _complete(r: str) -> bool:
-        return os.path.exists(os.path.join(r, "byte_files", "_SUCCESS"))
-
-    if not _complete(root):
-
-        def _write(tmp: str) -> None:
-            # The sort is the LAST node before the write and orders by
-            # (lang, doc_id-recomputed-from-value), so the writer's
-            # required ordering on the partition column is satisfied
-            # by the sort itself — no reliance on outputOrdering
-            # propagating through a later projection (ADVICE r13: that
-            # propagation is an implementation detail a Spark upgrade
-            # could drop, silently letting FileFormatWriter insert its
-            # own non-stable sort and scramble the file bytes).
-            (
-                _t(spark, sf_dir, "documents")
-                .select(
-                    "lang",
-                    F.concat_ws(
-                        ",",
-                        F.col("doc_id").cast("string"),
-                        F.col("n_chars").cast("string"),
-                    ).alias("value"),
-                )
-                .repartition(F.col("lang"))
-                .sortWithinPartitions(
-                    F.col("lang"),
-                    F.split(F.col("value"), ",").getItem(0).cast("long"),
-                )
-                .write.partitionBy("lang")
-                .text(os.path.join(tmp, "byte_files"))
-            )
-            # Byte-exactness also needs each lang's rows in ONE file
-            # (repartition-by-lang guarantees one task per lang, hence
-            # one file) — assert it so a layout drift fails the
-            # install loudly instead of hash-mismatching downstream.
-            out = os.path.join(tmp, "byte_files")
-            for d in os.listdir(out):
-                if not d.startswith("lang="):
-                    continue
-                n = len([
-                    f for f in os.listdir(os.path.join(out, d))
-                    if f.endswith(".txt")
-                ])
-                if n != 1:
-                    raise AssertionError(
-                        f"binaryFile fixture: {d} has {n} data files,"
-                        " expected exactly 1"
-                    )
-
-        install_artifact(root, "binfiles", src, _write, _complete)
 
     b = (
         spark.read.format("binaryFile")
@@ -1155,38 +1152,31 @@ def source_csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     already is."""
     import os
 
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
 
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    root = artifact_root(src, "mlcsv", "layout=tricky_v1")
+
+    def write(tmp: str) -> None:
+        tricky = F.concat(
+            F.lit("x,"),
+            F.col("lang"),
+            F.lit("\n\"q"),
+            (F.col("doc_id") % 7).cast("string"),
+            F.lit("\" end"),
+        )
+        (
+            _t(spark, sf_dir, "documents")
+            .select("doc_id", tricky.alias("tricky"))
+            .write.option("quote", '"')
+            .option("escape", '"')
+            .option("quoteAll", True)
+            .csv(os.path.join(tmp, "tricky_csv"))
+        )
+
+    root = ensure_artifact(
+        src, "mlcsv", "layout=tricky_v1", ("tricky_csv/_SUCCESS",), write
+    )
     path = os.path.join(root, "tricky_csv")
-
-    def _complete(r: str) -> bool:
-        return os.path.exists(os.path.join(r, "tricky_csv", "_SUCCESS"))
-
-    if not _complete(root):
-
-        def _write(tmp: str) -> None:
-            tricky = F.concat(
-                F.lit("x,"),
-                F.col("lang"),
-                F.lit("\n\"q"),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit("\" end"),
-            )
-            (
-                _t(spark, sf_dir, "documents")
-                .select("doc_id", tricky.alias("tricky"))
-                .write.option("quote", '"')
-                .option("escape", '"')
-                .option("quoteAll", True)
-                .csv(os.path.join(tmp, "tricky_csv"))
-            )
-
-        install_artifact(root, "mlcsv", src, _write, _complete)
 
     back = (
         spark.read.schema("doc_id LONG, tricky STRING")

@@ -904,50 +904,45 @@ def source_file_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the uuid'd file NAME are never selected (wall-clock / nondeterm)."""
     import os
 
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
 
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    root = artifact_root(src, "metafiles", "layout=lang_docid_lines_v1")
-    path = os.path.join(root, "meta_files")
 
-    def _complete(r: str) -> bool:
-        return os.path.exists(
-            os.path.join(r, "meta_files", "_SUCCESS")
-        )
-
-    if not _complete(root):
-
-        def _write(tmp: str) -> None:
-            out = os.path.join(tmp, "meta_files")
-            (
-                _t(spark, sf_dir, "documents")
-                .select(
-                    "lang", F.col("doc_id").cast("string").alias("value")
-                )
-                .repartition(F.col("lang"))
-                .write.partitionBy("lang")
-                .text(out)
+    def write(tmp: str) -> None:
+        out = os.path.join(tmp, "meta_files")
+        (
+            _t(spark, sf_dir, "documents")
+            .select(
+                "lang", F.col("doc_id").cast("string").alias("value")
             )
-            # One data file per lang dir (repartition-by-lang puts each
-            # lang in exactly one task) — the per-file byte reconcile
-            # is only meaningful if the whole lang is one file.
-            for d in os.listdir(out):
-                if not d.startswith("lang="):
-                    continue
-                n = len([
-                    f for f in os.listdir(os.path.join(out, d))
-                    if f.endswith(".txt")
-                ])
-                if n != 1:
-                    raise AssertionError(
-                        f"metafiles fixture: {d} has {n} data files,"
-                        " expected exactly 1"
-                    )
+            .repartition(F.col("lang"))
+            .write.partitionBy("lang")
+            .text(out)
+        )
+        # One data file per lang dir (repartition-by-lang puts each
+        # lang in exactly one task) — the per-file byte reconcile
+        # is only meaningful if the whole lang is one file.
+        for d in os.listdir(out):
+            if not d.startswith("lang="):
+                continue
+            n = len([
+                f for f in os.listdir(os.path.join(out, d))
+                if f.endswith(".txt")
+            ])
+            if n != 1:
+                raise AssertionError(
+                    f"metafiles fixture: {d} has {n} data files,"
+                    " expected exactly 1"
+                )
 
-        install_artifact(root, "metafiles", src, _write, _complete)
+    root = ensure_artifact(
+        src,
+        "metafiles",
+        "layout=lang_docid_lines_v1",
+        ("meta_files/_SUCCESS",),
+        write,
+    )
+    path = os.path.join(root, "meta_files")
 
     t = spark.read.text(path)
     return t.groupBy("lang").agg(

@@ -747,30 +747,21 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from rs_query_engine_spark.catalog import Catalog
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
     from rs_query_engine_spark.sources.sinks import write_orc
 
     src = os.path.join(os.path.abspath(sf_dir), "part.parquet")
-    root = artifact_root(src, "orc", "coalesce=4")
+    root = ensure_artifact(
+        src,
+        "orc",
+        "coalesce=4",
+        ("part/_SUCCESS",),
+        lambda tmp: write_orc(
+            _t(spark, sf_dir, "part"), os.path.join(tmp, "part"),
+            coalesce_files=4,
+        ),
+    )
     path = os.path.join(root, "part")
-
-    def complete(r: str) -> bool:
-        return os.path.exists(os.path.join(r, "part", "_SUCCESS"))
-
-    if not complete(root):
-        install_artifact(
-            root,
-            "orc",
-            src,
-            lambda tmp: write_orc(
-                _t(spark, sf_dir, "part"), os.path.join(tmp, "part"),
-                coalesce_files=4,
-            ),
-            complete,
-        )
     cat = Catalog(spark)
     orc_df = cat.register_orc(f"part_orc_{os.path.basename(root)}", path)
     return orc_df.filter(F.col("p_retailprice") > 950.0)

@@ -900,28 +900,16 @@ def stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_lsh_index,
         probe_index,
     )
+    from rs_query_engine_spark.sources.corpus import stream_source_dir
 
     root = ensure_lsh_index(spark, sf_dir)
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
     # probe the batch schema — never hardcode (events.ts lesson)
     schema = spark.read.parquet(src).schema
-    # the file-stream source tails a DIRECTORY (the production drop-
-    # directory layout); the corpus ships one file, so expose it via
-    # the same stable symlink shim read_events_stream uses
-    if os.path.isfile(src):
-        digest = _hashlib.md5(src.encode()).hexdigest()[:16]
-        shim = os.path.join(tempfile.gettempdir(), f"rsqes_docstream_{digest}")
-        os.makedirs(shim, exist_ok=True)
-        link = os.path.join(shim, "documents.parquet")
-        if not os.path.exists(link):
-            os.symlink(src, link)
-        stream_src = shim
-    else:
-        stream_src = src
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stream_src)
+        .parquet(stream_source_dir(src))
         .filter(F.col("doc_id") % BATCH_MOD == BATCH_REM)
     )
     # run_root keys on (src, pid): the pid component keeps two

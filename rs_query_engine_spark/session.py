@@ -50,12 +50,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        # events.parquet carries TIMESTAMP(NANOS). Spark ≤3.5 rejects
-        # it by default and needs this conf to read nanos as long;
-        # Spark 4.1+ ignores the conf and reads timestamp_ntz directly.
-        # Loaders branch on the observed schema (corpus.py
-        # normalize_events_ts), so setting it is correct on both.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # The generated-class cache (whole-stage codegen + expression
         # codegen) is keyed by generated SOURCE and capped at 100
         # entries by default — sized for apps that run a handful of
@@ -69,10 +63,7 @@ def get_spark(
         # 100 TB serves far more than 100 distinct plan shapes;
         # the cache holds compiled classes (small) — raising it trades
         # a few MB of driver/executor metaspace for not recompiling.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("RSQES_CODEGEN_CACHE_ENTRIES", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Spark 4.1's TIME data type (SPARK-51162 family) ships
         # feature-flagged off. Set it HERE so every session runs one
         # uniform configuration, rather than the flag flipping on
@@ -88,17 +79,6 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def ensure_nanos_as_long(spark: SparkSession) -> None:
-    """Idempotently enable nanos-as-long parquet reads on an
-    externally-owned session (the verification driver builds its own
-    SparkSession without our defaults). Sessions from ``get_spark``
-    already carry the conf; this no-ops for them instead of mutating
-    session state on every table read."""
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    if spark.conf.get(key, "false") != "true":
-        spark.conf.set(key, "true")
 
 
 # applicationId -> env value already pointed at via setCheckpointDir.

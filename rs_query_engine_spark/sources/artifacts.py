@@ -1,9 +1,18 @@
-"""Cached derived-artifact install machinery — shared by every query
-that materializes a one-time on-disk asset keyed to a source table
-(the ORC copy, the persisted LSH index generations).
+"""Cached derived-artifact lifecycle — the one place that decides when
+an on-disk asset derived from a source table is current and how it is
+installed (CSV/JSON/XML/ORC/binary copies, the LSH/IVF/PQ index
+generations, the IVM rollups, the stream checkpoints).
 
 Contract (grown through ADVICE r06/r08 and the r9 review):
 
+- **One entry point**: ``ensure_artifact(src, tag, params, parts,
+  write)`` returns the artifact's root. It is current when every
+  relative path in ``parts`` exists under the root; then it returns
+  at once and runs nothing else, so build-only work (frame
+  construction, driver-side collects, nested artifacts) belongs
+  inside ``write``. Otherwise ``write`` runs through the atomic
+  install below. ``artifact_root`` and ``install_artifact`` stay
+  public for tests of the crash and race paths.
 - **Staleness-proof keying**: the cache root digests the source
   parquet's (path, mtime_ns, size) plus a caller-supplied params
   string, so regenerating the source OR changing any
@@ -62,6 +71,27 @@ def artifact_root(src: str, tag: str, params: str = "") -> str:
         os.remove(os.path.join(root, "swept.txt"))
     except OSError:
         pass
+    return root
+
+
+def ensure_artifact(
+    src: str,
+    tag: str,
+    params: str,
+    parts: tuple[str, ...],
+    write: Callable[[str], None],
+) -> str:
+    """Return the root of the current ``tag`` artifact of ``src``,
+    building it first when any of ``parts`` (paths relative to the
+    root, e.g. ``"assign/_SUCCESS"``) is missing. ``write(tmp_dir)``
+    materializes the content; see ``artifact_root`` for ``params``."""
+    root = artifact_root(src, tag, params)
+
+    def complete(r: str) -> bool:
+        return all(os.path.exists(os.path.join(r, p)) for p in parts)
+
+    if not complete(root):
+        install_artifact(root, tag, src, write, complete)
     return root
 
 

@@ -9,6 +9,10 @@ parquet scan.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,27 +37,17 @@ BROADCAST_DIMS = ("region", "nation", "supplier")
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
-    """Normalize ``events.ts`` to a session-timezone ``timestamp``
-    regardless of how this Spark version surfaced the parquet
-    TIMESTAMP(NANOS) column.
+    """Normalize ``events.ts`` to a session-timezone ``timestamp``.
 
-    - Spark ≤3.5 with ``spark.sql.legacy.parquet.nanosAsLong``: reads
-      raw nanos as ``bigint`` — rebuild a microsecond timestamp
-      (floor-truncating, matching DuckDB's ns→us cast).
-    - Spark 4.1+: ignores the legacy conf and reads the column directly
-      as ``timestamp_ntz`` with micro-truncated values — cast to the
-      session-TZ (UTC) ``timestamp`` so downstream event-time logic and
-      the oracle compare see identical instants.
-
-    Branching on the *observed* schema keeps the loader correct across
-    engine upgrades; both paths are metadata-only column rewrites that
-    leave the scan vectorized."""
+    Spark 4 reads the parquet TIMESTAMP(NANOS) column as
+    ``timestamp_ntz`` with micro-truncated values; cast it to the
+    session-TZ (UTC) ``timestamp`` so downstream event-time logic and
+    the oracle compare see identical instants. Frames whose ``ts`` is
+    already a ``timestamp`` pass through. A metadata-only column
+    rewrite that leaves the scan vectorized."""
     from pyspark.sql import types as T
 
-    ts_type = df.schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if isinstance(ts_type, T.TimestampNTZType):
+    if isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
@@ -78,14 +72,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one corpus table lazily.
 
     ``events.ts`` is written as parquet TIMESTAMP(NANOS); see
-    ``normalize_events_ts`` for the version-adaptive handling."""
-    if name == "events":
-        from rs_query_engine_spark.session import ensure_nanos_as_long
-
-        ensure_nanos_as_long(spark)
-        df = _read_cached_schema(spark, sf_dir, name)
-        return normalize_events_ts(df)
-    return _read_cached_schema(spark, sf_dir, name)
+    ``normalize_events_ts``."""
+    df = _read_cached_schema(spark, sf_dir, name)
+    return normalize_events_ts(df) if name == "events" else df
 
 
 def _read_cached_schema(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -97,6 +86,27 @@ def _read_cached_schema(spark: SparkSession, sf_dir: str, name: str) -> DataFram
         _SCHEMA_CACHE[key] = df.schema
         return df
     return spark.read.schema(sch).parquet(path)
+
+
+def stream_source_dir(src: str) -> str:
+    """A directory a file-stream source can tail for the parquet at
+    ``src``. The file-stream source requires a *directory* (it tails
+    new files, the production drop-directory layout); the corpus ships
+    single files, so a file is exposed through a symlink directory
+    keyed by a stable digest of its absolute path (not builtin
+    ``hash()``, which is per-process randomized), so re-runs reuse one
+    shim dir instead of leaking a new /tmp dir per process. A
+    directory is returned as is."""
+    if not os.path.isfile(src):
+        return src
+    src = os.path.abspath(src)
+    digest = hashlib.md5(src.encode()).hexdigest()[:16]
+    shim = os.path.join(tempfile.gettempdir(), f"rsqes_stream_{digest}")
+    os.makedirs(shim, exist_ok=True)
+    link = os.path.join(shim, os.path.basename(src))
+    if not os.path.exists(link):
+        os.symlink(src, link)
+    return shim
 
 
 def load_corpus(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -239,8 +239,8 @@ class CsvArrowReader(CsvLinesReader):
 def ensure_python_filter_pushdown(spark) -> None:
     """Idempotently enable Python-DataSource filter pushdown on an
     externally-owned session (the verification driver builds its own
-    SparkSession without our defaults — the ensure_nanos_as_long
-    pattern). Runtime-settable SQL conf, so this is safe per query."""
+    SparkSession without our defaults). Runtime-settable SQL conf, so
+    this is safe per query."""
     key = "spark.sql.python.filterPushdown.enabled"
     if spark.conf.get(key, "false") != "true":
         spark.conf.set(key, "true")
@@ -251,26 +251,15 @@ def ensure_customer_csv(spark, sf_dir: str) -> str:
     JVM reader (``queries.source_csv_roundtrip``) and every Python
     DataSource reader, so all of them scan identical files.
 
-    Keyed through the standard mtime+size ``artifacts.artifact_root``
+    Keyed through the standard mtime+size ``artifacts.ensure_artifact``
     machinery (migrated r12 from the path-only ``_SUCCESS``
     convention: an in-place corpus regen used to serve the old copy
     stale — the bug class the r12 ``badjson`` fixture first fixed)."""
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
     from rs_query_engine_spark.sources.corpus import load_table
     from rs_query_engine_spark.sources.sinks import write_csv
 
     src = os.path.join(os.path.abspath(sf_dir), "customer.parquet")
-    root = artifact_root(src, "csvcust", "files=4")
-    path = os.path.join(root, "customer")
-
-    def complete(r: str) -> bool:
-        return os.path.exists(os.path.join(r, "customer", "_SUCCESS"))
-
-    if complete(root):
-        return path
 
     def write(tmp: str) -> None:
         write_csv(
@@ -279,8 +268,8 @@ def ensure_customer_csv(spark, sf_dir: str) -> str:
             coalesce_files=4,
         )
 
-    install_artifact(root, "csvcust", src, write, complete)
-    return path
+    root = ensure_artifact(src, "csvcust", "files=4", ("customer/_SUCCESS",), write)
+    return os.path.join(root, "customer")
 
 
 def _coerce(x: str, t: str):

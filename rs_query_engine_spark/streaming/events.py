@@ -19,9 +19,7 @@ with the partition.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,41 +30,26 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open the events parquet as a (bounded) stream — the same call
     shape works on an unbounded directory/Kafka source in production.
 
-    The file-stream source requires a *directory* (it tails new files);
-    the corpus ships a single file, so we expose it through a symlink
-    directory — which is exactly the production layout (a drop
-    directory of parquet files).
+    The file-stream source tails a directory; ``stream_source_dir``
+    exposes the corpus file through a symlink directory — which is
+    exactly the production layout (a drop directory of parquet files).
 
-    Streaming readers cannot infer schemas, and how Spark surfaces the
-    parquet TIMESTAMP(NANOS) ``ts`` column varies by version (bigint
-    nanos on ≤3.5 with the legacy conf, ``timestamp_ntz`` on 4.1+).
-    Probing the *batch* read of the same path gives the authoritative
-    schema for this engine, and ``normalize_events_ts`` applies the
-    matching conversion — guaranteeing batch/stream parity by
-    construction. The probe reads only the parquet footer (no data)."""
-    from rs_query_engine_spark.session import ensure_nanos_as_long
+    Streaming readers cannot infer schemas. Probing the *batch* read
+    of the same path gives the authoritative schema for this engine,
+    and ``normalize_events_ts`` applies the same conversion as the
+    batch loader — guaranteeing batch/stream parity by construction.
+    The probe reads only the parquet footer (no data)."""
     from rs_query_engine_spark.sources.corpus import (
         _read_cached_schema,
         normalize_events_ts,
+        stream_source_dir,
     )
 
-    ensure_nanos_as_long(spark)
-    src = f"{sf_dir}/events.parquet"
     # r18: probe through the corpus schema cache — same (sf_dir,
     # "events") key as every batch read of this path, so the footer
     # inference happens once per process, not once per stream start
     schema = _read_cached_schema(spark, sf_dir, "events").schema
-    if os.path.isfile(src):
-        # stable digest (not builtin hash(), which is per-process
-        # randomized) so re-runs reuse the same shim dir instead of
-        # leaking a new /tmp dir per process
-        digest = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:16]
-        shim = os.path.join(tempfile.gettempdir(), f"rsqes_stream_{digest}")
-        os.makedirs(shim, exist_ok=True)
-        link = os.path.join(shim, "events.parquet")
-        if not os.path.exists(link):
-            os.symlink(os.path.abspath(src), link)
-        src = shim
+    src = stream_source_dir(f"{sf_dir}/events.parquet")
     raw = spark.readStream.schema(schema).format("parquet").load(src)
     return normalize_events_ts(raw)
 
@@ -273,6 +256,9 @@ LATE_TIER_A1_DAYS = 5  # on-time feed 1: ts in (mx-5d, mx-3d], arrives 1st
 LATE_TIER_A2_DAYS = 3  # on-time feed 2: ts in (mx-3d, mx-2d], arrives 2nd
 LATE_TIER_C_DAYS = 2  # catch-up feed: ts in (mx-2d, mx], arrives 4th
 LATE_DELAY = "84 hours"  # watermark delay (3.5 days)
+# A late-feed checkpoint is whole once batch 4 is committed: the four
+# feed files plus the trailing watermark-advance batch.
+CKPT_PARTS = ("ckpt/commits/4",)
 
 
 def ensure_late_feed(spark: SparkSession, sf_dir: str) -> str:
@@ -295,42 +281,23 @@ def ensure_late_feed(spark: SparkSession, sf_dir: str) -> str:
     import shutil as _shutil
     from datetime import timedelta
 
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
     from rs_query_engine_spark.sources.corpus import normalize_events_ts
 
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    root = artifact_root(
-        src,
-        "latefeed",
-        f"a1={LATE_TIER_A1_DAYS}|a2={LATE_TIER_A2_DAYS}|c={LATE_TIER_C_DAYS}",
-    )
-    feed = os.path.join(root, "feed")
-
-    def complete(r: str) -> bool:
-        d = os.path.join(r, "feed")
-        try:
-            return len([p for p in os.listdir(d) if p.endswith(".parquet")]) == 4
-        except OSError:
-            return False
-
-    if complete(root):
-        return feed
-    ev = normalize_events_ts(spark.read.parquet(src))
-    mx = ev.agg(F.max("ts")).collect()[0][0]
-    a_lo = mx - timedelta(days=LATE_TIER_A1_DAYS)
-    a_mid = mx - timedelta(days=LATE_TIER_A2_DAYS)
-    a_hi = mx - timedelta(days=LATE_TIER_C_DAYS)
-    tiers = [
-        ("tier0", (F.col("ts") > a_lo) & (F.col("ts") <= a_mid)),
-        ("tier1", (F.col("ts") > a_mid) & (F.col("ts") <= a_hi)),
-        ("tier2", F.col("ts") <= a_lo),
-        ("tier3", F.col("ts") > a_hi),
-    ]
 
     def write(tmp: str) -> None:
+        ev = normalize_events_ts(spark.read.parquet(src))
+        mx = ev.agg(F.max("ts")).collect()[0][0]
+        a_lo = mx - timedelta(days=LATE_TIER_A1_DAYS)
+        a_mid = mx - timedelta(days=LATE_TIER_A2_DAYS)
+        a_hi = mx - timedelta(days=LATE_TIER_C_DAYS)
+        tiers = [
+            ("tier0", (F.col("ts") > a_lo) & (F.col("ts") <= a_mid)),
+            ("tier1", (F.col("ts") > a_mid) & (F.col("ts") <= a_hi)),
+            ("tier2", F.col("ts") <= a_lo),
+            ("tier3", F.col("ts") > a_hi),
+        ]
         fd = os.path.join(tmp, "feed")
         os.makedirs(fd)
         for i, (name, pred) in enumerate(tiers):
@@ -346,8 +313,14 @@ def ensure_late_feed(spark: SparkSession, sf_dir: str) -> str:
             t = 1_700_000_000 + i * 10
             os.utime(dst, (t, t))
 
-    install_artifact(root, "latefeed", src, write, complete)
-    return feed
+    root = ensure_artifact(
+        src,
+        "latefeed",
+        f"a1={LATE_TIER_A1_DAYS}|a2={LATE_TIER_A2_DAYS}|c={LATE_TIER_C_DAYS}",
+        tuple(f"feed/tier{i}.parquet" for i in range(4)),
+        write,
+    )
+    return os.path.join(root, "feed")
 
 
 def ensure_hourly_agg_checkpoint(spark: SparkSession, sf_dir: str) -> str:
@@ -358,20 +331,9 @@ def ensure_hourly_agg_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     holds the complement) — built once per corpus generation via the
     standard atomic install; completeness = the batch-4 commit
     exists."""
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
 
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    root = artifact_root(src, "winaggckpt", f"delay={LATE_DELAY}|win=1h")
-    ck = os.path.join(root, "ckpt")
-
-    def complete(r: str) -> bool:
-        return os.path.exists(os.path.join(r, "ckpt", "commits", "4"))
-
-    if complete(root):
-        return ck
 
     def write(tmp: str) -> None:
         feed = ensure_late_feed(spark, sf_dir)
@@ -407,8 +369,10 @@ def ensure_hourly_agg_checkpoint(spark: SparkSession, sf_dir: str) -> str:
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    install_artifact(root, "winaggckpt", src, write, complete)
-    return ck
+    root = ensure_artifact(
+        src, "winaggckpt", f"delay={LATE_DELAY}|win=1h", CKPT_PARTS, write
+    )
+    return os.path.join(root, "ckpt")
 
 
 def ensure_state_reader_ready(spark: SparkSession) -> None:
@@ -493,20 +457,9 @@ def ensure_join_checkpoint(spark: SparkSession, sf_dir: str) -> str:
 
     Built once per corpus generation via the standard mtime+params
     atomic install; completeness = the batch-4 commit exists."""
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
 
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    root = artifact_root(src, "joinckpt", f"delay={LATE_DELAY}|bound=24h")
-    ck = os.path.join(root, "ckpt")
-
-    def complete(r: str) -> bool:
-        return os.path.exists(os.path.join(r, "ckpt", "commits", "4"))
-
-    if complete(root):
-        return ck
 
     def write(tmp: str) -> None:
         feed = ensure_late_feed(spark, sf_dir)
@@ -533,5 +486,7 @@ def ensure_join_checkpoint(spark: SparkSession, sf_dir: str) -> str:
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    install_artifact(root, "joinckpt", src, write, complete)
-    return ck
+    root = ensure_artifact(
+        src, "joinckpt", f"delay={LATE_DELAY}|bound=24h", CKPT_PARTS, write
+    )
+    return os.path.join(root, "ckpt")

@@ -204,21 +204,10 @@ def ensure_ttl_flush_checkpoint(spark, sf_dir: str, ttl_ms: int) -> str:
     is what makes reading it back oracle-checkable at all."""
     import os
 
-    from rs_query_engine_spark.sources.artifacts import (
-        artifact_root,
-        install_artifact,
-    )
-    from rs_query_engine_spark.streaming.events import LATE_DELAY
+    from rs_query_engine_spark.sources.artifacts import ensure_artifact
+    from rs_query_engine_spark.streaming.events import CKPT_PARTS, LATE_DELAY
 
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    root = artifact_root(src, "ttlckpt", f"ttl={ttl_ms}|delay={LATE_DELAY}")
-    ck = os.path.join(root, "ckpt")
-
-    def complete(r: str) -> bool:
-        return os.path.exists(os.path.join(r, "ckpt", "commits", "4"))
-
-    if complete(root):
-        return ck
 
     def write(tmp: str) -> None:
         out = user_day_ttl_stream(spark, sf_dir, ttl_ms)
@@ -238,5 +227,7 @@ def ensure_ttl_flush_checkpoint(spark, sf_dir: str, ttl_ms: int) -> str:
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    install_artifact(root, "ttlckpt", src, write, complete)
-    return ck
+    root = ensure_artifact(
+        src, "ttlckpt", f"ttl={ttl_ms}|delay={LATE_DELAY}", CKPT_PARTS, write
+    )
+    return os.path.join(root, "ckpt")

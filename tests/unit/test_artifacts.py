@@ -152,6 +152,62 @@ def test_revived_generation_clears_tombstone(tmp_path):
     assert _complete(root_a)
 
 
+def test_ensure_artifact_builds_once_and_rekeys_on_source_change(
+    tmp_path, monkeypatch
+):
+    """``ensure_artifact`` is the one lifecycle entry point: a second
+    call with the same inputs serves the installed root without
+    running ``write``; a source change re-keys the artifact and marks
+    the old generation for the deferred sweep under the same tag."""
+    cache = tmp_path / "cache"
+    cache.mkdir()
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(cache))
+    src = tmp_path / "src.parquet"
+    src.write_text("generation-1")
+    calls = []
+
+    def write(tmp: str) -> None:
+        calls.append(tmp)
+        _write_ok(tmp)
+
+    def ensure() -> str:
+        return artifacts.ensure_artifact(
+            str(src), "enstag", "p=1", ("payload/_DONE",), write
+        )
+
+    r1 = ensure()
+    assert len(calls) == 1 and _complete(r1)
+    assert ensure() == r1
+    assert len(calls) == 1, "a current artifact must not be rebuilt"
+
+    src.write_text("generation-two!")
+    r2 = ensure()
+    assert r2 != r1 and len(calls) == 2 and _complete(r2)
+    assert os.path.basename(r2).startswith("rsqes_enstag_")
+    assert os.path.exists(os.path.join(r1, "swept.txt"))
+    assert not os.path.exists(os.path.join(r2, "swept.txt"))
+
+
+def test_only_artifacts_module_installs_artifacts():
+    """Every builder goes through ``ensure_artifact``: no other package
+    module computes a cache root or installs one by hand (a builder
+    passing a different tag to the two calls would hide its stale
+    generations from the sweep)."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(artifacts.__file__).resolve().parents[1]
+    pat = re.compile(r"\b(install_artifact|artifact_root)\(")
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "artifacts.py" or path.parent.name != "sources"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pat.search(line)
+    ]
+    assert offenders == []
+
+
 def test_customer_csv_artifact_rekeys_on_corpus_regen(spark, tmp_path):
     """The r12 migration pin: the shared customer-CSV copy (ONE
     artifact for the JVM reader and the whole Python DataSource

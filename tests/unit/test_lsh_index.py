@@ -67,6 +67,10 @@ def test_index_excludes_batch_slice_and_caps_buckets(spark):
     assert uncovered == 0
 
 
+def _whole(root: str) -> bool:
+    return all(os.path.exists(os.path.join(root, p)) for p in li.INDEX_PARTS)
+
+
 def test_index_digest_tracks_source_identity(spark, tmp_path):
     """A different source parquet (different mtime/size) must key a
     different artifact root — the path-only-key staleness bug the ORC
@@ -81,7 +85,7 @@ def test_index_digest_tracks_source_identity(spark, tmp_path):
     assert root_orig != root_alt
     # both stay installed: the stale sweep only removes other
     # GENERATIONS of the same source, never other sources' caches
-    assert li._index_complete(root_orig) and li._index_complete(root_alt)
+    assert _whole(root_orig) and _whole(root_alt)
     # regenerating the alt source (new mtime) must re-key and sweep
     # the old generation
     shutil.rmtree(alt / "documents.parquet")
@@ -95,7 +99,7 @@ def test_index_digest_tracks_source_identity(spark, tmp_path):
     # rmtree races concurrent readers); full mark→reap lifecycle is
     # pinned in tests/unit/test_artifacts.py
     assert os.path.exists(os.path.join(root_alt, "swept.txt"))
-    assert li._index_complete(root_orig)  # unrelated source untouched
+    assert _whole(root_orig)  # unrelated source untouched
     for r in (root_alt, root_alt2):
         shutil.rmtree(r, ignore_errors=True)
 
