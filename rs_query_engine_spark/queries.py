@@ -3684,8 +3684,8 @@ def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     check: files a downstream trainer would actually read, not a
     memory-sink harness."""
     import os
-    import tempfile
 
+    from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.streaming.events import (
         read_events_stream,
         run_stream_to_parquet,
@@ -3693,15 +3693,11 @@ def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_events_stream(spark, sf_dir)
     agg = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
-    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), f"rsqes_streamsink_{digest}")
-    out, ckpt = os.path.join(root, "out"), os.path.join(root, "ckpt")
     # fresh run per invocation: the checkpoint records consumed offsets,
     # so a reused checkpoint would make the next run a no-op with stale
     # files alongside
-    import shutil
-
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, "streamsink", sf_dir, fresh=True)
+    out, ckpt = os.path.join(root, "out"), os.path.join(root, "ckpt")
     # state_partitions=2 (r19, guide §2.2/§5): 7.5k agg keys — per-batch
     # state-store commit cost dominates at 8 partitions, and update-mode
     # foreachBatch writes one file per shuffle partition per batch (2

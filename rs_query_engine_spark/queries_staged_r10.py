@@ -714,16 +714,15 @@ def stream_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous retrieval trustworthy. At 100 TB this is the online
     serving path: the index is cached executor-side between
     micro-batches, per-batch cost is O(batch × probed lists)."""
-    import hashlib as _hashlib
     import os
-    import shutil
-    import tempfile
 
     from rs_query_engine_spark.operators.ivf_index import (
         ensure_ivf_index,
         probe_ivf_index,
     )
+    from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.sources.corpus import stream_source_dir
+    from rs_query_engine_spark.streaming.events import run_stream_to_parquet
 
     root = ensure_ivf_index(spark, sf_dir)
     src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
@@ -737,35 +736,17 @@ def stream_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
     )
-    # (src, pid)-keyed run dir + fresh rmtree: same concurrency and
-    # re-invocation contract as stream_index_probe (ADVICE r09)
-    digest = _hashlib.md5(src.encode()).hexdigest()[:16]
-    run_root = os.path.join(
-        tempfile.gettempdir(), f"rsqes_streamivf_{digest}_{os.getpid()}"
-    )
+    # fresh run dir per invocation: same re-invocation contract as
+    # stream_index_probe
+    run_root = scratch_dir(spark, "streamivf", src, fresh=True)
     out, ckpt = os.path.join(run_root, "out"), os.path.join(run_root, "ckpt")
-    shutil.rmtree(run_root, ignore_errors=True)
-
-    def probe(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            probe_ivf_index(spark, root, batch_df, 10, nprobe=2)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
-
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .start()
+    run_stream_to_parquet(
+        stream,
+        out,
+        ckpt,
+        transform_fn=lambda b: probe_ivf_index(spark, root, b, 10, nprobe=2),
+        state_partitions=None,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(out).select("query_id", "vec_id", "cos", "rnk")
 
 
@@ -1776,12 +1757,10 @@ def stream_ivm_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpoint makes crash recovery replay only unconsumed files,
     and batch-id partitioning makes retries idempotent
     (overwrite-by-partition)."""
-    import hashlib as _hashlib
     import os
-    import shutil
-    import tempfile
 
     from rs_query_engine_spark.operators.ivm import day_partials
+    from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.streaming.events import (
         ensure_late_feed,
         run_stream_to_parquet,
@@ -1794,12 +1773,8 @@ def stream_ivm_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
-    digest = _hashlib.md5(feed.encode()).hexdigest()[:16]
-    run_root = os.path.join(
-        tempfile.gettempdir(), f"rsqes_streamivm_{digest}_{os.getpid()}"
-    )
+    run_root = scratch_dir(spark, "streamivm", feed, fresh=True)
     out, ckpt = os.path.join(run_root, "out"), os.path.join(run_root, "ckpt")
-    shutil.rmtree(run_root, ignore_errors=True)
     # the shared idempotent sink (batch-id-partitioned dynamic
     # overwrite + checkpoint) with the partials reduce as its
     # per-batch transform — one implementation of the exactly-once

@@ -59,8 +59,6 @@ Spark code and the DuckDB oracle.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1570,15 +1568,15 @@ def source_python_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     shortest-repr str()) AND its commit protocol produced exactly
     the committed row set, nothing duplicated or dropped.
 
-    The output directory is pid-keyed (same single-runner-per-process
-    contract as stream_index_probe) and rewritten per invocation —
-    writing IS the surface under test, so caching it would defeat
+    The output directory is a per-session ``scratch_dir`` and
+    rewritten per invocation — writing IS the surface under test, so
+    caching it would defeat
     the query. At scale the identical protocol carries: tasks stage,
     the driver commits, speculative/failed attempts abort — the
     file-committer model, in Python."""
     import os
-    import tempfile
 
+    from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.sources.pydatasource import (
         CsvLinesDataSource,
     )
@@ -1590,10 +1588,7 @@ def source_python_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     src = _t(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    out = os.path.join(
-        tempfile.gettempdir(), f"rsqes_pywr_{digest}_{os.getpid()}"
-    )
+    out = os.path.join(scratch_dir(spark, "pywr", sf_dir, fresh=False), "out")
     src.write.format("rsqes_pycsv").option("path", out).mode(
         "overwrite"
     ).save()

@@ -1147,10 +1147,9 @@ def source_quarantine_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Together with ``source_corrupt_records_audit`` (the read-side
     gate) this closes the ingest-edge contract: good ∪ dlq = input,
     disjointly, and the dlq is recoverable, not a write-off."""
-    import hashlib
     import os
-    import tempfile
 
+    from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.sources.sinks import quarantine_json
 
     raw = _ensure_corrupt_orders_json(spark, sf_dir)
@@ -1158,15 +1157,11 @@ def source_quarantine_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
         "o_totalprice double, o_orderdate string, o_orderpriority string"
     )
-    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    # the sink base is keyed by corpus digest AND this session's
-    # applicationId: the writer overwrites on every invocation, so two
-    # concurrent sessions on the same corpus must not share a path one
-    # rewrites while the other reads back (review r12 finding)
-    app_id = spark.sparkContext.applicationId
-    base = os.path.join(
-        tempfile.gettempdir(), f"rsqes_quarantine_{digest}_{app_id}"
-    )
+    # a per-session sink base: the writer overwrites on every
+    # invocation, so two concurrent sessions on the same corpus must
+    # not share a path one rewrites while the other reads back
+    # (review r12 finding)
+    base = scratch_dir(spark, "quarantine", sf_dir, fresh=False)
     good_path = os.path.join(base, "good")
     dlq_path = os.path.join(base, "dlq")
     quarantine_json(spark, raw, schema, good_path, dlq_path)

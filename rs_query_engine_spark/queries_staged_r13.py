@@ -283,18 +283,16 @@ def stream_quarantine_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest-edge contract for the UNBOUNDED case: good ∪ dlq = input
     across micro-batch replay and restart, disjointly, repairable.
 
-    Sink/checkpoint paths are keyed by fixture digest AND this
-    session's applicationId (the concurrent-session rule the batch
-    roundtrip follows); each invocation within a session reuses the
-    checkpoint, so re-runs are themselves restarts — more of the
-    semantics under test."""
-    import hashlib
+    Sink/checkpoint paths live in a per-session ``scratch_dir`` (the
+    concurrent-session rule the batch roundtrip follows); each
+    invocation within a session reuses the checkpoint, so re-runs are
+    themselves restarts — more of the semantics under test."""
     import os
-    import tempfile
 
     from rs_query_engine_spark.queries_staged_r12 import (
         _ensure_corrupt_orders_json,
     )
+    from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.sources.sinks import quarantine_json_stream
 
     raw = _ensure_corrupt_orders_json(spark, sf_dir)
@@ -302,11 +300,7 @@ def stream_quarantine_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
         "o_totalprice double, o_orderdate string, o_orderpriority string"
     )
-    digest = hashlib.md5(raw.encode()).hexdigest()[:16]
-    app_id = spark.sparkContext.applicationId
-    base = os.path.join(
-        tempfile.gettempdir(), f"rsqes_squarantine_{digest}_{app_id}"
-    )
+    base = scratch_dir(spark, "squarantine", raw, fresh=False)
     good_path = os.path.join(base, "good")
     dlq_path = os.path.join(base, "dlq")
     ck = os.path.join(base, "ck")
@@ -1094,33 +1088,31 @@ def maintenance_range_cluster_layout(
     predicate prunes at FILE level from footer min/max stats alone,
     where the same data written round-robin forces every file open.
     Each invocation rewrites the events table range-clustered
-    (writing is the surface; output applicationId-keyed), reads it
-    back, and audits the layout DISTRIBUTEDLY — per-file min/max/count
-    via ``input_file_name`` grouping, then two layout claims reduced
-    over that (file-count-sized, 8-row) stats frame: every adjacent
-    pair of ranges is disjoint (``files_disjoint`` — the lag compares
-    run on the tiny stats frame, never the corpus), and a 1-day slice
-    anchored at max(ts)-5d intersects strictly fewer files than exist
-    (``slice_prunes`` — the skipping the layout exists to buy). Row
-    count and exact ts bounds prove the rewrite lost nothing; a
-    layout regression flips a boolean and fails the hash gate (file
-    boundaries themselves are environment-shaped and not
+    (writing is the surface; output in a per-session ``scratch_dir``),
+    reads it back, and audits the layout DISTRIBUTEDLY — per-file
+    min/max/count via ``input_file_name`` grouping, then two layout
+    claims reduced over that (file-count-sized, 8-row) stats frame:
+    every adjacent pair of ranges is disjoint (``files_disjoint`` — the
+    lag compares run on the tiny stats frame, never the corpus), and a
+    1-day slice anchored at max(ts)-5d intersects strictly fewer files
+    than exist (``slice_prunes`` — the skipping the layout exists to
+    buy). Row count and exact ts bounds prove the rewrite lost
+    nothing; a layout regression flips a boolean and fails the hash
+    gate (file boundaries themselves are environment-shaped and not
     SQL-expressible — the compact_files precedent).
 
     ``repartitionByRange`` samples with a fixed seed, so the
     boundaries — and both booleans — are deterministic for a given
     corpus."""
-    import hashlib
     import os
-    import tempfile
 
     from pyspark.sql import Window
 
+    from rs_query_engine_spark.sources.artifacts import scratch_dir
+
     ev = _t(spark, sf_dir, "events")
-    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    app_id = spark.sparkContext.applicationId
     dst = os.path.join(
-        tempfile.gettempdir(), f"rsqes_rangeclust_{digest}_{app_id}"
+        scratch_dir(spark, "rangeclust", sf_dir, fresh=False), "out"
     )
     (
         ev.repartitionByRange(_RANGE_CLUSTER_FILES, "ts")
@@ -1224,18 +1216,17 @@ def maintenance_compact_small_files(
     hash gate, since file counts themselves are environment-dependent
     and not SQL-expressible). Every invocation re-runs the compaction
     (writing is the surface — the quarantine-writer precedent); the
-    output path is applicationId-keyed per the concurrent-session
-    rule.
+    output path is a per-session ``scratch_dir`` per the
+    concurrent-session rule.
 
     At 100 TB this is THE table-maintenance operator: every file
     costs a task + listing metadata, and the rewrite here is one
     bounded round-robin shuffle sized from file-index metadata — run
     per partition-directory in production, as the sink's docstring
     prescribes."""
-    import hashlib
     import os
-    import tempfile
 
+    from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.sources.sinks import compact_files
 
     frag = _ensure_fragmented_lineitem(spark, sf_dir)
@@ -1244,11 +1235,7 @@ def maintenance_compact_small_files(
         for f in os.listdir(frag)
         if not f.startswith(("_", "."))
     )
-    digest = hashlib.md5(frag.encode()).hexdigest()[:16]
-    app_id = spark.sparkContext.applicationId
-    dst = os.path.join(
-        tempfile.gettempdir(), f"rsqes_compactli_{digest}_{app_id}"
-    )
+    dst = os.path.join(scratch_dir(spark, "compactli", frag, fresh=False), "out")
     n_after = compact_files(
         spark, frag, dst, target_file_bytes=_COMPACT_TARGET_BYTES
     )

@@ -773,49 +773,20 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free on that side); nothing collects to the driver. The
     versioned-dir swap is what Delta/Iceberg MERGE does with
     manifests — spelled out here on plain parquet."""
-    import hashlib
     import os
-    import tempfile
 
-    from rs_query_engine_spark.sources.artifacts import (
-        _sweep_stale_generations,
-    )
+    from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.sources.corpus import normalize_events_ts
-    from rs_query_engine_spark.streaming.events import ensure_late_feed
+    from rs_query_engine_spark.streaming.events import drain, ensure_late_feed
 
     feed = ensure_late_feed(spark, sf_dir)
     schema = spark.read.parquet(feed).schema
-    digest = hashlib.md5(feed.encode()).hexdigest()[:16]
-    app_id = spark.sparkContext.applicationId
-    # The dir is keyed by applicationId (the restart leg needs a fresh
-    # checkpoint per session), so prior sessions' dirs go stale by
-    # construction. Tag them with the shared source.txt marker and let
-    # the two-phase generation sweep reap them after the grace period
-    # (ADVICE r13: nothing swept these before).
-    base = os.path.join(
-        tempfile.gettempdir(), f"rsqes_fbupsert_{digest}_{app_id}"
-    )
+    # a per-session dir: the restart leg needs a fresh checkpoint per
+    # session, and earlier sessions' dirs are swept (ADVICE r13)
+    base = scratch_dir(spark, "fbupsert", feed, fresh=False)
     ck = os.path.join(base, "ck")
     vdir = os.path.join(base, "versions")
     os.makedirs(vdir, exist_ok=True)
-    with open(os.path.join(base, "source.txt"), "w") as f:
-        f.write(feed)
-    # Adopt marker-less dirs left by sessions that predate the sweep:
-    # the digest in the dir name already pins the feed, so stamping
-    # source.txt is safe and lets the two-phase reap see them.
-    prefix = f"rsqes_fbupsert_{digest}_"
-    for d in os.listdir(tempfile.gettempdir()):
-        if d.startswith(prefix) and d != os.path.basename(base):
-            marker = os.path.join(tempfile.gettempdir(), d, "source.txt")
-            if not os.path.exists(marker):
-                try:
-                    with open(marker, "w") as f:
-                        f.write(feed)
-                except OSError:
-                    pass
-    _sweep_stale_generations(
-        f"fbupsert_{digest}", feed, keep=os.path.basename(base)
-    )
 
     from pyspark.sql import Window
 
@@ -856,16 +827,13 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            spark,
+            stream.writeStream.foreachBatch(merge_batch).option(
+                "checkpointLocation", ck
+            ),
+            available_now=True,
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
 
     run_once()
     run_once()  # restart, same checkpoint: no new batches, no writes

@@ -1228,33 +1228,19 @@ def source_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: writes are executor-parallel per partition; the
     driver does rename arithmetic only (the JVM file sink's manifest
     contract, spelled out in Python)."""
-    import hashlib
     import os
-    import tempfile
 
-    from rs_query_engine_spark.sources.artifacts import (
-        _sweep_stale_generations,
-    )
+    from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.sources.pydatasource import (
         CsvStreamSinkDataSource,
     )
-    from rs_query_engine_spark.streaming.events import ensure_late_feed
+    from rs_query_engine_spark.streaming.events import drain, ensure_late_feed
 
     feed = ensure_late_feed(spark, sf_dir)
     schema = spark.read.parquet(feed).schema
-    digest = hashlib.md5(feed.encode()).hexdigest()[:16]
-    app_id = spark.sparkContext.applicationId
-    base = os.path.join(
-        tempfile.gettempdir(), f"rsqes_pysink_{digest}_{app_id}"
-    )
+    base = scratch_dir(spark, "pysink", feed, fresh=False)
     target = os.path.join(base, "out")
     ck = os.path.join(base, "ck")
-    os.makedirs(base, exist_ok=True)
-    with open(os.path.join(base, "source.txt"), "w") as f:
-        f.write(feed)
-    _sweep_stale_generations(
-        f"pysink_{digest}", feed, keep=os.path.basename(base)
-    )
     try:
         spark.dataSource.register(CsvStreamSinkDataSource)
     except Exception:
@@ -1266,17 +1252,13 @@ def source_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(feed)
         .select("event_id", "user_id", "event_type")
     )
-    q = (
+    drain(
+        spark,
         stream.writeStream.format("rsqes_pycsv_stream_sink")
         .option("path", target)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ck),
+        available_now=True,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
 
     back = spark.read.schema(
         "event_id LONG, user_id LONG, event_type STRING"

@@ -891,16 +891,15 @@ def stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the object store per micro-batch (or is cached executor-side
     between batches), and the checkpoint makes crash recovery replay
     only unconsumed files."""
-    import hashlib as _hashlib
     import os
-    import shutil
-    import tempfile
 
     from rs_query_engine_spark.operators.lsh_index import (
         ensure_lsh_index,
         probe_index,
     )
+    from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.sources.corpus import stream_source_dir
+    from rs_query_engine_spark.streaming.events import run_stream_to_parquet
 
     root = ensure_lsh_index(spark, sf_dir)
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
@@ -912,43 +911,20 @@ def stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(stream_source_dir(src))
         .filter(F.col("doc_id") % BATCH_MOD == BATCH_REM)
     )
-    # run_root keys on (src, pid): the pid component keeps two
-    # concurrent invocations in different PROCESSES (pytest-xdist
-    # running the value- and type-family parity tests in parallel)
-    # from racing on one checkpoint/output dir (ADVICE r09); within a
-    # process, re-invocations serialize on the blocking
-    # processAllAvailable below, so reusing the pid dir is safe — and
-    # the rmtree gives each invocation a fresh run (a reused
-    # checkpoint would make the next run a no-op with stale files
-    # alongside, the stream_parquet_sink pattern). Output VALUES are
-    # dir-independent, so the batch-oracle hash identity is unaffected.
-    digest = _hashlib.md5(src.encode()).hexdigest()[:16]
-    run_root = os.path.join(
-        tempfile.gettempdir(), f"rsqes_streamprobe_{digest}_{os.getpid()}"
-    )
+    # A fresh per-session run dir per invocation: a reused checkpoint
+    # would make the next run a no-op with stale files alongside (the
+    # stream_parquet_sink pattern). Output VALUES are dir-independent,
+    # so the batch-oracle hash identity is unaffected. No stateful
+    # operator, so the session's shuffle partitions stay in force.
+    run_root = scratch_dir(spark, "streamprobe", src, fresh=True)
     out, ckpt = os.path.join(run_root, "out"), os.path.join(run_root, "ckpt")
-    shutil.rmtree(run_root, ignore_errors=True)
-
-    def screen(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            probe_index(spark, root, batch_df, checkpoint=False)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
-
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(screen)
-        .option("checkpointLocation", ckpt)
-        .start()
+    run_stream_to_parquet(
+        stream,
+        out,
+        ckpt,
+        transform_fn=lambda b: probe_index(spark, root, b, checkpoint=False),
+        state_partitions=None,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(out).select("doc_id", "n_matches", "admitted")
 
 

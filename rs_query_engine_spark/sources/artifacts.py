@@ -33,6 +33,19 @@ Contract (grown through ADVICE r06/r08 and the r9 review):
   older than ``SWEEP_GRACE_SEC`` — long enough for any in-flight run
   over the old generation to finish. Other sources' caches — e.g. the
   same table at a different scale factor — are never touched.
+
+Per-session scratch directories (``scratch_dir``): a query whose run
+IS a write — a sink round trip, a stream checkpoint, a rewritten
+layout — cannot share a cached artifact, so it writes under
+``rsqes_<tag>_<md5(abspath(src))[:16]>_<applicationId>``. Keying by
+the application id keeps two concurrent sessions on one corpus off
+each other's checkpoint; within a session the root is reused (a
+re-run is a restart against the same checkpoint) unless the caller
+asks for a ``fresh`` one. Each call stamps ``source.txt`` and runs the
+same deferred sweep, so the directories earlier sessions left for the
+same tag and source are marked and later reaped — one live directory
+per (tag, source) survives. Outputs go in named subdirectories: Spark
+would read ``source.txt`` as a data file of the root.
 """
 
 from __future__ import annotations
@@ -92,6 +105,23 @@ def ensure_artifact(
 
     if not complete(root):
         install_artifact(root, tag, src, write, complete)
+    return root
+
+
+def scratch_dir(spark, tag: str, src: str, fresh: bool) -> str:
+    """This session's scratch root for ``tag`` over ``src`` (see the
+    module docstring). ``fresh=True`` empties it first, for a query
+    whose every run must start from a new checkpoint."""
+    src = os.path.abspath(src)
+    digest = hashlib.md5(src.encode()).hexdigest()[:16]
+    app_id = spark.sparkContext.applicationId
+    root = os.path.join(tempfile.gettempdir(), f"rsqes_{tag}_{digest}_{app_id}")
+    if fresh:
+        shutil.rmtree(root, ignore_errors=True)
+    os.makedirs(root, exist_ok=True)
+    with open(os.path.join(root, "source.txt"), "w") as f:
+        f.write(src)
+    _sweep_stale_generations(tag, src, keep=os.path.basename(root))
     return root
 
 

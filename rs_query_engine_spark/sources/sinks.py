@@ -235,6 +235,20 @@ def quarantine_json(
     good.coalesce(4).write.mode("overwrite").parquet(good_path)
 
 
+def write_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
+    """The exactly-once ``foreachBatch`` write: ``df`` lands in its own
+    ``_batch_id=N`` partition of the parquet table at ``path`` under
+    dynamic partition overwrite, so a batch replayed after a failure
+    rewrites its partition instead of appending duplicates."""
+    (
+        df.withColumn("_batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_batch_id")
+        .parquet(path)
+    )
+
+
 def quarantine_json_stream(
     raw_lines: DataFrame,
     schema_ddl: str,
@@ -260,6 +274,8 @@ def quarantine_json_stream(
     the same closed-books contract as the batch writer, now under
     micro-batch replay. Runs the stream to completion
     (availableNow-style drivers call ``processAllAvailable``)."""
+    from rs_query_engine_spark.streaming.events import drain
+
     # collision-checked ONCE, before the stream starts — a bad caller
     # DDL must fail fast here, not surface per-batch wrapped in a
     # StreamingQueryException
@@ -290,28 +306,12 @@ def quarantine_json_stream(
         # DLQ first, good last (same torn-run ordering as the batch
         # sibling); batch-id partition overwrite makes the retry that
         # follows a torn run rewrite both sides of its own partition
-        (
-            bad.select("value")
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(dlq_path)
-        )
-        (
-            good.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(good_path)
-        )
+        write_batch_partition(bad.select("value"), batch_id, dlq_path)
+        write_batch_partition(good, batch_id, good_path)
 
-    q = (
-        raw_lines.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    drain(
+        raw_lines.sparkSession,
+        raw_lines.writeStream.foreachBatch(route).option(
+            "checkpointLocation", checkpoint_dir
+        ),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()

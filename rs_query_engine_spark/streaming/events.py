@@ -93,36 +93,36 @@ def sessionize_stream(events: DataFrame, gap: str = "5 minutes", watermark: str 
     )
 
 
-def run_stream_to_memory(
-    stream_df: DataFrame,
-    query_name: str,
-    output_mode: str = "complete",
-    state_partitions: int = 8,
+def drain(
+    spark: SparkSession,
+    writer,
+    state_partitions: int | None = None,
     available_now: bool = False,
-) -> DataFrame:
-    """Drive a (bounded) streaming query to completion into an
-    in-memory sink and return the result table — the test harness for
-    batch/stream parity.
+) -> None:
+    """Start the ``DataStreamWriter`` ``writer``, wait until its bounded
+    input is consumed, and stop the query — the one start/wait/stop
+    sequence every stream in the package runs through, so none can
+    outlive its caller or leave session conf behind, even when a
+    micro-batch fails.
 
     ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` for
     the stream's lifetime: a streaming query pins its state-store
     partition count at first start, and every partition costs a state
-    store instance per stateful operator — size it to key cardinality
-    (150 users here), not to the batch shuffle default.
+    store instance per stateful operator — size it to key cardinality,
+    not to the batch shuffle default. ``None`` leaves the session
+    value in force.
 
-    ``available_now`` switches the drain from ``processAllAvailable``
+    ``available_now`` switches the wait from ``processAllAvailable``
     to ``trigger(availableNow=True)`` + ``awaitTermination`` — REQUIRED
     for unbounded sources (rate / rate-micro-batch), where
     processAllAvailable would chase ever-newer offsets forever
     (measured); availableNow snapshots the available offset at start
     and terminates."""
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    prev = None
+    if state_partitions is not None:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        writer = stream_df.writeStream.outputMode(output_mode).format(
-            "memory"
-        ).queryName(query_name)
         if available_now:
             writer = writer.trigger(availableNow=True)
         q = writer.start()
@@ -134,7 +134,26 @@ def run_stream_to_memory(
         finally:
             q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if prev is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def run_stream_to_memory(
+    stream_df: DataFrame,
+    query_name: str,
+    output_mode: str = "complete",
+    state_partitions: int = 8,
+    available_now: bool = False,
+) -> DataFrame:
+    """Drive a (bounded) streaming query to completion into an
+    in-memory sink and return the result table — the test harness for
+    batch/stream parity. ``state_partitions`` (150 users here) and
+    ``available_now`` are :func:`drain`'s."""
+    spark = stream_df.sparkSession
+    writer = stream_df.writeStream.outputMode(output_mode).format(
+        "memory"
+    ).queryName(query_name)
+    drain(spark, writer, state_partitions, available_now)
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
@@ -172,7 +191,7 @@ def run_stream_to_parquet(
     path: str,
     checkpoint_dir: str,
     output_mode: str = "append",
-    state_partitions: int = 8,
+    state_partitions: int | None = 8,
     transform_fn=None,
 ) -> None:
     """Drive a (bounded) stream into parquet via ``foreachBatch`` —
@@ -189,35 +208,21 @@ def run_stream_to_parquet(
     ``transform_fn`` (optional, DataFrame -> DataFrame) runs as batch
     code on each micro-batch before the write — per-batch maintenance
     (e.g. the IVM partials reduce) composes with the same idempotent
-    sink instead of duplicating it."""
-    from pyspark.sql import functions as F
+    sink instead of duplicating it. ``state_partitions`` is
+    :func:`drain`'s."""
+    from rs_query_engine_spark.sources.sinks import write_batch_partition
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         out_df = transform_fn(batch_df) if transform_fn is not None else batch_df
-        (
-            out_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(path)
-        )
+        write_batch_partition(out_df, batch_id, path)
 
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        stream_df.sparkSession,
+        stream_df.writeStream.outputMode(output_mode)
+        .foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir),
+        state_partitions,
+    )
 
 
 def dedup_stream(
@@ -353,21 +358,13 @@ def ensure_hourly_agg_checkpoint(spark: SparkSession, sf_dir: str) -> str:
                 "n_events",
             )
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("noop")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        drain(
+            spark,
+            agg.writeStream.outputMode("append")
+            .format("noop")
+            .option("checkpointLocation", os.path.join(tmp, "ckpt")),
+            state_partitions=8,
+        )
 
     root = ensure_artifact(
         src, "winaggckpt", f"delay={LATE_DELAY}|win=1h", CKPT_PARTS, write
@@ -388,15 +385,7 @@ def ensure_state_reader_ready(spark: SparkSession) -> None:
     if getattr(spark, "_rsqes_state_reader_ready", False):
         return
     df = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-    q = (
-        df.writeStream.format("noop")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(spark, df.writeStream.format("noop"), available_now=True)
     spark._rsqes_state_reader_ready = True
 
 
@@ -470,21 +459,13 @@ def ensure_join_checkpoint(spark: SparkSession, sf_dir: str) -> str:
             .parquet(feed)
         )
         joined = view_purchase_late_join(stream)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("noop")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        drain(
+            spark,
+            joined.writeStream.outputMode("append")
+            .format("noop")
+            .option("checkpointLocation", os.path.join(tmp, "ckpt")),
+            state_partitions=8,
+        )
 
     root = ensure_artifact(
         src, "joinckpt", f"delay={LATE_DELAY}|bound=24h", CKPT_PARTS, write

@@ -205,27 +205,23 @@ def ensure_ttl_flush_checkpoint(spark, sf_dir: str, ttl_ms: int) -> str:
     import os
 
     from rs_query_engine_spark.sources.artifacts import ensure_artifact
-    from rs_query_engine_spark.streaming.events import CKPT_PARTS, LATE_DELAY
+    from rs_query_engine_spark.streaming.events import (
+        CKPT_PARTS,
+        LATE_DELAY,
+        drain,
+    )
 
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
 
     def write(tmp: str) -> None:
         out = user_day_ttl_stream(spark, sf_dir, ttl_ms)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .format("noop")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        drain(
+            spark,
+            out.writeStream.outputMode("update")
+            .format("noop")
+            .option("checkpointLocation", os.path.join(tmp, "ckpt")),
+            state_partitions=8,
+        )
 
     root = ensure_artifact(
         src, "ttlckpt", f"ttl={ttl_ms}|delay={LATE_DELAY}", CKPT_PARTS, write

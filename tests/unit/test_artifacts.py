@@ -208,6 +208,51 @@ def test_only_artifacts_module_installs_artifacts():
     assert offenders == []
 
 
+class _StubSpark:
+    """Just enough of a session for ``scratch_dir``: its app id."""
+
+    def __init__(self, app_id: str) -> None:
+        self.sparkContext = type("Ctx", (), {"applicationId": app_id})()
+
+
+def test_scratch_dir_is_per_session_and_sweeps_earlier_sessions(
+    tmp_path, monkeypatch
+):
+    """``scratch_dir`` keys a query's per-run directory by source and
+    session: a re-run in the same session gets the same root (its
+    files kept unless ``fresh``), a new session gets its own root and
+    marks the earlier session's for the deferred sweep, and another
+    source's directory under the same tag is left alone."""
+    import hashlib
+
+    cache = tmp_path / "cache"
+    cache.mkdir()
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(cache))
+    src, other = tmp_path / "corpus", tmp_path / "other"
+    s1, s2 = _StubSpark("local-1"), _StubSpark("local-2")
+
+    r1 = artifacts.scratch_dir(s1, "scrtag", str(src), fresh=False)
+    digest = hashlib.md5(str(src).encode()).hexdigest()[:16]
+    assert os.path.basename(r1) == f"rsqes_scrtag_{digest}_local-1"
+    os.makedirs(os.path.join(r1, "out"))
+    r_other = artifacts.scratch_dir(s1, "scrtag", str(other), fresh=False)
+
+    assert artifacts.scratch_dir(s1, "scrtag", str(src), fresh=False) == r1
+    assert os.path.isdir(os.path.join(r1, "out")), "fresh=False keeps files"
+    assert artifacts.scratch_dir(s1, "scrtag", str(src), fresh=True) == r1
+    assert os.listdir(r1) == ["source.txt"], "fresh=True empties the root"
+
+    r2 = artifacts.scratch_dir(s2, "scrtag", str(src), fresh=False)
+    assert r2 != r1
+    assert os.path.exists(os.path.join(r1, "swept.txt"))
+    assert not os.path.exists(os.path.join(r2, "swept.txt"))
+    assert sorted(os.listdir(r_other)) == ["source.txt"]
+
+    # the earlier session, still running, takes its root back
+    artifacts.scratch_dir(s1, "scrtag", str(src), fresh=False)
+    assert not os.path.exists(os.path.join(r1, "swept.txt"))
+
+
 def test_customer_csv_artifact_rekeys_on_corpus_regen(spark, tmp_path):
     """The r12 migration pin: the shared customer-CSV copy (ONE
     artifact for the JVM reader and the whole Python DataSource
