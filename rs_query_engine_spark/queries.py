@@ -251,7 +251,6 @@ _QUERY_MODULES: tuple[str, ...] = (
 _DORMANT_MODULES: tuple[str, ...] = (
     "queries_staged_r17",
     "queries_staged_r18",
-    "queries_staged_r19",
 )
 
 

@@ -1799,131 +1799,3 @@ def test_format_and_epoch_families_map_side_pushdown(spark):
         assert "% " in scan_line.split("DataFilters: [")[1].split("]")[0], (
             name
         )
-
-
-def test_utf8_validation_audit_map_side_only(spark):
-    """quality_utf8_validation_audit: encode/corrupt/validate/repair
-    all inside one map-side projection — no shuffle, no join, one
-    pruned scan (doc_id, lang, source; never the text column)."""
-    df = registry.dormant_queries()["quality_utf8_validation_audit"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert "Exchange" not in plan
-    assert "Join" not in plan
-    assert plan.count("FileScan parquet") == 1
-    full = explain_str(df)
-    read_schema = [ln for ln in full.splitlines() if "ReadSchema" in ln][0]
-    assert "lang" in read_schema and "source" in read_schema
-    assert "text" not in read_schema and "n_chars" not in read_schema
-
-
-def test_dau_wau_expansion_no_self_join_no_window_distinct(spark):
-    """events_dau_wau_stickiness: the trailing-window distinct is the
-    EXPANSION idiom — one corpus scan into the (user, day) distinct,
-    a bounded x7 explode, a second distinct, and a day-keyed join of
-    two tiny per-day frames. No day x day self-join (exactly one
-    Join, the final DAU-WAU one), no window functions at all."""
-    df = registry.dormant_queries()["events_dau_wau_stickiness"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    # the (user, day) distinct is lineage-cut: the corpus never
-    # appears in this plan (Scan ExistingRDD twice, FileScan zero)
-    assert plan.count("FileScan parquet") == 0
-    assert "Window" not in plan
-    assert plan.count("Generate explode") == 1
-    # exactly one join: the final per-day DAU-WAU merge
-    assert (
-        plan.count("SortMergeJoin(")
-        + plan.count("BroadcastHashJoin")
-        + plan.count("ShuffledHashJoin")
-        == 1
-    )
-
-
-def test_session_relative_features_single_exchange(spark):
-    """events_session_relative_features: the session id (running
-    sum), event index, and time-into-session (running maxes of the
-    session-start markers) all ride ONE hashpartitioning(user_id)
-    exchange and one in-partition sort — the naive spelling
-    re-shuffles on (user, session_id) for a per-session window; no
-    join anywhere."""
-    df = registry.dormant_queries()["events_session_relative_features"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("Exchange") == 1
-    assert "Exchange hashpartitioning(user_id" in plan
-    assert "Join" not in plan
-    assert plan.count("FileScan parquet") == 1
-
-
-def test_activity_islands_two_exchanges_no_join(spark):
-    """events_activity_islands: after the (user, day) distinct and
-    the hash(user_id) exchange feeding the row_number window, the
-    island aggregate (user, anchor), the per-user max window, and
-    the final per-user aggregate all REUSE the hash(user)
-    partitioning (a hash partitioning on a subset satisfies each
-    clustered distribution) — exactly two exchanges total, one
-    corpus scan, no join anywhere."""
-    df = registry.dormant_queries()["events_activity_islands"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("Exchange") == 2
-    assert "Exchange hashpartitioning(user_id" in plan
-    assert "Join" not in plan
-    assert plan.count("FileScan parquet") == 1
-    # both aggregates are partial+final (map-side combine)
-    assert "partial_count" in plan
-
-
-def test_type_churn_sets_broadcast_midpoint_one_set_pass(spark):
-    """events_type_churn_sets: the one-row global-midpoint frame is
-    BROADCAST to the corpus (BroadcastNestedLoopJoin over a one-row
-    build side — never a shuffled cartesian), and both period sets
-    come from ONE ObjectHashAggregate pass with map-side
-    partial_collect_set — one user exchange, not one per period."""
-    df = registry.dormant_queries()["events_type_churn_sets"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("partial_collect_set") == 2
-    assert plan.count("Exchange hashpartitioning(user_id") == 1
-
-
-def test_autocorr_daily_single_scan_broadcast_lags(spark):
-    """events_autocorr_daily: the daily-count frame is lineage-cut
-    (corpus scanned ONCE outside this plan — zero FileScans remain),
-    and both lag joins broadcast the tiny |days| frame; the six-sum
-    sufficient-statistics aggregate is partial+final."""
-    df = registry.dormant_queries()["events_autocorr_daily"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("FileScan parquet") == 0
-    assert plan.count("BroadcastHashJoin") == 2
-    assert "SortMergeJoin" not in plan
-    assert "partial_sum" in plan
-
-
-def test_common_prefix_groups_one_pass_aggregation(spark):
-    """string_common_prefix_groups: the whole-group LCP rides the
-    lexicographic MIN/MAX trick — ONE partial+final hash aggregation
-    (min/max/count are all map-side combinable), one group-by
-    exchange, with the LCP expression on the aggregated frame only;
-    no window, no join, no second pass over the corpus."""
-    df = registry.dormant_queries()["string_common_prefix_groups"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("FileScan parquet") == 1
-    assert plan.count("Exchange") == 1
-    assert "Window" not in plan
-    assert "Join" not in plan
-    assert "partial_min" in plan and "partial_max" in plan
-
-
-def test_split_leakage_single_pass_stack(spark):
-    """quality_split_leakage_audit: one corpus scan feeds the
-    hash(fp) groupBy (map-side partial flags), ONE global 8-sum
-    aggregate, and a stack unpivot into the report rows — the
-    union-per-leak-kind spelling would re-aggregate the fingerprint
-    frame three times; no join, no union, both aggregates
-    partial+final."""
-    df = registry.dormant_queries()["quality_split_leakage_audit"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("FileScan parquet") == 1
-    assert "Join" not in plan
-    assert "Union" not in plan
-    assert plan.count("Generate stack") == 1
-    assert "partial_max" in plan and "partial_sum" in plan

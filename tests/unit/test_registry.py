@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -57,3 +58,16 @@ def test_every_query_module_is_loaded():
     live, dormant = set(registry._QUERY_MODULES), set(registry._DORMANT_MODULES)
     assert not live & dormant
     assert modules == live | dormant
+
+
+def test_each_query_module_has_one_parity_file():
+    # a parity file whose module registers nothing collects no query
+    # ids and passes on the empty set; for a dormant module that file
+    # is the only oracle check
+    named = []
+    for path in (REPO / "tests" / "oracle").glob("test_staged*_parity.py"):
+        line = re.search(r'^MODULE = "([^"]+)"$', path.read_text(), re.M)
+        assert line, path.name
+        named.append(line.group(1))
+    modules = {*registry._QUERY_MODULES, *registry._DORMANT_MODULES}
+    assert sorted(named) == sorted(modules)
