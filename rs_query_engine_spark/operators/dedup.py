@@ -592,30 +592,59 @@ def embedding_lsh_pairs(
     )
 
 
+# The blocked n-gram Jaccard edge threshold: ngram_jaccard_pairs'
+# default and the neighbour rule of graph.block_label_propagation.
+NGRAM_JACCARD_THRESHOLD = 0.3
+
+
+def blocked_shingles(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int = 3,
+    prefix_tokens: int = 8,
+) -> DataFrame:
+    """The ``(_id, _blk, _sh)`` projection every blocked n-gram Jaccard
+    consumer reads, cut once: ``_blk`` is the first ``prefix_tokens``
+    tokens (the blocking key), ``_sh`` the distinct ``shingle_n``-gram
+    shingles. Documents with no shingles are kept (``_sh`` empty);
+    each consumer decides what they mean."""
+    # stage the projection BEFORE any size-filter (r19, guide §2.4):
+    # Catalyst pushes filter(size(_sh) > 0) below this projection, so
+    # the un-staged spelling ran the shingle chain twice per doc (once
+    # in the pushed Filter, once in the Project). With the checkpoint
+    # the chain runs once and the filter reads the stored column.
+    return spread(df).select(
+        F.col(id_col).alias("_id"),
+        F.array_join(F.slice(tokens(F.col(text_col)), 1, prefix_tokens), " ").alias("_blk"),
+        F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("_sh"),
+    ).transform(truncate_lineage)
+
+
+def shingle_jaccard(sh_a: str, sh_b: str) -> str:
+    """SQL for the exact Jaccard of two distinct-shingle arrays as a
+    double: ``try_divide(|a ∩ b|, |a ∪ b|)`` (NULL when both are
+    empty). SQL text, so lambda bodies can use it too."""
+    inter = f"size(array_intersect({sh_a}, {sh_b}))"
+    return f"try_divide(CAST({inter} AS DOUBLE), size({sh_a}) + size({sh_b}) - {inter})"
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     shingle_n: int = 3,
     prefix_tokens: int = 8,
-    jaccard_threshold: float = 0.3,
+    jaccard_threshold: float = NGRAM_JACCARD_THRESHOLD,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs with prefix *blocking*: only
     doc pairs sharing their first ``prefix_tokens`` tokens are
     compared — an equi-join on the blocking key instead of a cross
     join (the blocking key can be swapped for any cheap canopy)."""
-    # stage the projection BEFORE the size-filter (r19, guide §2.4):
-    # Catalyst pushes filter(size(_sh) > 0) below this projection, so
-    # the un-staged spelling ran the shingle chain twice per doc (once
-    # in the pushed Filter, once in the Project). With the checkpoint
-    # the chain runs once and the filter reads the stored column.
-    # The filter itself stays: empty docs all share block "" →
-    # degenerate bucket + 0/0 Jaccard.
-    t = spread(df).select(
-        F.col(id_col).alias("_id"),
-        F.array_join(F.slice(tokens(F.col(text_col)), 1, prefix_tokens), " ").alias("_blk"),
-        F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("_sh"),
-    ).transform(truncate_lineage).filter(F.size("_sh") > 0)
+    # empty docs all share block "" → degenerate bucket + 0/0 Jaccard
+    t = blocked_shingles(df, id_col, text_col, shingle_n, prefix_tokens).filter(
+        F.size("_sh") > 0
+    )
     # bucket by blocking key and pair within buckets (same shape as
     # minhash_lsh_pairs): one shingle pass + one shuffle instead of a
     # self-join that recomputes and reshuffles the shingle projection
@@ -628,11 +657,9 @@ def ngram_jaccard_pairs(
     pairs = buckets.select(F.explode(_pairs_within(F.col("docs"))).alias("p")).select(
         "p.*"
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
     return (
         pairs.select(
-            "id_a", "id_b", F.try_divide(inter.cast("double"), union).alias("jaccard")
+            "id_a", "id_b", F.expr(shingle_jaccard("sh_a", "sh_b")).alias("jaccard")
         )
         .filter(F.col("jaccard") >= jaccard_threshold)
     )

@@ -677,32 +677,24 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked pair rule — no all-pairs anywhere). Isolated documents
     keep their own id, making the output a TOTAL labeling.
 
-    Bounded rounds are the production trade at 100 TB: each round is
-    one edges⋈labels shuffle hash-partitioned on the vertex id (the
-    same key every round, so AQE reuses the exchange), cost is
-    3 × O(|E|), and the diameter-k tail that forces large-star/
-    small-star's O(log n) dance is deliberately left unconverged —
-    'how far did labels travel in k hops' is itself the signal
-    (influence radius, partial-cluster preview before committing to
-    the full CC job)."""
-    from rs_query_engine_spark.operators.dedup import ngram_jaccard_pairs
-    from rs_query_engine_spark.operators.graph import min_label_propagation
-    from rs_query_engine_spark.sources.corpus import spread
-
-    from rs_query_engine_spark.session import truncate_lineage
+    Scale shape: the blocked pair rule only links documents that
+    share a blocking key, so every edge and every k-hop neighbourhood
+    stays inside one bucket. The plan is ONE shuffle, on the block key
+    (``graph.block_label_propagation``): each bucket is collected
+    once, its neighbours found once, and the 3 rounds run inside the
+    bucket, with one lineage cut (the shingle projection) and no join.
+    Jaccard work per bucket is quadratic in its size, as in
+    ``ngram_jaccard_pairs``. Bounded rounds are the production trade
+    at 100 TB: the diameter-k tail that forces large-star/small-star's
+    O(log n) dance is deliberately left unconverged — 'how far did
+    labels travel in k hops' is itself the signal (influence radius,
+    partial-cluster preview before committing to the full CC job)."""
+    from rs_query_engine_spark.operators.dedup import blocked_shingles
+    from rs_query_engine_spark.operators.graph import block_label_propagation
 
     d = _t(spark, sf_dir, "documents")
-    # cut the pair pipeline ONCE before the two-direction union — the
-    # union's branches otherwise each re-run the expensive
-    # explode+intersect+threshold stages (review r11 finding)
-    pairs = ngram_jaccard_pairs(spread(d), "doc_id", "text").transform(
-        truncate_lineage
-    )
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    return min_label_propagation(
-        d.select("doc_id"), edges, rounds=3, node_col="doc_id"
+    return block_label_propagation(
+        blocked_shingles(d, "doc_id", "text"), rounds=3, node_col="doc_id"
     )
 
 
@@ -1093,18 +1085,20 @@ def graph_mass_diffusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     test), frontier-free."""
     from rs_query_engine_spark.operators.dedup import ngram_jaccard_pairs
     from rs_query_engine_spark.operators.graph import integer_mass_diffusion
-    from rs_query_engine_spark.sources.corpus import spread
-
-    from rs_query_engine_spark.session import truncate_lineage
 
     d = _t(spark, sf_dir, "documents")
-    # same once-cut-then-union as graph_label_propagation
-    pairs = ngram_jaccard_pairs(spread(d), "doc_id", "text").transform(
-        truncate_lineage
-    )
+    # both directions from ONE branch (an explode, not a union of two
+    # reads of the pairs), so the pair pipeline runs once, inside
+    # integer_mass_diffusion's edge cut, with no cut of its own here
+    pairs = ngram_jaccard_pairs(d, "doc_id", "text")
     edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        F.explode(
+            F.array(
+                F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.*")
     seeds = d.select("doc_id").filter(F.col("doc_id") % 50 == 0)
     return integer_mass_diffusion(
         seeds, edges, rounds=3, init_mass=1024, node_col="doc_id"

@@ -1143,6 +1143,36 @@ def test_label_propagation_no_cartesian_and_exchange_reuse_key(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_label_propagation_block_local_one_shuffle_four_jobs(spark):
+    """Every near-dup edge links two documents of one blocking bucket,
+    so the 3 rounds run inside the bucket: no join, exactly one hash
+    exchange (on the block key), and a build plus a noop write runs 4
+    Spark jobs — the spread shuffle and the checkpoint of the one
+    lineage cut, then the block-key shuffle and the result (the
+    per-round join-and-cut spelling ran 21)."""
+    import re
+
+    sc = spark.sparkContext
+    # the first read of a file in a session runs a schema job; take it
+    # out of the count
+    registry._t(spark, SF_DIR, "documents")
+    # spread() adds no shuffle when one input file already covers the
+    # default parallelism, and then the cut runs one job, not two
+    want = 4 if sc.defaultParallelism > 1 else 3
+    group = "pin-graph_label_propagation"
+    sc.setJobGroup(group, group)
+    try:
+        df = registry.queries()["graph_label_propagation"](spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == want
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan
+    assert re.findall(r"Exchange hashpartitioning\((\w+)#", plan) == ["_blk"]
+
+
 def test_arrow_datasource_pruned_scan_carries_narrow_schema(spark):
     """The pruned Arrow-reader query binds a 2-column subset schema;
     the Python BatchScan's ReadSchema must be exactly that subset

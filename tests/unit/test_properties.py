@@ -330,6 +330,19 @@ def test_winnowing_shared_substring_guarantee(sp):
     assert not (fps[1] & fps[3]) and not (fps[2] & fps[3])
 
 
+def _khop_min(adj: dict, start: int, rounds: int) -> int:
+    """The minimum node id within ``rounds`` hops of ``start`` in the
+    undirected adjacency ``adj`` (plain Python BFS ground truth)."""
+    seen = {start}
+    frontier = {start}
+    for _ in range(rounds):
+        frontier = {m for n in frontier for m in adj[n]} - seen
+        if not frontier:
+            break
+        seen |= frontier
+    return min(seen)
+
+
 @settings(
     max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
 )
@@ -349,17 +362,7 @@ def test_min_label_propagation_is_k_hop_min(sp, edges, rounds):
             adj[a].add(b)
             adj[b].add(a)
 
-    def khop_min(start: int) -> int:
-        seen = {start}
-        frontier = {start}
-        for _ in range(rounds):
-            frontier = {m for n in frontier for m in adj[n]} - seen
-            if not frontier:
-                break
-            seen |= frontier
-        return min(seen)
-
-    want = {n: khop_min(n) for n in nodes}
+    want = {n: _khop_min(adj, n, rounds) for n in nodes}
 
     ndf = sp.createDataFrame([(n,) for n in nodes], "doc_id long")
     edf = sp.createDataFrame(
@@ -376,6 +379,84 @@ def test_min_label_propagation_is_k_hop_min(sp, edges, rounds):
     }
     assert got == want
     assert all(lbl <= n for n, lbl in got.items())
+
+
+SHINGLE_VOCAB = tuple(f"s{k}" for k in range(8))
+# a random (possibly empty) shingle set, or a window of two adjacent
+# shingles: windows one step apart have Jaccard 1/3 and two apart 0, so
+# they chain into paths that take several rounds to cross
+shingle_sets = st.one_of(
+    st.frozensets(st.sampled_from(SHINGLE_VOCAB), max_size=3),
+    st.integers(0, 6).map(lambda k: frozenset(SHINGLE_VOCAB[k : k + 2])),
+)
+
+
+@st.composite
+def blocked_docs(draw):
+    """``(_id, _blk, _sh)`` rows of a random block-partitioned corpus:
+    blocks of 1-6 documents, ids a random permutation. Every example
+    also holds a singleton block, a shingle-less document in a
+    populated block, one in a block of its own, and a block whose
+    windows chain into a 5-hop path (longer than any round budget)."""
+    blocks = draw(
+        st.lists(
+            st.lists(shingle_sets, min_size=1, max_size=6),
+            min_size=1,
+            max_size=5,
+        )
+    )
+    blocks[0] = blocks[0] + [frozenset()]
+    blocks += [
+        [frozenset(SHINGLE_VOCAB[:2])],
+        [frozenset()],
+        [frozenset(SHINGLE_VOCAB[k : k + 2]) for k in range(6)],
+    ]
+    ids = draw(st.permutations(range(sum(map(len, blocks)))))
+    rows = [(f"b{bi}", sorted(sh)) for bi, blk in enumerate(blocks) for sh in blk]
+    return [(i, blk, sh) for i, (blk, sh) in zip(ids, rows)]
+
+
+@settings(
+    max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
+)
+@given(docs=blocked_docs(), rounds=st.integers(1, 4))
+def test_block_label_propagation_matches_global_and_k_hop_min(sp, docs, rounds):
+    """The block-local operator must give the labels of
+    :func:`min_label_propagation` over the same blocked Jaccard edges
+    (both directions, every document a node) and of the Python k-hop
+    BFS, on random block-partitioned graphs with singleton blocks,
+    isolated nodes and documents with no shingles."""
+    from rs_query_engine_spark.operators.graph import (
+        block_label_propagation,
+        min_label_propagation,
+    )
+
+    adj: dict = {i: set() for i, _, _ in docs}
+    for i, bi, si in docs:
+        for j, bj, sj in docs:
+            a, b = set(si), set(sj)
+            if i < j and bi == bj and a and b and len(a & b) / len(a | b) >= 0.3:
+                adj[i].add(j)
+                adj[j].add(i)
+    want = {n: _khop_min(adj, n, rounds) for n in adj}
+
+    blocked = sp.createDataFrame(docs, "_id long, _blk string, _sh array<string>")
+    got = {
+        r["doc_id"]: r["label"]
+        for r in block_label_propagation(blocked, rounds=rounds).collect()
+    }
+    assert got == want
+
+    ndf = sp.createDataFrame([(n,) for n in adj], "doc_id long")
+    edf = sp.createDataFrame(
+        [(a, b) for a in adj for b in adj[a]] or [(0, 0)],  # self-loop is inert
+        "src long, dst long",
+    )
+    ref = {
+        r["doc_id"]: r["label"]
+        for r in min_label_propagation(ndf, edf, rounds=rounds).collect()
+    }
+    assert got == ref
 
 
 @settings(
