@@ -693,9 +693,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rs_query_engine_spark.operators.graph import block_label_propagation
 
     d = _t(spark, sf_dir, "documents")
-    return block_label_propagation(
-        blocked_shingles(d, "doc_id", "text"), rounds=3, node_col="doc_id"
-    )
+    return block_label_propagation(blocked_shingles(d, "doc_id", "text"), rounds=3)
 
 
 @register(
