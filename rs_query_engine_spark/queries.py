@@ -161,20 +161,6 @@ _GREEN_ROUND, _ROWS_ONLY_GREEN = _latest_green_rounds()
 # recorded at rewrite time like a changelog, and self-expire the
 # moment the driver stamps a green row in a later round.
 _CODE_CHANGED_ROUND: dict[str, int] = {
-    # round-18 optimization rewrites (OPTIMIZATION_r18.md); the driver's
-    # r18 window re-verified only similarity_pq_index_probe (green r18,
-    # already > 18-entry-free), the other nine still carry pre-rewrite
-    # stamps
-    "text_exact_substr_spans": 18,
-    "text_exact_substr_fraction": 18,
-    "dedup_semantic": 18,
-    "agg_percentiles_distinct": 18,
-    "similarity_ivf_recall_audit": 18,
-    "similarity_hybrid_rrf": 18,
-    "similarity_pq_index_probe": 18,
-    "similarity_pq_refine": 18,
-    "text_ngram_novelty": 18,
-    "text_collocation_pmi_rank": 18,
     # round-19 optimization rewrites (OPTIMIZATION_r19.md)
     "stream_stream_join": 19,
     "stream_late_data_drop": 19,
@@ -250,7 +236,6 @@ _QUERY_MODULES: tuple[str, ...] = (
 # ``dormant_queries()``, never by ``queries()``.
 _DORMANT_MODULES: tuple[str, ...] = (
     "queries_staged_r17",
-    "queries_staged_r18",
 )
 
 

@@ -1672,160 +1672,3 @@ def test_pivot_single_aggregate_no_join_no_second_scan(spark):
     assert "Join" not in plan
     assert "Expand" not in plan
     assert "partial_count" in plan
-
-
-def test_pct_of_parent_windows_on_leaf_frame_one_scan(spark):
-    """agg_pct_of_parent_hierarchy: one corpus aggregate, both
-    hierarchy windows over the tiny leaf frame — one scan, no join,
-    no Expand, map-side partials."""
-    df = registry.dormant_queries()["agg_pct_of_parent_hierarchy"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("FileScan parquet") == 1
-    assert "Join" not in plan
-    assert "Expand" not in plan
-    assert "partial_count" in plan
-
-
-def test_token_map_pipeline_jvm_lambdas_no_join(spark):
-    """text_token_map_pipeline: the map lambdas stay JVM-side (no
-    BatchEvalPython / ArrowEvalPython anywhere), the pipeline is two
-    keyed aggregates + a map-only explode — one scan, no join."""
-    df = registry.dormant_queries()["text_token_map_pipeline"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("FileScan parquet") == 1
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
-    assert "Generate explode" in plan
-
-
-def test_checksum_diff_one_pass_no_join_no_sort(spark):
-    """maintenance_checksum_diff: both generations' digests come from
-    ONE conditional-aggregate pass — one corpus scan, map-side md5 +
-    fold with partial aggregates onto the 64-bucket domain, no join,
-    no sort anywhere."""
-    df = registry.dormant_queries()["maintenance_checksum_diff"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("FileScan parquet") == 1
-    assert "Join" not in plan
-    assert "Sort " not in plan
-    assert "partial_count" in plan
-
-
-def test_rank_sum_one_exchange_feeds_sorts_windows_and_agg(spark):
-    """events_ab_rank_sum: the asc rank, desc rank, partition count,
-    and the final (type, arm) aggregate all REUSE one
-    hashpartitioning(event_type) exchange — two in-partition sorts,
-    three Window operators, partial+final agg, and not a single
-    additional shuffle or join. This partitioning reuse is the whole
-    scale story: the O(n log n) rank spelling of the U statistic
-    costs exactly one shuffle."""
-    df = registry.dormant_queries()["events_ab_rank_sum"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("Exchange") == 1
-    assert "Exchange hashpartitioning(event_type" in plan
-    assert plan.count("Window") == 3
-    assert "Join" not in plan
-    assert "partial_sum" in plan and "partial_count" in plan
-
-
-def test_funnel_decay_conditional_agg_no_join(spark):
-    """events_funnel_conversion_decay: the 4-step chain is ONE
-    per-user conditional-MIN aggregate plus a global reduce — no
-    K-way self-join anywhere (the naive funnel spelling is quadratic
-    in events-per-user), partial aggregation map-side on both
-    levels."""
-    df = registry.dormant_queries()["events_funnel_conversion_decay"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert "Join" not in plan
-    assert plan.count("FileScan parquet") == 1
-    assert "partial_min" in plan and "partial_count" in plan
-    assert plan.count("Exchange") == 2  # user_id hash + final single
-
-
-def test_array_hof_lambdas_jvm_side_one_shuffle(spark):
-    """array_higher_order_pipeline: every lambda
-    (transform/filter/exists/forall/aggregate/zip_with) runs
-    JVM-side in the projection — no Python eval operator — and the
-    only shuffle is the per-order collect (partial+final
-    ObjectHashAggregate)."""
-    df = registry.dormant_queries()["array_higher_order_pipeline"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert "EvalPython" not in plan
-    assert plan.count("Exchange") == 1
-    assert plan.count("ObjectHashAggregate") == 2  # partial + final
-    assert "Join" not in plan
-
-
-def test_parse_family_map_side_only_pruned_scans(spark):
-    """string_str_to_map_parse / scalar_from_csv_parse /
-    string_binary_codec_family / text_sentence_segmentation: pure
-    map-side scalar/array work — no shuffle, no join, one pruned
-    scan each (the sentence stats never explode; sentences live and
-    die inside the expression tree)."""
-    for name in (
-        "string_str_to_map_parse",
-        "scalar_from_csv_parse",
-        "string_binary_codec_family",
-        "text_sentence_segmentation",
-    ):
-        df = registry.dormant_queries()[name](spark, SF_DIR)
-        plan = explain_str(df, mode="simple")
-        assert "Exchange" not in plan, name
-        assert "Join" not in plan, name
-        assert plan.count("FileScan parquet") == 1, name
-    # pruning spot-check: sentence stats read exactly (doc_id, text)
-    df = registry.dormant_queries()["text_sentence_segmentation"](spark, SF_DIR)
-    plan = explain_str(df)
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
-    assert "doc_id" in read_schema and "text" in read_schema
-    assert "lang" not in read_schema and "n_chars" not in read_schema
-
-
-def test_posexplode_outer_one_collect_no_join(spark):
-    """array_posexplode_outer: the outer Generate replaces the
-    oracle's distinct + LEFT JOIN spelling — one per-order collect
-    shuffle, a Generate with the outer flag, and no join anywhere."""
-    df = registry.dormant_queries()["array_posexplode_outer"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert "Generate posexplode" in plan
-    assert "Join" not in plan
-    assert plan.count("Exchange") == 1
-    assert plan.count("FileScan parquet") == 1
-
-
-def test_neyman_allocation_windows_on_strata_frame(spark):
-    """sample_neyman_allocation: ONE corpus scan and one
-    partial+final aggregate onto the |strata| frame; every window
-    (weight total, remainder rank, floor total) runs on that tiny
-    frame after the aggregate — the corpus is never re-shuffled or
-    re-scanned."""
-    df = registry.dormant_queries()["sample_neyman_allocation"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("FileScan parquet") == 1
-    assert "Join" not in plan
-    assert "partial_sum" in plan and "partial_count" in plan
-    # windows sit ABOVE the final HashAggregate in the operator chain
-    agg_pos = plan.index("HashAggregate")
-    assert plan.index("Window") < agg_pos
-
-
-def test_format_and_epoch_families_map_side_pushdown(spark):
-    """string_format_family / scalar_epoch_conversions: map-side
-    scalar codegen only — no shuffle, no join, one scan, and the
-    modulus row filter evaluated at the scan (DataFilters), not in a
-    post-shuffle stage."""
-    for name in ("string_format_family", "scalar_epoch_conversions"):
-        df = registry.dormant_queries()[name](spark, SF_DIR)
-        plan = explain_str(df, mode="simple")
-        assert "Exchange" not in plan, name
-        assert "Join" not in plan, name
-        assert plan.count("FileScan parquet") == 1, name
-        # the modulus predicate is a scan-stage DataFilter (simple
-        # mode prints it in the FileScan descriptor)
-        scan_line = [
-            ln for ln in plan.splitlines() if "FileScan parquet" in ln
-        ][0]
-        assert "DataFilters: [" in scan_line, name
-        assert "% " in scan_line.split("DataFilters: [")[1].split("]")[0], (
-            name
-        )
