@@ -42,9 +42,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLE: dict[str, str] = {}
-# Written and oracle-checked, but not yet served by ``queries()``.
-_DORMANT: dict[str, QueryFn] = {}
-_DORMANT_ORACLE: dict[str, str] = {}
 
 # decimal grids for exact aggregation (corpus doubles live on a
 # 2-decimal grid; see module docstring)
@@ -52,29 +49,22 @@ D_PRICE = "decimal(12,2)"  # prices / balances / quantities (< 1e10)
 D_FRAC = "decimal(4,2)"  # discount/tax factors in [0, 2)
 
 
-def register(name: str, oracle: str | None = None, *, dormant: bool = False):
+def register(name: str, oracle: str | None = None):
     """Decorator: add a query (and its oracle SQL) to the registry.
-    Every query module registers here; a name already taken, live or
-    dormant, raises."""
+    Every query module registers here; a name already taken raises."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        owner = _QUERIES.get(name) or _DORMANT.get(name)
+        owner = _QUERIES.get(name)
         if owner is not None:
             raise ValueError(
                 f"query {name!r} is already registered by {owner.__module__}"
             )
-        fns, sqls = (_DORMANT, _DORMANT_ORACLE) if dormant else (_QUERIES, _ORACLE)
-        fns[name] = fn
+        _QUERIES[name] = fn
         if oracle is not None:
-            sqls[name] = oracle
+            _ORACLE[name] = oracle
         return fn
 
     return deco
-
-
-def register_dormant(name: str, oracle: str | None = None):
-    """Decorator: register a query in ``dormant_queries()`` only."""
-    return register(name, oracle, dormant=True)
 
 
 # The driver's correctness gate records rows for only the FIRST 50
@@ -232,12 +222,6 @@ _QUERY_MODULES: tuple[str, ...] = (
     "queries_staged_r16",
 )
 
-# Modules whose queries register dormant: loaded only by
-# ``dormant_queries()``, never by ``queries()``.
-_DORMANT_MODULES: tuple[str, ...] = (
-    "queries_staged_r17",
-)
-
 
 def _registered() -> dict[str, QueryFn]:
     """The whole registry in registration order: this module first,
@@ -264,21 +248,6 @@ def queries() -> dict[str, QueryFn]:
 def oracle_sql() -> dict[str, str]:
     qs = _registered()
     return {n: _ORACLE[n] for n in _rotation_order(qs, _ORACLE) if n in _ORACLE}
-
-
-def dormant_queries() -> dict[str, QueryFn]:
-    """The dormant queries, in ``_DORMANT_MODULES`` order."""
-    import importlib
-
-    for mod in _DORMANT_MODULES:
-        importlib.import_module(f"{__package__}.{mod}")
-    rank = {f"{__package__}.{m}": i for i, m in enumerate(_DORMANT_MODULES)}
-    names = sorted(_DORMANT, key=lambda n: rank[_DORMANT[n].__module__])
-    return {n: _DORMANT[n] for n in names}
-
-
-def dormant_oracle_sql() -> dict[str, str]:
-    return {n: _DORMANT_ORACLE[n] for n in dormant_queries() if n in _DORMANT_ORACLE}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

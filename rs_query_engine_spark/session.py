@@ -64,15 +64,6 @@ def get_spark(
         # the cache holds compiled classes (small) — raising it trades
         # a few MB of driver/executor metaspace for not recompiling.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
-        # Spark 4.1's TIME data type (SPARK-51162 family) ships
-        # feature-flagged off. Set it HERE so every session runs one
-        # uniform configuration, rather than the flag flipping on
-        # mid-session the first time a TIME-typed query runs
-        # (ADVICE r15 on queries_staged_r17._ensure_time_type, which
-        # remains as an idempotent safeguard for externally-built
-        # sessions). The flag only unlocks the type — probed r15; no
-        # other semantics change.
-        .config("spark.sql.timeType.enabled", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -42,8 +42,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 QUERIES = registry.queries()
 ORACLE = registry.oracle_sql()
-DORMANT = registry.dormant_queries()
-DORMANT_ORACLE = registry.dormant_oracle_sql()
 
 # Queries registered without oracle SQL: only their rows are checked.
 ROWS_ONLY = {"agg_approx_percentile", "similarity_ivf_kmeans", "text_unigram_logprob"}
@@ -107,9 +105,8 @@ _PARITY: dict[str, Parity] = {}
 
 
 def _compare(spark, name: str) -> Parity:
-    fn = QUERIES[name] if name in QUERIES else DORMANT[name]
-    sql = ORACLE.get(name, DORMANT_ORACLE.get(name))
-    sdf = fn(spark, SF_DIR)
+    sql = ORACLE.get(name)
+    sdf = QUERIES[name](spark, SF_DIR)
     spark_rows = [tuple(r) for r in sdf.collect()]
     empty = "" if spark_rows or name in EMPTY_OK else (
         f"{name}: empty result (list it in EMPTY_OK with a reason)"
@@ -144,7 +141,7 @@ def _compare(spark, name: str) -> Parity:
 
 
 def parity(spark, name: str) -> Parity:
-    """The parity record of a live or dormant query, built on first use."""
+    """The parity record of a query, built on first use."""
     if name not in _PARITY:
         _PARITY[name] = _compare(spark, name)
     return _PARITY[name]
@@ -162,14 +159,14 @@ def assert_type_families_match(spark, name: str) -> None:
 
 
 def module_queries(module: str) -> list[str]:
-    """The live and dormant query names defined in ``module``."""
+    """The query names defined in ``module``."""
     mod = f"{registry.__package__}.{module}"
-    return sorted(n for n, fn in {**QUERIES, **DORMANT}.items() if fn.__module__ == mod)
+    return sorted(n for n, fn in QUERIES.items() if fn.__module__ == mod)
 
 
 def module_oracled(module: str) -> list[str]:
     """The names in ``module_queries(module)`` that have oracle SQL."""
-    return [n for n in module_queries(module) if n in ORACLE or n in DORMANT_ORACLE]
+    return [n for n in module_queries(module) if n in ORACLE]
 
 
 def assert_names_taken(module: str) -> None:

@@ -290,44 +290,3 @@ def test_customer_csv_artifact_rekeys_on_corpus_regen(spark, tmp_path):
     assert (
         spark.read.option("header", True).csv(p2).count() == n1 // 2
     ), "the new artifact must reflect the regenerated corpus"
-
-
-def test_mwclust_sweep_two_phase_tombstone(tmp_path, monkeypatch):
-    """_sweep_stale_mwclust (ADVICE r15): first sighting tombstones a
-    stale rsqes_mwclust_* dir with an underscore-hidden marker (so a
-    concurrent owner can still read it as parquet); a later pass
-    reaps it only after the grace window; the current session's own
-    dir is never touched; unrelated dirs are never touched."""
-    import os
-    import time
-
-    import rs_query_engine_spark.sources.artifacts as artifacts
-    from rs_query_engine_spark.queries_staged_r17 import (
-        _sweep_stale_mwclust,
-    )
-
-    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
-    stale = tmp_path / "rsqes_mwclust_aaaa_app-old"
-    mine = tmp_path / "rsqes_mwclust_bbbb_app-cur"
-    other = tmp_path / "rsqes_other_cccc"
-    for d in (stale, mine, other):
-        d.mkdir()
-        (d / "part-0.parquet").touch()
-
-    # pass 1: stale gets tombstoned, not deleted; mine/other untouched
-    _sweep_stale_mwclust(str(mine))
-    assert (stale / "_swept.txt").exists()
-    assert stale.exists() and (stale / "part-0.parquet").exists()
-    assert not (mine / "_swept.txt").exists()
-    assert not (other / "_swept.txt").exists()
-
-    # pass 2 inside the grace window: still kept
-    _sweep_stale_mwclust(str(mine))
-    assert stale.exists()
-
-    # age the tombstone past the grace window: reaped
-    old = time.time() - artifacts.SWEEP_GRACE_SEC - 10
-    os.utime(stale / "_swept.txt", (old, old))
-    _sweep_stale_mwclust(str(mine))
-    assert not stale.exists()
-    assert mine.exists() and other.exists()

@@ -706,10 +706,8 @@ def test_registry_no_forced_broadcast_of_unreduced_big_table(spark):
 
     from rs_query_engine_spark import queries as registry
 
-    # walk the dormant queries too, so a hint is linted the day it
-    # lands, not the day its query goes live; every allowlist entry
-    # must name one of the walked queries
-    walk = {**registry.queries(), **registry.dormant_queries()}
+    # every allowlist entry must name one of the walked queries
+    walk = registry.queries()
     assert set(BIG_TABLE_BROADCAST_OK) <= set(walk)
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -1512,163 +1510,3 @@ def test_concurrency_peak_sweep_line_no_self_join(spark):
     assert "Union" in plan
     assert "CartesianProduct" not in plan and "Join" not in plan
     assert "partial_max" in plan
-
-
-def test_weighted_median_one_sort_rank_limit(spark):
-    """agg_weighted_median_exact: one (source)-keyed sort powers the
-    running mass, the full-partition stats, AND the rn=1 pick (which
-    Spark pushes down as a WindowGroupLimit) — no join, no second
-    sort, no global order."""
-    df = registry.dormant_queries()["agg_weighted_median_exact"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert "Join" not in plan
-    assert plan.count("Sort ") == 1
-    assert "WindowGroupLimit" in plan
-
-
-def test_systematic_pps_two_scans_broadcast_alloc(spark):
-    """sample_systematic_pps: the corpus is scanned exactly TWICE
-    (once for the mass rollup, once for the selection walk — the
-    total comes from a window over the tiny mass frame, never a
-    third corpus aggregate), the alloc rides back as a broadcast
-    hash join, and no cartesian product exists."""
-    df = registry.dormant_queries()["sample_systematic_pps"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("FileScan parquet") == 2
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_snm_one_sort_one_scan_no_join(spark):
-    """dedup_sorted_neighborhood: all W neighbor LEADs share one
-    window spec, so the plan carries exactly ONE keyed sort and ONE
-    corpus scan (a per-offset union would sort the corpus W times);
-    candidates unfold map-side (Generate), never via a self-join."""
-    df = registry.dormant_queries()["dedup_sorted_neighborhood"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("Sort ") == 1
-    assert plan.count("FileScan parquet") == 1
-    assert "Join" not in plan
-    assert "Generate" in plan
-
-
-def test_hapax_ratio_sort_free_stacked_partials(spark):
-    """text_hapax_ratio: two stacked hash aggregates with map-side
-    partials and NO sort anywhere — the vocabulary rollup never
-    orders anything; the scan reads only (source, text)."""
-    df = registry.dormant_queries()["text_hapax_ratio"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert "Sort " not in plan
-    assert "Join" not in plan
-    assert "partial_" in plan
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
-    assert "doc_id" not in read_schema and "n_chars" not in read_schema
-
-
-def test_burstiness_one_sort_partial_agg(spark):
-    """events_interarrival_burstiness: one (type)-keyed sort powers
-    the LEAD, the moment sums keep map-side partials, and the double
-    arithmetic runs on the collapsed |types| frame — no join."""
-    df = registry.dormant_queries()["events_interarrival_burstiness"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("Sort ") == 1
-    assert "Join" not in plan
-    assert "partial_sum" in plan
-
-
-def test_trailing_interval_frame_shares_one_window(spark):
-    """events_trailing_window_metrics: both frame aggregates share
-    one window spec, so Catalyst evaluates them in a single Window
-    operator over ONE (type)-keyed sort — and no join exists (the
-    self-join spelling of a trailing window is the O(n·k) plan this
-    query replaces)."""
-    df = registry.dormant_queries()["events_trailing_window_metrics"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("Sort ") == 1
-    assert plan.count("Window ") == 1
-    assert "Join" not in plan
-
-
-def test_ewma_dyadic_rank_limit_before_shuffle(spark):
-    """events_ewma_dyadic: the k<=W rank filter must push into the
-    window sort as a WindowGroupLimit on BOTH sides of the exchange
-    (Partial before the shuffle caps every map task's output at W
-    rows per user; Final after it) — per-key state is W rows, the
-    shuffle never carries a user's full history, and the aggregate
-    keeps map-side partials. No join anywhere."""
-    df = registry.dormant_queries()["events_ewma_dyadic"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("WindowGroupLimit") == 2
-    assert "Partial" in plan and "Final" in plan
-    assert "Join" not in plan
-    assert "partial_count" in plan
-
-
-def test_ab_lift_single_scan_tiny_broadcast_join(spark):
-    """events_ab_lift: the per-(type, arm) aggregate is lineage-cut,
-    so the corpus parquet is scanned exactly ONCE (without the cut
-    Catalyst pushes each arm's parity filter below its own copy of
-    the aggregate and reads events twice); the relative-lift join
-    runs on the two ~5-row arm frames and must never be a cartesian
-    product."""
-    df = registry.dormant_queries()["events_ab_lift"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("FileScan parquet") == 0  # cut: scan ran at build
-    assert "CartesianProduct" not in plan
-    assert "Join" in plan
-
-
-def test_time_of_day_profile_map_side_partials_no_join(spark):
-    """events_time_of_day_profile: the TIME construction and MINUTE
-    truncation are map-side projections feeding a partial+final
-    aggregate onto the <=1440-row minute domain — one exchange keyed
-    on the TIME value, no sort, no join."""
-    df = registry.dormant_queries()["events_time_of_day_profile"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert "partial_count" in plan and "partial_sum" in plan
-    assert "Join" not in plan
-    assert "Sort " not in plan
-
-
-def test_multiway_cluster_audit_one_file_keyed_sort_no_join(spark):
-    """maintenance_multiway_cluster_audit: the read-back audit is a
-    file-keyed window (one sort, O(1) lag state) feeding
-    partial+final aggregates — no join anywhere, and the final
-    reduce runs over the |files|x|types| run frame, never the
-    corpus."""
-    df = registry.dormant_queries()["maintenance_multiway_cluster_audit"](
-        spark, SF_DIR
-    )
-    plan = explain_str(df, mode="simple")
-    assert plan.count("Sort ") == 1
-    assert "Join" not in plan
-    assert "partial_count" in plan
-
-
-def test_rollup_cube_plan_through_expand_with_partials(spark):
-    """agg_rollup_returnflag / agg_cube_type_dow: ROLLUP and CUBE
-    must plan through ONE Expand operator (x3 / x4 grouping sets,
-    replicated BEFORE the exchange) feeding a partial+final
-    aggregate — subtotals are map-side partials like any leaf group,
-    never a second pass or a union of aggregates. No join."""
-    for name in ("agg_rollup_returnflag", "agg_cube_type_dow"):
-        df = registry.dormant_queries()[name](spark, SF_DIR)
-        plan = explain_str(df, mode="simple")
-        assert plan.count("Expand") == 1, name
-        assert "partial_count" in plan, name
-        assert "Join" not in plan, name
-        assert plan.count("FileScan parquet") == 1, name
-
-
-def test_pivot_single_aggregate_no_join_no_second_scan(spark):
-    """agg_pivot_type_matrix: explicit-values pivot desugars to
-    conditional aggregates in ONE pass — one corpus scan, one
-    partial+final aggregate, no Expand, no join (the row total is a
-    projection over the pivoted columns, not a second aggregate
-    joined back)."""
-    df = registry.dormant_queries()["agg_pivot_type_matrix"](spark, SF_DIR)
-    plan = explain_str(df, mode="simple")
-    assert plan.count("FileScan parquet") == 1
-    assert "Join" not in plan
-    assert "Expand" not in plan
-    assert "partial_count" in plan

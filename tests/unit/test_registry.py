@@ -51,23 +51,19 @@ def test_order_does_not_depend_on_the_first_import():
 
 
 def test_every_query_module_is_loaded():
-    # a queries*.py file in neither list would register into a
+    # a queries*.py file missing from the list would register into a
     # registry nothing reads
     package = Path(registry.__file__).parent
     modules = {p.stem for p in package.glob("queries*.py")} - {"queries"}
-    live, dormant = set(registry._QUERY_MODULES), set(registry._DORMANT_MODULES)
-    assert not live & dormant
-    assert modules == live | dormant
+    assert modules == set(registry._QUERY_MODULES)
 
 
 def test_each_query_module_has_one_parity_file():
     # a parity file whose module registers nothing collects no query
-    # ids and passes on the empty set; for a dormant module that file
-    # is the only oracle check
+    # ids and passes on the empty set
     named = []
     for path in (REPO / "tests" / "oracle").glob("test_staged*_parity.py"):
         line = re.search(r'^MODULE = "([^"]+)"$', path.read_text(), re.M)
         assert line, path.name
         named.append(line.group(1))
-    modules = {*registry._QUERY_MODULES, *registry._DORMANT_MODULES}
-    assert sorted(named) == sorted(modules)
+    assert sorted(named) == sorted(registry._QUERY_MODULES)

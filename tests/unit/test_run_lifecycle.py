@@ -37,22 +37,17 @@ def test_drain_leaks_nothing_when_a_batch_fails(spark, tmp_path, available_now):
 
 
 def test_only_the_lifecycle_modules_own_tmp_dirs_and_streams():
-    """Over the live package (dormant query modules excluded): only
-    ``sources/artifacts.py`` and the stream shim in ``sources/corpus.py``
-    place directories under the temp dir, and only
-    ``streaming/events.py`` waits on a stream or sets the shuffle
-    partitions."""
+    """Over the whole package: only ``sources/artifacts.py`` and the
+    stream shim in ``sources/corpus.py`` place directories under the
+    temp dir, and only ``streaming/events.py`` waits on a stream or
+    sets the shuffle partitions."""
     pkg = Path(registry.__file__).resolve().parent
-    dormant = {f"{m}.py" for m in registry._DORMANT_MODULES}
-    live = [
-        p for p in sorted(pkg.rglob("*.py"))
-        if not (p.parent == pkg and p.name in dormant)
-    ]
+    files = sorted(pkg.rglob("*.py"))
 
     def owners(pattern: str) -> list[str]:
         pat = re.compile(pattern)
         return [
-            p.relative_to(pkg).as_posix() for p in live if pat.search(p.read_text())
+            p.relative_to(pkg).as_posix() for p in files if pat.search(p.read_text())
         ]
 
     assert owners(r"gettempdir\(") == ["sources/artifacts.py", "sources/corpus.py"]

@@ -23,39 +23,27 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def test_staged_activation_is_import_order_safe_and_lazy():
     # a query module imported FIRST (it imports queries.py for its
-    # helpers) must leave the registry whole, and a dormant module
-    # imported first must still not be served by queries()
+    # helpers) must leave the registry whole
     import subprocess
     import sys
 
     code = (
-        "import rs_query_engine_spark.queries_staged_r17 as d\n"
         "import rs_query_engine_spark.queries_staged as s\n"
         "import rs_query_engine_spark.queries as q\n"
         "live = q.queries()\n"
         "assert live['sample_split_assign'] is s.sample_split_assign\n"
         "assert 'sample_split_assign' in q.oracle_sql()\n"
-        "dormant = q.dormant_queries()\n"
-        "assert dormant['agg_weighted_median_exact'].__module__ == d.__name__\n"
-        "assert not set(live) & set(dormant)\n"
-        "assert not set(q.oracle_sql()) & set(q.dormant_oracle_sql())\n"
     )
     subprocess.run([sys.executable, "-c", code], check=True)
 
 
 def test_staged_flag_consistent_with_registry():
-    # where a module's queries land follows from the list it is in:
     # queries_staged is in queries._QUERY_MODULES, so queries() serves
-    # its queries and dormant_queries() serves none of them
+    # its queries
     from rs_query_engine_spark import queries as registry
 
     assert "queries_staged" in registry._QUERY_MODULES
-    assert "queries_staged" not in registry._DORMANT_MODULES
     assert registry.queries()["sample_split_assign"] is staged.sample_split_assign
-    assert not any(
-        fn.__module__ == staged.__name__
-        for fn in registry.dormant_queries().values()
-    )
 
 
 # --- sample_split_assign ------------------------------------------------
