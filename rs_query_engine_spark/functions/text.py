@@ -123,6 +123,35 @@ def shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
+def winnow(text: Column | str, k: int = 3, w: int = 4) -> Column:
+    """Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03):
+    the minimum of each window of ``w`` consecutive hashed word
+    ``k``-grams, in window order (``array<bigint>``; empty when the
+    text has fewer than ``w`` grams). Each gram hashes through
+    ``hashing.md5_hex8``, the oracle-portable md5 prefix.
+
+    The hash array is bound as the lambda variable of a transform
+    over a one-element array (the ``chunk_spans`` pattern), so each
+    gram is hashed once per row rather than once per window that
+    slices it."""
+    from rs_query_engine_spark.functions.hashing import md5_hex8
+
+    hashes = F.transform(shingles(text, k), md5_hex8)
+    return F.flatten(
+        F.transform(
+            F.array(hashes),
+            # sequence(1, 0) counts DOWN, so a short array needs the guard
+            lambda hs: F.when(
+                F.size(hs) >= w,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(hs) - (w - 1)),
+                    lambda i: F.array_min(F.slice(hs, i, w)),
+                ),
+            ).otherwise(F.array().cast("array<bigint>")),
+        )
+    )
+
+
 def chunk_spans(
     text: Column | str, chunk_size: int = 50, stride: int = 40
 ) -> Column:

@@ -178,6 +178,8 @@ _CODE_CHANGED_ROUND: dict[str, int] = {
     "graph_label_propagation": 19,
     "graph_mass_diffusion": 19,
     "dedup_minhash_estimate": 19,
+    # one micro-batch, 2 state partitions (stream_dedup_events docstring)
+    "stream_dedup_events": 19,
 }
 
 
@@ -2613,7 +2615,13 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark horizon exceeds the bounded corpus span, so the stream's
     first-per-key output projected to the key equals batch DISTINCT —
     an exact oracle for a stateful streaming operator. At scale the
-    horizon bounds the state store; see streaming/events.dedup_stream."""
+    horizon bounds the state store; see streaming/events.dedup_stream.
+
+    Plan shape: ONE micro-batch over 2 state partitions (sized to the
+    ~750 distinct keys). The trailing watermark-flush batch is skipped:
+    append-mode dedup emits a key the first time it sees it, so a
+    batch without data emits nothing, and the 90-day horizon outlasts
+    the replay, so it would evict nothing either."""
     from rs_query_engine_spark.streaming.events import (
         dedup_stream,
         read_events_stream,
@@ -2622,7 +2630,13 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_events_stream(spark, sf_dir)
     out = dedup_stream(ev, ["user_id", "event_type"])
-    res = run_stream_to_memory(out, "stream_dedup_events", output_mode="append")
+    res = run_stream_to_memory(
+        out,
+        "stream_dedup_events",
+        output_mode="append",
+        state_partitions=2,
+        watermark_flush=False,
+    )
     return res.select("user_id", "event_type").distinct()
 
 
@@ -6018,44 +6032,28 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound — the principled plagiarism/near-copy detector. Summarized
     per doc (count + min/max of selected prints) so the result stays
     compact; the (doc, fp) pairs feed an inverted index at scale.
-    Plan shape: one shingle pass, per-doc window min (partitions by
-    doc — distributes freely), partial-agg rollup; no shuffle beyond
-    the doc-id window."""
-    from pyspark.sql import Window
+    Plan shape: ``spread`` (round-robin) and ONE map-side projection —
+    no lineage cut, no Window, no aggregate, no hash shuffle. The
+    fingerprint array (``functions/text.winnow``) is bound once as a
+    lambda variable and summarised by array built-ins; the row comes
+    from an explode of a one-element struct array that is empty for
+    docs with fewer than 4 grams. Exploding an expression rather than
+    a column keeps Catalyst from inferring a size filter below the
+    projection, which would evaluate the shingle chain again."""
+    from rs_query_engine_spark.functions.text import winnow
+    from rs_query_engine_spark.sources.corpus import spread
 
-    from rs_query_engine_spark.functions.text import shingles
-
-    d = _t(spark, sf_dir, "documents")
-    # r19 (guide §2.4/§4.4 analogue): stage the gram projection. The
-    # posexplode makes Catalyst infer filter(size(sh) > 0 AND
-    # isnotnull(sh)) and push it below this projection, so the un-staged
-    # spelling evaluates the whole shingle chain THREE times per doc
-    # (twice in the inferred Filter, once in the Project) — an explicit
-    # size-filter is equivalent and was dropped with it. Checkpointing
-    # the small (doc_id, grams) frame runs the chain once; the inferred
-    # filter then reads the stored column. Paired runs: median 0.77,
-    # 6/7 wins (plans/r19/winnow_staged_pairs.txt).
-    sh = truncate_lineage(
-        d.select("doc_id", shingles(F.col("text"), 3).alias("sh"))
+    d = spread(_t(spark, sf_dir, "documents"))
+    stats = F.transform(
+        F.array(winnow(F.col("text"), 3, 4)),
+        lambda fps: F.struct(
+            F.size(F.array_distinct(fps)).cast("bigint").alias("n_fps"),
+            F.array_min(fps).alias("fp_min"),
+            F.array_max(fps).alias("fp_max"),
+        ),
     )
-    g = sh.select(
-        "doc_id",
-        F.size("sh").alias("n_grams"),
-        F.posexplode("sh").alias("i0", "gram"),
-    )
-    h = F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10).cast("bigint")
-    w = Window.partitionBy("doc_id").orderBy("i0").rowsBetween(0, 3)
-    return (
-        g.select(
-            "doc_id", "n_grams", "i0", F.min(h).over(w).alias("fp")
-        )
-        .filter(F.col("i0") <= F.col("n_grams") - 4)
-        .groupBy("doc_id")
-        .agg(
-            F.count_distinct("fp").alias("n_fps"),
-            F.min("fp").alias("fp_min"),
-            F.max("fp").alias("fp_max"),
-        )
+    return d.select(
+        "doc_id", F.inline(F.filter(stats, lambda s: s["n_fps"] > 0))
     )
 
 

@@ -1052,10 +1052,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = ensure_customer_csv(spark, sf_dir)
-    try:
-        spark.dataSource.register(CsvLinesDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(CsvLinesDataSource)
     df = (
         spark.read.format("rsqes_pycsv")
         .schema(CUSTOMER_DDL)
@@ -1532,10 +1529,7 @@ def source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = ensure_customer_csv(spark, sf_dir)
     ensure_python_filter_pushdown(spark)
-    try:
-        spark.dataSource.register(CsvPushdownDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(CsvPushdownDataSource)
     df = (
         spark.read.format("rsqes_pycsv_fp")
         .schema(CUSTOMER_DDL)
@@ -1581,10 +1575,7 @@ def source_python_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
         CsvLinesDataSource,
     )
 
-    try:
-        spark.dataSource.register(CsvLinesDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(CsvLinesDataSource)
     src = _t(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -1706,10 +1697,7 @@ def source_python_stream_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rs_query_engine_spark.streaming.events import run_stream_to_memory
 
     path = ensure_customer_csv(spark, sf_dir)
-    try:
-        spark.dataSource.register(CsvStreamDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(CsvStreamDataSource)
     stream = (
         spark.readStream.format("rsqes_pycsv_stream")
         .schema(CUSTOMER_DDL)
@@ -1761,10 +1749,7 @@ def source_python_stream_partitioned(
     from rs_query_engine_spark.streaming.events import run_stream_to_memory
 
     path = ensure_customer_csv(spark, sf_dir)
-    try:
-        spark.dataSource.register(CsvPartitionedStreamDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(CsvPartitionedStreamDataSource)
     stream = (
         spark.readStream.format("rsqes_pycsv_pstream")
         .schema(CUSTOMER_DDL)

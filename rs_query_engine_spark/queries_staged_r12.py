@@ -549,10 +549,7 @@ def source_python_arrow_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = ensure_customer_csv(spark, sf_dir)
-    try:
-        spark.dataSource.register(CsvArrowDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(CsvArrowDataSource)
     df = (
         spark.read.format("rsqes_pycsv_arrow")
         .schema(_ARROW_CUSTOMER_DDL)
@@ -593,10 +590,7 @@ def source_python_arrow_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = ensure_customer_csv(spark, sf_dir)
-    try:
-        spark.dataSource.register(CsvArrowDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(CsvArrowDataSource)
     df = (
         spark.read.format("rsqes_pycsv_arrow")
         .schema("c_mktsegment string, c_acctbal double")
@@ -1000,10 +994,7 @@ def source_python_arrow_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rs_query_engine_spark.streaming.events import run_stream_to_memory
 
     path = ensure_customer_csv(spark, sf_dir)
-    try:
-        spark.dataSource.register(CsvArrowStreamDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(CsvArrowStreamDataSource)
     stream = (
         spark.readStream.format("rsqes_pycsv_astream")
         .schema(_ARROW_CUSTOMER_DDL)

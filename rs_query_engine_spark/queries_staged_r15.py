@@ -1241,10 +1241,7 @@ def source_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir(spark, "pysink", feed, fresh=False)
     target = os.path.join(base, "out")
     ck = os.path.join(base, "ck")
-    try:
-        spark.dataSource.register(CsvStreamSinkDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(CsvStreamSinkDataSource)
 
     stream = (
         spark.readStream.schema(schema)

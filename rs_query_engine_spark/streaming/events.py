@@ -98,6 +98,7 @@ def drain(
     writer,
     state_partitions: int | None = None,
     available_now: bool = False,
+    watermark_flush: bool = True,
 ) -> None:
     """Start the ``DataStreamWriter`` ``writer``, wait until its bounded
     input is consumed, and stop the query — the one start/wait/stop
@@ -117,11 +118,27 @@ def drain(
     for unbounded sources (rate / rate-micro-batch), where
     processAllAvailable would chase ever-newer offsets forever
     (measured); availableNow snapshots the available offset at start
-    and terminates."""
-    prev = None
+    and terminates.
+
+    ``watermark_flush`` keeps the trailing no-data micro-batch that
+    Spark runs once the last data batch has advanced the watermark.
+    That batch is REQUIRED wherever the watermark finalizes output
+    (windowed or session aggregates in append mode, outer-join null
+    rows) or evicts state a caller reads back (persisted checkpoints):
+    it is the only batch that applies the all-data watermark.
+    ``False`` scopes ``spark.sql.streaming.noDataMicroBatches.enabled``
+    off for the stream's lifetime, which is safe only when no batch
+    without data can emit or evict anything the caller sees — e.g.
+    append-mode ``dropDuplicatesWithinWatermark`` (it emits a key on
+    first sight) with a horizon wider than the replay."""
+    scoped = {}
     if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        scoped["spark.sql.shuffle.partitions"] = str(state_partitions)
+    if not watermark_flush:
+        scoped["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    prev = {key: spark.conf.get(key) for key in scoped}
+    for key, value in scoped.items():
+        spark.conf.set(key, value)
     try:
         if available_now:
             writer = writer.trigger(availableNow=True)
@@ -134,8 +151,8 @@ def drain(
         finally:
             q.stop()
     finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for key, value in prev.items():
+            spark.conf.set(key, value)
 
 
 def run_stream_to_memory(
@@ -144,16 +161,19 @@ def run_stream_to_memory(
     output_mode: str = "complete",
     state_partitions: int = 8,
     available_now: bool = False,
+    watermark_flush: bool = True,
 ) -> DataFrame:
     """Drive a (bounded) streaming query to completion into an
     in-memory sink and return the result table — the test harness for
-    batch/stream parity. ``state_partitions`` (150 users here) and
-    ``available_now`` are :func:`drain`'s."""
+    batch/stream parity. ``state_partitions`` (150 users here),
+    ``available_now`` and ``watermark_flush`` are :func:`drain`'s;
+    keep the flush batch unless every row the sink must hold is
+    emitted by a batch that carries data."""
     spark = stream_df.sparkSession
     writer = stream_df.writeStream.outputMode(output_mode).format(
         "memory"
     ).queryName(query_name)
-    drain(spark, writer, state_partitions, available_now)
+    drain(spark, writer, state_partitions, available_now, watermark_flush)
     return spark.sql(f"SELECT * FROM {query_name}")
 
 

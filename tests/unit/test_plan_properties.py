@@ -1510,3 +1510,31 @@ def test_concurrency_peak_sweep_line_no_self_join(spark):
     assert "Union" in plan
     assert "CartesianProduct" not in plan and "Join" not in plan
     assert "partial_max" in plan
+
+
+def test_winnowing_one_map_side_projection_no_construction_job(spark):
+    """Winnowing summarises each document's fingerprint array inside
+    one projection over the ``spread`` input: building the query runs
+    no Spark job (no lineage cut), and the physical plan has no
+    Window, no aggregate, no hash exchange (only the spread
+    round-robin) and one md5 — each gram is hashed once, not once in
+    an inferred filter and again in the projection."""
+    import re
+
+    sc = spark.sparkContext
+    # the first read of a file in a session runs a schema job; take it
+    # out of the count
+    registry._t(spark, SF_DIR, "documents")
+    group = "pin-text_winnowing_fingerprints"
+    sc.setJobGroup(group, group)
+    try:
+        df = registry.queries()["text_winnowing_fingerprints"](spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert "HashAggregate" not in plan
+    assert re.findall(r"Exchange (\w+)", plan) in ([], ["RoundRobinPartitioning"])
+    assert plan.count("md5(") == 1

@@ -291,14 +291,11 @@ def test_containment_matches_bruteforce(spark, texts):
 def test_winnowing_shared_substring_guarantee(sp):
     """Winnowing's defining property: two documents sharing a
     substring of >= w+k-1 tokens (here 4+3-1 = 6) must share at least
-    one selected fingerprint. Build the (doc, fp) selection directly
-    with the same window-min construction the registry query
-    aggregates over."""
-    from pyspark.sql import Window
-
+    one selected fingerprint. Build the (doc, fp) selection with the
+    same ``winnow`` helper the registry query summarises."""
     import pyspark.sql.functions as F
 
-    from rs_query_engine_spark.functions.text import shingles
+    from rs_query_engine_spark.functions.text import winnow
 
     shared = "alpha bravo charlie delta echo foxtrot"  # 6 shared tokens
     docs = sp.createDataFrame(
@@ -309,17 +306,8 @@ def test_winnowing_shared_substring_guarantee(sp):
         ],
         "doc_id long, text string",
     )
-    g = docs.select(
-        "doc_id",
-        F.size(shingles(F.col("text"), 3)).alias("n_grams"),
-        F.posexplode(shingles(F.col("text"), 3)).alias("i0", "gram"),
-    )
-    h = F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10).cast("bigint")
-    w = Window.partitionBy("doc_id").orderBy("i0").rowsBetween(0, 3)
     sel = (
-        g.select("doc_id", "n_grams", "i0", F.min(h).over(w).alias("fp"))
-        .filter(F.col("i0") <= F.col("n_grams") - 4)
-        .select("doc_id", "fp")
+        docs.select("doc_id", F.explode(winnow(F.col("text"), 3, 4)).alias("fp"))
         .distinct()
         .collect()
     )
@@ -328,6 +316,56 @@ def test_winnowing_shared_substring_guarantee(sp):
         fps.setdefault(r["doc_id"], set()).add(r["fp"])
     assert fps[1] & fps[2], "shared 6-token substring must share a fingerprint"
     assert not (fps[1] & fps[3]) and not (fps[2] & fps[3])
+
+
+def _winnow_summary(text: str, k: int = 3, w: int = 4):
+    """Plain-Python winnowing ground truth: (n_fps, fp_min, fp_max) of
+    the minima of every ``w`` consecutive md5-hashed word ``k``-grams,
+    or None when the text has fewer than ``w`` grams."""
+    import hashlib
+    import re
+
+    toks = re.split(r"\s+", text.lower())
+    grams = [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+    hs = [int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in grams]
+    fps = [min(hs[i : i + w]) for i in range(len(hs) - w + 1)]
+    return (len(set(fps)), min(fps), max(fps)) if fps else None
+
+
+# a small vocabulary, so repeated grams (and repeated window minima)
+# are common; 0 tokens is the empty text
+winnow_docs = st.lists(
+    st.lists(st.sampled_from(VOCAB[:4]), min_size=0, max_size=12).map(" ".join),
+    min_size=1,
+    max_size=8,
+)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(texts=winnow_docs)
+def test_winnowing_query_matches_bruteforce(sp, tmp_path_factory, texts):
+    """The registered ``text_winnowing_fingerprints`` query, run over a
+    documents table of 0-12 token texts, must return exactly the
+    per-doc (n_fps, fp_min, fp_max) of a Python brute force, and no
+    row for a doc with fewer than 4 grams."""
+    from rs_query_engine_spark import queries as registry
+
+    sf = str(tmp_path_factory.mktemp("winnow"))
+    sp.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).write.parquet(f"{sf}/documents.parquet")
+    got = {
+        r["doc_id"]: (r["n_fps"], r["fp_min"], r["fp_max"])
+        for r in registry.queries()["text_winnowing_fingerprints"](sp, sf).collect()
+    }
+    want = {
+        i: s for i, s in enumerate(map(_winnow_summary, texts)) if s is not None
+    }
+    assert got == want
 
 
 def _khop_min(adj: dict, start: int, rounds: int) -> int:

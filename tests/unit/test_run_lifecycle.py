@@ -16,10 +16,13 @@ from rs_query_engine_spark.streaming.events import drain
 @pytest.mark.parametrize("available_now", [False, True])
 def test_drain_leaks_nothing_when_a_batch_fails(spark, tmp_path, available_now):
     """A failing micro-batch surfaces from ``drain``, and neither the
-    stream nor its scoped shuffle partitions survive it."""
+    stream nor its scoped confs (shuffle partitions, no-data batches)
+    survive it."""
     src = str(tmp_path / "src")
     spark.range(3).write.parquet(src)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev_no_data = spark.conf.get(no_data)
 
     def fail(batch_df, batch_id):
         raise RuntimeError("batch failed")
@@ -31,16 +34,23 @@ def test_drain_leaks_nothing_when_a_batch_fails(spark, tmp_path, available_now):
         .option("checkpointLocation", str(tmp_path / "ck"))
     )
     with pytest.raises(Exception, match="batch failed"):
-        drain(spark, writer, state_partitions=3, available_now=available_now)
+        drain(
+            spark,
+            writer,
+            state_partitions=3,
+            available_now=available_now,
+            watermark_flush=False,
+        )
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert spark.conf.get(no_data) == prev_no_data
     assert spark.streams.active == []
 
 
 def test_only_the_lifecycle_modules_own_tmp_dirs_and_streams():
     """Over the whole package: only ``sources/artifacts.py`` and the
     stream shim in ``sources/corpus.py`` place directories under the
-    temp dir, and only ``streaming/events.py`` waits on a stream or
-    sets the shuffle partitions."""
+    temp dir, and only ``streaming/events.py`` waits on a stream,
+    sets the shuffle partitions or touches the no-data batch switch."""
     pkg = Path(registry.__file__).resolve().parent
     files = sorted(pkg.rglob("*.py"))
 
@@ -54,4 +64,5 @@ def test_only_the_lifecycle_modules_own_tmp_dirs_and_streams():
     assert owners(
         r"processAllAvailable\(|awaitTermination\("
         r'|conf\.set\(\s*"spark\.sql\.shuffle\.partitions"'
+        r"|noDataMicroBatches"
     ) == ["streaming/events.py"]

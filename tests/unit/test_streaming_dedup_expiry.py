@@ -138,3 +138,76 @@ def test_duplicate_in_next_batch_is_dropped_despite_advanced_watermark(spark):
             ("Z", _t(20)),
         ]
     )
+
+
+def _count_progress(spark, query_name: str, run):
+    """Call ``run()`` and return ``(progress events, its result)``: how
+    many progress events (one per micro-batch) a
+    ``StreamingQueryListener`` saw for ``query_name``."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.n = 0
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            if event.progress.name == query_name:
+                self.n += 1
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        result = run()
+        # listener events are delivered asynchronously; wait for the bus
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    return listener.n, result
+
+
+@pytest.mark.parametrize("watermark_flush, batches", [(False, 1), (True, 2)])
+def test_dedup_without_flush_batch_is_batch_distinct_in_one_batch(
+    spark, tmp_path, watermark_flush, batches
+):
+    """Append-mode dedup emits a key the first time it sees it, so
+    skipping the trailing no-data batch (``watermark_flush=False``)
+    leaves the result equal to batch DISTINCT and runs ONE micro-batch;
+    the default keeps the watermark-flush batch (two)."""
+    from rs_query_engine_spark.streaming.events import (
+        dedup_stream,
+        run_stream_to_memory,
+    )
+
+    feed = str(tmp_path / "feed")
+    spark.createDataFrame(
+        [
+            ("a", _t(1)),
+            ("b", _t(1, 5)),
+            ("a", _t(2)),
+            ("c", _t(3)),
+            ("b", _t(4)),
+            ("a", _t(5)),
+        ],
+        SCHEMA,
+    ).coalesce(1).write.parquet(feed)
+    name = f"dedup_one_batch_{watermark_flush}".lower()
+    out = dedup_stream(spark.readStream.schema(SCHEMA).parquet(feed), ["k"])
+    n, rows = _count_progress(
+        spark,
+        name,
+        lambda: run_stream_to_memory(
+            out, name, output_mode="append", watermark_flush=watermark_flush
+        ).collect(),
+    )
+    assert n == batches
+    want = spark.read.parquet(feed).select("k").distinct().collect()
+    assert sorted(r["k"] for r in rows) == sorted(r["k"] for r in want)
