@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rs_query_engine_spark.queries import _t, register
+from rs_query_engine_spark.session import register_once
 
 # ---------------------------------------------------------------------------
 # Timer-driven TTL flush (applyInPandasWithState + EventTimeTimeout)
@@ -1052,7 +1053,11 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = ensure_customer_csv(spark, sf_dir)
-    spark.dataSource.register(CsvLinesDataSource)
+    register_once(
+        spark,
+        CsvLinesDataSource.name(),
+        lambda: spark.dataSource.register(CsvLinesDataSource),
+    )
     df = (
         spark.read.format("rsqes_pycsv")
         .schema(CUSTOMER_DDL)

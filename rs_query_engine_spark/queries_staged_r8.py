@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from rs_query_engine_spark.session import truncate_lineage
+from rs_query_engine_spark.session import register_once, truncate_lineage
 
 from rs_query_engine_spark.queries import _t, register
 
@@ -441,7 +441,11 @@ def udtf_lang_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
             if self.lang is not None:
                 yield self.src, self.lang, self.start, self.n
 
-    spark.udtf.register("rsqes_lang_runs", LangRuns)
+    register_once(
+        spark,
+        "rsqes_lang_runs",
+        lambda: spark.udtf.register("rsqes_lang_runs", LangRuns),
+    )
     _t(spark, sf_dir, "documents").createOrReplaceTempView("rsqes_udtf_docs")
     return spark.sql(
         """

@@ -25,6 +25,15 @@ matters (``CsvArrowDataSource`` below is exactly that). What the
 family demonstrates is the part that cannot be faked: partition
 planning, pushdown negotiation, executor-side pure-Python reads, and
 exact value round-trip through a user-defined format.
+
+Importing this module imports ``rs_query_engine_spark.pyworker``, which
+stops a reused Python worker from re-reading pyspark's archives on
+every call. Task workers get that guard from their daemon module
+(``session.get_spark``), but the data-source planner workers
+(``create_data_source``, ``plan_data_source_read``,
+``lookup_data_sources``) always start plain ``pyspark.daemon``; they
+unpickle the source class, so this import installs the guard there
+and a reused planner worker skips the re-reads from then on.
 """
 
 from __future__ import annotations
@@ -44,6 +53,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from rs_query_engine_spark import pyworker  # noqa: F401  (installs the guard)
 
 
 class CsvLinesDataSource(DataSource):

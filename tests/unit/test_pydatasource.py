@@ -306,3 +306,15 @@ def test_stream_sink_commit_is_replay_idempotent(tmp_path):
     w.abort(m4, 9)
     assert not [f for f in os.listdir(path) if f.endswith(".staged")]
     assert len([f for f in os.listdir(path) if f.endswith(".csv")]) == 3
+
+
+def test_register_once_registers_once_per_session(spark):
+    """``session.register_once`` skips a repeat in the same session and
+    registers again in a new one."""
+    from rs_query_engine_spark.session import register_once
+
+    calls = []
+    other = spark.newSession()
+    for session in (spark, spark, other, other):
+        register_once(session, "rsqes_once_probe", lambda: calls.append(session))
+    assert calls == [spark, other]

@@ -46,23 +46,32 @@ def test_drain_leaks_nothing_when_a_batch_fails(spark, tmp_path, available_now):
     assert spark.streams.active == []
 
 
+def owners(pattern: str) -> list[str]:
+    """The package modules, relative to the package, whose text matches."""
+    pkg = Path(registry.__file__).resolve().parent
+    pat = re.compile(pattern)
+    return [
+        p.relative_to(pkg).as_posix()
+        for p in sorted(pkg.rglob("*.py"))
+        if pat.search(p.read_text())
+    ]
+
+
 def test_only_the_lifecycle_modules_own_tmp_dirs_and_streams():
     """Over the whole package: only ``sources/artifacts.py`` and the
     stream shim in ``sources/corpus.py`` place directories under the
     temp dir, and only ``streaming/events.py`` waits on a stream,
     sets the shuffle partitions or touches the no-data batch switch."""
-    pkg = Path(registry.__file__).resolve().parent
-    files = sorted(pkg.rglob("*.py"))
-
-    def owners(pattern: str) -> list[str]:
-        pat = re.compile(pattern)
-        return [
-            p.relative_to(pkg).as_posix() for p in files if pat.search(p.read_text())
-        ]
-
     assert owners(r"gettempdir\(") == ["sources/artifacts.py", "sources/corpus.py"]
     assert owners(
         r"processAllAvailable\(|awaitTermination\("
         r'|conf\.set\(\s*"spark\.sql\.shuffle\.partitions"'
         r"|noDataMicroBatches"
     ) == ["streaming/events.py"]
+
+
+def test_only_the_session_picks_the_daemon_and_only_pyworker_wraps_zipimport():
+    """The Python workers' daemon module is chosen in one place, and the
+    zip-importer guard lives in one module."""
+    assert owners(r"spark\.python\.daemon\.module") == ["session.py"]
+    assert owners(r"zipimport") == ["pyworker.py"]
