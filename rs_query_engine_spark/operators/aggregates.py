@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["sum_", "min_", "max_", "avg", "count", "count_star", "count_distinct"]
+__all__ = ["sum_", "min_", "max_", "avg", "count", "count_star"]
 
 
 def _c(expr: Column | str) -> Column:
@@ -67,12 +67,6 @@ def count(expr: Column | str, name: str | None = None) -> Column:
 def count_star(name: str | None = None) -> Column:
     """COUNT(*) — beyond-reference (the reference only has COUNT(col))."""
     out = F.count(F.lit(1))
-    return out.alias(name) if name else out
-
-
-def count_distinct(expr: Column | str, name: str | None = None) -> Column:
-    """COUNT(DISTINCT col) — beyond-reference (SURVEY §2.6)."""
-    out = F.count_distinct(_c(expr))
     return out.alias(name) if name else out
 
 

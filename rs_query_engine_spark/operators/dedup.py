@@ -73,15 +73,16 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # smallest prime above 2^32 — modulus of the affine MinHash family
 MINHASH_PRIME = 4294967311
 
+# word n-gram width of every shingle-set operator in this module
+SHINGLE_N = 3
 
-def minhash_signature(
-    text: Column, num_hashes: int = 16, shingle_n: int = 3
-) -> Column:
-    """MinHash signature (array<bigint>, length ``num_hashes``) over
-    word ``shingle_n``-gram shingles.
+
+def minhash_signature(text: Column) -> Column:
+    """MinHash signature (array<bigint>, length ``MINHASH_NUM_HASHES``)
+    over word ``SHINGLE_N``-gram shingles.
 
     Hash family: ONE md5 base hash per shingle (first 8 hex chars →
-    bigint < 2^32), then ``num_hashes`` affine perturbations
+    bigint < 2^32), then ``MINHASH_NUM_HASHES`` affine perturbations
     ``h_i(x) = ((2i+1)·x + (7919i+17)) mod MINHASH_PRIME`` — the
     textbook universal family, deterministic and oracle-expressible.
 
@@ -99,7 +100,7 @@ def minhash_signature(
     collides with real hashes < 2^32)."""
 
     return _minhash_from_shingles(
-        F.array_distinct(shingles(text, shingle_n)), num_hashes
+        F.array_distinct(shingles(text, SHINGLE_N)), MINHASH_NUM_HASHES
     )
 
 
@@ -195,15 +196,11 @@ MINHASH_BANDS = 4
 MINHASH_MAX_BUCKET = 1000
 
 
-def minhash_band_keys(
-    sig: Column,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    bands: int = MINHASH_BANDS,
-) -> Column:
+def minhash_band_keys(sig: Column) -> Column:
     """Explodable array of (band, key) structs from a MinHash
-    signature array: band b's key concatenates its ``num_hashes //
-    bands`` signature components with '-'."""
-    rows = num_hashes // bands
+    signature array: band b's key concatenates its ``MINHASH_NUM_HASHES
+    // MINHASH_BANDS`` signature components with '-'."""
+    rows = MINHASH_NUM_HASHES // MINHASH_BANDS
     return F.array(
         *[
             F.struct(
@@ -212,7 +209,7 @@ def minhash_band_keys(
                     "-", *[sig[b * rows + r] for r in range(rows)]
                 ).alias("key"),
             )
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ]
     )
 
@@ -242,19 +239,15 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    bands: int = MINHASH_BANDS,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.5,
     max_bucket: int = MINHASH_MAX_BUCKET,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH + exact-Jaccard
     verification.
 
-    Pipeline: signature projection → explode into ``bands`` band keys
-    → self-equi-join on (band, key) → distinct candidate pairs →
-    exact Jaccard on shingle sets → threshold filter. Returns
-    (id_a, id_b, jaccard) with id_a < id_b.
+    Pipeline: signature projection → explode into ``MINHASH_BANDS``
+    band keys → self-equi-join on (band, key) → distinct candidate
+    pairs → exact Jaccard on shingle sets → Jaccard ≥ 0.5 filter.
+    Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
     # stage shingles in their own projection so the expensive shingle
     # construction runs once per row (CollapseProject keeps expensive
@@ -269,7 +262,7 @@ def minhash_lsh_pairs(
         spread(df)
         .select(
             F.col(id_col).alias("_id"),
-            F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("_sh"),
+            F.array_distinct(shingles(F.col(text_col), SHINGLE_N)).alias("_sh"),
         )
         .transform(truncate_lineage)
     )
@@ -277,13 +270,11 @@ def minhash_lsh_pairs(
     # would all collide into one degenerate bucket (and 0/0 Jaccard);
     # they can never clear a positive threshold, so drop them here
     sig = sh_df.filter(F.size("_sh") > 0).select(
-        "_id", _minhash_from_shingles(F.col("_sh"), num_hashes).alias("_sig")
+        "_id", _minhash_from_shingles(F.col("_sh"), MINHASH_NUM_HASHES).alias("_sig")
     )
     banded = sig.select(
         "_id",
-        F.explode(minhash_band_keys(F.col("_sig"), num_hashes, bands)).alias(
-            "bk"
-        ),
+        F.explode(minhash_band_keys(F.col("_sig"))).alias("bk"),
     ).select("_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
     # candidate generation: bucket by (band, key) and pair WITHIN each
@@ -300,17 +291,22 @@ def minhash_lsh_pairs(
     cand = b.join(a.join(pairs, "id_a"), "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    # try_divide: defensive against 0/0 if a caller lowers the
-    # threshold to 0 and empty sets reach verification
+    # try_divide: defensive against 0/0 should empty sets ever reach
+    # verification
     jac = F.try_divide(inter.cast("double"), union)
     return (
         cand.select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        .filter(F.col("jaccard") >= 0.5)
     )
 
 
-def simhash(text: Column, bits: int = 32) -> Column:
-    """SimHash signature (bigint, ``bits`` wide) over word tokens.
+# SimHash signature width; the DuckDB oracles' signature SQL
+# (queries._simhash_sql) reads it too
+SIMHASH_BITS = 32
+
+
+def simhash(text: Column) -> Column:
+    """SimHash signature (bigint, ``SIMHASH_BITS`` wide) over word tokens.
 
     Per token: 32-bit md5-derived hash; signature bit j is set when
     the sum over tokens of (bit_j ? 1 : -1) is positive — computed as
@@ -330,6 +326,7 @@ def simhash(text: Column, bits: int = 32) -> Column:
     per query construction at 32 bits). Bit j is extracted as
     ``floor(x / 2^j) % 2`` because shiftright needs a literal shift,
     and j is a lambda variable here; 2^j is double-exact for j < 53."""
+    bits = SIMHASH_BITS
     toks = tokens(text)
 
     def bits_of(x: Column) -> Column:
@@ -369,19 +366,15 @@ def simhash_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    bits: int = 32,
-    blocks: int = 4,
-    max_hamming: int = 3,
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Near-duplicate pairs via SimHash + hamming-block LSH.
 
-    Pigeonhole: two signatures within hamming distance ``blocks - 1``
-    must agree on at least one of ``blocks`` equal-width bit blocks, so
-    an equi-join on (block_idx, block_value) retrieves every pair with
-    hamming ≤ ``max_hamming`` (default 3 = blocks-1, the guaranteed
-    radius) without an all-pairs join. Verification is exact:
-    ``bit_count(sig_a XOR sig_b) <= max_hamming``.
+    Pigeonhole: two signatures within hamming distance 3 must agree on
+    at least one of 4 equal-width bit blocks, so an equi-join on
+    (block_idx, block_value) retrieves every pair with hamming ≤ 3
+    (blocks-1, the guaranteed radius) without an all-pairs join.
+    Verification is exact: ``bit_count(sig_a XOR sig_b) <= 3``.
 
     Scale notes: the signature is ONE bigint, so unlike the MinHash
     pipeline (where shingle sets must stay out of the shuffle) the
@@ -389,15 +382,16 @@ def simhash_pairs(
     32-bit signatures a block is 8 bits = 256 distinct bucket values
     per block — fine for corpus-sized tests, but a petabyte corpus
     needs 64-bit signatures with 6-8 blocks so bucket count scales;
-    the construction is parameterized for exactly that. ``max_bucket``
+    the block arithmetic below follows the two widths. ``max_bucket``
     caps the quadratic within-bucket pair expansion against degenerate
     buckets (e.g. empty docs all hashing to 0): oversized buckets are
     skipped — their members can still pair via their other blocks.
     """
-    block_bits = bits // blocks
+    blocks, max_hamming = 4, 3
+    block_bits = SIMHASH_BITS // blocks
     mask = (1 << block_bits) - 1
     sig_df = spread(df).select(
-        F.col(id_col).alias("_id"), simhash(F.col(text_col), bits).alias("_sig")
+        F.col(id_col).alias("_id"), simhash(F.col(text_col)).alias("_sig")
     )
     banded = sig_df.select(
         "_id",
@@ -463,23 +457,28 @@ def hyperplane_signs(num_planes: int, dim: int) -> list[list[float]]:
     ]
 
 
+# Hyperplane-LSH shape: HLSH_NUM_PLANES sign bits over HLSH_DIM-wide
+# embeddings, split into HLSH_BANDS band keys; the DuckDB oracle's
+# band keys (queries._hlsh_band_values) read the same constants
+HLSH_NUM_PLANES = 32
+HLSH_BANDS = 8
+HLSH_DIM = 64
+
+
 def embedding_lsh_pairs(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    dim: int = 64,
-    num_planes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.4,
+    dim: int = HLSH_DIM,
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Embedding near-dup pairs via random-hyperplane (sign) LSH:
     candidates from a banded equi-join on sign-bit block keys, verified
-    with exact cosine ≥ ``threshold`` — never an all-pairs self-join.
+    with exact cosine ≥ 0.4 — never an all-pairs self-join.
 
     Sign bit i = (v · r_i ≥ 0) for deterministic ±1 hyperplanes r_i
-    (:func:`hyperplane_signs`); ``num_planes`` bits split into
-    ``bands`` keys. P[bit match] = 1 − θ/π, so recall per pair is
+    (:func:`hyperplane_signs`); ``HLSH_NUM_PLANES`` bits split into
+    ``HLSH_BANDS`` keys. P[bit match] = 1 − θ/π, so recall per pair is
     1 − (1 − p^(planes/bands))^bands — band width trades recall
     against bucket selectivity.
 
@@ -493,6 +492,7 @@ def embedding_lsh_pairs(
     folds per VECTOR, not per pair)."""
     from rs_query_engine_spark.operators.similarity import dot, norm_sq
 
+    num_planes, bands = HLSH_NUM_PLANES, HLSH_BANDS
     planes = hyperplane_signs(num_planes, dim)
     rows = num_planes // bands
     v = F.col(vec_col).cast("array<double>")
@@ -587,28 +587,20 @@ def embedding_lsh_pairs(
     # never force-broadcast the corpus side — it is the 100-TB side)
     cand = b.join(a.join(pairs, "id_a"), "id_b")
     cos = F.try_divide(dot(F.col("_va"), F.col("_vb")), F.col("_na") * F.col("_nb"))
-    return cand.select("id_a", "id_b", cos.alias("cos")).filter(
-        F.col("cos") >= threshold
-    )
+    return cand.select("id_a", "id_b", cos.alias("cos")).filter(F.col("cos") >= 0.4)
 
 
 # The blocked n-gram Jaccard edge threshold: ngram_jaccard_pairs'
-# default and the neighbour rule of graph.block_label_propagation.
+# filter and the neighbour rule of graph.block_label_propagation.
 NGRAM_JACCARD_THRESHOLD = 0.3
 
 
-def blocked_shingles(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    prefix_tokens: int = 8,
-) -> DataFrame:
+def blocked_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The ``(_id, _blk, _sh)`` projection every blocked n-gram Jaccard
-    consumer reads, cut once: ``_blk`` is the first ``prefix_tokens``
-    tokens (the blocking key), ``_sh`` the distinct ``shingle_n``-gram
-    shingles. Documents with no shingles are kept (``_sh`` empty);
-    each consumer decides what they mean."""
+    consumer reads, cut once: ``_blk`` is the first 8 tokens (the
+    blocking key), ``_sh`` the distinct ``SHINGLE_N``-gram shingles.
+    Documents with no shingles are kept (``_sh`` empty); each consumer
+    decides what they mean."""
     # stage the projection BEFORE any size-filter (r19, guide §2.4):
     # Catalyst pushes filter(size(_sh) > 0) below this projection, so
     # the un-staged spelling ran the shingle chain twice per doc (once
@@ -616,8 +608,8 @@ def blocked_shingles(
     # the chain runs once and the filter reads the stored column.
     return spread(df).select(
         F.col(id_col).alias("_id"),
-        F.array_join(F.slice(tokens(F.col(text_col)), 1, prefix_tokens), " ").alias("_blk"),
-        F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("_sh"),
+        F.array_join(F.slice(tokens(F.col(text_col)), 1, 8), " ").alias("_blk"),
+        F.array_distinct(shingles(F.col(text_col), SHINGLE_N)).alias("_sh"),
     ).transform(truncate_lineage)
 
 
@@ -629,22 +621,14 @@ def shingle_jaccard(sh_a: str, sh_b: str) -> str:
     return f"try_divide(CAST({inter} AS DOUBLE), size({sh_a}) + size({sh_b}) - {inter})"
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    prefix_tokens: int = 8,
-    jaccard_threshold: float = NGRAM_JACCARD_THRESHOLD,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs with prefix *blocking*: only
-    doc pairs sharing their first ``prefix_tokens`` tokens are
+def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Exact n-gram Jaccard near-dup pairs (Jaccard ≥
+    ``NGRAM_JACCARD_THRESHOLD``) with prefix *blocking*: only doc pairs
+    sharing their first 8 tokens (:func:`blocked_shingles`) are
     compared — an equi-join on the blocking key instead of a cross
     join (the blocking key can be swapped for any cheap canopy)."""
     # empty docs all share block "" → degenerate bucket + 0/0 Jaccard
-    t = blocked_shingles(df, id_col, text_col, shingle_n, prefix_tokens).filter(
-        F.size("_sh") > 0
-    )
+    t = blocked_shingles(df, id_col, text_col).filter(F.size("_sh") > 0)
     # bucket by blocking key and pair within buckets (same shape as
     # minhash_lsh_pairs): one shingle pass + one shuffle instead of a
     # self-join that recomputes and reshuffles the shingle projection
@@ -661,7 +645,7 @@ def ngram_jaccard_pairs(
         pairs.select(
             "id_a", "id_b", F.expr(shingle_jaccard("sh_a", "sh_b")).alias("jaccard")
         )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        .filter(F.col("jaccard") >= NGRAM_JACCARD_THRESHOLD)
     )
 
 
@@ -669,7 +653,6 @@ def containment_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_n: int = 3,
     threshold: float = 0.8,
     probe_frac: float = 0.2,
     max_df: int = 1000,
@@ -721,7 +704,7 @@ def containment_pairs(
         spread(df)
         .select(
             F.col(id_col).alias("_id"),
-            F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("_sh"),
+            F.array_distinct(shingles(F.col(text_col), SHINGLE_N)).alias("_sh"),
         )
         .filter(F.size("_sh") > 0)
         .transform(truncate_lineage)  # consumed 3× (probes, index, verify)
@@ -776,8 +759,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.3,
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "centroid_vec",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al., 2023):
     cluster the embedding space, then drop within-cluster near-
@@ -786,7 +767,8 @@ def semantic_dedup(
     lexical method in this module (exact/MinHash/SimHash/containment)
     structurally misses.
 
-    Returns (id, centroid_id, kept): ``kept`` is false iff a SMALLER id
+    ``centroids`` is a ``(centroid_id, centroid_vec)`` frame. Returns
+    (id, centroid_id, kept): ``kept`` is false iff a SMALLER id
     in the SAME cluster has cosine ≥ ``threshold`` — the greedy
     keep-smallest-id policy, matching the paper's one-representative-
     per-duplicate-group semantics pairwise (transitive chains are the
@@ -811,24 +793,22 @@ def semantic_dedup(
     # measured in the plan — the BroadcastNestedLoopJoin + rank subtree
     # appeared 3× before, 1× after; same rationale as the minhash
     # shingle staging)
-    a = assign_centroids(
-        corpus, centroids, id_col, vec_col, centroid_id, centroid_vec
-    ).transform(truncate_lineage)
+    a = assign_centroids(corpus, centroids, id_col, vec_col).transform(truncate_lineage)
     x = a.select(
         F.col(id_col).alias("_xid"),
         F.col("_v").alias("_xv"),
         F.col("_n").alias("_xn"),
-        F.col(centroid_id),
+        F.col("centroid_id"),
     )
     y = a.select(
         F.col(id_col).alias("_yid"),
         F.col("_v").alias("_yv"),
         F.col("_n").alias("_yn"),
-        F.col(centroid_id),
+        F.col("centroid_id"),
     )
     cos = F.try_divide(dot(F.col("_xv"), F.col("_yv")), F.col("_xn") * F.col("_yn"))
     dropped = (
-        x.join(y, [centroid_id])
+        x.join(y, ["centroid_id"])
         .filter(F.col("_yid") < F.col("_xid"))
         .filter(cos >= F.lit(threshold))
         .select(F.col("_xid").alias("_did"))
@@ -838,7 +818,7 @@ def semantic_dedup(
         a.join(dropped, a[id_col] == dropped["_did"], "left")
         .select(
             F.col(id_col),
-            F.col(centroid_id),
+            F.col("centroid_id"),
             F.col("_did").isNull().alias("kept"),
         )
     )

@@ -32,19 +32,14 @@ from pyspark.sql import functions as F
 from rs_query_engine_spark.session import truncate_lineage
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Connected components of an undirected edge list.
+def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
+    """Connected components of an undirected ``(id_a, id_b)`` edge list.
 
     Returns (node, component) where component = min node id reachable.
     Nodes appearing only in edges are covered; isolated nodes are the
     caller's union (they are their own component by definition).
     """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    e = edges.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
     # undirected: propagate both ways each round
     sym = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
     sym = sym.transform(truncate_lineage)
@@ -110,12 +105,7 @@ def connected_components(
     return labels
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iterations: int = 50,
-) -> DataFrame:
+def connected_components_star(edges: DataFrame, max_iterations: int = 50) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14). Same contract as :func:`connected_components` —
@@ -134,7 +124,7 @@ def connected_components_star(
     class as the 1-hop variant's changed-label count.
     """
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
         .transform(truncate_lineage)
@@ -208,18 +198,14 @@ def connected_components_star(
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Consolidate near-dup pairs into clusters: (doc_id, cluster_id,
-    cluster_size) with cluster_id = min doc id in the component —
-    the keep-candidate under a keep-smallest policy. Components come
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
+    """Consolidate ``(id_a, id_b)`` near-dup pairs into clusters:
+    (doc_id, cluster_id, cluster_size) with cluster_id = min doc id in
+    the component — the keep-candidate under a keep-smallest policy. Components come
     from the O(log n)-round large-star/small-star propagation
     (diameter-proof, the scale default).
     """
-    comp = connected_components_star(pairs, src=id_a, dst=id_b)
+    comp = connected_components_star(pairs)
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "comp").select(
         F.col("node").alias("doc_id"),
@@ -232,12 +218,9 @@ def bfs_levels(
     edges: DataFrame,
     seeds: DataFrame,
     max_depth: int,
-    src: str = "id_a",
-    dst: str = "id_b",
-    node_col: str = "node",
 ) -> DataFrame:
-    """Multi-source BFS over an undirected edge list: (node, dist)
-    with dist = hop count from the NEAREST seed, bounded by
+    """Multi-source BFS over an undirected ``(id_a, id_b)`` edge list:
+    (node, dist) with dist = hop count from the NEAREST seed, bounded by
     ``max_depth``. ``seeds`` is a one-column frame of start nodes
     (emitted at dist 0 even when isolated).
 
@@ -252,7 +235,7 @@ def bfs_levels(
     depth bound is what makes blast-radius queries predictable —
     O(depth) shuffles over frontier-sized frames, never a full
     closure."""
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    e = edges.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
     sym = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
     sym = sym.transform(truncate_lineage)
     n_edges = sym.count()
@@ -260,7 +243,7 @@ def bfs_levels(
     sym = sym.coalesce(p)
 
     dist = (
-        seeds.select(F.col(seeds.columns[0]).alias(node_col))
+        seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("int"))
         .coalesce(p)
@@ -269,10 +252,10 @@ def bfs_levels(
     frontier = dist
     for k in range(1, max_depth + 1):
         nxt = (
-            sym.join(frontier, sym["d"] == frontier[node_col])
-            .select(F.col("s").alias(node_col))
+            sym.join(frontier, sym["d"] == frontier["node"])
+            .select(F.col("s").alias("node"))
             .distinct()
-            .join(dist.select(node_col), node_col, "left_anti")
+            .join(dist.select("node"), "node", "left_anti")
             .withColumn("dist", F.lit(k).cast("int"))
             .coalesce(p)
             .transform(truncate_lineage)
@@ -289,15 +272,13 @@ def min_label_propagation(
     edges: DataFrame,
     rounds: int,
     node_col: str = "doc_id",
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """BOUNDED synchronous min-label propagation: exactly ``rounds``
     iterations of ``label(v) ← min(label(v), min over in-neighbors'
     labels)`` from the identity labeling — the fixed-budget variant
     of :func:`connected_components` (which runs the same recurrence
-    to convergence). ``edges`` is DIRECTED as given (pass both
-    directions for the undirected semantics the dedup graph wants);
+    to convergence). ``edges`` ``(src, dst)`` is DIRECTED as given (pass
+    both directions for the undirected semantics the dedup graph wants);
     nodes absent from ``edges`` keep their own id, so the output is a
     total ``(node_col, label)`` labeling of ``nodes``.
 
@@ -319,7 +300,7 @@ def min_label_propagation(
     # materialize the edge list ONCE: it is re-joined every round, and
     # without the cut each round would recompute its whole upstream
     # (for the dedup graph, the full shingle+block+verify pipeline)
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).transform(
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d")).transform(
         truncate_lineage
     )
     for _ in range(rounds):
@@ -411,8 +392,6 @@ def integer_mass_diffusion(
     rounds: int,
     init_mass: int,
     node_col: str = "doc_id",
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """EXACT-INTEGER mass diffusion — the weighted twin of
     :func:`min_label_propagation` (and the decayed counterpart of
@@ -430,8 +409,8 @@ def integer_mass_diffusion(
     'contamination budget' (takedown blast radius with decay, related-
     document ranking by hop-discounted proximity).
 
-    ``edges`` is directed as given (pass both directions for
-    undirected semantics). Nodes reachable but absent from ``seeds``
+    ``edges`` ``(src, dst)`` is directed as given (pass both directions
+    for undirected semantics). Nodes reachable but absent from ``seeds``
     enter with mass 0. Output: ``(node_col, mass)`` for every node
     that ever held mass, including seeds that diffused to zero.
 
@@ -441,7 +420,7 @@ def integer_mass_diffusion(
     the vertex id; cost is rounds × O(|E|) with no frontier state.
     Choose ``init_mass`` a power of two ≥ 2^rounds so early rounds
     don't floor to zero."""
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).transform(
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d")).transform(
         truncate_lineage
     )
     deg = e.groupBy(F.col("s").alias(node_col)).agg(

@@ -35,6 +35,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from rs_query_engine_spark.operators.similarity import (
+    IVF_PQ_NPROBE,
+    PQ_NUM_CENTROIDS,
+    PQ_NUM_SUB,
+    PQ_SUB_DIM,
     assign_centroids,
     dot,
     norm_sq,
@@ -131,14 +135,12 @@ def probe_ivf_index(
     queries: DataFrame,
     k: int,
     nprobe: int = 2,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
     tombstones: DataFrame | None = None,
 ) -> DataFrame:
-    """Top-``k`` per query against the PERSISTED index: assign each
-    query to its ``nprobe`` nearest centroids (centroid table read
-    from the artifact — 8 rows, broadcast), then score only the
-    probed lists' stored (v, n) rows. Corpus vectors, norms and
+    """Top-``k`` per ``(query_id, query_vec)`` query against the
+    PERSISTED index: assign each query to its ``nprobe`` nearest
+    centroids (centroid table read from the artifact — 8 rows,
+    broadcast), then score only the probed lists' stored (v, n) rows. Corpus vectors, norms and
     assignments are never recomputed — per-probe cost is
     O(batch × probed-list sizes), independent of how many times the
     index is queried. The probe side (queries × nprobe, a bounded ANN
@@ -151,11 +153,8 @@ def probe_ivf_index(
     per-vector independent, so filter-then-score equals a fresh index
     over the surviving corpus; the anti-join side is a tiny takedown
     list AQE broadcasts)."""
-    scored = score_ivf_probe(
-        spark, root, queries, nprobe=nprobe, query_id=query_id,
-        query_vec=query_vec, tombstones=tombstones,
-    )
-    return rank_ivf_topk(scored, k, query_id=query_id)
+    scored = score_ivf_probe(spark, root, queries, nprobe=nprobe, tombstones=tombstones)
+    return rank_ivf_topk(scored, k)
 
 
 def score_ivf_probe(
@@ -163,8 +162,6 @@ def score_ivf_probe(
     root: str,
     queries: DataFrame,
     nprobe: int = 2,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
     tombstones: DataFrame | None = None,
 ) -> DataFrame:
     """The SCORING prefix of ``probe_ivf_index`` — (query_id, vec_id,
@@ -179,9 +176,9 @@ def score_ivf_probe(
         "centroid_id", F.col("cv").alias("centroid_vec")
     )
     q_assigned = assign_centroids(
-        queries, cent, query_id, query_vec, nprobe=nprobe
+        queries, cent, "query_id", "query_vec", nprobe=nprobe
     ).select(
-        F.col(query_id),
+        F.col("query_id"),
         F.col("_v").alias("_qv"),
         F.col("_n").alias("_qn"),
         F.col("centroid_id"),
@@ -190,7 +187,7 @@ def score_ivf_probe(
     if tombstones is not None:
         assign = assign.join(tombstones.select("vec_id"), "vec_id", "left_anti")
     return assign.join(F.broadcast(q_assigned), "centroid_id").select(
-        query_id,
+        "query_id",
         "vec_id",
         F.try_divide(dot(F.col("v"), F.col("_qv")), F.col("n") * F.col("_qn")).alias(
             "cos"
@@ -198,10 +195,10 @@ def score_ivf_probe(
     )
 
 
-def rank_ivf_topk(scored: DataFrame, k: int, query_id: str = "query_id") -> DataFrame:
+def rank_ivf_topk(scored: DataFrame, k: int) -> DataFrame:
     """Top-``k`` ranking over a ``score_ivf_probe`` frame — the suffix
     of ``probe_ivf_index``, split out for the same staging reason."""
-    w = Window.partitionBy(query_id).orderBy(F.col("cos").desc(), F.col("vec_id"))
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
@@ -345,7 +342,7 @@ def read_ivf_tombstones(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.parquet(os.path.join(root, "tombs")).select("vec_id")
 
 
-def ensure_trained_ivf_index(spark: SparkSession, sf_dir: str, k: int = N_SEED) -> str:
+def ensure_trained_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """The PRODUCTION centroid rule: the same persisted-index build,
     but with TRAINED k-means centers (``similarity.kmeans_centroids``,
     seeded Spark-ML Lloyd's) instead of the deterministic seed set —
@@ -353,7 +350,8 @@ def ensure_trained_ivf_index(spark: SparkSession, sf_dir: str, k: int = N_SEED) 
     nothing else changes (same assign/cent layout, same probes, same
     tombstone path). Values aren't oracle-expressible (Lloyd's is
     iterative), so the staged query verifies exact INVARIANTS instead;
-    the artifact itself makes training a once-per-generation cost."""
+    the artifact itself makes training a once-per-generation cost.
+    Trains ``N_SEED`` centers, as many as the seed set has."""
     import hashlib
     import inspect
 
@@ -366,10 +364,10 @@ def ensure_trained_ivf_index(spark: SparkSession, sf_dir: str, k: int = N_SEED) 
 
     def write(tmp: str) -> None:
         e = spark.read.parquet(src)
-        _write_ivf(tmp, e, kmeans_centroids(e, k))
+        _write_ivf(tmp, e, kmeans_centroids(e, N_SEED))
 
     return ensure_artifact(
-        src, "ivftrn", f"k={k}|metric=cos|fam={fam}", _IVF_PARTS, write
+        src, "ivftrn", f"k={N_SEED}|metric=cos|fam={fam}", _IVF_PARTS, write
     )
 
 
@@ -380,11 +378,6 @@ def ensure_trained_ivf_index(spark: SparkSession, sf_dir: str, k: int = N_SEED) 
 # actually keeps resident). ``similarity_ivf_pq_topk`` recomputes the
 # encoding per query today; this persists it once.
 # =====================================================================
-
-PQ_NUM_SUB = 8
-PQ_NUM_CENTROIDS = 16
-PQ_SUB_DIM = 8
-
 
 def _pq_params() -> str:
     import hashlib
@@ -455,33 +448,28 @@ def probe_pq_index(
     root: str,
     queries: DataFrame,
     k: int,
-    nprobe: int = 2,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    tombstones: DataFrame | None = None,
 ) -> DataFrame:
-    """ADC top-``k`` against the PERSISTED codes: assign each query to
-    its ``nprobe`` lists (centroids from the artifact, broadcast),
-    build the query's per-subspace distance tables once, then rank the
-    probed lists' STORED CODES by table lookups — per-candidate cost
-    is ``PQ_NUM_SUB`` array indexes + adds, and the corpus side
+    """ADC top-``k`` against the PERSISTED codes: assign each
+    ``(query_id, query_vec)`` query to its ``IVF_PQ_NPROBE`` lists
+    (centroids from the artifact, broadcast), build the query's
+    per-subspace distance tables once, then rank the probed lists'
+    STORED CODES by table lookups — per-candidate cost is
+    ``PQ_NUM_SUB`` array indexes + adds, and the corpus side
     touched is the compressed codes scan only (partition-pruned by
     list at cluster scale). Same (adc, vec_id) tiebreak as the live
-    ``ivf_pq_topk``, so results are hash-identical to it. Optional
-    ``tombstones`` are anti-joined out of the codes before ranking
-    (same delete contract as the raw-vector probes)."""
+    ``ivf_pq_topk``, so results are hash-identical to it."""
     from rs_query_engine_spark.operators.similarity import _pq_dist_tables
 
     cent = read_ivf_centroids(spark, root).select(
         "centroid_id", F.col("cv").alias("centroid_vec")
     )
     q_assigned = assign_centroids(
-        queries, cent, query_id, query_vec, nprobe=nprobe
-    ).select(F.col(query_id), F.col("_v"), F.col("centroid_id"))
+        queries, cent, "query_id", "query_vec", nprobe=IVF_PQ_NPROBE
+    ).select(F.col("query_id"), F.col("_v"), F.col("centroid_id"))
     q_tables = _pq_dist_tables(
-        q_assigned.select(query_id, "_v").dropDuplicates([query_id]),
-        query_id, "_v", PQ_NUM_SUB, PQ_NUM_CENTROIDS, PQ_SUB_DIM,
-    ).withColumnRenamed("_id", query_id)
+        q_assigned.select("query_id", "_v").dropDuplicates(["query_id"]),
+        "query_id", "_v", PQ_NUM_SUB, PQ_NUM_CENTROIDS, PQ_SUB_DIM,
+    ).withColumnRenamed("_id", "query_id")
     # The probe-batch pipeline (centroid cross + top-nprobe rank,
     # derived TWICE — once as q_assigned, once re-derived under the
     # dedup feeding the distance tables — plus the codebook-literal
@@ -491,18 +479,15 @@ def probe_pq_index(
     # and re-carrying the literal-heavy expressions through analysis.
     # The staged frame is probe-batch-sized (queries × nprobe rows).
     probes = truncate_lineage(
-        q_assigned.select(query_id, "centroid_id").join(q_tables, query_id)
+        q_assigned.select("query_id", "centroid_id").join(q_tables, "query_id")
     )
-    codes = read_pq_codes(spark, root)
-    if tombstones is not None:
-        codes = codes.join(tombstones.select("vec_id"), "vec_id", "left_anti")
-    cand = codes.join(F.broadcast(probes), "centroid_id")
+    cand = read_pq_codes(spark, root).join(F.broadcast(probes), "centroid_id")
     adc = None
     for b in range(PQ_NUM_SUB):
         term = F.element_at(F.col(f"_d{b}"), F.col(f"c{b}") + 1)
         adc = term if adc is None else adc + term
-    scored = cand.select(query_id, "vec_id", adc.alias("adc"))
-    w = Window.partitionBy(query_id).orderBy(F.col("adc").asc(), F.col("vec_id"))
+    scored = cand.select("query_id", "vec_id", adc.alias("adc"))
+    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id"))
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 

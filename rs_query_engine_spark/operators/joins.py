@@ -222,9 +222,8 @@ def range_join_bands(
     lo_col: str,
     hi_col: str,
     bucket_width: float,
-    how: str = "inner",
 ) -> DataFrame:
-    """Range join: each fact row matched to the band rows whose
+    """Range (inner) join: each fact row matched to the band rows whose
     half-open interval [lo, hi) contains ``value_col``.
 
     ``bucket_width`` discretizes the value domain: facts get one
@@ -248,7 +247,7 @@ def range_join_bands(
         (f["_bucket"] == b["_bucket"])
         & (F.col(value_col) >= F.col(lo_col))
         & (F.col(value_col) < F.col(hi_col)),
-        how,
+        "inner",
     )
     return joined.drop(f["_bucket"]).drop(b["_bucket"])
 

@@ -48,6 +48,7 @@ from rs_query_engine_spark.functions.text import shingles
 from rs_query_engine_spark.operators.dedup import (
     MINHASH_MAX_BUCKET,
     MINHASH_NUM_HASHES,
+    SHINGLE_N,
     _minhash_from_shingles,
     minhash_band_keys,
 )
@@ -60,8 +61,6 @@ from rs_query_engine_spark.sources.corpus import spread
 # oracles — keep the three in sync.
 BATCH_MOD = 20
 BATCH_REM = 7
-
-SHINGLE_N = 3  # word n-gram size for index signatures
 
 # Completeness of a bands/sigs index generation (base, merged and
 # compacted generations share the layout).
@@ -106,14 +105,15 @@ def _n_bands() -> int:
     return MINHASH_BANDS
 
 
-def doc_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, sig) — MinHash signatures for docs with ≥1 shingle
-    (empty-shingle docs share the sentinel signature and can never
-    clear a positive threshold; they are excluded from the index and
-    from batch probing, exactly as in ``minhash_lsh_pairs``)."""
+def doc_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig) — MinHash signatures of ``(doc_id, text)`` docs
+    with ≥1 shingle (empty-shingle docs share the sentinel signature
+    and can never clear a positive threshold; they are excluded from
+    the index and from batch probing, exactly as in
+    ``minhash_lsh_pairs``)."""
     sh = spread(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(shingles(F.col(text_col), SHINGLE_N)).alias("_sh"),
+        F.col("doc_id").alias("doc_id"),
+        F.array_distinct(shingles(F.col("text"), SHINGLE_N)).alias("_sh"),
     )
     return sh.filter(F.size("_sh") > 0).select(
         "doc_id", _minhash_from_shingles(F.col("_sh"), MINHASH_NUM_HASHES).alias("sig")
@@ -127,14 +127,15 @@ def band_postings(sigs: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
-def _cap_buckets(bands: DataFrame, max_bucket: int = MINHASH_MAX_BUCKET) -> DataFrame:
-    """Drop postings in degenerate (band, key) buckets. A groupBy +
+def _cap_buckets(bands: DataFrame) -> DataFrame:
+    """Drop postings in degenerate (band, key) buckets (more than
+    ``MINHASH_MAX_BUCKET`` members). A groupBy +
     equi-join (map-side partials, AQE broadcasts the surviving bucket
     list when small) — not a window, which would sort every posting."""
     ok = (
         bands.groupBy("band", "key")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") <= max_bucket)
+        .filter(F.col("_n") <= MINHASH_MAX_BUCKET)
         .select("band", "key")
     )
     return bands.join(ok, ["band", "key"]).select("doc_id", "band", "key")

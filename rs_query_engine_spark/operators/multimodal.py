@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rs_query_engine_spark.operators.dedup import SIMHASH_BITS
 from rs_query_engine_spark.sources.corpus import spread
 
 # deterministic fake media header: b"FAKE" + 1-byte modality tag +
@@ -59,10 +60,10 @@ def decode_image(payload: bytes) -> tuple[int, int, bytes]:
     return width, height, payload[9:]
 
 
-def byte_stats(df: DataFrame, id_col: str = "id", payload_col: str = "payload") -> DataFrame:
-    """Feature extraction over a binary column via ``mapInPandas``:
-    per-payload byte count / sum / max / mean. Deterministic pure-
-    Python byte math standing in for a real feature extractor; the
+def byte_stats(df: DataFrame) -> DataFrame:
+    """Feature extraction over the binary ``payload`` column of an
+    ``(id, payload)`` frame via ``mapInPandas``: per-payload byte
+    count / sum / max / mean. Deterministic pure-Python byte math standing in for a real feature extractor; the
     Arrow plumbing (binary in, typed row out) is the product."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -72,7 +73,7 @@ def byte_stats(df: DataFrame, id_col: str = "id", payload_col: str = "payload") 
             # vectorize per payload with numpy (frombuffer is zero-copy;
             # ~20× over a pure-Python byte loop) — the pattern a real
             # feature extractor would follow inside the Arrow batch
-            payloads = [np.frombuffer(b, dtype=np.uint8) for b in pdf[payload_col]]
+            payloads = [np.frombuffer(b, dtype=np.uint8) for b in pdf["payload"]]
             n = np.array([a.size for a in payloads], dtype=np.int64)
             s = np.array([int(a.sum()) for a in payloads], dtype=np.int64)
             mx = np.array(
@@ -80,7 +81,7 @@ def byte_stats(df: DataFrame, id_col: str = "id", payload_col: str = "payload") 
             )
             yield pd.DataFrame(
                 {
-                    "id": pdf[id_col],
+                    "id": pdf["id"],
                     "n_bytes": n,
                     "byte_sum": s,
                     "byte_max": mx,
@@ -88,26 +89,20 @@ def byte_stats(df: DataFrame, id_col: str = "id", payload_col: str = "payload") 
                 }
             )
 
-    return spread(df.select(F.col(id_col), F.col(payload_col)), min_partitions=8).mapInPandas(
+    return spread(df.select(F.col("id"), F.col("payload")), min_partitions=8).mapInPandas(
         extract, schema=BYTE_STATS_SCHEMA
     )
 
 
-def sample_frames(
-    df: DataFrame,
-    every_n_bytes: int,
-    frame_bytes: int,
-    id_col: str = "id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Frame sampling for video-like payloads: one output row per
-    sampled frame (1→N flatMap via the mapInPandas iterator — output
+def sample_frames(df: DataFrame, every_n_bytes: int, frame_bytes: int) -> DataFrame:
+    """Frame sampling for video-like ``(id, payload)`` rows: one output
+    row per sampled frame (1→N flatMap via the mapInPandas iterator — output
     batches need not align with input rows)."""
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
+            for i, payload in zip(pdf["id"], pdf["payload"]):
                 b = bytes(payload)
                 for fi, off in enumerate(range(0, len(b), every_n_bytes)):
                     ids.append(i)
@@ -115,7 +110,7 @@ def sample_frames(
                     frames.append(b[off : off + frame_bytes])
             yield pd.DataFrame({"id": ids, "frame_idx": idxs, "frame_bytes": frames})
 
-    return spread(df.select(F.col(id_col), F.col(payload_col)), min_partitions=8).mapInPandas(
+    return spread(df.select(F.col("id"), F.col("payload")), min_partitions=8).mapInPandas(
         sample, schema=FRAME_SCHEMA
     )
 
@@ -123,23 +118,18 @@ def sample_frames(
 BINARY_SIMHASH_SCHEMA = "id bigint, n_grams bigint, simhash bigint"
 
 
-def binary_simhash(
-    df: DataFrame,
-    id_col: str = "id",
-    payload_col: str = "payload",
-    gram: int = 4,
-    bits: int = 32,
-) -> DataFrame:
-    """SimHash signature over the raw BYTES of a binary payload — the
+def binary_simhash(df: DataFrame) -> DataFrame:
+    """SimHash signature over the raw BYTES of the binary ``payload`` of
+    an ``(id, payload)`` frame — the
     perceptual-hash-style near-dup primitive for opaque media columns
     (re-encoded or trivially-mutated assets keep most byte 4-grams, so
     their signatures land within small hamming distance; pair them
     with the same hamming-block LSH as ``dedup.simhash_pairs``).
 
     Byte-level twin of the token SimHash in ``operators/dedup.py``:
-    per overlapping ``gram``-byte window, a 32-bit md5-derived hash;
-    signature bit j set when the majority of gram hashes have bit j
-    set. Runs in ``mapInPandas`` (NumPy bit-matrix fold per Arrow
+    per overlapping 4-byte window, a 32-bit md5-derived hash;
+    ``SIMHASH_BITS``-wide signature, bit j set when the majority of
+    gram hashes have bit j set. Runs in ``mapInPandas`` (NumPy bit-matrix fold per Arrow
     batch) because payloads are opaque bytes the JVM expression engine
     has no functions for — the deliberate Python-tier pattern of this
     module. Map-only, no shuffle; metadata filters belong BEFORE this
@@ -150,11 +140,12 @@ def binary_simhash(
 
         import numpy as np
 
-        jbits = np.arange(bits, dtype=np.uint64)
+        gram = 4
+        jbits = np.arange(SIMHASH_BITS, dtype=np.uint64)
         weights = (1 << jbits.astype(np.int64)).astype(np.int64)
         for pdf in batches:
             ids, ngrams, sigs = [], [], []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
+            for i, b in zip(pdf["id"], pdf["payload"]):
                 bs = bytes(b)
                 n = max(len(bs) - gram + 1, 0)
                 if n == 0:

@@ -1,8 +1,8 @@
 """Set operations (beyond-reference: SURVEY §2.6 / §7 M2.1).
 
-SQL bag/set semantics mapping:
+SQL set semantics mapping (the bag forms UNION ALL / INTERSECT ALL /
+EXCEPT ALL are plain ``unionByName`` / ``intersectAll`` / ``exceptAll``):
 - ``union``        → SQL UNION (distinct) = ``unionByName`` + ``distinct``
-- ``union_all``    → SQL UNION ALL = ``unionByName``
 - ``intersect``    → SQL INTERSECT (distinct), Spark ``intersect``
 - ``except_``      → SQL EXCEPT (distinct), Spark ``exceptAll`` minus
   duplicates → use ``subtract`` (distinct semantics)
@@ -21,24 +21,12 @@ def union(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b).distinct()
 
 
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b)
-
-
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
 
 
-def intersect_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.intersectAll(b)
-
-
 def except_(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.subtract(b)
-
-
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)
 
 
 def upsert_latest(
@@ -46,12 +34,10 @@ def upsert_latest(
     updates: DataFrame,
     keys: list[str],
     version_col: str,
-    tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Merge/upsert: union base with an update batch and keep ONE row
-    per key — the highest ``version_col`` (ties broken by
-    ``tiebreak_col``, which defaults to preferring updates if it is
-    NULL-free there) — the CDC-compaction idiom without a mutable
+    per key — the highest ``version_col``, ties going to the update —
+    the CDC-compaction idiom without a mutable
     table format. One shuffle on the key (union is free); no driver
     loop, no per-row merge. At scale, partition/bucket both sides by
     the key so repeated merges reuse the layout."""
@@ -60,10 +46,7 @@ def upsert_latest(
     tagged = base.withColumn("_src", F.lit(0)).unionByName(
         updates.withColumn("_src", F.lit(1))
     )
-    order = [F.col(version_col).desc(), F.col("_src").desc()]
-    if tiebreak_col:
-        order.append(F.col(tiebreak_col))
-    w = Window.partitionBy(*keys).orderBy(*order)
+    w = Window.partitionBy(*keys).orderBy(F.col(version_col).desc(), F.col("_src").desc())
     return (
         tagged.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

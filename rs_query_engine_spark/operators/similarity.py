@@ -59,13 +59,10 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
 ) -> DataFrame:
-    """Exact top-k neighbors per query: broadcast queries × corpus,
-    cosine, window rank. Returns (query_id, vec_id, cos, rnk≤k).
+    """Exact top-k neighbors per query: broadcast ``(query_id,
+    query_vec)`` queries × the ``(vec_id, embedding)`` corpus, cosine,
+    window rank. Returns (query_id, vec_id, cos, rnk≤k).
 
     Each side's norm is staged in its pre-join projection, so norm
     folds run once per VECTOR, not once per pair (the pair expression
@@ -74,23 +71,23 @@ def brute_force_topk(
     bit-identical). Projections below a join are never inlined across
     it, which is what pins the staging."""
     c = spread(corpus).select(
-        F.col(corpus_id),
-        _as_double(F.col(corpus_vec)).alias("_v"),
-        F.sqrt(norm_sq(_as_double(F.col(corpus_vec)))).alias("_n"),
+        F.col("vec_id"),
+        _as_double(F.col("embedding")).alias("_v"),
+        F.sqrt(norm_sq(_as_double(F.col("embedding")))).alias("_n"),
     )
     q = queries.select(
-        F.col(query_id),
-        _as_double(F.col(query_vec)).alias("_qv"),
-        F.sqrt(norm_sq(_as_double(F.col(query_vec)))).alias("_qn"),
+        F.col("query_id"),
+        _as_double(F.col("query_vec")).alias("_qv"),
+        F.sqrt(norm_sq(_as_double(F.col("query_vec")))).alias("_qn"),
     )
     scored = c.crossJoin(F.broadcast(q)).select(
-        query_id,
-        corpus_id,
+        "query_id",
+        "vec_id",
         F.try_divide(dot(F.col("_v"), F.col("_qv")), F.col("_n") * F.col("_qn")).alias(
             "cos"
         ),
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("cos").desc(), F.col(corpus_id))
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
@@ -102,8 +99,6 @@ def assign_centroids(
     centroids: DataFrame,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "centroid_vec",
     nprobe: int = 1,
 ) -> DataFrame:
     """IVF build step: top-``nprobe`` nearest centroids per vector
@@ -111,32 +106,33 @@ def assign_centroids(
     is the build-side assignment (each corpus vector lives in exactly
     one inverted list); ``nprobe>1`` is the probe-side assignment
     (a query searches its n closest lists, trading scan fraction for
-    recall). Centroids are broadcast; at scale the build assignment
-    becomes the table's *bucketing column* so probes prune partitions."""
+    recall). ``centroids`` is a ``(centroid_id, centroid_vec)`` frame,
+    broadcast; at scale the build assignment becomes the table's
+    *bucketing column* so probes prune partitions."""
     c = spread(corpus).select(
         F.col(corpus_id),
         _as_double(F.col(corpus_vec)).alias("_v"),
         F.sqrt(norm_sq(_as_double(F.col(corpus_vec)))).alias("_n"),
     )
     cent = centroids.select(
-        F.col(centroid_id),
-        _as_double(F.col(centroid_vec)).alias("_cv"),
-        F.sqrt(norm_sq(_as_double(F.col(centroid_vec)))).alias("_cn"),
+        F.col("centroid_id"),
+        _as_double(F.col("centroid_vec")).alias("_cv"),
+        F.sqrt(norm_sq(_as_double(F.col("centroid_vec")))).alias("_cn"),
     )
     scored = c.crossJoin(F.broadcast(cent)).select(
         corpus_id,
         "_v",
         "_n",
-        centroid_id,
+        "centroid_id",
         F.try_divide(dot(F.col("_v"), F.col("_cv")), F.col("_n") * F.col("_cn")).alias(
             "_cc"
         ),
     )
-    w = Window.partitionBy(corpus_id).orderBy(F.col("_cc").desc(), F.col(centroid_id))
+    w = Window.partitionBy(corpus_id).orderBy(F.col("_cc").desc(), F.col("centroid_id"))
     return (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= nprobe)
-        .select(corpus_id, "_v", "_n", centroid_id)
+        .select(corpus_id, "_v", "_n", "centroid_id")
     )
 
 
@@ -145,38 +141,31 @@ def ivf_topk(
     centroids: DataFrame,
     queries: DataFrame,
     k: int,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "centroid_vec",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
     nprobe: int = 1,
 ) -> DataFrame:
-    """IVF top-k: corpus vectors live in their single nearest-centroid
-    list; each query probes its ``nprobe`` closest lists and ranks only
-    within them — the searched fraction is ~nprobe/n_centroids
-    (approximate by construction; recall grows with nprobe)."""
-    assigned = assign_centroids(
-        corpus, centroids, corpus_id, corpus_vec, centroid_id, centroid_vec
-    )
+    """IVF top-k over a ``(vec_id, embedding)`` corpus and
+    ``(query_id, query_vec)`` queries: corpus vectors live in their
+    single nearest-centroid list; each query probes its ``nprobe``
+    closest lists and ranks only within them — the searched fraction
+    is ~nprobe/n_centroids (approximate by construction; recall grows
+    with nprobe)."""
+    assigned = assign_centroids(corpus, centroids)
     q_assigned = assign_centroids(
-        queries, centroids, query_id, query_vec, centroid_id, centroid_vec,
-        nprobe=nprobe,
+        queries, centroids, "query_id", "query_vec", nprobe=nprobe
     ).select(
-        F.col(query_id),
+        F.col("query_id"),
         F.col("_v").alias("_qv"),
         F.col("_n").alias("_qn"),
-        F.col(centroid_id),
+        F.col("centroid_id"),
     )
-    scored = assigned.join(F.broadcast(q_assigned), centroid_id).select(
-        query_id,
-        corpus_id,
+    scored = assigned.join(F.broadcast(q_assigned), "centroid_id").select(
+        "query_id",
+        "vec_id",
         F.try_divide(dot(F.col("_v"), F.col("_qv")), F.col("_n") * F.col("_qn")).alias(
             "cos"
         ),
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("cos").desc(), F.col(corpus_id))
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
@@ -186,8 +175,6 @@ def ivf_topk(
 def kmeans_centroids(
     corpus: DataFrame,
     k: int,
-    corpus_vec: str = "embedding",
-    seed: int = 42,
     max_iter: int = 20,
 ) -> DataFrame:
     """Train IVF centroids with seeded Spark-ML k-means and return them
@@ -205,9 +192,9 @@ def kmeans_centroids(
     from pyspark.ml.functions import array_to_vector
 
     feats = corpus.select(
-        array_to_vector(_as_double(F.col(corpus_vec))).alias("features")
+        array_to_vector(_as_double(F.col("embedding"))).alias("features")
     )
-    model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(feats)
+    model = KMeans(k=k, seed=42, maxIter=max_iter).fit(feats)
     rows = ", ".join(
         "({}, array({}))".format(
             i, ",".join(f"CAST({float(x)!r} AS DOUBLE)" for x in center)
@@ -219,8 +206,21 @@ def kmeans_centroids(
     )
 
 
+# PQ geometry: PQ_NUM_SUB subspaces of PQ_SUB_DIM dims, each coded
+# against PQ_NUM_CENTROIDS codebook centroids. The persisted PQ index
+# (ivf_index) and the DuckDB oracle SQL generators (queries._pq_cte_block,
+# _pq_oracle_sql) read these same constants; IVF_PQ_NPROBE is the
+# coarse lists an IVF-PQ query probes on both sides.
+PQ_NUM_SUB = 8
+PQ_NUM_CENTROIDS = 16
+PQ_SUB_DIM = 8
+IVF_PQ_NPROBE = 2
+
+
 def pq_codebook(
-    num_sub: int = 8, num_centroids: int = 16, sub_dim: int = 8
+    num_sub: int = PQ_NUM_SUB,
+    num_centroids: int = PQ_NUM_CENTROIDS,
+    sub_dim: int = PQ_SUB_DIM,
 ) -> list[list[list[float]]]:
     """Deterministic product-quantization codebook:
     ``[subspace][centroid][dim]`` on a 2-decimal grid in [-1, 1],
@@ -246,9 +246,9 @@ def pq_codes(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    num_sub: int = 8,
-    num_centroids: int = 16,
-    sub_dim: int = 8,
+    num_sub: int = PQ_NUM_SUB,
+    num_centroids: int = PQ_NUM_CENTROIDS,
+    sub_dim: int = PQ_SUB_DIM,
 ) -> DataFrame:
     """Product-quantization encoding — the compression half of IVF-PQ,
     the standard billion-vector ANN layout: each vector splits into
@@ -333,14 +333,10 @@ def ivf_pq_topk(
     centroids: DataFrame,
     queries: DataFrame,
     k: int,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    nprobe: int = 2,
-    num_sub: int = 8,
-    num_centroids: int = 16,
-    sub_dim: int = 8,
+    nprobe: int = IVF_PQ_NPROBE,
+    num_sub: int = PQ_NUM_SUB,
+    num_centroids: int = PQ_NUM_CENTROIDS,
+    sub_dim: int = PQ_SUB_DIM,
 ) -> DataFrame:
     """IVF-PQ search — the billion-vector ANN layout end-to-end:
     corpus vectors live in coarse inverted lists (IVF) and are stored
@@ -357,18 +353,18 @@ def ivf_pq_topk(
     the 64× compression is exactly what makes the candidate shuffle
     and the resident index small; query tables broadcast; ranking is
     the same per-query top-k window as ivf_topk."""
-    assigned = assign_centroids(corpus, centroids, corpus_id, corpus_vec).select(
-        F.col(corpus_id), F.col("_v"), F.col("centroid_id")
+    assigned = assign_centroids(corpus, centroids).select(
+        F.col("vec_id"), F.col("_v"), F.col("centroid_id")
     )
     # the coarse-list assignment rides through the code computation as
     # a passthrough column — one map-only pass over the corpus instead
     # of a self-join back on the id (a full corpus shuffle at scale)
     index = _pq_dist_tables(
         assigned,
-        corpus_id, "_v", num_sub, num_centroids, sub_dim,
+        "vec_id", "_v", num_sub, num_centroids, sub_dim,
         passthrough=("centroid_id",),
     ).select(
-        F.col("_id").alias(corpus_id),
+        F.col("_id").alias("vec_id"),
         "centroid_id",
         *[
             (
@@ -379,21 +375,21 @@ def ivf_pq_topk(
     )
 
     q_assigned = assign_centroids(
-        queries, centroids, query_id, query_vec, nprobe=nprobe
-    ).select(F.col(query_id), F.col("_v"), F.col("centroid_id"))
+        queries, centroids, "query_id", "query_vec", nprobe=nprobe
+    ).select(F.col("query_id"), F.col("_v"), F.col("centroid_id"))
     q_tables = _pq_dist_tables(
-        q_assigned.select(query_id, "_v").dropDuplicates([query_id]),
-        query_id, "_v", num_sub, num_centroids, sub_dim,
-    ).withColumnRenamed("_id", query_id)
-    probes = q_assigned.select(query_id, "centroid_id").join(q_tables, query_id)
+        q_assigned.select("query_id", "_v").dropDuplicates(["query_id"]),
+        "query_id", "_v", num_sub, num_centroids, sub_dim,
+    ).withColumnRenamed("_id", "query_id")
+    probes = q_assigned.select("query_id", "centroid_id").join(q_tables, "query_id")
 
     cand = index.join(F.broadcast(probes), "centroid_id")
     adc = None
     for b in range(num_sub):
         term = F.element_at(F.col(f"_d{b}"), F.col(f"_c{b}") + 1)
         adc = term if adc is None else adc + term
-    scored = cand.select(query_id, corpus_id, adc.alias("adc"))
-    w = Window.partitionBy(query_id).orderBy(F.col("adc").asc(), F.col(corpus_id))
+    scored = cand.select("query_id", "vec_id", adc.alias("adc"))
+    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id"))
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
@@ -401,15 +397,11 @@ def cosine_range_search(
     corpus: DataFrame,
     queries: DataFrame,
     threshold: float,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
 ) -> DataFrame:
     """RANGE search (radius query) — the other half of the ANN API:
     all corpus vectors with cosine ≥ ``threshold`` per query, rather
-    than a fixed top-k. Returns (query_id, vec_id, cos); self-matches
-    (same id) are excluded.
+    than a fixed top-k. Column names as in :func:`brute_force_topk`.
+    Returns (query_id, vec_id, cos); self-matches (same id) are excluded.
 
     Same scale shape as :func:`brute_force_topk`: the bounded query
     batch is broadcast, the corpus streams map-only (per-row one dot
@@ -419,23 +411,23 @@ def cosine_range_search(
     found). The LSH-bucketed variant for corpus×corpus radius search
     is ``dedup.embedding_lsh_pairs``."""
     c = spread(corpus).select(
-        F.col(corpus_id),
-        _as_double(F.col(corpus_vec)).alias("_v"),
-        F.sqrt(norm_sq(_as_double(F.col(corpus_vec)))).alias("_n"),
+        F.col("vec_id"),
+        _as_double(F.col("embedding")).alias("_v"),
+        F.sqrt(norm_sq(_as_double(F.col("embedding")))).alias("_n"),
     )
     q = queries.select(
-        F.col(query_id),
-        _as_double(F.col(query_vec)).alias("_qv"),
-        F.sqrt(norm_sq(_as_double(F.col(query_vec)))).alias("_qn"),
+        F.col("query_id"),
+        _as_double(F.col("query_vec")).alias("_qv"),
+        F.sqrt(norm_sq(_as_double(F.col("query_vec")))).alias("_qn"),
     )
     return (
         c.crossJoin(F.broadcast(q))
         .select(
-            query_id,
-            corpus_id,
+            "query_id",
+            "vec_id",
             F.try_divide(
                 dot(F.col("_v"), F.col("_qv")), F.col("_n") * F.col("_qn")
             ).alias("cos"),
         )
-        .filter((F.col("cos") >= threshold) & (F.col(query_id) != F.col(corpus_id)))
+        .filter((F.col("cos") >= threshold) & (F.col("query_id") != F.col("vec_id")))
     )

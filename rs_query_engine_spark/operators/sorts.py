@@ -2,9 +2,10 @@
 reference has no ORDER BY/LIMIT anywhere; SURVEY §7 M2.1).
 
 Scale notes:
-- ``order_by`` is a full range-partitioned sort (one shuffle with
-  range partitioning + sampled boundaries) — correct but expensive at
-  100 TB; prefer :func:`top_k` when only the head is needed.
+- a global ``orderBy`` is a full range-partitioned sort (one shuffle
+  with range partitioning + sampled boundaries) — correct but
+  expensive at 100 TB; prefer :func:`top_k` when only the head is
+  needed.
 - ``top_k`` uses Spark's ``TakeOrderedAndProject`` physical operator
   (per-partition heap + driver merge) — no full sort, no full shuffle.
 - ``top_k_per_group`` composes window rank + filter; the shuffle is on
@@ -15,15 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def order_by(df: DataFrame, *exprs: Column | str) -> DataFrame:
-    """Global sort (range partition + local sort)."""
-    return df.orderBy(*exprs)
-
-
-def limit(df: DataFrame, n: int) -> DataFrame:
-    return df.limit(n)
 
 
 def top_k(df: DataFrame, k: int, *order_exprs: Column | str) -> DataFrame:
@@ -38,11 +30,11 @@ def top_k_per_group(
     group_cols: list[str],
     order_exprs: list[Column],
     k: int,
-    rank_col: str = "rn",
     partial: bool = False,
 ) -> DataFrame:
-    """Top-k rows per group via ROW_NUMBER window + filter. One shuffle
-    on the group key; rank computed within partitions.
+    """Top-k rows per group via ROW_NUMBER window (column ``rn``) +
+    filter. One shuffle on the group key; rank computed within
+    partitions.
 
     ``partial=True`` prepends a per-input-partition top-k pass keyed by
     (spark_partition_id, group): every local top-k is a superset of the
@@ -63,38 +55,31 @@ def top_k_per_group(
             .drop("_local_rn")
         )
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
     )
 
 
-def sample_fraction(df, fraction: float, seed: int = 42, with_replacement: bool = False):
-    """Bernoulli row sampling (``TABLESAMPLE``) — map-only, no shuffle;
+def sample_fraction(df, fraction: float, seed: int = 42):
+    """Bernoulli row sampling without replacement (``TABLESAMPLE``) —
+    map-only, no shuffle;
     each partition samples independently, so it scales to any input.
     Deterministic per (seed, partitioning) but NOT portable across
     engines — validated by distribution tests, not the value oracle."""
-    return df.sample(withReplacement=with_replacement, fraction=fraction, seed=seed)
+    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
 
 
-def _salted_key(key: Column, salt: str) -> Column:
-    """The stringified, optionally salted sampling key — shared by
-    every hash sampler so a salting-scheme change can never make the
-    rate-based and fixed-size samplers diverge."""
-    return F.concat(key.cast("string"), F.lit(salt)) if salt else key.cast("string")
-
-
-def _hash_pct(key: Column, salt: str = "") -> Column:
-    """Deterministic bucket in [0, 100) from an md5 content hash —
-    engine-portable (DuckDB: ``('0x'||substr(md5(x),1,8))::BIGINT %
-    100``), unlike Spark's seeded RNG whose stream depends on
-    partitioning. Salting rotates the sample without touching the
-    keyspace (different salt → independent-ish sample)."""
+def _hash_pct(key: Column) -> Column:
+    """Deterministic bucket in [0, 100) from an md5 content hash of the
+    stringified key — engine-portable (DuckDB:
+    ``('0x'||substr(md5(x),1,8))::BIGINT % 100``), unlike Spark's
+    seeded RNG whose stream depends on partitioning."""
     from rs_query_engine_spark.functions.hashing import md5_bucket
 
-    return md5_bucket(_salted_key(key, salt), 100)
+    return md5_bucket(key.cast("string"), 100)
 
 
-def sample_hash(df: DataFrame, key: Column, rate_pct: int, salt: str = "") -> DataFrame:
+def sample_hash(df: DataFrame, key: Column, rate_pct: int) -> DataFrame:
     """Content-hash Bernoulli sampling: keep rows whose md5(key) lands
     in the first ``rate_pct`` of 100 buckets.
 
@@ -104,7 +89,7 @@ def sample_hash(df: DataFrame, key: Column, rate_pct: int, salt: str = "") -> Da
     two tables by the same join key yields join-consistent samples.
     Prefer this over :func:`sample_fraction` whenever the sample must
     be auditable or re-derivable."""
-    return df.filter(_hash_pct(key, salt) < rate_pct)
+    return df.filter(_hash_pct(key) < rate_pct)
 
 
 def sample_stratified_hash(
@@ -113,7 +98,6 @@ def sample_stratified_hash(
     key: Column,
     rates_pct: dict[str, int],
     default_pct: int = 0,
-    salt: str = "",
 ) -> DataFrame:
     """Per-stratum content-hash sampling: each stratum keeps its own
     hash-bucket threshold (e.g. 100% of a rare class, 2% of the head).
@@ -121,12 +105,10 @@ def sample_stratified_hash(
     thr = F.lit(default_pct)
     for value, pct in rates_pct.items():
         thr = F.when(F.col(strata_col) == value, F.lit(pct)).otherwise(thr)
-    return df.filter(_hash_pct(key, salt) < thr)
+    return df.filter(_hash_pct(key) < thr)
 
 
-def sample_weighted_hash(
-    df: DataFrame, key: Column, weight: Column, salt: str = ""
-) -> DataFrame:
+def sample_weighted_hash(df: DataFrame, key: Column, weight: Column) -> DataFrame:
     """Per-ROW weighted Bernoulli sampling: keep each row with its own
     probability ``weight`` ∈ [0, 1] (importance sampling — the
     training-mixture knob that up-samples high-quality documents and
@@ -148,11 +130,11 @@ def sample_weighted_hash(
     land on the other side of the threshold by 1 ULP."""
     from rs_query_engine_spark.functions.hashing import md5_bucket
 
-    u = md5_bucket(_salted_key(key, salt), 1_000_000)
+    u = md5_bucket(key.cast("string"), 1_000_000)
     return df.filter(u < weight * F.lit(1_000_000.0))
 
 
-def sample_fixed_size(df: DataFrame, key: Column, n: int, salt: str = "") -> DataFrame:
+def sample_fixed_size(df: DataFrame, key: Column, n: int) -> DataFrame:
     """Deterministic fixed-SIZE sample: the n rows whose content hash
     is smallest (``ORDER BY md5-bucket LIMIT n`` → Catalyst's
     TakeOrderedAndProject: per-partition heap + driver merge, never a
@@ -160,7 +142,7 @@ def sample_fixed_size(df: DataFrame, key: Column, n: int, salt: str = "") -> Dat
     this one guarantees exact output cardinality (eval sets, debug
     slices) while staying reproducible across engines and runs.
     Hash ties are broken by the key itself for total determinism."""
-    h = F.md5(_salted_key(key, salt))
+    h = F.md5(key.cast("string"))
     return (
         df.withColumn("_smp", h)
         .orderBy(F.col("_smp"), key)

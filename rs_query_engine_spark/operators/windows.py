@@ -24,30 +24,8 @@ def spec(partition_by: list[str], order_by: list[Column | str]) -> WindowSpec:
     return Window.partitionBy(*partition_by).orderBy(*order_by)
 
 
-def row_number(w: WindowSpec, name: str = "rn") -> Column:
-    return F.row_number().over(w).alias(name)
-
-
-def rank(w: WindowSpec, name: str = "rnk") -> Column:
-    return F.rank().over(w).alias(name)
-
-
-def dense_rank(w: WindowSpec, name: str = "drnk") -> Column:
-    return F.dense_rank().over(w).alias(name)
-
-
 def running_sum(expr: Column | str, w: WindowSpec, name: str = "running") -> Column:
     """Exact running sum: decimal accumulation, double output."""
     c = F.col(expr) if isinstance(expr, str) else expr
     frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return F.sum(c.cast(D_PRICE)).over(frame).cast("double").alias(name)
-
-
-def lag(expr: Column | str, w: WindowSpec, offset: int = 1, name: str = "lag") -> Column:
-    c = F.col(expr) if isinstance(expr, str) else expr
-    return F.lag(c, offset).over(w).alias(name)
-
-
-def lead(expr: Column | str, w: WindowSpec, offset: int = 1, name: str = "lead") -> Column:
-    c = F.col(expr) if isinstance(expr, str) else expr
-    return F.lead(c, offset).over(w).alias(name)

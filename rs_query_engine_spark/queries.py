@@ -756,7 +756,7 @@ def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def setop_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL UNION (distinct) via union_all + distinct."""
+    """SQL UNION (distinct) via unionByName + distinct."""
     from rs_query_engine_spark.operators.setops import union
 
     c = _t(spark, sf_dir, "customer")
@@ -861,7 +861,7 @@ def window_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAG + arithmetic on the lagged value over the event stream
     (batch view). Raw doubles: subtraction of identical operands is
     bit-identical across engines."""
-    from rs_query_engine_spark.operators.windows import lag, spec
+    from rs_query_engine_spark.operators.windows import spec
 
     e = _t(spark, sf_dir, "events")
     w = spec(["user_id"], ["ts", "event_id"])
@@ -1517,24 +1517,18 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(d, "doc_id", "text")
 
 
-def _minhash_sql_parts(
-    num_hashes: int | None = None, bands: int | None = None
-) -> tuple[str, str]:
+def _minhash_sql_parts() -> tuple[str, str]:
     """Generate the DuckDB minhash signature + band-key SQL (mirrors
     operators/dedup.py exactly: base hash = first-8-hex(md5(s)) as
     bigint, then affine family h_i(x) = ((2i+1)x + (7919i+17)) mod
-    4294967311 — one md5 per shingle on both engines). Defaults come
+    4294967311 — one md5 per shingle on both engines). The shape comes
     from the dedup.py production constants so a tuning change there
     regenerates these fragments too — never a stale inline copy."""
     from rs_query_engine_spark.operators.dedup import (
-        MINHASH_BANDS,
-        MINHASH_NUM_HASHES,
+        MINHASH_BANDS as bands,
+        MINHASH_NUM_HASHES as num_hashes,
     )
 
-    if num_hashes is None:
-        num_hashes = MINHASH_NUM_HASHES
-    if bands is None:
-        bands = MINHASH_BANDS
     sig_cols = ",\n               ".join(
         f"COALESCE(list_min(list_transform(hs, x -> "
         f"({2 * i + 1} * x + {7919 * i + 17}) % 4294967311)), 8589934592) AS h{i}"
@@ -1658,13 +1652,16 @@ def dedup_connected_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(pairs)
 
 
-def _simhash_sql(bits: int = 32) -> str:
-    terms = "\n             + ".join(
+def _simhash_sql() -> str:
+    """DuckDB SimHash signature SQL over token hashes ``h`` and token
+    count ``n``, ``dedup.SIMHASH_BITS`` wide like the Spark operators."""
+    from rs_query_engine_spark.operators.dedup import SIMHASH_BITS
+
+    return "\n             + ".join(
         f"CASE WHEN 2 * len(list_filter(h, x -> ((x >> {j}) & 1) = 1)) > n "
         f"THEN CAST({2**j} AS BIGINT) ELSE 0 END"
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     )
-    return terms
 
 
 @register(
@@ -1769,14 +1766,19 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(d, "doc_id", "text")
 
 
-def _hlsh_band_values(num_planes: int = 32, bands: int = 8, dim: int = 64) -> str:
+def _hlsh_band_values() -> str:
     """DuckDB LATERAL VALUES rows for the hyperplane-LSH band keys —
-    the ±1 plane literals come from the SAME Python generator the Spark
-    operator uses (hashlib.md5 ≡ DuckDB md5), so both engines compute
-    identical sign bits."""
-    from rs_query_engine_spark.operators.dedup import hyperplane_signs
+    the ±1 plane literals come from the SAME Python generator and the
+    same ``dedup.HLSH_*`` shape the Spark operator uses (hashlib.md5 ≡
+    DuckDB md5), so both engines compute identical sign bits."""
+    from rs_query_engine_spark.operators.dedup import (
+        HLSH_BANDS as bands,
+        HLSH_DIM,
+        HLSH_NUM_PLANES as num_planes,
+        hyperplane_signs,
+    )
 
-    planes = hyperplane_signs(num_planes, dim)
+    planes = hyperplane_signs(num_planes, HLSH_DIM)
     rows = num_planes // bands
 
     def bit(i: int) -> str:
@@ -3537,19 +3539,16 @@ def text_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rp_terms(out_dim: int = 16, in_dim: int = 64) -> list[str]:
+def _rp_terms() -> list[str]:
     """Per-output-dim DuckDB/Spark-shared dot-product SQL for the
-    random projection — the ±1 planes come from the same generator as
-    the LSH band keys, so both engines fold identical literals in
-    identical order."""
+    64 → 16 random projection — the ±1 planes come from the same
+    generator as the LSH band keys, so both engines fold identical
+    literals in identical order."""
     from rs_query_engine_spark.operators.dedup import hyperplane_signs
 
-    planes = hyperplane_signs(out_dim, in_dim)
     return [
-        "["
-        + ",".join("1.0" if x > 0 else "-1.0" for x in planes[i])
-        + "]"
-        for i in range(out_dim)
+        "[" + ",".join("1.0" if x > 0 else "-1.0" for x in plane) + "]"
+        for plane in hyperplane_signs(16, 64)
     ]
 
 
@@ -5606,17 +5605,22 @@ def sql_entry_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_cte_block(
-    nprobe: int = 2, num_sub: int = 8, num_centroids: int = 16, sub_dim: int = 8
-) -> str:
+def _pq_cte_block() -> str:
     """The shared WITH-body of the IVF-PQ oracles: coarse assignment,
     PQ ``codes``, and query distance tables ``qt`` — extracted so the
     staged persisted-PQ-index oracles (codes read-back, probe) compose
     from the SAME generated CTEs as the live end-to-end oracle and can
-    never drift from it."""
-    from rs_query_engine_spark.operators.similarity import pq_codebook
+    never drift from it. Geometry and probe width are the Spark
+    operator's own ``similarity.PQ_*`` / ``IVF_PQ_NPROBE`` constants."""
+    from rs_query_engine_spark.operators.similarity import (
+        IVF_PQ_NPROBE as nprobe,
+        PQ_NUM_CENTROIDS as num_centroids,
+        PQ_NUM_SUB as num_sub,
+        PQ_SUB_DIM as sub_dim,
+        pq_codebook,
+    )
 
-    book = pq_codebook(num_sub, num_centroids, sub_dim)
+    book = pq_codebook()
 
     def dist(col: str, b: int, k: int) -> str:
         lits = "[" + ",".join(str(x) for x in book[b][k]) + "]"
@@ -5661,9 +5665,7 @@ def _pq_cte_block(
     )"""
 
 
-def _pq_adc_oracle_sql(
-    nprobe: int = 2, num_sub: int = 8, num_centroids: int = 16, sub_dim: int = 8
-) -> str:
+def _pq_adc_oracle_sql() -> str:
     """Generated DuckDB oracle for the FULL IVF-PQ pipeline: coarse
     assignment (same cosine/tiebreak SQL as similarity_ivf_probed), PQ
     codes and query distance tables from the same codebook literals as
@@ -5671,9 +5673,11 @@ def _pq_adc_oracle_sql(
     hash pins), ADC as position lookups summed in subspace order, and
     the same (adc, vec_id) top-k tiebreak — so the composition is
     hash-verifiable end-to-end, not just its standalone pieces."""
-    adc = " + ".join(f"qt.d{b}[c.c{b} + 1]" for b in range(num_sub))
+    from rs_query_engine_spark.operators.similarity import PQ_NUM_SUB
+
+    adc = " + ".join(f"qt.d{b}[c.c{b} + 1]" for b in range(PQ_NUM_SUB))
     return f"""
-    WITH {_pq_cte_block(nprobe, num_sub, num_centroids, sub_dim)}, scored AS (
+    WITH {_pq_cte_block()}, scored AS (
         SELECT qt.query_id, c.vec_id, {adc} AS adc
         FROM codes c JOIN qt ON c.centroid_id = qt.centroid_id
     )
@@ -5774,13 +5778,19 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semantic_dedup(e, cent, "vec_id", "embedding", threshold=0.3)
 
 
-def _pq_oracle_sql(num_sub: int = 8, num_centroids: int = 16, sub_dim: int = 8) -> str:
-    """DuckDB oracle for PQ encoding — same codebook literals as the
-    Spark operator (operators/similarity.pq_codebook), same per-
-    subspace distance folds, same argmin-by-position tie-break."""
-    from rs_query_engine_spark.operators.similarity import pq_codebook
+def _pq_oracle_sql() -> str:
+    """DuckDB oracle for PQ encoding — same codebook literals and
+    ``PQ_*`` geometry as the Spark operator
+    (operators/similarity.pq_codebook), same per-subspace distance
+    folds, same argmin-by-position tie-break."""
+    from rs_query_engine_spark.operators.similarity import (
+        PQ_NUM_CENTROIDS as num_centroids,
+        PQ_NUM_SUB as num_sub,
+        PQ_SUB_DIM as sub_dim,
+        pq_codebook,
+    )
 
-    book = pq_codebook(num_sub, num_centroids, sub_dim)
+    book = pq_codebook()
 
     def dist(b: int, k: int) -> str:
         lits = "[" + ",".join(str(x) for x in book[b][k]) + "]"

@@ -897,7 +897,7 @@ def similarity_pq_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return probe_pq_index(spark, root, q, 10, nprobe=2)
+    return probe_pq_index(spark, root, q, 10)
 
 
 # =====================================================================

@@ -63,7 +63,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rs_query_engine_spark.queries import _t, register
-from rs_query_engine_spark.session import register_once
 
 # ---------------------------------------------------------------------------
 # Timer-driven TTL flush (applyInPandasWithState + EventTimeTimeout)
@@ -687,7 +686,7 @@ def similarity_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    short = probe_pq_index(spark, root, q, REFINE_SHORTLIST, nprobe=2).select(
+    short = probe_pq_index(spark, root, q, REFINE_SHORTLIST).select(
         "query_id", "vec_id"
     )
     cv = e.select(
@@ -1050,14 +1049,11 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rs_query_engine_spark.sources.pydatasource import (
         CsvLinesDataSource,
         ensure_customer_csv,
+        register_source,
     )
 
     path = ensure_customer_csv(spark, sf_dir)
-    register_once(
-        spark,
-        CsvLinesDataSource.name(),
-        lambda: spark.dataSource.register(CsvLinesDataSource),
-    )
+    register_source(spark, CsvLinesDataSource)
     df = (
         spark.read.format("rsqes_pycsv")
         .schema(CUSTOMER_DDL)
@@ -1530,11 +1526,12 @@ def source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         CsvPushdownDataSource,
         ensure_customer_csv,
         ensure_python_filter_pushdown,
+        register_source,
     )
 
     path = ensure_customer_csv(spark, sf_dir)
     ensure_python_filter_pushdown(spark)
-    spark.dataSource.register(CsvPushdownDataSource)
+    register_source(spark, CsvPushdownDataSource)
     df = (
         spark.read.format("rsqes_pycsv_fp")
         .schema(CUSTOMER_DDL)
@@ -1578,9 +1575,10 @@ def source_python_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.sources.pydatasource import (
         CsvLinesDataSource,
+        register_source,
     )
 
-    spark.dataSource.register(CsvLinesDataSource)
+    register_source(spark, CsvLinesDataSource)
     src = _t(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -1698,11 +1696,12 @@ def source_python_stream_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rs_query_engine_spark.sources.pydatasource import (
         CsvStreamDataSource,
         ensure_customer_csv,
+        register_source,
     )
     from rs_query_engine_spark.streaming.events import run_stream_to_memory
 
     path = ensure_customer_csv(spark, sf_dir)
-    spark.dataSource.register(CsvStreamDataSource)
+    register_source(spark, CsvStreamDataSource)
     stream = (
         spark.readStream.format("rsqes_pycsv_stream")
         .schema(CUSTOMER_DDL)
@@ -1750,11 +1749,12 @@ def source_python_stream_partitioned(
     from rs_query_engine_spark.sources.pydatasource import (
         CsvPartitionedStreamDataSource,
         ensure_customer_csv,
+        register_source,
     )
     from rs_query_engine_spark.streaming.events import run_stream_to_memory
 
     path = ensure_customer_csv(spark, sf_dir)
-    spark.dataSource.register(CsvPartitionedStreamDataSource)
+    register_source(spark, CsvPartitionedStreamDataSource)
     stream = (
         spark.readStream.format("rsqes_pycsv_pstream")
         .schema(CUSTOMER_DDL)

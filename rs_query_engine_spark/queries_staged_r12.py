@@ -546,10 +546,11 @@ def source_python_arrow_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rs_query_engine_spark.sources.pydatasource import (
         CsvArrowDataSource,
         ensure_customer_csv,
+        register_source,
     )
 
     path = ensure_customer_csv(spark, sf_dir)
-    spark.dataSource.register(CsvArrowDataSource)
+    register_source(spark, CsvArrowDataSource)
     df = (
         spark.read.format("rsqes_pycsv_arrow")
         .schema(_ARROW_CUSTOMER_DDL)
@@ -587,10 +588,11 @@ def source_python_arrow_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rs_query_engine_spark.sources.pydatasource import (
         CsvArrowDataSource,
         ensure_customer_csv,
+        register_source,
     )
 
     path = ensure_customer_csv(spark, sf_dir)
-    spark.dataSource.register(CsvArrowDataSource)
+    register_source(spark, CsvArrowDataSource)
     df = (
         spark.read.format("rsqes_pycsv_arrow")
         .schema("c_mktsegment string, c_acctbal double")
@@ -990,11 +992,12 @@ def source_python_arrow_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rs_query_engine_spark.sources.pydatasource import (
         CsvArrowStreamDataSource,
         ensure_customer_csv,
+        register_source,
     )
     from rs_query_engine_spark.streaming.events import run_stream_to_memory
 
     path = ensure_customer_csv(spark, sf_dir)
-    spark.dataSource.register(CsvArrowStreamDataSource)
+    register_source(spark, CsvArrowStreamDataSource)
     stream = (
         spark.readStream.format("rsqes_pycsv_astream")
         .schema(_ARROW_CUSTOMER_DDL)

@@ -130,8 +130,13 @@ def udtf_polymorphic_unpack(spark: SparkSession, sf_dir: str):
     from pyspark.sql.functions import udtf
 
     from rs_query_engine_spark.queries import _t
+    from rs_query_engine_spark.session import register_once
 
-    spark.udtf.register("rsqes_unpack_delim", udtf(UnpackDelimUDTF))
+    register_once(
+        spark,
+        "rsqes_unpack_delim",
+        lambda: spark.udtf.register("rsqes_unpack_delim", udtf(UnpackDelimUDTF)),
+    )
     (
         _t(spark, sf_dir, "customer")
         .select(

@@ -1233,6 +1233,7 @@ def source_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rs_query_engine_spark.sources.artifacts import scratch_dir
     from rs_query_engine_spark.sources.pydatasource import (
         CsvStreamSinkDataSource,
+        register_source,
     )
     from rs_query_engine_spark.streaming.events import drain, ensure_late_feed
 
@@ -1241,7 +1242,7 @@ def source_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir(spark, "pysink", feed, fresh=False)
     target = os.path.join(base, "out")
     ck = os.path.join(base, "ck")
-    spark.dataSource.register(CsvStreamSinkDataSource)
+    register_source(spark, CsvStreamSinkDataSource)
 
     stream = (
         spark.readStream.schema(schema)

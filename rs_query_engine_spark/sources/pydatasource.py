@@ -57,6 +57,14 @@ from pyspark.sql.types import StructType
 from rs_query_engine_spark import pyworker  # noqa: F401  (installs the guard)
 
 
+def register_source(spark, source: type[DataSource]) -> None:
+    """Register the Python data source ``source`` in ``spark`` under its
+    ``name()``, once per session (``session.register_once``)."""
+    from rs_query_engine_spark.session import register_once
+
+    register_once(spark, source.name(), lambda: spark.dataSource.register(source))
+
+
 class CsvLinesDataSource(DataSource):
     """``spark.read.format("rsqes_pycsv").schema(ddl).load(path)`` —
     a headered-CSV directory reader implemented entirely in Python."""

@@ -64,15 +64,13 @@ def write_json(
     df.write.mode(mode).json(path)
 
 
-def write_orc(
-    df: DataFrame, path: str, mode: str = "overwrite", coalesce_files: int | None = None
-) -> None:
-    """Write ORC (Spark's second built-in columnar format — same
+def write_orc(df: DataFrame, path: str, coalesce_files: int | None = None) -> None:
+    """Overwrite ``path`` with ORC (Spark's second built-in columnar format — same
     vectorized reader, predicate pushdown, and column pruning story as
     parquet; the interchange format for Hive-lineage warehouses)."""
     if coalesce_files:
         df = df.coalesce(coalesce_files)
-    df.write.mode(mode).orc(path)
+    df.write.mode("overwrite").orc(path)
 
 
 def write_bucketed_table(
@@ -81,9 +79,8 @@ def write_bucketed_table(
     bucket_cols: Sequence[str],
     num_buckets: int,
     sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Save as a BUCKETED managed table (``bucketBy`` + ``sortBy``).
+    """Save (overwrite) as a BUCKETED managed table (``bucketBy`` + ``sortBy``).
 
     Bucketing is the 100-TB co-location tool: two tables bucketed on
     the same key into the same bucket count join WITHOUT a shuffle —
@@ -113,7 +110,7 @@ def write_bucketed_table(
                 f == "_SUCCESS" or f.startswith("part-") for f in entries
             ):
                 shutil.rmtree(loc)
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
+    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)

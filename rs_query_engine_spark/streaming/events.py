@@ -177,13 +177,11 @@ def run_stream_to_memory(
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
-def view_purchase_attribution_stream(
-    events: DataFrame, attribution_window: str = "10 minutes", watermark: str = "1 hour"
-) -> DataFrame:
+def view_purchase_attribution_stream(events: DataFrame) -> DataFrame:
     """Stream-stream inner join: each purchase attributed to the same
-    user's views in the preceding ``attribution_window``.
+    user's views in the preceding 10 minutes.
 
-    Both sides carry watermarks and the join condition bounds event
+    Both sides carry 1-hour watermarks and the join condition bounds event
     time in both directions — the two requirements that let Spark
     evict join state (otherwise a stream-stream join buffers forever).
     State is hash-partitioned by user_id, same as the batch join's
@@ -192,17 +190,17 @@ def view_purchase_attribution_stream(
         F.col("event_id").alias("view_id"),
         F.col("user_id"),
         F.col("ts").alias("view_ts"),
-    ).withWatermark("view_ts", watermark)
+    ).withWatermark("view_ts", "1 hour")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user_id"),
         F.col("ts").alias("purchase_ts"),
-    ).withWatermark("purchase_ts", watermark)
+    ).withWatermark("purchase_ts", "1 hour")
     return views.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {attribution_window}")),
+        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 10 minutes")),
     ).select("view_id", "purchase_id", "user_id", "view_ts", "purchase_ts")
 
 
@@ -245,15 +243,10 @@ def run_stream_to_parquet(
     )
 
 
-def dedup_stream(
-    events: DataFrame,
-    keys: list[str],
-    watermark: str = "90 days",
-    ts_col: str = "ts",
-) -> DataFrame:
+def dedup_stream(events: DataFrame, keys: list[str]) -> DataFrame:
     """Streaming exact deduplication: keep the FIRST event per key,
-    expiring key state once event time passes ``watermark`` — the
-    streaming twin of ``SELECT DISTINCT``/``dropDuplicates``.
+    expiring key state once event time ``ts`` passes a 90-day
+    watermark — the streaming twin of ``SELECT DISTINCT``/``dropDuplicates``.
 
     ``dropDuplicatesWithinWatermark`` bounds the state store by keys
     seen within the watermark horizon (plain ``dropDuplicates`` on a
@@ -261,7 +254,7 @@ def dedup_stream(
     corpus — sizes the cluster's state. With a horizon wider than a
     bounded input, the result is exactly batch DISTINCT on the keys,
     which is what the oracle checks."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark("ts", "90 days").dropDuplicatesWithinWatermark(keys)
 
 
 # Late-arrival feed layout (``ensure_late_feed``): the corpus split

@@ -318,3 +318,43 @@ def test_register_once_registers_once_per_session(spark):
     for session in (spark, spark, other, other):
         register_once(session, "rsqes_once_probe", lambda: calls.append(session))
     assert calls == [spark, other]
+
+
+def test_routed_queries_register_each_name_once_per_session(spark, sf_dir, monkeypatch):
+    """Every Python data source and UDTF registration goes through
+    ``register_once``: building the same queries twice in a session
+    that has registered nothing yet registers each name once. (The
+    shared session stands in for a fresh one, with an empty
+    ``register_once`` record: Spark 4.1 refuses a ``newSession()``
+    a source name its root session registered.)"""
+    import weakref
+
+    from pyspark.sql.datasource import DataSourceRegistration
+    from pyspark.sql.udtf import UDTFRegistration
+
+    from rs_query_engine_spark import queries as registry
+    from rs_query_engine_spark import session
+
+    names = []
+    register_source, register_udtf = DataSourceRegistration.register, UDTFRegistration.register
+
+    def count_source(self, source):
+        names.append(source.name())
+        return register_source(self, source)
+
+    def count_udtf(self, name, f):
+        names.append(name)
+        return register_udtf(self, name, f)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", count_source)
+    monkeypatch.setattr(UDTFRegistration, "register", count_udtf)
+    monkeypatch.setattr(session, "_REGISTERED", weakref.WeakKeyDictionary())
+    built = registry.queries()
+    for _ in range(2):
+        for name in (
+            "source_python_arrow_batch",
+            "source_python_arrow_pruned",
+            "udtf_polymorphic_unpack",
+        ):
+            built[name](spark, sf_dir)
+    assert sorted(names) == ["rsqes_pycsv_arrow", "rsqes_unpack_delim"]
